@@ -80,7 +80,10 @@ object Bench {
     val failed = scala.collection.mutable.Set[String]()
     for (_ <- 1 to reps; (name, fn) <- selected) {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => failed += name }
+      try { fn(spark, sfDir).count() } catch { case e: Throwable =>
+        failed += name
+        System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+      }
       val t = (System.nanoTime() - t0) / 1e9
       // Drop every frame a query persisted before the next timing —
       // otherwise dead caches (dedup shingles, fingerprints) squat on
@@ -148,8 +151,7 @@ object Bench {
     // as the query count grows), this one still parses on its own — and
     // it stays LAST so the driver's single-line parse reads the total.
     println(s"""{"metric":"total","value":${fmt(total, "%.3f")},"unit":"sec","sf":"$sfName","reps":$reps,"errors":$errors}""")
-    // Explicit release of the memoized standing-index frames
-    // (graph family + PCA converged direction) before shutdown.
+    // Explicit release of every standing entry before shutdown.
     graft.llm.Similarity.releaseStandingIndexes()
     spark.stop()
   }

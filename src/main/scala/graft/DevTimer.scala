@@ -2,9 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev-only scratch timer: time named queries from [[SparkEntry.queries]]
-  * and/or their lazy twins in [[SparkEntry.plans]] in one JVM.
-  * Usage: runMain graft.DevTimer <sfDir> <q|p>:<name> ... */
+/** Dev-only scratch timer: time named [[SparkEntry.queries]] in one JVM.
+  * Usage: runMain graft.DevTimer <sfDir> <name> ... */
 object DevTimer {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -16,14 +15,12 @@ object DevTimer {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    for (spec <- args.drop(1)) {
-      val Array(kind, name) = spec.split(":", 2)
-      val fn = if (kind == "p") SparkEntry.plans(name) else SparkEntry.queries(name)
+    for (name <- args.drop(1)) {
       val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
+      val n = SparkEntry.queries(name)(spark, sfDir).count()
       val dt = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
-      println(f"[devtimer] $spec rows=$n sec=$dt%.2f")
+      println(f"[devtimer] $name rows=$n sec=$dt%.2f")
     }
     spark.stop()
   }

@@ -32,7 +32,7 @@ object Explain {
     for (n <- names) {
       println(s"\n========== $n ==========")
       try {
-        val df = SparkEntry.plans(n)(spark, sfDir)
+        val df = SparkEntry.queries(n)(spark, sfDir)
         if (executed) df.collect() // collect(), not count(): count builds a NEW QueryExecution
         df.explain("formatted")
       } catch { case e: Throwable => println(s"explain failed: $e") }

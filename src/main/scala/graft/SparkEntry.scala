@@ -70,12 +70,4 @@ object SparkEntry {
       else acc
     }
   }
-
-  /** Plan-inspection view (Explain, PlanSpec). All registered queries
-    * are lazy and cache-free, so today this IS [[queries]]; kept as a
-    * seam so any future eager query can register a lazy plan twin here.
-    * (The two CC queries run their label loop on construction, and the
-    * graph-search pair runs its beam walk the same way — for those the
-    * "plan" is the checkpointed scan by design.) */
-  def plans: Map[String, (SparkSession, String) => DataFrame] = queries
 }

@@ -14,6 +14,20 @@ object Tables {
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
+  /** The input version of everything under `dir`: each file's
+    * (relative path, length, mtime), recursively, in path order. Equal
+    * versions mean no file was added, removed or rewritten in between —
+    * state derived from `dir` is valid exactly as long as its version
+    * is unchanged. An absent dir has the empty version. */
+  def version(dir: String): Seq[(String, Long, Long)] = {
+    def walk(f: java.io.File, rel: String): Seq[(String, Long, Long)] =
+      Option(f.listFiles()).toSeq.flatten.flatMap { c =>
+        val r = rel + "/" + c.getName
+        if (c.isDirectory) walk(c, r) else Seq((r, c.length, c.lastModified))
+      }
+    walk(new java.io.File(dir), "").sortBy(_._1)
+  }
+
   /** Spread a scan-side-heavy pipeline's input across the session's
     * cores (guide §2.5 "input skew": the fixture tables are single
     * row-group parquet files, so Spark's byte-range splitting yields

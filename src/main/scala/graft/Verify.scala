@@ -41,7 +41,7 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
       }
       // Per-query cache hygiene — mirrors Bench: no dead persisted
       // frames carried into the next query's run.
@@ -62,8 +62,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Explicit release of the memoized standing-index frames
-    // (graph family + PCA converged direction) before shutdown.
+    // Explicit release of every standing entry before shutdown.
     graft.llm.Similarity.releaseStandingIndexes()
     spark.stop()
   }

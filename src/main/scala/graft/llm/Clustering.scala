@@ -515,29 +515,25 @@ object Clustering {
     * built once; here the memoized CHECKPOINTED 1-row frame makes the
     * family pay training once per process. Contents are deterministic
     * exact-integer arithmetic, so every consumer stays hash-identical
-    * to its train-it-itself form at any dop. Cleared by
-    * [[Similarity.releaseStandingIndexes]]. */
-  private[llm] val v1Cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+    * to its train-it-itself form at any dop. A standing entry
+    * (tag `pca_v1`), rebuilt when the corpus changes. */
   private def pcaV1(s: SparkSession, dir: String): DataFrame =
-    v1Cache.computeIfAbsent((s, dir), _ => {
+    Similarity.standing(s, dir, "pca_v1") {
       val qe = Dedup.quantized(s, dir)
       val c1 = pcaIter(qe, pcaV0(s))
       val c2 = pcaIter(qe, pcaVrow(c1))
       pcaVrow(pcaIter(qe, pcaVrow(c2))).localCheckpoint()
-    })
+    }
 
   /** The SECOND component's deflation chain (the three checkpointed
     * deflated-c frames), cached per (session, dir) exactly like
     * [[pcaV1]] — q_embed_pca2 and q_embed_pca_scatter each re-derived
     * the identical three orthogonalized power rounds (3 corpus scans
     * apiece). pca2 reads every round's frame (its output is the
-    * per-round loadings), scatter packs the last into v₂. Cleared by
-    * [[graft.llm.Similarity.releaseStandingIndexes]]. */
-  private[llm] val v2Cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[DataFrame]]()
+    * per-round loadings), scatter packs the last into v₂. A standing
+    * entry (tag `pca_defl2`) that nests the `pca_v1` build. */
   private def pcaDefl2(s: SparkSession, dir: String): Seq[DataFrame] =
-    v2Cache.computeIfAbsent((s, dir), _ => {
+    Similarity.standing(s, dir, "pca_defl2") {
       val qe = Dedup.quantized(s, dir)
       val v1j = pcaUnpack(pcaV1(s, dir))
       var urow = s.range(1).select(expr("transform(sequence(1, 64), " +
@@ -547,7 +543,7 @@ object Clustering {
         urow = pcaPack(pcaMicro(defl))
         defl
       }
-    })
+    }
 
   private def pcaLoadings(k: Int, cf: DataFrame): DataFrame =
     cf.crossJoin(broadcast(cf.agg(max(abs(col("c"))).as("g"))))

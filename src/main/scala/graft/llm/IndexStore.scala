@@ -4,8 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Disk-durable store for TRAINED INDEX ARTIFACTS — the FAISS
-  * `write_index` / `read_index` lifecycle the in-session standing
-  * memos ([[Similarity.standing]]) stood in for through r15.
+  * `write_index` / `read_index` lifecycle. It outlives the session;
+  * in-session state (this store's content fingerprint included) lives
+  * in the standing registry ([[Similarity.standing]]), which is keyed
+  * on the corpus dir's input version and cleared by one release call.
   *
   * Production ANN/tokenizer deployments train an index once, persist
   * it, and serve *search-only* traffic against the loaded artifact
@@ -51,16 +53,15 @@ object IndexStore {
     new java.io.File(sys.env.getOrElse("GRAFT_INDEX_DIR",
       "target/graft-index"), s"v$FormatVersion").getAbsoluteFile
 
-  private val fpMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   /** Corpus fingerprint keying every artifact dir: exact-integer
     * aggregates over BOTH source tables (embeddings through the
     * quantized ingest view — the frame every vector artifact trains
     * on — and documents, which key the MaxSim artifact). One cheap
-    * column-pruned scan each per (session, dir), memoized. */
+    * column-pruned scan each per (session, dir) input version — a
+    * standing entry (tag `fingerprint`), so a corpus rewritten in
+    * place is fingerprinted afresh. */
   private def fingerprint(s: SparkSession, dir: String): String =
-    fpMemo.computeIfAbsent((s, dir), _ => {
+    Similarity.standing(s, dir, "fingerprint") {
       // A fixture corpus may carry only one of the two tables (the
       // ANN spec dirs have no documents; a text-only dir no
       // embeddings) — an absent table contributes a constant marker,
@@ -88,7 +89,7 @@ object IndexStore {
       val md = java.security.MessageDigest.getInstance("MD5")
         .digest((e ++ d).mkString("|").getBytes("UTF-8"))
       md.take(8).map(b => f"${b & 0xff}%02x").mkString
-    })
+    }
 
   /** CONTENT-addressed: the key is the fingerprint alone, so two
     * paths holding the same corpus share one artifact and a changed

@@ -165,9 +165,6 @@ object Similarity {
     * L2² distances hash-match the oracle. Embeddings are unit-norm, so
     * L2 ranking is cosine ranking and recall@k against the exact top-k
     * measures precisely the quantization loss. */
-  private val sq8Memo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String)]()
-
   /** The persisted SQ8 per-dimension min/max frame (i, mn, mx). */
   private def sq8StatsFrameDurable(s: SparkSession, dir: String): DataFrame =
     IndexStore.durableFrame(s, dir, "sq8_stats") {
@@ -180,11 +177,11 @@ object Similarity {
   private def sq8Stats(s: SparkSession, dir: String): (String, String) =
     // r16: the 2×64-long stats are a PERSISTED artifact (IndexStore) —
     // trained once per corpus, loaded thereafter; memoized in-session.
-    sq8Memo.computeIfAbsent((s, dir), _ => {
+    standing(s, dir, "sq8_stats") {
       val st = sq8StatsFrameDurable(s, dir).orderBy(col("i")).collect()
       (st.map(_.getAs[Long]("mn")).mkString(","),
         st.map(_.getAs[Long]("mx")).mkString(","))
-    })
+    }
 
   private def sq8CodesFrom(qe: DataFrame, mns: String, mxs: String): DataFrame =
     qe
@@ -300,15 +297,13 @@ object Similarity {
       ivfTrainStatsFrame(Dedup.quantized(s, dir))
     }
 
-  private val ivfStatsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[(Long, Seq[Long], BigInt)]]()
-
   /** Canonical trained coarse-quantizer stats, loaded from the
     * persisted artifact (≤K rows collected; memoized per session). */
   private[graft] def ivfStats(s: SparkSession,
       dir: String): Seq[(Long, Seq[Long], BigInt)] =
-    ivfStatsMemo.computeIfAbsent((s, dir),
-      _ => partsOfStats(ivfStatsFrameDurable(s, dir).collect()))
+    standing(s, dir, "ivf_stats") {
+      partsOfStats(ivfStatsFrameDurable(s, dir).collect())
+    }
 
   /** Frame-taking variant: (vec_id, q, norm) in, (…, cell, cell2) out —
     * ScaleProbe drives this on replicated corpora. */
@@ -696,13 +691,7 @@ object Similarity {
     * 32-44 jobs each; scoring on the edge removes 2 jobs and a
     * |corpus|-row probe per hop). */
   private def vecGraph(s: SparkSession, dir: String, tag: String)(
-      graph0: => DataFrame): DataFrame = {
-    // Resolve the edge frame BEFORE entering the memo: the edge
-    // builders are themselves `standing` entries, and a nested
-    // computeIfAbsent on one ConcurrentHashMap throws "Recursive
-    // update" whenever the two keys land in the same bin (observed
-    // once at dop 8 — bin layout is capacity/hash dependent).
-    val graph = graph0
+      graph: => DataFrame): DataFrame =
     standing(s, dir, tag + "_vec") {
       // REBALANCE before materializing: AQE sizes the checkpoint's
       // partitions by BYTES (one small partition at sf0.1 instead of
@@ -716,7 +705,6 @@ object Similarity {
         .hint("rebalance")
         .localCheckpoint(true)
     }
-  }
 
   /** Score a (query_id, qa, na, cand) frame against the corpus vector
     * store (entry-point scoring — the one place the walk still needs a
@@ -845,38 +833,44 @@ object Similarity {
       }
     }
 
-  /** Process-level cache of the graph family's STANDING-INDEX frames —
-    * the checkpointed navigation graphs and vector store behind
-    * q_knn_graph_search/_recall and q_knn_hnsw/_recall. On a cluster
-    * these are persisted tables built ONCE and walked by every query;
-    * in this single-JVM harness each of the four rows used to rebuild
-    * and localCheckpoint the same Σ|cell|² graph(s) per query (~21 s of
-    * the bench bill for ONE logical index family). Keyed by (session,
-    * dir, layer); contents are deterministic exact-integer artifacts,
-    * so every consumer stays hash-identical to its build-it-itself
-    * form, at any dop. The cache is scoped to exactly these documented
-    * standing-index frames — the rest of the verify surface stays
-    * lazy and cache-free. [[releaseStandingIndexes]] is the explicit
-    * release. */
-  private val standingIdx = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-  // private[graft]: the MaxSim family (ops/TextOps) memoizes its
-  // exhaustive scored frame through the same cache + release point
-  private[graft] def standing(s: SparkSession, dir: String, tag: String)
-      (build: => DataFrame): DataFrame =
-    standingIdx.computeIfAbsent((s, dir, tag), _ => build)
-
-  /** Drop every cached standing-index frame (and the PCA family's
-    * converged-direction cache beside it). The checkpoint blocks
-    * behind the dropped references are reclaimed by the
-    * ContextCleaner once unreachable — this is the explicit release
-    * point the harness mains call before shutdown. */
-  def releaseStandingIndexes(): Unit = {
-    standingIdx.clear()
-    Clustering.v1Cache.clear()
-    Clustering.v2Cache.clear()
-    TextAnalysis.nbModelMemo.clear()
+  /** The in-session STANDING-STATE registry: every memoized artifact
+    * derived from a corpus dir lives here under its own tag. On a
+    * cluster these are persisted tables built ONCE and read by every
+    * query; contents are deterministic exact-integer artifacts, so
+    * every consumer stays hash-identical to its build-it-itself form
+    * at any dop.
+    *
+    * An entry is keyed by (session, dir, tag) and carries the input
+    * version ([[graft.Tables.version]]) it was built from: a lookup
+    * that finds another version rebuilds and replaces the entry, so
+    * state never outlives its inputs. The build runs OUTSIDE the map's
+    * lock — the map only swaps in an unforced cell, forced after the
+    * map call returns — so builds nest inside builds freely. */
+  private final class Cell(val version: Seq[(String, Long, Long)],
+      build: => Any) {
+    lazy val value: Any = build
   }
+  private val registry = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String, String), Cell]()
+
+  private[graft] def standing[A](s: SparkSession, dir: String, tag: String)
+      (build: => A): A = {
+    val version = graft.Tables.version(dir)
+    registry.compute((s, dir, tag), (_, old) =>
+      if (old != null && old.version == version) old
+      else new Cell(version, build)).value.asInstanceOf[A]
+  }
+
+  /** The (dir-scoped) tags the registry currently holds. */
+  private[graft] def standingTags(s: SparkSession, dir: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    registry.keySet.asScala.collect { case (`s`, `dir`, t) => t }.toSet
+  }
+
+  /** Drop every standing entry — the one release point the harness
+    * mains call before shutdown. Checkpoint blocks behind the dropped
+    * frames are reclaimed by the ContextCleaner once unreachable. */
+  def releaseStandingIndexes(): Unit = registry.clear()
 
   /** HIERARCHICAL graph search (the full HNSW shape, Malkov &
     * Yashunin 2018): a sparse UPPER layer (deterministic 1-in-8 node
@@ -1141,14 +1135,9 @@ object Similarity {
     * on the loaded rows — the persisted-codebook half of the FAISS
     * index file. Memoized per session. */
   private def pqCodebooks(s: SparkSession, dir: String): Seq[Seq[Seq[Long]]] =
-    pqBooksMemo.computeIfAbsent((s, dir),
-      _ => pqCodebooksOf(pqStatsFrameDurable(s, dir).collect()))
-
-  private val pqBooksMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[Seq[Seq[Long]]]]()
-
-  private val pqResMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[Seq[Seq[Long]]]]()
+    standing(s, dir, "pq_books") {
+      pqCodebooksOf(pqStatsFrameDurable(s, dir).collect())
+    }
 
   /** The persisted residual-PQ training stats (g, cl, n, sv) over
     * v − coarse_centroid — centroids from the persisted IVF stats,
@@ -1370,10 +1359,6 @@ object Similarity {
     qe.withColumn("q", rot).withColumn("norm", expr("dot_long(q, q)"))
   }
 
-  private val opqMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Array[org.apache.spark.sql.Row],
-      Seq[Seq[Seq[Long]]])]()
-
   /** PERSISTED OPQ artifacts (IndexStore): the 64-row variance stats
     * (tag `opq_var`, the rotation's training pass) and the PQ books
     * over the ROTATED space (tag `opq_pq_stats`, ×5 seeds). The
@@ -1381,7 +1366,7 @@ object Similarity {
     * load thereafter like every other family. */
   private def opqArtifacts(s: SparkSession, dir: String)
       : (Array[org.apache.spark.sql.Row], Seq[Seq[Seq[Long]]]) =
-    opqMemo.computeIfAbsent((s, dir), _ => {
+    standing(s, dir, "opq") {
       val stats = IndexStore.durableFrame(s, dir, "opq_var") {
         opqVarFrame(Dedup.quantized(s, dir))
       }.collect()
@@ -1391,7 +1376,7 @@ object Similarity {
           scale = 5L)
       }.collect(), scale = 5L)
       (stats, books)
-    })
+    }
 
   /** The OPQ ranking off the persisted artifacts. */
   private def opqAdcTop(s: SparkSession, dir: String,
@@ -1573,8 +1558,9 @@ object Similarity {
     val centsLit = "cast(array(" +
       cents.map(c => s"array(${c.mkString(",")})").mkString(",") +
       ") as array<array<bigint>>)"
-    val cb = pqResMemo.computeIfAbsent((s, dir),
-      _ => pqCodebooksOf(pqResStatsFrameDurable(s, dir).collect()))
+    val cb = standing(s, dir, "pq_res_books") {
+      pqCodebooksOf(pqResStatsFrameDurable(s, dir).collect())
+    }
     (cells, cb,
       cellCol => expr(s"zip_with(q, $centsLit[$cellCol], (x, c) -> x - c)"))
   }

@@ -1582,8 +1582,8 @@ object TextAnalysis {
       // (column pruning specializes the two subtrees, so
       // ReuseExchange cannot dedup them — measured on the plan).
       // This IS the production two-job shape: emit manifest, then
-      // permute the manifest. Construction-time eagerness per the
-      // CC-loop discipline (SparkEntry.plans note).
+      // permute the manifest. Eager at construction, as the CC
+      // label loop runs its rounds at construction.
       .localCheckpoint()
     // 16-row bucket census → exclusive prefix offsets (lowercase hex
     // sorts digits-before-letters in both engines, so bucket order
@@ -2172,15 +2172,12 @@ object TextAnalysis {
   /** The NB train+apply pipeline through the argmax — shared by the
     * classifier row and its confusion matrix. */
   /** The trained NB model — the vocab×classes CPT and the 5-row class
-    * stats — memoized per (session, dir): q_nb_classify and
+    * stats — memoized per corpus version: q_nb_classify and
     * q_nb_confusion share one training pass (model training IS the
-    * index build here; inference below stays per-query). Same
-    * lifecycle as every standing frame — released with the standing
-    * indexes, rebuilt from parquet each process. */
-  private[llm] val nbModelMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
+    * index build here; inference below stays per-query). A standing
+    * entry (tag `nb_model`), rebuilt from parquet each process. */
   private def nbModel(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    nbModelMemo.computeIfAbsent((s, dir), _ => {
+    Similarity.standing(s, dir, "nb_model") {
       // Tables.fan (§2.5): the train tokenize feeds three aggregates
       // fused into the single-row-group scan without the fan
       val docs = Tables.fan(Tables(s, dir, "documents"))
@@ -2198,7 +2195,7 @@ object TextAnalysis {
         .join(tot, "cl").crossJoin(broadcast(voc))
         .localCheckpoint(true)
       (cnt, classes)
-    })
+    }
 
   private def nbPredictions(s: SparkSession, dir: String): DataFrame = {
       val (cnt, classes) = nbModel(s, dir)

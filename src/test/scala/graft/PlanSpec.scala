@@ -12,7 +12,7 @@ class PlanSpec extends SparkSuite {
   private def plan(name: String): String = {
     // `plans`, not `queries`: eager (checkpoint-materializing) queries
     // expose their operator tree only through their lazy twins.
-    val df = SparkEntry.plans(name)(spark, sf)
+    val df = SparkEntry.queries(name)(spark, sf)
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
   }
 
@@ -533,7 +533,7 @@ class PlanSpec extends SparkSuite {
     // happens at runtime: AQE stage reuse must replace the repeated
     // shuffle subtrees with ReusedExchange — without it a grid row
     // costs a full re-rank + re-train scan instead of a re-filter.
-    val df = SparkEntry.plans("q_knn_compressed_grid")(spark, sf)
+    val df = SparkEntry.queries("q_knn_compressed_grid")(spark, sf)
     df.collect() // materialize: AQE only reuses stages during execution
     val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(p.contains("isFinalPlan=true"))

@@ -111,5 +111,13 @@ class IndexStoreSpec extends SparkSuite {
       "the rebuilt artifact must carry survivors only")
     assert(IndexStore.has(spark, full, tag),
       "the pre-delete artifact stays under its own fingerprint")
+    // IN PLACE: tombstoning doc 1 by rewriting `full` itself (its
+    // embeddings kept, so the content differs from `deleted`) must miss
+    // within this same session — the fingerprint follows the dir's
+    // input version, never its path
+    spark.read.parquet(s"$deleted/documents.parquet")
+      .write.mode("overwrite").parquet(s"$full/documents.parquet")
+    assert(!IndexStore.has(spark, full, tag),
+      "a corpus rewritten in place must MISS its pre-delete artifact")
   }
 }
