@@ -1,22 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Session.run { spark =>
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // The 168-query suite generates far more codegen classes than
-      // the default 100-entry cache holds, so interleaved reps were
-      // re-paying each heavy plan's janino compile (measured: the
-      // SemDeDup family 8.6 s cold vs 2.2 s warm at sf0.1 — compile,
-      // not data). Sized to hold every plan in the suite once.
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Warm up session machinery (janino codegen compiler, parquet footer
     // reader, shuffle system, decimal/window/join codegen paths) on the
     // two O(10)-row dim tables so startup cost isn't billed to the first
@@ -53,24 +38,9 @@ object Bench {
     // lands on pass-1 of some queries and pass-2 of others; corrupting
     // a MIN now requires a window spanning an entire pass (~minutes),
     // which no observed contention burst does.
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     // Optional comma-separated filter for targeted idle-host reruns of
-    // one family (same env var Verify honours — and the same guard:
-    // a typo'd filter must not yield a tiny/empty bench JSON that
-    // reads as a real run).
-    val selected = sys.env.get("SPARK_GRAFT_ONLY") match {
-      case Some(f) => val keep = f.split(",").map(_.trim).toSet
-        val unknown = keep -- ordered.map(_._1).toSet
-        if (unknown.nonEmpty)
-          System.err.println("[bench] WARNING: SPARK_GRAFT_ONLY names not " +
-            s"registered: ${unknown.toSeq.sorted.mkString(",")}")
-        val kept = ordered.filter(q => keep(q._1))
-        if (kept.isEmpty)
-          sys.error("SPARK_GRAFT_ONLY matched zero registered queries — " +
-            "nothing would be benchmarked")
-        kept
-      case None => ordered
-    }
+    // one family (same env var and guard as Verify).
+    val selected = SparkEntry.selected("bench")
     // A query that throws on ANY rep reports the sentinel -1 (never its
     // partial wall time — a fast failure would otherwise DEFLATE the
     // total and read as a speedup) and bumps the headline "errors"
@@ -145,14 +115,11 @@ object Bench {
     // average — emit null rather than a number the ledger could
     // misread as a real (negative) measurement.
     val loadJson = if (loadAvg < 0) "null" else fmt(loadAvg, "%.2f")
-    println(s"""{"metric":"load_avg_1m","value":$loadJson,"unit":"load","cpus":"$cpus"}""")
+    println(s"""{"metric":"load_avg_1m","value":$loadJson,"unit":"load","cpus":"${Session.defaultCpus}"}""")
     // FINAL, SHORT line with just the headline fields: if the harness's
     // ~2 KB stdout tail truncates the full line above mid-JSON (possible
     // as the query count grows), this one still parses on its own — and
     // it stays LAST so the driver's single-line parse reads the total.
     println(s"""{"metric":"total","value":${fmt(total, "%.3f")},"unit":"sec","sf":"$sfName","reps":$reps,"errors":$errors}""")
-    // Explicit release of every standing entry before shutdown.
-    graft.llm.Similarity.releaseStandingIndexes()
-    spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -11,18 +10,8 @@ import scala.collection.mutable
   * sum) so the optimization loop can see WHERE a multi-job plan spends
   * its time. Usage: runMain graft.DevProfile <sfDir> <name> ... */
 object DevProfile {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Session.run { spark =>
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     case class St(var name: String = "", var submitted: Long = 0,
       var completed: Long = 0, var nTasks: Int = 0, var taskMs: Long = 0,
       var gcMs: Long = 0, var deserMs: Long = 0, var cpuMs: Long = 0)
@@ -74,7 +63,5 @@ object DevProfile {
       }
       spark.catalog.clearCache()
     }
-    graft.llm.Similarity.releaseStandingIndexes()
-    spark.stop()
   }
 }

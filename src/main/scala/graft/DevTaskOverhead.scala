@@ -1,19 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only microbench: raw per-task and per-job overhead of this
   * host/session config (guide §1.1). Runs trivial jobs at several
   * partition counts and prints wall times. */
 object DevTaskOverhead {
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def main(args: Array[String]): Unit = Session.run { spark =>
     val sc = spark.sparkContext
     // warm
     sc.parallelize(1 to 32, 32).count()
@@ -30,6 +21,5 @@ object DevTaskOverhead {
       spark.range(1000).toDF("x").groupBy($"x" % 7).count().count()
       println(f"df 1-shuffle  ${(System.nanoTime() - t0) / 1e6}%8.1f ms")
     }
-    spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection tool: print the formatted physical plan of
   * registered queries (dev/judge aid — `.explain("formatted")` shows
   * PushedFilters, ReadSchema pruning, join strategies, and
@@ -16,19 +14,11 @@ import org.apache.spark.sql.SparkSession
   * fired (it does NOT dedupe union arms re-planned under fresh
   * attribute IDs — the q_hll_tuning lesson). */
 object Explain {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Session.run { spark =>
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     val executed = sys.env.get("SPARK_GRAFT_EXECUTED").contains("1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     for (n <- names) {
       println(s"\n========== $n ==========")
       try {
@@ -37,6 +27,5 @@ object Explain {
         df.explain("formatted")
       } catch { case e: Throwable => println(s"explain failed: $e") }
     }
-    spark.stop()
   }
 }

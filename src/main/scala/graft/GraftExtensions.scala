@@ -1,39 +1,21 @@
 package graft
 
-import graft.functions.{BloomAgg, CmsSketch, DotLong, MaxK, VecSum}
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session extension that installs graft's native expressions
   * permanently (usable as `--conf spark.sql.extensions=graft.GraftExtensions`
   * on a real cluster). Local entry points also register imperatively
   * via [[graft.functions.GraftFunctions.register]] so queries work
-  * under any driver-provided session. */
+  * under any driver-provided session; both read
+  * [[graft.functions.GraftFunctions.natives]]. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("dot_long"),
-      new ExpressionInfo(classOf[DotLong].getName, "dot_long"),
-      (children: Seq[Expression]) => DotLong(children.head, children(1))))
-    e.injectFunction((
-      FunctionIdentifier("max_k"),
-      new ExpressionInfo(classOf[MaxK].getName, "max_k"),
-      (children: Seq[Expression]) => MaxK(children.head, children(1))))
-    e.injectFunction((
-      FunctionIdentifier("vec_sum"),
-      new ExpressionInfo(classOf[VecSum].getName, "vec_sum"),
-      (children: Seq[Expression]) => VecSum(children.head, children(1))))
-    e.injectFunction((
-      FunctionIdentifier("cms_sketch"),
-      new ExpressionInfo(classOf[CmsSketch].getName, "cms_sketch"),
-      (children: Seq[Expression]) =>
-        CmsSketch(children.head, children(1), children(2))))
-    e.injectFunction((
-      FunctionIdentifier("bloom_agg"),
-      new ExpressionInfo(classOf[BloomAgg].getName, "bloom_agg"),
-      (children: Seq[Expression]) =>
-        BloomAgg(children.head, children(1), children(2))))
+    for ((name, build) <- GraftFunctions.natives)
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(build.getClass.getName, name), build))
     e.injectOptimizerRule(_ => graft.functions.DotProductRewrite)
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.llm.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only scale probes (BASELINE.md): each takes a hot path against
@@ -23,16 +22,8 @@ import org.apache.spark.sql.functions._
   *    contraction converges in ~log rounds.
   */
 object ScaleProbe {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Session.run { spark =>
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Dev-only section filter (comma list: cc,range,bigstar,cms,quantile,
     // outlier, fuzzy, …); unset = run everything, as BASELINE.md's tables expect.
     val sections = sys.env.get("SPARK_GRAFT_PROBES").map(_.split(",").toSet)
@@ -102,11 +93,6 @@ object ScaleProbe {
           (col("event_id") + col("i") * lit(eventStride)).as("event_id"),
           col("us"))
       val rp = graft.ops.Joins.rangePairs(scaled)
-      if (sys.env.contains("GRAFT_PROBE_EXPLAIN"))
-        System.err.println(rp.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-          .linesIterator.filter(l => l.contains("Join") || l.contains("Exchange"))
-          .mkString(s"[range_$label plan]\n", "\n", ""))
       val t0 = System.nanoTime()
       val n = rp.count()
       val dt = (System.nanoTime() - t0) / 1e9
@@ -1475,6 +1461,5 @@ object ScaleProbe {
       timedIngest(16)
       delta.unpersist(false); qe.unpersist(false)
     }
-    spark.stop()
   }
 }

@@ -37,6 +37,26 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.iterator.flatMap(_._1).toMap
 
+  /** The registered queries sorted by name, kept to the comma-separated
+    * names of `only` (`SPARK_GRAFT_ONLY`) when it is set. Unknown names
+    * are warned about under `[tag]`; a filter that matches nothing
+    * fails, so a typo cannot pass as a real (empty) run. */
+  def selected(tag: String,
+      only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")): Seq[(String, Q)] = {
+    val all = queries.toSeq.sortBy(_._1)
+    only.fold(all) { f =>
+      val keep = f.split(",").map(_.trim).toSet
+      val unknown = keep -- all.map(_._1)
+      if (unknown.nonEmpty)
+        System.err.println(s"[$tag] WARNING: SPARK_GRAFT_ONLY names not " +
+          s"registered: ${unknown.toSeq.sorted.mkString(",")}")
+      val kept = all.filter(q => keep(q._1))
+      if (kept.isEmpty)
+        sys.error(s"[$tag] SPARK_GRAFT_ONLY matched zero registered queries")
+      kept
+    }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     *

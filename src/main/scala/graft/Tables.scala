@@ -40,23 +40,18 @@ object Tables {
     * (sortBeforeRepartition is on) and row-preserving, so results are
     * unchanged.
     *
-    * Scale-adaptive, not a local[32] constant: the width defaults to
-    * the session's defaultParallelism. On a production corpus the
-    * input arrives in many row groups and the scan parallelizes
-    * natively — set `spark.graft.scan.fanout=0` there to skip the
-    * exchange entirely (it would move the full corpus once for
-    * nothing). */
+    * Scale-adaptive, not a local[32] constant: the width is
+    * [[fanWidth]], and a one-core session skips the exchange. An input
+    * that already spans many row groups scans wide natively; there the
+    * exchange moves it once for nothing. */
   def fan(df: DataFrame): DataFrame = {
     val n = fanWidth(df.sparkSession)
     if (n <= 1) df else df.repartition(n)
   }
 
-  /** The fan-out width: `spark.graft.scan.fanout` if set, else the
-    * session's default parallelism. 0/1 disables fan/salting. */
-  def fanWidth(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.scan.fanout")
-      .map(_.trim.toInt)
-      .getOrElse(s.sparkContext.defaultParallelism)
+  /** The fan-out width: the session's default parallelism. A width of
+    * 1 disables fan/salting. */
+  def fanWidth(s: SparkSession): Int = s.sparkContext.defaultParallelism
 
   /** Normalize `events.ts` to a session-zoned microsecond TIMESTAMP
     * regardless of how the fixture generation wrote it. Two layouts

@@ -1,7 +1,7 @@
 package graft.clients
 
 import graft.core.MapReduce
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** The reference's only shipped client: find names containing a substring
@@ -63,15 +63,11 @@ object SearchMain {
       System.err.println("usage: Search <substring> <dir> [<dir> ...]")
       sys.exit(1)
     }
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val listing = graft.sources.DirListing(spark, args.drop(1).toSeq)
-    val names = Search.dataframe(listing, "dir", "name", args(0))
-      .collect().map(_.getString(0))
-    println(names.map(_ + " ").mkString)
-    spark.stop()
+    graft.Session.run { spark =>
+      val listing = graft.sources.DirListing(spark, args.drop(1).toSeq)
+      val names = Search.dataframe(listing, "dir", "name", args(0))
+        .collect().map(_.getString(0))
+      println(names.map(_ + " ").mkString)
+    }
   }
 }

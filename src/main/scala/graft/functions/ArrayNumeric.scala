@@ -179,39 +179,26 @@ case class PqDists(left: Expression, right: Expression)
 }
 
 object GraftFunctions {
+  /** Every native expression by SQL name with its builder: the one
+    * table both [[register]] and [[graft.GraftExtensions]] install. */
+  val natives: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "dot_long" -> (c => DotLong(c(0), c(1))),
+    "pq_dists" -> (c => PqDists(c(0), c(1))),
+    "max_k" -> (c => MaxK(c(0), c(1))),
+    "vec_sum" -> (c => VecSum(c(0), c(1))),
+    "cms_sketch" -> (c => CmsSketch(c(0), c(1), c(2))),
+    "bloom_agg" -> (c => BloomAgg(c(0), c(1), c(2))))
+
   /** Register graft's native expressions and UDAFs on a session so they
     * are usable from `expr(...)`/SQL text. Idempotent; called by every
     * query builder that needs them (works under any session the
     * driver hands us, no `spark.sql.extensions` config required). */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_long",
-      (children: Seq[Expression]) => DotLong(children.head, children(1)),
-      "built-in")
+    for ((name, build) <- natives)
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, build, "built-in")
     spark.udf.register("wmean",
       org.apache.spark.sql.functions.udaf(WeightedMean, WeightedMean.inputEncoder))
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_dists",
-      (children: Seq[Expression]) => PqDists(children.head, children(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "max_k",
-      (children: Seq[Expression]) => MaxK(children.head, children(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_sum",
-      (children: Seq[Expression]) => VecSum(children.head, children(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_sketch",
-      (children: Seq[Expression]) =>
-        CmsSketch(children.head, children(1), children(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg",
-      (children: Seq[Expression]) =>
-        BloomAgg(children.head, children(1), children(2)),
-      "built-in")
     if (!spark.experimental.extraOptimizations.contains(DotProductRewrite))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ DotProductRewrite

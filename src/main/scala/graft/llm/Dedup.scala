@@ -535,8 +535,6 @@ object Dedup {
       labels = next.select(col("doc"), col("label"))
       done = changed == 0
       iters += 1
-      if (sys.env.contains("GRAFT_CC_VERBOSE"))
-        System.err.println(s"[keepers] iter=$iters changed=$changed")
     }
     // Unconverged labels are silently WRONG (pairs beyond maxIters hops
     // keep distinct keepers) — refuse to return them. High-diameter
@@ -658,8 +656,6 @@ object Dedup {
       sig = nextSig
       edges = ss
       iters += 1
-      if (sys.env.contains("GRAFT_CC_VERBOSE"))
-        System.err.println(s"[keepersBigStar] iter=$iters edges=${nextSig._1}")
     }
     if (!done) throw new IllegalStateException(
       s"keepersBigStar: not converged after $maxIters rounds")

@@ -602,7 +602,7 @@ object Similarity {
     // produced by EXACTLY ONE (sp, sc) combination, so the pair set —
     // and the query result — is unchanged while the build spreads
     // over cells·g² keys. g derives from the session's parallelism
-    // (spark.graft.scan.fanout overrides; ≤1 disables).
+    // (g = 1 on a one-core session: no salting).
     val g = math.max(1, math.sqrt(Tables.fanWidth(probeCells.sparkSession))
       .round.toInt)
     val probes = probeCells.select(col("vec_id"),

@@ -38,6 +38,9 @@ class ExtensionsSpec extends AnyFunSuite {
         .head.getSeq[Long](0)
       assert(bl.map(java.lang.Long.bitCount).sum > 0 &&
         bl.map(java.lang.Long.bitCount).sum <= 4)
+      // v = (1,2) against the 2×2 codebook rows (1,2) and (3,5).
+      assert(s2.sql("SELECT pq_dists(array(1L,2L), array(1L,2L,3L,5L))")
+        .head.getSeq[Long](0) === Seq(0L, 13L))
     } finally {
       prevDefault.foreach(SparkSession.setDefaultSession)
       prevActive.foreach(SparkSession.setActiveSession)
