@@ -13,8 +13,8 @@ object Session {
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** A `local[cpus]` session with the shared config. */
-  def local(cpus: Int = defaultCpus): SparkSession = {
-    val spark = SparkSession.builder()
+  def local(cpus: Int = defaultCpus): SparkSession =
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
@@ -26,9 +26,6 @@ object Session {
       .config("spark.sql.codegen.cache.maxEntries", "4000")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 
   /** Run a main's body on a [[local]] session; every standing entry is
     * released and the session stopped even when the body throws. */

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -192,13 +193,17 @@ object GraftFunctions {
   /** Register graft's native expressions and UDAFs on a session so they
     * are usable from `expr(...)`/SQL text. Idempotent; called by every
     * query builder that needs them (works under any session the
-    * driver hands us, no `spark.sql.extensions` config required). */
+    * driver hands us, no `spark.sql.extensions` config required). A
+    * name the session already has is left alone, so repeated builds
+    * register nothing and log no "replaced" warning. */
   def register(spark: SparkSession): Unit = {
-    for ((name, build) <- natives)
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, build, "built-in")
-    spark.udf.register("wmean",
-      org.apache.spark.sql.functions.udaf(WeightedMean, WeightedMean.inputEncoder))
+    val registry = spark.sessionState.functionRegistry
+    def absent(name: String) = !registry.functionExists(FunctionIdentifier(name))
+    for ((name, build) <- natives if absent(name))
+      registry.createOrReplaceTempFunction(name, build, "built-in")
+    if (absent("wmean"))
+      spark.udf.register("wmean",
+        org.apache.spark.sql.functions.udaf(WeightedMean, WeightedMean.inputEncoder))
     if (!spark.experimental.extraOptimizations.contains(DotProductRewrite))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ DotProductRewrite

@@ -1,6 +1,8 @@
 package graft.llm
 
 import graft.Tables
+import graft.codec.{Bytes, Malformed}
+import graft.codec.Malformed.{BadData, Truncated}
 import graft.ops.Q
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
@@ -466,18 +468,13 @@ object Multimodal {
     val nch = 1 + b(2) % 2
     val n = 1 + b(3) % 8 // samples per channel
     val dataLen = n * nch
-    val out = new java.io.ByteArrayOutputStream(64)
-    def w32(v: Int): Unit = { out.write(v & 255); out.write((v >> 8) & 255)
-      out.write((v >> 16) & 255); out.write((v >> 24) & 255) }
-    def w16(v: Int): Unit = { out.write(v & 255); out.write((v >> 8) & 255) }
-    def tag(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-    tag(if (badMagic) "XIFF" else "RIFF")
-    w32(4 + (if (hasList) 12 else 0) + 24 + 8 + dataLen)
-    tag("WAVE")
-    if (hasList) { tag("LIST"); w32(4); tag("INFO") }
-    tag("fmt "); w32(16); w16(1); w16(nch); w32(8000); w32(8000 * nch)
-    w16(nch); w16(8)
-    tag("data"); w32(dataLen)
+    val out = new Bytes.Writer(64)
+    out.ascii(if (badMagic) "XIFF" else "RIFF")
+      .u32le(4 + (if (hasList) 12 else 0) + 24 + 8 + dataLen).ascii("WAVE")
+    if (hasList) out.ascii("LIST").u32le(4).ascii("INFO")
+    out.ascii("fmt ").u32le(16).u16le(1).u16le(nch).u32le(8000)
+      .u32le(8000 * nch).u16le(nch).u16le(8)
+    out.ascii("data").u32le(dataLen)
     var k = 0
     val actual = if (trunc) dataLen - 1 else dataLen
     while (k < actual) { out.write(b(k % 16)); k += 1 }
@@ -497,21 +494,19 @@ object Multimodal {
   private[llm] def parseWav(id: Long, p: Array[Byte]): WavMeta = {
     val none = WavMeta(id, "bad_magic", None, None, None, None, None, None, None, None)
     if (p == null || p.length < 12) return none
-    def u32(i: Int): Long = (p(i) & 0xffL) | ((p(i + 1) & 0xffL) << 8) |
-      ((p(i + 2) & 0xffL) << 16) | ((p(i + 3) & 0xffL) << 24)
-    def u16(i: Int): Int = (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8)
-    def tag(i: Int): String = new String(p, i, 4, "US-ASCII")
-    if (tag(0) != "RIFF" || tag(8) != "WAVE") return none
+    if (Bytes.ascii(p, 0, 4) != "RIFF" || Bytes.ascii(p, 8, 4) != "WAVE")
+      return none
     var i = 12
     var fmt = -1; var nch = -1; var rate = -1; var bits = -1; var haveFmt = false
     while (i + 8 <= p.length) {
-      val t = tag(i); val sz = u32(i + 4)
+      val t = Bytes.ascii(p, i, 4); val sz = Bytes.u32le(p, i + 4)
       if (sz > p.length) { // corrupt declared size: can't even skip it
         if (t != "data") return none.copy(status = "bad_fmt")
       }
       if (t == "fmt " && i + 8 + 16 <= p.length) {
-        fmt = u16(i + 8); nch = u16(i + 10); rate = u32(i + 12).toInt
-        bits = u16(i + 22); haveFmt = true
+        fmt = Bytes.u16le(p, i + 8); nch = Bytes.u16le(p, i + 10)
+        rate = Bytes.i32le(p, i + 12); bits = Bytes.u16le(p, i + 22)
+        haveFmt = true
       } else if (t == "data") {
         if (!haveFmt || fmt != 1 || bits != 8 || nch <= 0)
           return none.copy(status = "bad_fmt")
@@ -570,11 +565,11 @@ object Multimodal {
           val p = d.payload
           val nch = m.n_channels.get
           // locate the data chunk (walk is safe: status ok proved it)
-          def u32(i: Int): Long = (p(i) & 0xffL) | ((p(i + 1) & 0xffL) << 8) |
-            ((p(i + 2) & 0xffL) << 16) | ((p(i + 3) & 0xffL) << 24)
           var i = 12
-          while (new String(p, i, 4, "US-ASCII") != "data")
-            i += 8 + u32(i + 4).toInt + (u32(i + 4).toInt & 1)
+          while (Bytes.ascii(p, i, 4) != "data") {
+            val sz = Bytes.i32le(p, i + 4)
+            i += 8 + sz + (sz & 1)
+          }
           val off = i + 8
           val n = m.n_samples.get.toInt // per-channel count
           Iterator.range(0, (n + frameLen - 1) / frameLen).map { f =>
@@ -621,14 +616,12 @@ object Multimodal {
     val ht = 1 + b(1) % 4
     val stride = (w * 3 + 3) & ~3
     val need = stride * ht
-    val out = new java.io.ByteArrayOutputStream(128)
-    def w32(v: Int): Unit = { out.write(v & 255); out.write((v >> 8) & 255)
-      out.write((v >> 16) & 255); out.write((v >> 24) & 255) }
-    def w16(v: Int): Unit = { out.write(v & 255); out.write((v >> 8) & 255) }
-    out.write(if (badMagic) 'X' else 'B'); out.write('M')
-    w32(14 + 40 + need); w16(0); w16(0); w32(54)
-    w32(40); w32(w); w32(if (topDown) -ht else ht)
-    w16(1); w16(24); w32(0); w32(need); w32(2835); w32(2835); w32(0); w32(0)
+    val out = new Bytes.Writer(128)
+    out.ascii(if (badMagic) "XM" else "BM")
+      .u32le(14 + 40 + need).u16le(0).u16le(0).u32le(54)
+      .u32le(40).u32le(w).u32le(if (topDown) -ht else ht)
+      .u16le(1).u16le(24).u32le(0).u32le(need).u32le(2835).u32le(2835)
+      .u32le(0).u32le(0)
     var sr = 0
     while (sr < ht) {
       val logical = if (topDown) sr else ht - 1 - sr
@@ -658,16 +651,13 @@ object Multimodal {
       None, None, None, None, None)
     if (p == null || p.length < 2 || p(0) != 'B' || p(1) != 'M') return none
     if (p.length < 54) return none.copy(status = "bad_header")
-    def u32(i: Int): Int = (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8) |
-      ((p(i + 2) & 0xff) << 16) | ((p(i + 3) & 0xff) << 24)
-    def u16(i: Int): Int = (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8)
-    val dataOff = u32(10)
-    val hdrSize = u32(14)
-    val w = u32(18) // signed per spec; negative width is invalid
-    val hRaw = u32(22) // signed: negative = top-down row order
-    val planes = u16(26)
-    val bpp = u16(28)
-    val comp = u32(30)
+    val dataOff = Bytes.i32le(p, 10)
+    val hdrSize = Bytes.i32le(p, 14)
+    val w = Bytes.i32le(p, 18) // signed per spec; negative width is invalid
+    val hRaw = Bytes.i32le(p, 22) // signed: negative = top-down row order
+    val planes = Bytes.u16le(p, 26)
+    val bpp = Bytes.u16le(p, 28)
+    val comp = Bytes.i32le(p, 30)
     if (hdrSize < 40 || w <= 0 || hRaw == 0 || planes != 1 || dataOff < 54)
       return none.copy(status = "bad_header")
     val topDown = hRaw < 0
@@ -675,15 +665,16 @@ object Multimodal {
     val meta = none.copy(width = Some(w), height = Some(ht),
       bpp = Some(bpp), top_down = Some(if (topDown) 1 else 0))
     if (bpp != 24 || comp != 0) return meta.copy(status = "unsupported")
-    val stride = (w * 3 + 3) & ~3
-    val need = stride.toLong * ht
-    if (p.length - dataOff < need) return meta.copy(status = "truncated")
+    val stride = (w * 3L + 3) & ~3L // Long: a huge width must not wrap
+    // a stride past the file is truncated before stride * ht can wrap
+    if ((ht > 0 && stride > p.length) || p.length - dataOff < stride * ht)
+      return meta.copy(status = "truncated")
     var rs = 0L; var gs = 0L; var bs = 0L; var trs = 0L
     var mn = 255; var mx = 0
     var r = 0
     while (r < ht) {
       val stored = if (topDown) r else ht - 1 - r
-      val off = dataOff + stored * stride
+      val off = dataOff + stored * stride.toInt
       var c = 0
       while (c < w) {
         val bb = p(off + 3 * c) & 0xff // BGR on disk
@@ -732,29 +723,18 @@ object Multimodal {
     val trunc = b(15) % 8 == 2
     val w = 1 + b(0) % 4
     val ht = 1 + b(1) % 4
-    val out = new java.io.ByteArrayOutputStream(160)
-    def w16(v: Int): Unit =
-      if (bigEnd) { out.write((v >> 8) & 255); out.write(v & 255) }
-      else { out.write(v & 255); out.write((v >> 8) & 255) }
-    def w32(v: Int): Unit =
-      if (bigEnd) { out.write((v >>> 24) & 255); out.write((v >>> 16) & 255)
-        out.write((v >>> 8) & 255); out.write(v & 255) }
-      else { out.write(v & 255); out.write((v >> 8) & 255)
-        out.write((v >> 16) & 255); out.write((v >>> 24) & 255) }
-    if (badMagic) { out.write('X'); out.write('X') }
-    else if (bigEnd) { out.write('M'); out.write('M') }
-    else { out.write('I'); out.write('I') }
-    w16(42); w32(8)
+    val out = new Bytes.Writer(160, big = bigEnd)
+    out.ascii(if (badMagic) "XX" else if (bigEnd) "MM" else "II")
+      .u16(42).u32(8)
     val stripOff = 8 + 2 + 8 * 12 + 4
-    def entryShort(tag: Int, v: Int): Unit = {
-      w16(tag); w16(3); w32(1); w16(v); w16(0) // SHORT left-justified
-    }
-    def entryLong(tag: Int, v: Int): Unit = { w16(tag); w16(4); w32(1); w32(v) }
-    w16(8)
+    def entryShort(tag: Int, v: Int): Unit = // SHORT left-justified
+      out.u16(tag).u16(3).u32(1).u16(v).u16(0)
+    def entryLong(tag: Int, v: Int): Unit = out.u16(tag).u16(4).u32(1).u32(v)
+    out.u16(8)
     entryShort(256, w); entryShort(257, ht); entryShort(258, 8)
     entryShort(259, 1); entryShort(262, 1)
     entryLong(273, stripOff); entryShort(278, ht); entryLong(279, w * ht)
-    w32(0)
+    out.u32(0)
     var i = 0
     while (i < w * ht) { out.write(b(i % 16)); i += 1 }
     val full = out.toByteArray
@@ -778,30 +758,23 @@ object Multimodal {
     val big = p(0) == 'M' && p(1) == 'M'
     val lit = p(0) == 'I' && p(1) == 'I'
     if (!big && !lit) return none
-    def u16(i: Long): Int =
-      if (i < 0 || i + 1 >= p.length) -1
-      else if (big) ((p(i.toInt) & 0xff) << 8) | (p(i.toInt + 1) & 0xff)
-      else (p(i.toInt) & 0xff) | ((p(i.toInt + 1) & 0xff) << 8)
-    def u32(i: Long): Long =
-      if (i < 0 || i + 3 >= p.length) -1L
-      else if (big) ((p(i.toInt) & 0xffL) << 24) | ((p(i.toInt + 1) & 0xffL) << 16) |
-        ((p(i.toInt + 2) & 0xffL) << 8) | (p(i.toInt + 3) & 0xffL)
-      else (p(i.toInt) & 0xffL) | ((p(i.toInt + 1) & 0xffL) << 8) |
-        ((p(i.toInt + 2) & 0xffL) << 16) | ((p(i.toInt + 3) & 0xffL) << 24)
-    if (u16(2) != 42) return none
+    if (Bytes.u16(p, 2, big) != 42) return none
     val hdr = none.copy(status = "bad_header",
       byte_order = Some(if (big) "MM" else "II"))
-    val ifd = u32(4)
-    if (ifd < 0 || ifd > p.length.toLong - 2) return hdr
-    val n = u16(ifd)
+    val ifd = Bytes.u32(p, 4, big)
+    if (ifd > p.length.toLong - 2) return hdr
+    val n = Bytes.u16(p, ifd.toInt, big)
+    // the whole entry table fits, so every entry read below is in bounds
     if (n <= 0 || ifd + 2 + n.toLong * 12 + 4 > p.length) return hdr
     var w = -1L; var htL = -1L; var bits = 1L; var comp = 1L
     var photo = 0L; var so = -1L; var sbc = -1L
     var e = 0
     while (e < n) {
-      val off = ifd + 2 + e * 12
-      val tag = u16(off); val typ = u16(off + 2); val cnt = u32(off + 4)
-      val v: Long = if (typ == 3) u16(off + 8).toLong else u32(off + 8)
+      val off = ifd.toInt + 2 + e * 12
+      val tag = Bytes.u16(p, off, big); val typ = Bytes.u16(p, off + 2, big)
+      val cnt = Bytes.u32(p, off + 4, big)
+      val v: Long =
+        if (typ == 3) Bytes.u16(p, off + 8, big) else Bytes.u32(p, off + 8, big)
       if (cnt == 1) tag match {
         case 256 => w = v
         case 257 => htL = v
@@ -873,14 +846,9 @@ object Multimodal {
       case 2 => (b(2), b(3), b(4))
       case _ => (b(5), b(6), b(7))
     }
-    val out = new java.io.ByteArrayOutputStream(96)
-    def w32be(v: Int): Unit = { out.write((v >>> 24) & 255)
-      out.write((v >>> 16) & 255); out.write((v >>> 8) & 255)
-      out.write(v & 255) }
-    out.write(if (badMagic) 'x' else 'q')
-    out.write('o'); out.write('i'); out.write('f')
-    w32be(w); w32be(ht)
-    out.write(if (badChan) 4 else 3); out.write(0)
+    val out = new Bytes.Writer(96)
+    out.ascii(if (badMagic) "xoif" else "qoif").u32be(w).u32be(ht)
+      .u8(if (badChan) 4 else 3).u8(0)
     val header = out.size()
     var pr = 0; var pg = 0; var pb = 0 // spec initial prev (a = 255)
     val idx = Array.fill(64 * 3)(-1)
@@ -942,9 +910,7 @@ object Multimodal {
     if (p == null || p.length < 4 || p(0) != 'q' || p(1) != 'o' ||
       p(2) != 'i' || p(3) != 'f') return none
     if (p.length < 14) return none.copy(status = "bad_header")
-    def u32be(i: Int): Long = ((p(i) & 0xffL) << 24) | ((p(i + 1) & 0xffL) << 16) |
-      ((p(i + 2) & 0xffL) << 8) | (p(i + 3) & 0xffL)
-    val w = u32be(4); val ht = u32be(8)
+    val w = Bytes.u32be(p, 4); val ht = Bytes.u32be(p, 8)
     val ch = p(12) & 0xff; val cs = p(13) & 0xff
     // The per-dim cap alone is not enough: 65536×65536 makes the Long
     // product 2^32, whose Int truncation is 0 (or negative for nearby
@@ -962,7 +928,7 @@ object Multimodal {
     var rs = 0L; var gs = 0L; var bs = 0L; var nRun = 0L
     var mn = 255; var mx = 0
     var produced = 0
-    var off = 14
+    val c = new Bytes.Cursor(p, 14)
     def emit(k: Int): Unit = {
       rs += pr.toLong * k; gs += pg.toLong * k; bs += pb.toLong * k
       mn = math.min(mn, math.min(pr, math.min(pg, pb)))
@@ -972,46 +938,41 @@ object Multimodal {
       idx(hi * 4 + 3) = pa
       produced += k
     }
-    while (produced < n) {
-      if (off >= p.length) return meta.copy(status = "truncated")
-      val op = p(off) & 0xff; off += 1
-      if (op == 0xFE) { // RGB literal
-        if (off + 3 > p.length) return meta.copy(status = "truncated")
-        pr = p(off) & 0xff; pg = p(off + 1) & 0xff; pb = p(off + 2) & 0xff
-        off += 3; emit(1)
-      } else if (op == 0xFF) { // RGBA literal (spec-complete)
-        if (off + 4 > p.length) return meta.copy(status = "truncated")
-        pr = p(off) & 0xff; pg = p(off + 1) & 0xff; pb = p(off + 2) & 0xff
-        pa = p(off + 3) & 0xff; off += 4; emit(1)
-      } else (op >> 6) match {
-        case 0 => // INDEX
-          pr = idx(op * 4); pg = idx(op * 4 + 1); pb = idx(op * 4 + 2)
-          pa = idx(op * 4 + 3); emit(1)
-        case 1 => // DIFF
-          pr = (pr + ((op >> 4) & 3) - 2) & 0xff
-          pg = (pg + ((op >> 2) & 3) - 2) & 0xff
-          pb = (pb + (op & 3) - 2) & 0xff
-          emit(1)
-        case 2 => // LUMA
-          if (off >= p.length) return meta.copy(status = "truncated")
-          val dg = (op & 0x3f) - 32
-          val b2 = p(off) & 0xff; off += 1
-          pr = (pr + dg + ((b2 >> 4) & 15) - 8) & 0xff
-          pg = (pg + dg) & 0xff
-          pb = (pb + dg + (b2 & 15) - 8) & 0xff
-          emit(1)
-        case _ => // RUN
-          val k = (op & 0x3f) + 1
-          if (produced + k > n) return meta.copy(status = "truncated")
-          nRun += k; emit(k)
+    try {
+      while (produced < n) {
+        val op = c.u8()
+        if (op == 0xFE) { // RGB literal
+          pr = c.u8(); pg = c.u8(); pb = c.u8(); emit(1)
+        } else if (op == 0xFF) { // RGBA literal (spec-complete)
+          pr = c.u8(); pg = c.u8(); pb = c.u8(); pa = c.u8(); emit(1)
+        } else (op >> 6) match {
+          case 0 => // INDEX
+            pr = idx(op * 4); pg = idx(op * 4 + 1); pb = idx(op * 4 + 2)
+            pa = idx(op * 4 + 3); emit(1)
+          case 1 => // DIFF
+            pr = (pr + ((op >> 4) & 3) - 2) & 0xff
+            pg = (pg + ((op >> 2) & 3) - 2) & 0xff
+            pb = (pb + (op & 3) - 2) & 0xff
+            emit(1)
+          case 2 => // LUMA
+            val dg = (op & 0x3f) - 32
+            val b2 = c.u8()
+            pr = (pr + dg + ((b2 >> 4) & 15) - 8) & 0xff
+            pg = (pg + dg) & 0xff
+            pb = (pb + dg + (b2 & 15) - 8) & 0xff
+            emit(1)
+          case _ => // RUN
+            val k = (op & 0x3f) + 1
+            if (produced + k > n) throw Truncated
+            nRun += k; emit(k)
+        }
       }
-    }
-    // spec trailer: exactly 7 zero bytes then 0x01
-    if (p.length - off != 8 || (0 until 7).exists(j => p(off + j) != 0) ||
-      p(off + 7) != 1) return meta.copy(status = "truncated")
-    meta.copy(status = "ok", r_sum = Some(rs), g_sum = Some(gs),
-      b_sum = Some(bs), px_min = Some(mn), px_max = Some(mx),
-      n_run_px = Some(nRun))
+      // spec trailer: exactly 7 zero bytes then 0x01 (LE: 1 << 56)
+      if (c.remaining != 8 || Bytes.u64le(p, c.pos) != 1L << 56) throw Truncated
+      meta.copy(status = "ok", r_sum = Some(rs), g_sum = Some(gs),
+        b_sum = Some(bs), px_min = Some(mn), px_max = Some(mx),
+        n_run_px = Some(nRun))
+    } catch { case f: Malformed => meta.copy(status = f.status) }
   }
 
   def decodeQoi(ds: Dataset[BinaryDoc]): Dataset[QoiMeta] = {
@@ -1050,10 +1011,8 @@ object Multimodal {
     val w = 1 + b(0) % 4
     val ht = 1 + b(1) % 4
     val idx = Array.tabulate(w * ht)(i => b(5 + (i / 3) % 8) % 4)
-    val out = new java.io.ByteArrayOutputStream(128)
-    def w16(v: Int): Unit = { out.write(v & 255); out.write((v >> 8) & 255) }
-    out.write((if (badMagic) "XIF87a" else "GIF87a").getBytes("US-ASCII"))
-    w16(w); w16(ht)
+    val out = new Bytes.Writer(128)
+    out.ascii(if (badMagic) "XIF87a" else "GIF87a").u16le(w).u16le(ht)
     out.write(0xF1) // GCT present, 8-bit color res, size 2^(1+1) = 4
     out.write(0); out.write(0) // bg index, aspect
     (0 until 4).foreach { j =>
@@ -1061,7 +1020,7 @@ object Multimodal {
       out.write((b(3) + 11 * j) % 256)
       out.write((b(4) + 13 * j) % 256)
     }
-    out.write(0x2C); w16(0); w16(0); w16(w); w16(ht)
+    out.u8(0x2C).u16le(0).u16le(0).u16le(w).u16le(ht)
     out.write(if (interlaced) 0x40 else 0x00)
     // storage-order index stream: interlace permutation of logical rows
     val order = if (interlaced) interlaceOrder(ht) else (0 until ht).toArray
@@ -1150,8 +1109,7 @@ object Multimodal {
     val ver = new String(p, 3, 3, "US-ASCII")
     if (ver != "87a" && ver != "89a") return none.copy(status = "bad_header")
     if (p.length < 13) return none.copy(status = "bad_header")
-    def u16(i: Int): Int = (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8)
-    val w = u16(6); val ht = u16(8)
+    val w = Bytes.u16le(p, 6); val ht = Bytes.u16le(p, 8)
     val packed = p(10) & 0xff
     if (w <= 0 || ht <= 0) return none.copy(status = "bad_header")
     val nColors = 1 << ((packed & 7) + 1)
@@ -1160,143 +1118,149 @@ object Multimodal {
         width = Some(w), height = Some(ht))
     val meta = none.copy(width = Some(w), height = Some(ht),
       n_colors = Some(nColors))
-    var i = 13
-    if (i + 3 * nColors > p.length) return meta.copy(status = "truncated")
-    val pal = Array.tabulate(3 * nColors)(j => p(i + j) & 0xff)
-    i += 3 * nColors
-    // block walk to the image descriptor, skipping extensions
-    var guard = true
-    while (guard) {
-      if (i >= p.length) return meta.copy(status = "truncated")
-      (p(i) & 0xff) match {
-        case 0x21 => // extension: label + sub-blocks
-          i += 2
-          var sz = if (i < p.length) p(i) & 0xff else -1
-          while (sz > 0) {
-            i += 1 + sz
-            sz = if (i < p.length) p(i) & 0xff else -1
+    var row = meta // the partial row a failure reports
+    try {
+      var i = 13
+      Bytes.need(p, i, 3 * nColors)
+      val pal = Array.tabulate(3 * nColors)(j => p(i + j) & 0xff)
+      i += 3 * nColors
+      // block walk to the image descriptor, skipping extensions
+      var guard = true
+      while (guard) {
+        Bytes.u8(p, i) match {
+          case 0x21 => // extension: label + sub-blocks
+            i += 2
+            var sz = Bytes.u8(p, i)
+            while (sz > 0) {
+              i += 1 + sz
+              sz = Bytes.u8(p, i)
+            }
+            i += 1 // terminator
+          case 0x2C => guard = false
+          case _ => // a trailer (0x3B) before any image, or junk
+            return meta.copy(status = "bad_data")
+        }
+      }
+      Bytes.need(p, i, 10)
+      val iw = Bytes.u16le(p, i + 5); val ih = Bytes.u16le(p, i + 7)
+      val ipacked = p(i + 9) & 0xff
+      if ((ipacked & 0x80) != 0) // local color table — out of scope
+        return meta.copy(status = "unsupported")
+      val interlaced = (ipacked & 0x40) != 0
+      val m2 = meta.copy(interlaced = Some(if (interlaced) 1 else 0))
+      if (iw != w || ih != ht || iw.toLong * ih > Int.MaxValue)
+        return m2.copy(status = "bad_header")
+      row = m2
+      i += 10
+      val minCode = Bytes.u8(p, i); i += 1
+      if (minCode < 1 || minCode > 8) return m2.copy(status = "bad_data")
+      // reassemble the LZW stream from sub-blocks
+      val data = new java.io.ByteArrayOutputStream(64)
+      var sz = Bytes.u8(p, i)
+      while (sz > 0) {
+        Bytes.need(p, i + 1, sz)
+        data.write(p, i + 1, sz)
+        i += 1 + sz
+        sz = Bytes.u8(p, i)
+      }
+      i += 1 // sub-block terminator
+      val lzw = data.toByteArray
+      val n = iw * ih
+      val px = new Array[Int](n)
+      // LZW decode: prefix/suffix tables, KwKwK case, width bump at 2^width
+      val clear = 1 << minCode
+      val eoi = clear + 1
+      val prefix = new Array[Int](4096)
+      val suffix = new Array[Int](4096)
+      var next = eoi + 1
+      var width = minCode + 1
+      var acc = 0L; var nbits = 0; var pos = 0
+      var produced = 0
+      var prev = -1
+      val stack = new Array[Int](4096)
+      def readCode(): Int = {
+        while (nbits < width) {
+          if (pos >= lzw.length) return -1
+          acc |= (lzw(pos) & 0xffL) << nbits; nbits += 8; pos += 1
+        }
+        val c = (acc & ((1 << width) - 1)).toInt
+        acc >>>= width; nbits -= width
+        c
+      }
+      var done = false
+      while (!done) {
+        val c = readCode()
+        if (c < 0) return m2.copy(status = "truncated")
+        if (c == clear) { next = eoi + 1; width = minCode + 1; prev = -1 }
+        else if (c == eoi) done = true
+        else {
+          if (c > next || (c == next && prev < 0))
+            return m2.copy(status = "bad_data")
+          var top = 0
+          // KwKwK: expand prev, append first
+          var cc = if (c == next) prev else c
+          val kwk = c == next
+          while (cc >= clear + 2) {
+            stack(top) = suffix(cc); top += 1; cc = prefix(cc)
           }
-          if (sz < 0) return meta.copy(status = "truncated")
-          i += 1 // terminator
-        case 0x2C => guard = false
-        case 0x3B => return meta.copy(status = "bad_data") // trailer, no image
-        case _ => return meta.copy(status = "bad_data")
-      }
-    }
-    if (i + 10 > p.length) return meta.copy(status = "truncated")
-    val iw = u16(i + 5); val ih = u16(i + 7)
-    val ipacked = p(i + 9) & 0xff
-    if ((ipacked & 0x80) != 0) // local color table — out of scope
-      return meta.copy(status = "unsupported")
-    val interlaced = (ipacked & 0x40) != 0
-    val m2 = meta.copy(interlaced = Some(if (interlaced) 1 else 0))
-    if (iw != w || ih != ht || iw.toLong * ih > Int.MaxValue)
-      return m2.copy(status = "bad_header")
-    i += 10
-    if (i >= p.length) return m2.copy(status = "truncated")
-    val minCode = p(i) & 0xff; i += 1
-    if (minCode < 1 || minCode > 8) return m2.copy(status = "bad_data")
-    // reassemble the LZW stream from sub-blocks
-    val data = new java.io.ByteArrayOutputStream(64)
-    var sz = if (i < p.length) p(i) & 0xff else -1
-    while (sz > 0) {
-      if (i + 1 + sz > p.length) return m2.copy(status = "truncated")
-      data.write(p, i + 1, sz)
-      i += 1 + sz
-      sz = if (i < p.length) p(i) & 0xff else -1
-    }
-    if (sz < 0) return m2.copy(status = "truncated")
-    i += 1 // sub-block terminator
-    val lzw = data.toByteArray
-    val n = iw * ih
-    val px = new Array[Int](n)
-    // LZW decode: prefix/suffix tables, KwKwK case, width bump at 2^width
-    val clear = 1 << minCode
-    val eoi = clear + 1
-    val prefix = new Array[Int](4096)
-    val suffix = new Array[Int](4096)
-    var next = eoi + 1
-    var width = minCode + 1
-    var acc = 0L; var nbits = 0; var pos = 0
-    var produced = 0
-    var prev = -1
-    val stack = new Array[Int](4096)
-    def readCode(): Int = {
-      while (nbits < width) {
-        if (pos >= lzw.length) return -1
-        acc |= (lzw(pos) & 0xffL) << nbits; nbits += 8; pos += 1
-      }
-      val c = (acc & ((1 << width) - 1)).toInt
-      acc >>>= width; nbits -= width
-      c
-    }
-    var done = false
-    while (!done) {
-      val c = readCode()
-      if (c < 0) return m2.copy(status = "truncated")
-      if (c == clear) { next = eoi + 1; width = minCode + 1; prev = -1 }
-      else if (c == eoi) done = true
-      else {
-        if (c > next || (c == next && prev < 0)) return m2.copy(status = "bad_data")
-        var top = 0
-        var cc = if (c == next) prev else c // KwKwK: expand prev, append first
-        val kwk = c == next
-        while (cc >= clear + 2) { stack(top) = suffix(cc); top += 1; cc = prefix(cc) }
-        if (cc >= clear) return m2.copy(status = "bad_data")
-        val first = cc
-        stack(top) = cc; top += 1
-        // KwKwK: the entry is prev-string + its own first symbol — emit
-        // the expanded prev-string, then `first` once more at the end.
-        val count = top + (if (kwk) 1 else 0)
-        if (produced + count > n) return m2.copy(status = "bad_data")
-        while (top > 0) { top -= 1; px(produced) = stack(top); produced += 1 }
-        if (kwk) { px(produced) = first; produced += 1 }
-        if (prev >= 0 && next < 4096) {
-          prefix(next) = prev; suffix(next) = first; next += 1
-          if (next == (1 << width) && width < 12) width += 1
-        }
-        prev = c
-        if (produced == n) {
-          // image complete: next code must be EOI (or stream may clear)
-          val e = readCode()
-          if (e != eoi) return m2.copy(status = "bad_data")
-          done = true
+          if (cc >= clear) return m2.copy(status = "bad_data")
+          val first = cc
+          stack(top) = cc; top += 1
+          // KwKwK: the entry is prev-string + its own first symbol — emit
+          // the expanded prev-string, then `first` once more at the end.
+          val count = top + (if (kwk) 1 else 0)
+          if (produced + count > n) return m2.copy(status = "bad_data")
+          while (top > 0) { top -= 1; px(produced) = stack(top); produced += 1 }
+          if (kwk) { px(produced) = first; produced += 1 }
+          if (prev >= 0 && next < 4096) {
+            prefix(next) = prev; suffix(next) = first; next += 1
+            if (next == (1 << width) && width < 12) width += 1
+          }
+          prev = c
+          if (produced == n) {
+            // image complete: next code must be EOI (or stream may clear)
+            val e = readCode()
+            if (e != eoi) return m2.copy(status = "bad_data")
+            done = true
+          }
         }
       }
-    }
-    if (produced < n) return m2.copy(status = "truncated")
-    var j = 0
-    while (j < n) { if (px(j) >= nColors) return m2.copy(status = "bad_data"); j += 1 }
-    // de-interlace: storage row k holds logical row order(k)
-    val logical =
-      if (!interlaced) px
-      else {
-        val order = interlaceOrder(ih)
-        val out2 = new Array[Int](n)
-        var k = 0
-        while (k < ih) {
-          System.arraycopy(px, k * iw, out2, order(k) * iw, iw)
-          k += 1
-        }
-        out2
+      if (produced < n) return m2.copy(status = "truncated")
+      var j = 0
+      while (j < n) {
+        if (px(j) >= nColors) return m2.copy(status = "bad_data"); j += 1
       }
-    if (i >= p.length || (p(i) & 0xff) != 0x3B) // trailer required
-      return m2.copy(status = "truncated")
-    var rs = 0L; var gs = 0L; var bs = 0L; var r0 = 0L
-    var mn = 255; var mx = 0
-    j = 0
-    while (j < n) {
-      val ci = logical(j)
-      val rr = pal(3 * ci); val gg = pal(3 * ci + 1); val bb = pal(3 * ci + 2)
-      rs += rr; gs += gg; bs += bb
-      if (j < iw) r0 += rr + gg + bb
-      if (rr < mn) mn = rr; if (gg < mn) mn = gg; if (bb < mn) mn = bb
-      if (rr > mx) mx = rr; if (gg > mx) mx = gg; if (bb > mx) mx = bb
-      j += 1
-    }
-    m2.copy(status = "ok", r_sum = Some(rs), g_sum = Some(gs),
-      b_sum = Some(bs), px_min = Some(mn), px_max = Some(mx),
-      row0_sum = Some(r0))
+      // de-interlace: storage row k holds logical row order(k)
+      val logical =
+        if (!interlaced) px
+        else {
+          val order = interlaceOrder(ih)
+          val out2 = new Array[Int](n)
+          var k = 0
+          while (k < ih) {
+            System.arraycopy(px, k * iw, out2, order(k) * iw, iw)
+            k += 1
+          }
+          out2
+        }
+      if (i >= p.length || (p(i) & 0xff) != 0x3B) // trailer required
+        return m2.copy(status = "truncated")
+      var rs = 0L; var gs = 0L; var bs = 0L; var r0 = 0L
+      var mn = 255; var mx = 0
+      j = 0
+      while (j < n) {
+        val ci = logical(j)
+        val rr = pal(3 * ci); val gg = pal(3 * ci + 1); val bb = pal(3 * ci + 2)
+        rs += rr; gs += gg; bs += bb
+        if (j < iw) r0 += rr + gg + bb
+        if (rr < mn) mn = rr; if (gg < mn) mn = gg; if (bb < mn) mn = bb
+        if (rr > mx) mx = rr; if (gg > mx) mx = gg; if (bb > mx) mx = bb
+        j += 1
+      }
+      m2.copy(status = "ok", r_sum = Some(rs), g_sum = Some(gs),
+        b_sum = Some(bs), px_min = Some(mn), px_max = Some(mx),
+        row0_sum = Some(r0))
+    } catch { case f: Malformed => row.copy(status = f.status) }
   }
 
   /** The typed GIF decode stage over [[parseGif]] — same per-partition
@@ -1440,13 +1404,10 @@ object Multimodal {
   /** DEFLATE stored (BTYPE=00) encoding: one final block, LEN/NLEN,
     * verbatim bytes. */
   private[llm] def deflateStored(raw: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(raw.length + 5)
-    out.write(1) // BFINAL=1, BTYPE=00, rest of byte padding
-    val len = raw.length
-    out.write(len & 255); out.write((len >> 8) & 255)
-    out.write(~len & 255); out.write((~len >> 8) & 255)
-    out.write(raw, 0, raw.length)
-    out.toByteArray
+    new Bytes.Writer(raw.length + 5)
+      .u8(1) // BFINAL=1, BTYPE=00, rest of byte padding
+      .u16le(raw.length).u16le(~raw.length) // LEN, NLEN
+      .bytes(raw).toByteArray
   }
 
   /** Synthesize a REAL PNG file from a doc's md5 hex: signature, IHDR
@@ -1506,26 +1467,16 @@ object Multimodal {
     }
     val defl = if (fixedHuff) deflateFixed(raw) else deflateStored(raw)
     val ad = adler32(raw)
-    val zlib = new Array[Byte](2 + defl.length + 4)
-    zlib(0) = 0x78.toByte; zlib(1) = 0x01 // CM=8, check bits: 30721 % 31 == 0
-    System.arraycopy(defl, 0, zlib, 2, defl.length)
-    zlib(defl.length + 2) = ((ad >>> 24) & 255).toByte
-    zlib(defl.length + 3) = ((ad >>> 16) & 255).toByte
-    zlib(defl.length + 4) = ((ad >>> 8) & 255).toByte
-    zlib(defl.length + 5) = (ad & 255).toByte
+    val zlib = new Bytes.Writer(2 + defl.length + 4)
+      .u8(0x78).u8(0x01) // CM=8, check bits: 30721 % 31 == 0
+      .bytes(defl).u32be(ad).toByteArray
     if (badAdler) zlib(zlib.length - 1) = (zlib(zlib.length - 1) ^ 0x55).toByte
-    val out = new java.io.ByteArrayOutputStream(256)
-    def be32(v: Int): Unit = {
-      out.write((v >>> 24) & 255); out.write((v >>> 16) & 255)
-      out.write((v >>> 8) & 255); out.write(v & 255)
-    }
+    val out = new Bytes.Writer(256)
     def chunk(typ: String, data: Array[Byte], corrupt: Boolean = false): Unit = {
-      be32(data.length)
       val t = typ.getBytes("US-ASCII")
-      out.write(t, 0, 4)
-      out.write(data, 0, data.length)
       val crc = crc32Png(t, data)
-      be32(if (corrupt) crc ^ 0x55 else crc)
+      out.u32be(data.length).bytes(t).bytes(data)
+        .u32be(if (corrupt) crc ^ 0x55 else crc)
     }
     out.write((if (badMagic) 0x88 else 0x89))
     out.write('P'); out.write('N'); out.write('G')
@@ -1547,24 +1498,14 @@ object Multimodal {
     if (trunc) full.dropRight(17) else full
   }
 
-  /** Control-flow signals for the inflate walk — caught in
-    * [[parsePng]] and converted to status ROWS, never escaping to the
-    * task (the 100 TB survival property shared by the decode family). */
-  private object PngTrunc extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  private object PngBad extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-
   /** LSB-first bit reader over `p[from, until)`; running out of input
-    * signals [[PngTrunc]]. */
+    * raises [[Malformed.Truncated]]. */
   private final class InflateBitReader(p: Array[Byte], var pos: Int,
       until: Int) {
     private var acc = 0; private var n = 0
     def bits(k: Int): Int = {
       while (n < k) {
-        if (pos >= until) throw PngTrunc
+        if (pos >= until) throw Truncated
         acc |= (p(pos) & 0xff) << n; pos += 1; n += 8
       }
       val v = acc & ((1 << k) - 1)
@@ -1604,7 +1545,7 @@ object Multimodal {
         code <<= 1
         len += 1
       }
-      throw PngBad // over-long / incomplete code
+      throw BadData // over-long / incomplete code
     }
   }
 
@@ -1624,7 +1565,7 @@ object Multimodal {
     val hlit = br.bits(5) + 257
     val hdist = br.bits(5) + 1
     val hclen = br.bits(4) + 4
-    if (hlit > 286 || hdist > 30) throw PngBad
+    if (hlit > 286 || hdist > 30) throw BadData
     val clLens = new Array[Int](19)
     var i = 0
     while (i < hclen) { clLens(ClOrder(i)) = br.bits(3); i += 1 }
@@ -1637,17 +1578,17 @@ object Multimodal {
       else {
         var rep = 0; var v = 0
         if (s == 16) {
-          if (i == 0) throw PngBad
+          if (i == 0) throw BadData
           v = lens(i - 1); rep = 3 + br.bits(2)
         } else if (s == 17) rep = 3 + br.bits(3)
         else if (s == 18) rep = 11 + br.bits(7)
-        else throw PngBad
-        if (i + rep > lens.length) throw PngBad
+        else throw BadData
+        if (i + rep > lens.length) throw BadData
         var k = 0
         while (k < rep) { lens(i) = v; i += 1; k += 1 }
       }
     }
-    if (lens(256) == 0) throw PngBad // the end-of-block code must exist
+    if (lens(256) == 0) throw BadData // the end-of-block code must exist
     (new InflateHuff(java.util.Arrays.copyOfRange(lens, 0, hlit)),
       new InflateHuff(java.util.Arrays.copyOfRange(lens, hlit, lens.length)))
   }
@@ -1655,26 +1596,27 @@ object Multimodal {
   /** Full RFC 1951 INFLATE over `p[from, until)`: stored, fixed- and
     * dynamic-Huffman blocks, LZ77 length/distance copies (including
     * the overlapping distance-1 run case). Output is capped at
-    * `maxOut` — a stream that tries to write more is [[PngBad]];
-    * running out of input is [[PngTrunc]]. */
+    * `maxOut` — a stream that tries to write more is
+    * [[Malformed.BadData]]; running out of input is
+    * [[Malformed.Truncated]]. */
   private[llm] def inflate(p: Array[Byte], from: Int, until: Int,
       maxOut: Int): Array[Byte] = {
     val br = new InflateBitReader(p, from, until)
     val out = new Array[Byte](maxOut)
     var w = 0
     def put(v: Int): Unit = {
-      if (w >= maxOut) throw PngBad
+      if (w >= maxOut) throw BadData
       out(w) = v.toByte; w += 1
     }
     var fin = false
     while (!fin) {
       fin = br.bits(1) == 1
       val btype = br.bits(2)
-      if (btype == 3) throw PngBad
+      if (btype == 3) throw BadData
       if (btype == 0) {
         br.alignByte()
         val len = br.bits(16); val nlen = br.bits(16)
-        if ((len ^ 0xffff) != nlen) throw PngBad
+        if ((len ^ 0xffff) != nlen) throw BadData
         var k = 0
         while (k < len) { put(br.bits(8)); k += 1 } // aligned: bits(8)=byte
       } else {
@@ -1686,13 +1628,13 @@ object Multimodal {
           if (sym < 256) put(sym)
           else if (sym == 256) stop = true
           else {
-            if (sym > 285) throw PngBad
+            if (sym > 285) throw BadData
             val lc = sym - 257
             val length = LenBase(lc) + br.bits(LenExtra(lc))
             val dsym = dist.decode(br)
-            if (dsym > 29) throw PngBad
+            if (dsym > 29) throw BadData
             val d = DistBase(dsym) + br.bits(DistExtra(dsym))
-            if (d > w) throw PngBad
+            if (d > w) throw BadData
             var k = 0
             while (k < length) { put(out(w - d) & 0xff); k += 1 }
           }
@@ -1707,14 +1649,12 @@ object Multimodal {
     * verified against the decoded output. Returns (data, adlerOk). */
   private[llm] def zlibInflate(p: Array[Byte], from: Int, until: Int,
       maxOut: Int): (Array[Byte], Boolean) = {
-    if (until - from < 6) throw PngTrunc
+    if (until - from < 6) throw Truncated
     val cmf = p(from) & 0xff; val flg = p(from + 1) & 0xff
-    if ((cmf & 0x0f) != 8 || ((cmf << 8) | flg) % 31 != 0) throw PngBad
-    if ((flg & 0x20) != 0) throw PngBad // FDICT unsupported
+    if ((cmf & 0x0f) != 8 || ((cmf << 8) | flg) % 31 != 0) throw BadData
+    if ((flg & 0x20) != 0) throw BadData // FDICT unsupported
     val out = inflate(p, from + 2, until - 4, maxOut)
-    val ad = ((p(until - 4) & 0xff) << 24) | ((p(until - 3) & 0xff) << 16) |
-      ((p(until - 2) & 0xff) << 8) | (p(until - 1) & 0xff)
-    (out, adler32(out) == ad)
+    (out, adler32(out) == Bytes.i32be(p, until - 4))
   }
 
   /** REAL from-scratch PNG decoder — the sixth honest decode path and
@@ -1735,20 +1675,17 @@ object Multimodal {
       val sig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
       var i = 0
       while (i < 8) { if ((p(i) & 0xff) != sig(i)) return none; i += 1 }
-      def be32(o: Int): Int =
-        ((p(o) & 0xff) << 24) | ((p(o + 1) & 0xff) << 16) |
-          ((p(o + 2) & 0xff) << 8) | (p(o + 3) & 0xff)
       var off = 8
       val idat = new java.io.ByteArrayOutputStream(256)
       var nIdat = 0
       var sawEnd = false
       var headerOk = false
       while (!sawEnd) {
-        if (off + 8 > p.length) throw PngTrunc
-        val len = be32(off)
-        if (len < 0 || off.toLong + 12 + len > p.length) throw PngTrunc
-        val typ = new String(p, off + 4, 4, "US-ASCII")
-        val crc = be32(off + 8 + len)
+        val len = Bytes.i32be(p, off)
+        if (len < 0) throw Truncated
+        Bytes.need(p, off, 12 + len) // a length near 2^31 wraps: fails too
+        val typ = Bytes.ascii(p, off + 4, 4)
+        val crc = Bytes.i32be(p, off + 8 + len)
         val calc = crc32Png(java.util.Arrays.copyOfRange(p, off + 4, off + 8 + len))
         if (crc != calc)
           return if (headerOk) {
@@ -1759,7 +1696,7 @@ object Multimodal {
         typ match {
           case "IHDR" =>
             if (len != 13) return none.copy(status = "bad_header")
-            val iw = be32(off + 8); val ih = be32(off + 12)
+            val iw = Bytes.i32be(p, off + 8); val ih = Bytes.i32be(p, off + 12)
             val bitDepth = p(off + 16) & 0xff
             colorType = p(off + 17) & 0xff
             val interlace = p(off + 20) & 0xff
@@ -1829,14 +1766,10 @@ object Multimodal {
       PngMeta(id, "ok", Some(w), Some(ht), Some(colorType), Some(nIdat),
         Some(rs), Some(gs), Some(bs), Some(mn), Some(mx), Some(r0))
     } catch {
-      case e: RuntimeException if e eq PngTrunc =>
-        if (w > 0) none.copy(status = "truncated", width = Some(w),
+      case f: Malformed =>
+        if (w > 0) none.copy(status = f.status, width = Some(w),
           height = Some(ht), color_type = Some(colorType))
-        else none.copy(status = "truncated")
-      case e: RuntimeException if e eq PngBad =>
-        if (w > 0) none.copy(status = "bad_data", width = Some(w),
-          height = Some(ht), color_type = Some(colorType))
-        else none.copy(status = "bad_data")
+        else none.copy(status = f.status)
     }
   }
 
@@ -1878,7 +1811,7 @@ object Multimodal {
     val k = 1 + b(2) % 3
     val text = (h + " " + h.reverse + " ") * k
     val data = text.getBytes("US-ASCII")
-    val out = new java.io.ByteArrayOutputStream(256)
+    val out = new Bytes.Writer(256)
     out.write(if (badMagic) 0x2f else 0x1f); out.write(0x8b)
     out.write(8) // CM = deflate
     out.write((if (hasExtra) 4 else 0) | (if (hasName) 8 else 0)) // FLG
@@ -1895,12 +1828,7 @@ object Multimodal {
     val defl = if (fixedHuff) deflateFixed(data) else deflateStored(data)
     out.write(defl, 0, defl.length)
     val crc = crc32Png(data)
-    def le32(v: Int): Unit = {
-      out.write(v & 255); out.write((v >>> 8) & 255)
-      out.write((v >>> 16) & 255); out.write((v >>> 24) & 255)
-    }
-    le32(if (badCrc) crc ^ 0x5500 else crc)
-    le32(data.length)
+    out.u32le(if (badCrc) crc ^ 0x5500 else crc).u32le(data.length)
     val full = out.toByteArray
     // truncation cuts to 5 body bytes — deterministically below the
     // 8-byte footer minimum, so the arm is `truncated` for EVERY doc
@@ -1947,40 +1875,24 @@ object Multimodal {
       if ((p(2) & 0xff) != 8) return ("unsupported", None, None)
       val flg = p(3) & 0xff
       if ((flg & 0xe0) != 0) return ("bad_header", None, None)
-      var i = 10
-      def need(n: Int): Unit = if (i + n > p.length) throw PngTrunc
-      if ((flg & 4) != 0) { // FEXTRA
-        need(2)
-        val xlen = (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8)
-        i += 2; need(xlen); i += xlen
-      }
-      if ((flg & 8) != 0) { // FNAME: zero-terminated
-        while (i < p.length && p(i) != 0) i += 1
-        need(1); i += 1
-      }
-      if ((flg & 16) != 0) { // FCOMMENT
-        while (i < p.length && p(i) != 0) i += 1
-        need(1); i += 1
-      }
-      if ((flg & 2) != 0) { need(2); i += 2 } // FHCRC
-      if (p.length - i < 8) throw PngTrunc // body + 8-byte footer minimum
+      val c = new Bytes.Cursor(p, 10)
+      if ((flg & 4) != 0) c.skip(c.u16le()) // FEXTRA
+      if ((flg & 8) != 0) while (c.u8() != 0) () // FNAME: zero-terminated
+      if ((flg & 16) != 0) while (c.u8() != 0) () // FCOMMENT
+      if ((flg & 2) != 0) c.skip(2) // FHCRC
+      c.need(8) // body + 8-byte footer minimum
       // ISIZE bounds the output buffer; sanity-capped so a corrupt
       // field can't allocate unbounded memory
       val until = p.length - 8
-      val isize = ((p(p.length - 4) & 0xffL) | ((p(p.length - 3) & 0xffL) << 8) |
-        ((p(p.length - 2) & 0xffL) << 16) | ((p(p.length - 1) & 0xffL) << 24))
+      val isize = Bytes.u32le(p, p.length - 4)
       if (isize > (1L << 24)) return ("bad_header", None, None)
-      val data = inflate(p, i, until, isize.toInt)
+      val data = inflate(p, c.pos, until, isize.toInt)
       val hasName = Some(if ((flg & 8) != 0) 1 else 0)
       if (data.length.toLong != isize) return ("bad_data", hasName, None)
-      val crc = ((p(until) & 0xff) | ((p(until + 1) & 0xff) << 8) |
-        ((p(until + 2) & 0xff) << 16) | ((p(until + 3) & 0xff) << 24))
-      if (crc != crc32Png(data)) return ("bad_data", hasName, None)
+      if (Bytes.i32le(p, until) != crc32Png(data))
+        return ("bad_data", hasName, None)
       ("ok", hasName, Some(data))
-    } catch {
-      case e: RuntimeException if e eq PngTrunc => ("truncated", None, None)
-      case e: RuntimeException if e eq PngBad => ("bad_data", None, None)
-    }
+    } catch { case f: Malformed => (f.status, None, None) }
   }
 
   /** Scala mirror of [[Dedup.urlSynthSql]] — the SAME messy-URL
@@ -2035,7 +1947,7 @@ object Multimodal {
     val fixedHuff = b(13) % 2 == 1
     val record = "WARC/1.0\nWARC-Target-URI: " + urlSynth(h) + "\n\n" + body
     val data = record.getBytes("US-ASCII")
-    val out = new java.io.ByteArrayOutputStream(256)
+    val out = new Bytes.Writer(256)
     out.write(if (badMagic) 0x2f else 0x1f); out.write(0x8b)
     out.write(8) // CM = deflate
     out.write(0) // no optional header fields: the gzip query owns those arms
@@ -2045,12 +1957,7 @@ object Multimodal {
     val defl = if (fixedHuff) deflateFixed(data) else deflateStored(data)
     out.write(defl, 0, defl.length)
     val crc = crc32Png(data)
-    def le32(v: Int): Unit = {
-      out.write(v & 255); out.write((v >>> 8) & 255)
-      out.write((v >>> 16) & 255); out.write((v >>> 24) & 255)
-    }
-    le32(if (badCrc) crc ^ 0x5500 else crc)
-    le32(data.length)
+    out.u32le(if (badCrc) crc ^ 0x5500 else crc).u32le(data.length)
     val full = out.toByteArray
     // below the 8-byte footer minimum, so the arm is `truncated` for
     // every doc (the gzipBytes reasoning)
@@ -2136,9 +2043,7 @@ object Multimodal {
     val badEocd = b(11) % 16 == 3
     val badCd = b(13) % 8 == 2
     val badData = b(14) % 8 == 1
-    val out = new java.io.ByteArrayOutputStream(512)
-    def le16(v: Int): Unit = { out.write(v & 255); out.write((v >>> 8) & 255) }
-    def le32(v: Int): Unit = { le16(v & 0xffff); le16((v >>> 16) & 0xffff) }
+    val out = new Bytes.Writer(512)
     final case class Ent(name: Array[Byte], method: Int, crc: Int,
         csize: Int, usize: Int, off: Int)
     val entries = (0 until n).map { m =>
@@ -2150,35 +2055,34 @@ object Multimodal {
       val crc = if (badData && m == 0) crc0 ^ 0x55 else crc0
       val name = s"m$m.txt".getBytes("US-ASCII")
       val off = out.size()
-      le32(0x04034b50) // local file header signature "PK\3\4"
-      le16(20); le16(0) // version needed, flags
-      le16(if (defl) 8 else 0)
-      le16(b(3) | (b(4) << 8)); le16(b(5) | (b(6) << 8)) // mod time/date
-      le32(crc); le32(comp.length); le32(data.length)
-      le16(name.length); le16(0) // name len, extra len
-      out.write(name, 0, name.length)
-      out.write(comp, 0, comp.length)
+      out.u32le(0x04034b50) // local file header signature "PK\3\4"
+        .u16le(20).u16le(0) // version needed, flags
+        .u16le(if (defl) 8 else 0)
+        .u16le(b(3) | (b(4) << 8)).u16le(b(5) | (b(6) << 8)) // mod time/date
+        .u32le(crc).u32le(comp.length).u32le(data.length)
+        .u16le(name.length).u16le(0) // name len, extra len
+        .bytes(name).bytes(comp)
       Ent(name, if (defl) 8 else 0, crc, comp.length, data.length, off)
     }
     val cdOff = out.size()
     entries.foreach { e =>
-      le32(0x02014b50) // central directory signature "PK\1\2"
-      le16(20); le16(20); le16(0) // made-by, needed, flags
-      le16(e.method)
-      le16(b(3) | (b(4) << 8)); le16(b(5) | (b(6) << 8))
-      le32(e.crc); le32(e.csize); le32(e.usize)
-      le16(e.name.length); le16(0); le16(0) // name/extra/comment len
-      le16(0); le16(0); le32(0) // disk start, internal + external attrs
-      le32(e.off)
-      out.write(e.name, 0, e.name.length)
+      out.u32le(0x02014b50) // central directory signature "PK\1\2"
+        .u16le(20).u16le(20).u16le(0) // made-by, needed, flags
+        .u16le(e.method)
+        .u16le(b(3) | (b(4) << 8)).u16le(b(5) | (b(6) << 8))
+        .u32le(e.crc).u32le(e.csize).u32le(e.usize)
+        .u16le(e.name.length).u16le(0).u16le(0) // name/extra/comment len
+        .u16le(0).u16le(0).u32le(0) // disk start, internal + external attrs
+        .u32le(e.off)
+        .bytes(e.name)
     }
     val cdSize = out.size() - cdOff
-    le32(if (badEocd) 0x07054b50 else 0x06054b50) // EOCD "PK\5\6"
-    le16(0); le16(0) // disk numbers
     val cnt = if (badCd) n + 1 else n
-    le16(cnt); le16(cnt)
-    le32(cdSize); le32(cdOff)
-    le16(0) // comment length
+    out.u32le(if (badEocd) 0x07054b50 else 0x06054b50) // EOCD "PK\5\6"
+      .u16le(0).u16le(0) // disk numbers
+      .u16le(cnt).u16le(cnt)
+      .u32le(cdSize).u32le(cdOff)
+      .u16le(0) // comment length
     val full = out.toByteArray
     // deterministically below the 22-byte EOCD minimum, so the arm is
     // `truncated` for EVERY doc (the gzipBytes reasoning)
@@ -2208,19 +2112,17 @@ object Multimodal {
     def fail(st: String) =
       Seq((ZipMember(id, -1, st, None, None, None, None, None), null: String))
     if (p == null || p.length < 22) return fail("truncated")
-    def u16(i: Int) = (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8)
-    def u32(i: Int) = (p(i) & 0xffL) | ((p(i + 1) & 0xffL) << 8) |
-      ((p(i + 2) & 0xffL) << 16) | ((p(i + 3) & 0xffL) << 24)
     var e = p.length - 22
     val lo = math.max(0, p.length - 22 - 65535)
     var eocd = -1
     while (e >= lo && eocd < 0) {
-      if (u32(e) == 0x06054b50L && u16(e + 20) == p.length - (e + 22))
+      if (Bytes.u32le(p, e) == 0x06054b50L &&
+          Bytes.u16le(p, e + 20) == p.length - (e + 22))
         eocd = e
       e -= 1
     }
     if (eocd < 0) return fail("bad_eocd")
-    val n = u16(eocd + 10)
+    val n = Bytes.u16le(p, eocd + 10)
     // a legal EOCD-only archive (n == 0) still yields one row — the
     // decode-family "failure is a row, never silent" accounting holds
     // for EVERY input blob, empty archives included
@@ -2229,35 +2131,37 @@ object Multimodal {
         null: String))
     // offsets stay Long until bounds-validated: a crafted u32 near
     // 2^31 would wrap an Int comparison negative and bypass the guard
-    val cdOff = u32(eocd + 16)
+    val cdOff = Bytes.u32le(p, eocd + 16)
     val members = scala.collection.mutable.ArrayBuffer[(ZipMember, String)]()
     var pos: Long = cdOff
     var m = 0
     while (m < n) {
-      if (pos < 0 || pos + 46 > p.length || u32(pos.toInt) != 0x02014b50L)
+      if (pos < 0 || pos + 46 > p.length ||
+          Bytes.u32le(p, pos.toInt) != 0x02014b50L)
         return fail("bad_cd")
       val cd = pos.toInt // validated above: 0 <= pos <= p.length - 46
-      val method = u16(cd + 10)
-      val crc = u32(cd + 16)
-      val csizeL = u32(cd + 20)
-      val usizeL = u32(cd + 24)
-      val nameLen = u16(cd + 28)
-      val extraLen = u16(cd + 30)
-      val cmtLen = u16(cd + 32)
-      val lhOffL = u32(cd + 42)
+      val method = Bytes.u16le(p, cd + 10)
+      val crc = Bytes.u32le(p, cd + 16)
+      val csizeL = Bytes.u32le(p, cd + 20)
+      val usizeL = Bytes.u32le(p, cd + 24)
+      val nameLen = Bytes.u16le(p, cd + 28)
+      val extraLen = Bytes.u16le(p, cd + 30)
+      val cmtLen = Bytes.u16le(p, cd + 32)
+      val lhOffL = Bytes.u32le(p, cd + 42)
       if (pos + 46 + nameLen > p.length) return fail("bad_cd")
       val name = new String(p, cd + 46, nameLen, "US-ASCII")
       val mstr = if (method == 8) "deflate" else "stored"
       members +=
         (if (lhOffL < 0 || lhOffL + 30 > p.length ||
-            u32(lhOffL.toInt) != 0x04034b50L ||
-            u16(lhOffL.toInt + 8) != method)
+            Bytes.u32le(p, lhOffL.toInt) != 0x04034b50L ||
+            Bytes.u16le(p, lhOffL.toInt + 8) != method)
           (ZipMember(id, m, "bad_local", Some(name), None, None, None, None),
             null: String)
         else {
           val lhOff = lhOffL.toInt // validated: 0 <= lhOff <= len - 30
           val dataStart: Long =
-            lhOffL + 30 + u16(lhOff + 26) + u16(lhOff + 28)
+            lhOffL + 30 + Bytes.u16le(p, lhOff + 26) +
+              Bytes.u16le(p, lhOff + 28)
           val csize = csizeL.toInt; val usize = usizeL.toInt
           // usize bounds the inflate buffer; sanity-capped so a
           // corrupt field can't allocate unbounded memory (the Long
@@ -2270,10 +2174,10 @@ object Multimodal {
             val d0 = dataStart.toInt // validated: dataStart + csize <= len
             val data = method match {
               case 0 =>
-                if (csize != usize) throw PngBad
+                if (csize != usize) throw BadData
                 java.util.Arrays.copyOfRange(p, d0, d0 + csize)
               case 8 => inflate(p, d0, d0 + csize, usize)
-              case _ => throw PngBad
+              case _ => throw BadData
             }
             if (data.length != usize ||
                 (crc32Png(data) & 0xffffffffL) != crc)
@@ -2292,7 +2196,7 @@ object Multimodal {
                 new String(data, "US-ASCII"))
             }
           } catch {
-            case ex: RuntimeException if (ex eq PngBad) || (ex eq PngTrunc) =>
+            case _: Malformed =>
               (ZipMember(id, m, "bad_data", Some(name), Some(mstr),
                 None, None, None), null: String)
           }
@@ -2572,13 +2476,6 @@ object Multimodal {
         StrictMath.cos((2 * x + 1) * u * StrictMath.PI / 16.0) * c * 8192.0)
   }
 
-  private object JpegTrunc extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  private object JpegBad extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-
   /** MSB-first entropy-segment bit writer with T.81 byte stuffing
     * (an 0xFF data byte is followed by 0x00) and 1-padding flush. */
   private final class JpegBitWriter {
@@ -2610,18 +2507,19 @@ object Multimodal {
     def result(): Array[Byte] = out.toByteArray
   }
 
-  /** MSB-first entropy-segment bit reader: unstuffs FF00, signals
-    * [[JpegTrunc]] at EOF and [[JpegBad]] on a bare marker mid-scan
+  /** MSB-first entropy-segment bit reader: unstuffs FF00, raises
+    * [[Malformed.Truncated]] at EOF and [[Malformed.BadData]] on a
+    * bare marker mid-scan
     * (no DRI is ever emitted, so a restart marker is corruption). */
   private final class JpegBitReader(p: Array[Byte], var pos: Int) {
     private var acc = 0; private var n = 0
     def bit(): Int = {
       if (n == 0) {
-        if (pos >= p.length) throw JpegTrunc
+        if (pos >= p.length) throw Truncated
         val v = p(pos) & 0xff; pos += 1
         if (v == 0xff) {
-          if (pos >= p.length) throw JpegTrunc
-          if ((p(pos) & 0xff) == 0) pos += 1 else throw JpegBad
+          if (pos >= p.length) throw Truncated
+          if ((p(pos) & 0xff) == 0) pos += 1 else throw BadData
         }
         acc = v; n = 8
       }
@@ -2638,10 +2536,10 @@ object Multimodal {
       * (0..7). Anything else is corruption. */
     def restart(): Int = {
       n = 0 // discard 1-padding to the byte boundary
-      if (pos + 1 >= p.length) throw JpegTrunc
-      if ((p(pos) & 0xff) != 0xff) throw JpegBad
+      if (pos + 1 >= p.length) throw Truncated
+      if ((p(pos) & 0xff) != 0xff) throw BadData
       val m = p(pos + 1) & 0xff
-      if (m < 0xd0 || m > 0xd7) throw JpegBad
+      if (m < 0xd0 || m > 0xd7) throw BadData
       pos += 2
       m - 0xd0
     }
@@ -2663,7 +2561,7 @@ object Multimodal {
         code <<= 1
         len += 1
       }
-      throw JpegBad
+      throw BadData
     }
   }
 
@@ -2707,12 +2605,8 @@ object Multimodal {
     * precision (~12.5% → `unsupported`, dims still read — the
     * libjpeg header-probe behavior), file cut 3 bytes short
     * (~12.5% → `truncated`). */
-  private object PdfBad extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  private object PdfObjBad extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
+  private val PdfBadXref = new Malformed("bad_xref")
+  private val PdfBadObject = new Malformed("bad_object")
 
   /** Spec-faithful PDF 1.4 fixture from a doc's md5: %PDF header,
     * catalog → pages → per-page /Contents graph, zlib-wrapped
@@ -3021,9 +2915,9 @@ object Multimodal {
         skipWs(); var v = 0L; var any = false
         while (pos < s.length && s.charAt(pos).isDigit) {
           v = v * 10 + (s.charAt(pos) - '0'); pos += 1; any = true
-          if (v > Int.MaxValue) throw PdfBad
+          if (v > Int.MaxValue) throw PdfBadXref
         }
-        if (!any) throw PdfBad
+        if (!any) throw PdfBadXref
         v.toInt
       }
       val first = readInt(); val cnt = readInt()
@@ -3066,34 +2960,34 @@ object Multimodal {
         * header must sit exactly there (a misaligned entry is a
         * bad_object, the arm the off-by-2 fixture pins). */
       def dictAt(num: Int): (String, Int) = {
-        if (num <= 0 || num >= cnt) throw PdfObjBad
+        if (num <= 0 || num >= cnt) throw PdfBadObject
         val o = offs(num)
         if (o < 0 || o >= s.length || !s.startsWith(s"$num 0 obj", o))
-          throw PdfObjBad
+          throw PdfBadObject
         val d0 = s.indexOf("<<", o)
         val d1 = if (d0 < 0) -1 else s.indexOf(">>", d0)
-        if (d0 < 0 || d1 < 0 || d0 > o + 40) throw PdfObjBad
+        if (d0 < 0 || d1 < 0 || d0 > o + 40) throw PdfBadObject
         (s.substring(d0, d1 + 2), d1 + 2)
       }
       val (cat, _) = dictAt(root)
-      val pagesRef = dictRef(cat, "/Pages").getOrElse(throw PdfObjBad)
+      val pagesRef = dictRef(cat, "/Pages").getOrElse(throw PdfBadObject)
       val (pagesD, _) = dictAt(pagesRef)
       val kidsStr = """/Kids\s*\[([^\]]*)\]""".r
         .findFirstMatchIn(pagesD).map(_.group(1))
-        .getOrElse(throw PdfObjBad)
+        .getOrElse(throw PdfBadObject)
       val kids = """(\d{1,9})\s+0\s+R""".r.findAllMatchIn(kidsStr)
         .map(_.group(1).toInt).toSeq
-      val count = dictInt(pagesD, "/Count").getOrElse(throw PdfObjBad)
-      if (count != kids.length) throw PdfObjBad
+      val count = dictInt(pagesD, "/Count").getOrElse(throw PdfBadObject)
+      if (count != kids.length) throw PdfBadObject
       nPages = Some(count)
       var ops = 0
       val doc = new StringBuilder
       var pg = 0
       for (kid <- kids) {
         val (pageD, _) = dictAt(kid)
-        val cRef = dictRef(pageD, "/Contents").getOrElse(throw PdfObjBad)
+        val cRef = dictRef(pageD, "/Contents").getOrElse(throw PdfBadObject)
         val (contD, dEnd) = dictAt(cRef)
-        val len = dictInt(contD, "/Length").getOrElse(throw PdfObjBad)
+        val len = dictInt(contD, "/Length").getOrElse(throw PdfBadObject)
         // /Filter: a single name or an array of names applied in
         // listed order (§7.4); the inline-image aliases /Fl and /AHx
         // are accepted beside the full names. A name outside the
@@ -3119,7 +3013,7 @@ object Multimodal {
             f != "ASCIIHexDecode" && f != "AHx"))
           return fail("unsupported", nPages, nObjects)
         var st = s.indexOf("stream", dEnd)
-        if (st < 0 || st > dEnd + 8) throw PdfObjBad
+        if (st < 0 || st > dEnd + 8) throw PdfBadObject
         st += 6
         if (st < s.length && s.charAt(st) == '\r') st += 1
         if (st < s.length && s.charAt(st) == '\n') st += 1
@@ -3128,12 +3022,7 @@ object Multimodal {
         var data = java.util.Arrays.copyOfRange(p, st, st + len)
         for (f <- filters) f match {
           case "FlateDecode" | "Fl" =>
-            val (raw, adOk) =
-              try zlibInflate(data, 0, data.length, 1 << 16)
-              catch {
-                case PngBad | PngTrunc =>
-                  return fail("bad_flate", nPages, nObjects)
-              }
+            val (raw, adOk) = zlibInflate(data, 0, data.length, 1 << 16)
             if (!adOk) return fail("bad_flate", nPages, nObjects)
             data = raw
           case _ => // ASCIIHexDecode | AHx
@@ -3156,10 +3045,11 @@ object Multimodal {
       PdfMeta(id, "ok", nPages, nObjects, Some(ops),
         Some(txt.length), Some(md))
     } catch {
-      case PdfObjBad => fail("bad_object", nPages, nObjects)
-      case PdfBad => fail("bad_xref", nPages, nObjects)
-      case _: IndexOutOfBoundsException => fail("bad_data")
-      case _: NumberFormatException => fail("bad_data")
+      // the shared failures here can only come from the Flate filter
+      case Truncated | BadData => fail("bad_flate", nPages, nObjects)
+      case f: Malformed => fail(f.status, nPages, nObjects)
+      case _: IndexOutOfBoundsException | _: NumberFormatException =>
+        fail("bad_data")
     }
   }
 
@@ -3494,49 +3384,47 @@ object Multimodal {
     }
     bw.flush()
     val scan = bw.result()
-    val out = new java.io.ByteArrayOutputStream(512)
-    def u8(v: Int): Unit = out.write(v & 255)
-    def u16(v: Int): Unit = { u8(v >> 8); u8(v) }
-    def marker(m: Int): Unit = { u8(0xff); u8(m) }
-    marker(if (badMagic) 0x88 else 0xd8) // SOI
-    marker(0xdb); u16(2 + 2 * 65)        // DQT: both tables, one segment
-    u8(0x00); q0.foreach(u8)             // Pq=0 (8-bit), Tq=0
-    u8(0x01); q1.foreach(u8)
-    marker(if (prog) 0xc2 else 0xc0)     // SOF0 (or the SOF2 arm)
-    u16(8 + 3 * nComps); u8(if (prec12) 12 else 8); u16(hgt); u16(w)
-    u8(nComps)
-    u8(1)
-    u8(if (sub420) 0x22 else if (sub422) 0x21 else 0x11) // Y sampling
-    u8(0)                                // Y, qtable 0
+    // markers are FF then the code byte: written as one BE u16
+    val out = new Bytes.Writer(512)
+    out.u16be(if (badMagic) 0xff88 else 0xffd8) // SOI
+    out.u16be(0xffdb).u16be(2 + 2 * 65)  // DQT: both tables, one segment
+    out.u8(0x00); q0.foreach(out.u8)     // Pq=0 (8-bit), Tq=0
+    out.u8(0x01); q1.foreach(out.u8)
+    out.u16be(if (prog) 0xffc2 else 0xffc0) // SOF0 (or the SOF2 arm)
+    out.u16be(8 + 3 * nComps).u8(if (prec12) 12 else 8).u16be(hgt).u16be(w)
+    out.u8(nComps)
+    out.u8(1)
+    out.u8(if (sub420) 0x22 else if (sub422) 0x21 else 0x11) // Y sampling
+    out.u8(0)                            // Y, qtable 0
     if (!gray) {
-      u8(2); u8(0x11); u8(1)             // Cb: qtable 1
-      u8(3); u8(0x11); u8(1)             // Cr: qtable 1
+      out.u8(2).u8(0x11).u8(1)           // Cb: qtable 1
+      out.u8(3).u8(0x11).u8(1)           // Cr: qtable 1
     }
     def dht(tcth: Int, bitsArr: Array[Int], syms: Seq[Int]): Unit = {
-      u8(tcth); (1 to 16).foreach(l => u8(bitsArr(l))); syms.foreach(u8)
+      out.u8(tcth); (1 to 16).foreach(l => out.u8(bitsArr(l)))
+      syms.foreach(out.u8)
     }
     val dcS = dcSyms.toSeq; val acS = acSyms.toSeq
-    marker(0xc4); u16(2 + (1 + 16 + dcS.size) + (1 + 16 + acS.size))
+    out.u16be(0xffc4).u16be(2 + (1 + 16 + dcS.size) + (1 + 16 + acS.size))
     dht(0x00, dcBits, dcS)               // DC table 0
     dht(0x10, acBits, acS)               // AC table 0
-    if (dri) { marker(0xdd); u16(4); u16(1) } // DRI: restart every MCU
+    if (dri) out.u16be(0xffdd).u16be(4).u16be(1) // DRI: restart every MCU
     if (prog) {
       // one SOS header + entropy segment per planned scan
       progPlan.zip(progBodies).foreach {
         case ((cs, ss, se, ah, al), body) =>
-          marker(0xda); u16(6 + 2 * cs.size); u8(cs.size)
-          cs.foreach { c => u8(c + 1); u8(0x00) }
-          u8(ss); u8(se); u8((ah << 4) | al)
-          out.write(body, 0, body.length)
+          out.u16be(0xffda).u16be(6 + 2 * cs.size).u8(cs.size)
+          cs.foreach { c => out.u8(c + 1).u8(0x00) }
+          out.u8(ss).u8(se).u8((ah << 4) | al).bytes(body)
       }
     } else {
-      marker(0xda); u16(6 + 2 * nComps); u8(nComps) // SOS
-      u8(1); u8(0x00)
-      if (!gray) { u8(2); u8(0x00); u8(3); u8(0x00) }
-      u8(0); u8(63); u8(0)               // Ss, Se, Ah/Al (baseline)
-      out.write(scan, 0, scan.length)
+      out.u16be(0xffda).u16be(6 + 2 * nComps).u8(nComps) // SOS
+      out.u8(1).u8(0x00)
+      if (!gray) out.u8(2).u8(0x00).u8(3).u8(0x00)
+      out.u8(0).u8(63).u8(0)             // Ss, Se, Ah/Al (baseline)
+      out.bytes(scan)
     }
-    marker(0xd9)                         // EOI
+    out.u16be(0xffd9)                    // EOI
     val full = out.toByteArray
     if (trunc) full.dropRight(3) else full
   }
@@ -3568,48 +3456,33 @@ object Multimodal {
     val gpsDeg = b(0) % 90; val gpsMin = b(1) % 60
     val gpsSecN = b(2); val gpsSecD = Seq(1, 2, 4, 5)(b(3) % 4)
     val make3 = h.substring(0, 3).toUpperCase(java.util.Locale.ROOT)
-    val t = new java.io.ByteArrayOutputStream(64)
-    def u16(v: Int): Unit =
-      if (big) { t.write(v >> 8); t.write(v & 255) }
-      else { t.write(v & 255); t.write(v >> 8) }
-    def u32(v: Int): Unit =
-      if (big) { t.write(v >>> 24); t.write((v >> 16) & 255)
-        t.write((v >> 8) & 255); t.write(v & 255) }
-      else { t.write(v & 255); t.write((v >> 8) & 255)
-        t.write((v >> 16) & 255); t.write(v >>> 24) }
-    if (badTiff) { t.write('X'); t.write('X') }
-    else if (big) { t.write('M'); t.write('M') }
-    else { t.write('I'); t.write('I') }
-    u16(42); u32(8) // magic, IFD0 offset
+    val t = new Bytes.Writer(64, big)
+    t.ascii(if (badTiff) "XX" else if (big) "MM" else "II")
+    t.u16(42).u32(8) // magic, IFD0 offset
     val nEntries = if (hasGps) 3 else 2
-    u16(nEntries)
-    u16(271); u16(2); u32(4) // Make, ASCII, count 4 → inline
-    t.write(make3.charAt(0)); t.write(make3.charAt(1))
-    t.write(make3.charAt(2)); t.write(0)
-    u16(274); u16(3); u32(1) // Orientation, SHORT, count 1
+    t.u16(nEntries)
+    t.u16(271).u16(2).u32(4) // Make, ASCII, count 4 → inline
+      .ascii(make3).u8(0)
+    t.u16(274).u16(3).u32(1) // Orientation, SHORT, count 1
     // a SHORT value sits LEFT-JUSTIFIED in its 4-byte slot (the
     // classic writer rule the TIFF decoder already pins)
-    if (big) { t.write(0); t.write(orient); t.write(0); t.write(0) }
-    else { t.write(orient); t.write(0); t.write(0); t.write(0) }
+    t.u16(orient).u16(0)
     if (hasGps) {
       val gpsIfd = 8 + 2 + 3 * 12 + 4 // right after IFD0's next ptr
-      u16(0x8825); u16(4); u32(1); u32(gpsIfd) // GPSInfo sub-IFD ptr
-      u32(0) // IFD0 next-IFD pointer: none
-      u16(1) // GPS IFD: one entry
+      t.u16(0x8825).u16(4).u32(1).u32(gpsIfd) // GPSInfo sub-IFD ptr
+      t.u32(0) // IFD0 next-IFD pointer: none
+      t.u16(1) // GPS IFD: one entry
       val dataOff = gpsIfd + 2 + 12 + 4
-      u16(2); u16(5); u32(3); u32(dataOff) // GPSLatitude RATIONAL×3
-      u32(0) // GPS IFD next pointer
-      u32(gpsDeg); u32(1); u32(gpsMin); u32(1) // deg/1, min/1
-      u32(gpsSecN); u32(gpsSecD)               // sec as num/den
-    } else u32(0) // next-IFD pointer: none
+      t.u16(2).u16(5).u32(3).u32(dataOff) // GPSLatitude RATIONAL×3
+      t.u32(0) // GPS IFD next pointer
+      t.u32(gpsDeg).u32(1).u32(gpsMin).u32(1) // deg/1, min/1
+      t.u32(gpsSecN).u32(gpsSecD)               // sec as num/den
+    } else t.u32(0) // next-IFD pointer: none
     val tiff = t.toByteArray
-    val out = new java.io.ByteArrayOutputStream(base.length + 80)
+    val out = new Bytes.Writer(base.length + 80)
     out.write(base, 0, 2) // SOI (or the corrupted-magic arm bytes)
-    out.write(0xff); out.write(0xe1)
-    val len = 2 + 6 + tiff.length
-    out.write(len >> 8); out.write(len & 255)
-    out.write("Exif".getBytes("US-ASCII")); out.write(0); out.write(0)
-    out.write(tiff, 0, tiff.length)
+    out.u16be(0xffe1).u16be(2 + 6 + tiff.length) // APP1 and its length
+      .ascii("Exif").u16be(0).bytes(tiff)
     out.write(base, 2, base.length - 2)
     out.toByteArray
   }
@@ -3627,7 +3500,6 @@ object Multimodal {
     if (p == null || p.length < 4 ||
         (p(0) & 0xff) != 0xff || (p(1) & 0xff) != 0xd8)
       return fail("bad_magic")
-    var pos = 2
     var exifStatus = "no_exif"
     var bo: Option[String] = None
     var orient: Option[Int] = None
@@ -3637,29 +3509,23 @@ object Multimodal {
     def parseTiffBlock(t0: Int, tEnd: Int): Unit = {
       val big = t0 + 1 < tEnd && p(t0) == 'M' && p(t0 + 1) == 'M'
       val lit = t0 + 1 < tEnd && p(t0) == 'I' && p(t0 + 1) == 'I'
-      def u16(i: Int): Int =
-        if (i < t0 || i + 1 >= tEnd) -1
-        else if (big) ((p(i) & 0xff) << 8) | (p(i + 1) & 0xff)
-        else (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8)
-      def u32(i: Int): Long =
-        if (i < t0 || i + 3 >= tEnd) -1L
-        else if (big) ((p(i) & 0xffL) << 24) | ((p(i + 1) & 0xffL) << 16) |
-          ((p(i + 2) & 0xffL) << 8) | (p(i + 3) & 0xffL)
-        else (p(i) & 0xffL) | ((p(i + 1) & 0xffL) << 8) |
-          ((p(i + 2) & 0xffL) << 16) | ((p(i + 3) & 0xffL) << 24)
-      if ((!big && !lit) || u16(t0 + 2) != 42) { exifStatus = "bad_exif"; return }
-      val ifd = u32(t0 + 4)
-      if (ifd < 0 || t0 + ifd + 2 > tEnd) { exifStatus = "bad_exif"; return }
-      val n = u16(t0 + ifd.toInt)
-      if (n < 0 || t0 + ifd + 2 + n * 12L > tEnd) {
+      // every read is range-checked against the APP1 block [t0, tEnd)
+      // first; offsets inside the block are relative to t0
+      if ((!big && !lit) || tEnd - t0 < 8 ||
+          Bytes.u16(p, t0 + 2, big) != 42) {
         exifStatus = "bad_exif"; return
       }
+      val ifd = Bytes.u32(p, t0 + 4, big)
+      if (t0 + ifd + 2 > tEnd) { exifStatus = "bad_exif"; return }
+      val n = Bytes.u16(p, t0 + ifd.toInt, big)
+      if (t0 + ifd + 2 + n * 12L > tEnd) { exifStatus = "bad_exif"; return }
       var e = 0
       while (e < n) {
         val off = t0 + ifd.toInt + 2 + e * 12
-        val tag = u16(off); val typ = u16(off + 2); val cnt = u32(off + 4)
+        val tag = Bytes.u16(p, off, big); val typ = Bytes.u16(p, off + 2, big)
+        val cnt = Bytes.u32(p, off + 4, big)
         if (tag == 274 && typ == 3 && cnt == 1)
-          orient = Some(u16(off + 8))
+          orient = Some(Bytes.u16(p, off + 8, big))
         if (tag == 271 && typ == 2 && cnt >= 1 && cnt <= 4) {
           // inline ASCII value, NUL-terminated within the 4-byte slot
           val bs = (0 until cnt.toInt)
@@ -3672,24 +3538,26 @@ object Multimodal {
           // OFFSET (both offsets relative to the TIFF header, the
           // out-of-line rule). A malformed sub-IFD degrades to a
           // missing GPS value, never a throw — the libexif shape.
-          val g = u32(off + 8)
+          val g = Bytes.u32(p, off + 8, big)
           // Mirror the IFD0 guard: the sub-IFD's entry table must fit
           // inside the APP1 payload, else skip the walk entirely (a
           // malformed count could otherwise drive up to 65535 wasted,
           // bounds-checked-but-pointless iterations per document).
-          val gn0 = if (g < 0) -1 else u16(t0 + g.toInt)
+          val gn0 =
+            if (t0 + g + 2 > tEnd) -1 else Bytes.u16(p, t0 + g.toInt, big)
           val gn =
             if (gn0 < 0 || t0 + g + 2 + gn0 * 12L > tEnd) -1 else gn0
           var ge = 0
           while (ge < gn) {
             val goff = t0 + g.toInt + 2 + ge * 12
-            if (u16(goff) == 2 && u16(goff + 2) == 5 &&
-                u32(goff + 4) == 3) {
-              val d = u32(goff + 8)
-              if (d >= 0) {
-                val vs = (0 until 6).map(j => u32(t0 + d.toInt + 4 * j))
-                if (vs.forall(_ >= 0) && vs(1) > 0 && vs(3) > 0 &&
-                    vs(5) > 0)
+            if (Bytes.u16(p, goff, big) == 2 &&
+                Bytes.u16(p, goff + 2, big) == 5 &&
+                Bytes.u32(p, goff + 4, big) == 3) {
+              val d = Bytes.u32(p, goff + 8, big)
+              if (t0 + d + 24 <= tEnd) {
+                val vs = (0 until 6)
+                  .map(j => Bytes.u32(p, t0 + d.toInt + 4 * j, big))
+                if (vs(1) > 0 && vs(3) > 0 && vs(5) > 0)
                   gpsLat = Some(vs(0) * 3600000L / vs(1) +
                     vs(2) * 60000L / vs(3) + vs(4) * 1000L / vs(5))
               }
@@ -3703,35 +3571,33 @@ object Multimodal {
       nIfd = Some(n)
       exifStatus = "ok"
     }
+    val c = new Bytes.Cursor(p, 2)
     try {
       while (true) {
-        if (pos + 1 >= p.length) return fail("truncated")
-        if ((p(pos) & 0xff) != 0xff) return fail("bad_data")
-        var m = p(pos + 1) & 0xff; pos += 2
-        while (m == 0xff) { if (pos >= p.length) return fail("truncated")
-          m = p(pos) & 0xff; pos += 1 }
+        c.need(2)
+        if (c.u8() != 0xff) return fail("bad_data")
+        var m = c.u8()
+        while (m == 0xff) m = c.u8()
         if (m == 0xd9 || m == 0xda) // EOI / SOS before any SOF
           return fail("bad_data")
-        if (pos + 1 >= p.length) return fail("truncated")
-        val len = ((p(pos) & 0xff) << 8) | (p(pos + 1) & 0xff)
-        if (len < 2 || pos + len > p.length) return fail("truncated")
+        val pos = c.pos
+        val len = c.u16be()
+        if (len < 2) throw Truncated
+        c.pos = pos; c.skip(len) // the whole segment is present
         if (m == 0xe1 && len >= 8 &&
             p(pos + 2) == 'E' && p(pos + 3) == 'x' && p(pos + 4) == 'i' &&
             p(pos + 5) == 'f' && p(pos + 6) == 0 && p(pos + 7) == 0)
           parseTiffBlock(pos + 8, pos + len)
         else if (m >= 0xc0 && m <= 0xc3) {
           // SOF0..SOF3: dims end the metadata pass
-          val h0 = ((p(pos + 3) & 0xff) << 8) | (p(pos + 4) & 0xff)
-          val w0 = ((p(pos + 5) & 0xff) << 8) | (p(pos + 6) & 0xff)
+          if (pos + 7 > p.length) return fail("bad_data") // too short
           return ExifMeta(id, exifStatus, bo, orient, make, nIfd,
-            Some(w0), Some(h0), gpsLat)
+            Some(Bytes.u16be(p, pos + 5)), Some(Bytes.u16be(p, pos + 3)),
+            gpsLat)
         }
-        pos += len
       }
       fail("truncated") // unreachable
-    } catch {
-      case _: ArrayIndexOutOfBoundsException => fail("bad_data")
-    }
+    } catch { case f: Malformed => fail(f.status) }
   }
 
   /** Decode → APPLY Exif orientation — the rotate/flip stage between
@@ -3795,7 +3661,10 @@ object Multimodal {
     * any dHash implementation keeps anyway. */
   private[graft] def jpegOrientedDhash(id: Long,
       p: Array[Byte]): PhashMeta = {
-    val orient = parseJpegExif(id, p).orientation.getOrElse(1)
+    // a tag outside 1..8 means no rotation: read as 5..8 it would swap
+    // the sampled dims without remapping them, off the raster
+    val orient = parseJpegExif(id, p).orientation
+      .filter(o => o >= 1 && o <= 8).getOrElse(1)
     var w0 = 0; var h0 = 0
     var gray: Array[Int] = null
     val sink = new JpegPixelSink {
@@ -3869,12 +3738,7 @@ object Multimodal {
         (p(0) & 0xff) != 0xff || (p(1) & 0xff) != 0xd8)
       return fail("bad_magic")
     try {
-      var pos = 2
-      def u8(): Int = {
-        if (pos >= p.length) throw JpegTrunc
-        val v = p(pos) & 0xff; pos += 1; v
-      }
-      def u16(): Int = { val a = u8(); (a << 8) | u8() }
+      val cur = new Bytes.Cursor(p, 2)
       val qt = Array.ofDim[Int](4, 64)
       val dcH = new Array[JpegHuff](4)
       val acH = new Array[JpegHuff](4)
@@ -3925,10 +3789,10 @@ object Multimodal {
         * indexes in scan order; `sDc`/`sAc` the scan's table ids. */
       def decodeProgScan(scomp: Array[Int], sDc: Array[Int],
           sAc: Array[Int], ss: Int, se: Int, ah: Int, al: Int): Unit = {
-        if (ss > se || se > 63 || al > 13) throw JpegBad
-        if (ss == 0 && se != 0) throw JpegBad // DC scans carry DC only
-        if (ss > 0 && scomp.length != 1) throw JpegBad
-        val br = new JpegBitReader(p, pos)
+        if (ss > se || se > 63 || al > 13) throw BadData
+        if (ss == 0 && se != 0) throw BadData // DC scans carry DC only
+        if (ss > 0 && scomp.length != 1) throw BadData
+        val br = new JpegBitReader(p, cur.pos)
         val pred = new Array[Int](compQ.length)
         var eobrun = 0
         var unit = 0 // MCUs (interleaved) or blocks (single component)
@@ -3936,7 +3800,7 @@ object Multimodal {
           if (restartInterval > 0 && unit > 0 &&
               unit % restartInterval == 0) {
             val m = br.restart()
-            if (m != (unit / restartInterval - 1) % 8) throw JpegBad
+            if (m != (unit / restartInterval - 1) % 8) throw BadData
             java.util.Arrays.fill(pred, 0); eobrun = 0
           }
         def dcBlock(c: Int, huff: JpegHuff, arr: Array[Int]): Unit =
@@ -3953,7 +3817,7 @@ object Multimodal {
             val r = rs >> 4; val s = rs & 15
             if (s != 0) {
               k += r
-              if (k > se) throw JpegBad
+              if (k > se) throw BadData
               arr(k) = jpegExtend(br.bits(s), s) << al
               k += 1
             } else if (r == 15) k += 16 // ZRL
@@ -3977,7 +3841,7 @@ object Multimodal {
               var r = rs >> 4; val s = rs & 15
               var newval = 0
               if (s != 0) {
-                if (s != 1) throw JpegBad // refinement codes ±1 only
+                if (s != 1) throw BadData // refinement codes ±1 only
                 newval = if (br.bit() == 1) p1 else m1
               } else if (r != 15) {
                 eobrun = 1 << r
@@ -3996,7 +3860,7 @@ object Multimodal {
                   }
                 }
                 if (s != 0) {
-                  if (adv || k > se) throw JpegBad
+                  if (adv || k > se) throw BadData
                   arr(k) = newval
                 }
                 k += 1
@@ -4019,7 +3883,7 @@ object Multimodal {
           val dh = if (ss == 0 && ah == 0) dcH(sDc(0)) else null
           val ach = if (ss > 0) acH(sAc(0)) else null
           if ((ss == 0 && ah == 0 && dh == null) ||
-              (ss > 0 && ach == null)) throw JpegBad
+              (ss > 0 && ach == null)) throw BadData
           val n = compBW(c) * (nmy * compV(c))
           var bi = 0
           while (bi < n) {
@@ -4030,7 +3894,7 @@ object Multimodal {
         } else { // interleaved (DC scans): MCU order
           val dhs = Array.tabulate(scomp.length)(i =>
             if (ah == 0) dcH(sDc(i)) else null)
-          if (ah == 0 && dhs.exists(_ == null)) throw JpegBad
+          if (ah == 0 && dhs.exists(_ == null)) throw BadData
           var my = 0
           while (my < nmy) {
             var mx = 0
@@ -4058,57 +3922,57 @@ object Multimodal {
             my += 1
           }
         }
-        pos = br.pos
+        cur.pos = br.pos
       }
       while (!inScan && !eoi) {
-        if (u8() != 0xff) throw JpegBad
-        var m = u8()
-        while (m == 0xff) m = u8() // fill bytes are legal
+        if (cur.u8() != 0xff) throw BadData
+        var m = cur.u8()
+        while (m == 0xff) m = cur.u8() // fill bytes are legal
         m match {
           case 0xd9 => // EOI: ends a progressive file, else premature
-            if (progressive && sawScan) eoi = true else throw JpegBad
+            if (progressive && sawScan) eoi = true else throw BadData
           case 0xdb =>
-            val len = u16() // read BEFORE pos is captured for `end`
-            val end = pos + len - 2
-            if (end > p.length) throw JpegTrunc
-            while (pos < end) {
-              val pqtq = u8()
-              if ((pqtq >> 4) != 0) throw JpegBad // 16-bit tables: out of scope
+            val len = cur.u16be() // read BEFORE cur.pos is captured for `end`
+            val end = cur.pos + len - 2
+            if (end > p.length) throw Truncated
+            while (cur.pos < end) {
+              val pqtq = cur.u8()
+              if ((pqtq >> 4) != 0) throw BadData // 16-bit tables: out of scope
               val tq = pqtq & 15
               var k = 0
-              while (k < 64) { qt(tq)(k) = u8(); k += 1 }
+              while (k < 64) { qt(tq)(k) = cur.u8(); k += 1 }
             }
           case 0xc4 =>
-            val len = u16()
-            val end = pos + len - 2
-            if (end > p.length) throw JpegTrunc
-            while (pos < end) {
-              val tcth = u8()
+            val len = cur.u16be()
+            val end = cur.pos + len - 2
+            if (end > p.length) throw Truncated
+            while (cur.pos < end) {
+              val tcth = cur.u8()
               val bits = new Array[Int](17)
               var n = 0
               var l = 1
-              while (l <= 16) { bits(l) = u8(); n += bits(l); l += 1 }
-              val vals = Array.fill(n)(u8())
+              while (l <= 16) { bits(l) = cur.u8(); n += bits(l); l += 1 }
+              val vals = Array.fill(n)(cur.u8())
               val hd = new JpegHuff(bits, vals)
               if ((tcth >> 4) == 0) dcH(tcth & 15) = hd
               else acH(tcth & 15) = hd
             }
           case 0xc0 | 0xc2 =>
-            val len = u16()
-            val end = pos + len - 2
-            val prec = u8()
-            height = u16(); width = u16()
-            val nc = u8()
+            val len = cur.u16be()
+            val end = cur.pos + len - 2
+            val prec = cur.u8()
+            height = cur.u16be(); width = cur.u16be()
+            val nc = cur.u8()
             progressive = m == 0xc2
             if (prec != 8) // 12-bit extended DCT: out of the surface
               return fail("unsupported", Some(width), Some(height))
-            if (nc != 1 && nc != 3) throw JpegBad
+            if (nc != 1 && nc != 3) throw BadData
             compId = new Array[Int](nc); compQ = new Array[Int](nc)
             compH = new Array[Int](nc); compV = new Array[Int](nc)
             var c = 0
             while (c < nc) {
-              compId(c) = u8()
-              val hv = u8()
+              compId(c) = cur.u8()
+              val hv = cur.u8()
               compH(c) = (hv >> 4) & 15; compV(c) = hv & 15
               // decode surface: 1×1 everywhere (4:4:4 / grayscale),
               // Y at 2×2 (4:2:0), or Y at 2×1 (4:2:2) — the nearest
@@ -4117,44 +3981,44 @@ object Multimodal {
                   (c == 0 && compH(c) == 2 &&
                     (compV(c) == 2 || compV(c) == 1))))
                 return fail("unsupported", Some(width), Some(height))
-              compQ(c) = u8() & 3
+              compQ(c) = cur.u8() & 3
               c += 1
             }
-            if (pos != end) throw JpegBad
+            if (cur.pos != end) throw BadData
           case 0xda =>
-            u16()
-            val ns = u8()
-            if (width < 0 || compQ == null) throw JpegBad
+            cur.u16be()
+            val ns = cur.u8()
+            if (width < 0 || compQ == null) throw BadData
             if (!progressive) {
-              if (ns != compQ.length) throw JpegBad
+              if (ns != compQ.length) throw BadData
               compDc = new Array[Int](ns); compAc = new Array[Int](ns)
               var c = 0
               while (c < ns) {
-                u8() // component selector (positional order)
-                val t = u8()
+                cur.u8() // component selector (positional order)
+                val t = cur.u8()
                 compDc(c) = (t >> 4) & 3; compAc(c) = t & 3
                 c += 1
               }
-              u8(); u8(); u8() // Ss, Se, Ah/Al — baseline fixed
+              cur.u8(); cur.u8(); cur.u8() // Ss, Se, Ah/Al — baseline fixed
               geometry() match {
                 case Some(r) => return r
                 case None =>
               }
               inScan = true
             } else {
-              if (ns < 1 || ns > compQ.length) throw JpegBad
+              if (ns < 1 || ns > compQ.length) throw BadData
               val scomp = new Array[Int](ns)
               val sDc = new Array[Int](ns); val sAc = new Array[Int](ns)
               var i = 0
               while (i < ns) {
-                val ci = compId.indexOf(u8()) // selector is an id
-                if (ci < 0) throw JpegBad
+                val ci = compId.indexOf(cur.u8()) // selector is an id
+                if (ci < 0) throw BadData
                 scomp(i) = ci
-                val t = u8(); sDc(i) = (t >> 4) & 3; sAc(i) = t & 3
+                val t = cur.u8(); sDc(i) = (t >> 4) & 3; sAc(i) = t & 3
                 i += 1
               }
-              val ss = u8(); val se = u8()
-              val ahal = u8()
+              val ss = cur.u8(); val se = cur.u8()
+              val ahal = cur.u8()
               if (!sawScan) geometry() match {
                 case Some(r) => return r
                 case None =>
@@ -4164,13 +4028,13 @@ object Multimodal {
               sawScan = true
             }
           case 0xdd => // DRI: restart interval in MCUs
-            if (u16() != 4) throw JpegBad
-            restartInterval = u16()
-          case x if x >= 0xd0 && x <= 0xd7 => throw JpegBad // stray RSTn
+            if (cur.u16be() != 4) throw BadData
+            restartInterval = cur.u16be()
+          case x if x >= 0xd0 && x <= 0xd7 => throw BadData // stray RSTn
           case _ => // APPn / COM / anything length-framed: skip
-            val len = u16()
-            if (len < 2 || pos + len - 2 > p.length) throw JpegTrunc
-            pos += len - 2
+            val len = cur.u16be()
+            if (len < 2 || cur.pos + len - 2 > p.length) throw Truncated
+            cur.pos += len - 2
         }
       }
       val nc = compQ.length
@@ -4239,7 +4103,7 @@ object Multimodal {
       if (sink != null) sink.dims(width, height)
       if (!eoi) {
         // BASELINE: stream the single scan MCU by MCU
-        val br = new JpegBitReader(p, pos)
+        val br = new JpegBitReader(p, cur.pos)
         val pred = new Array[Int](nc)
         var mcuIdx = 0
         var my = 0
@@ -4252,7 +4116,7 @@ object Multimodal {
             if (restartInterval > 0 && mcuIdx > 0 &&
                 mcuIdx % restartInterval == 0) {
               val m = br.restart()
-              if (m != (mcuIdx / restartInterval - 1) % 8) throw JpegBad
+              if (m != (mcuIdx / restartInterval - 1) % 8) throw BadData
               java.util.Arrays.fill(pred, 0)
             }
             var c = 0
@@ -4261,18 +4125,21 @@ object Multimodal {
               while (bIdx < compV(c) * compH(c)) {
                 java.util.Arrays.fill(coef, 0)
                 val q = qt(compQ(c))
-                val t = dcH(compDc(c)).decode(br)
+                // a scan may name a table no DHT defined
+                val dc = dcH(compDc(c)); if (dc == null) throw BadData
+                val t = dc.decode(br)
                 pred(c) += jpegExtend(br.bits(t), t)
                 coef(0) = pred(c) * q(0)
+                val ac = acH(compAc(c)); if (ac == null) throw BadData
                 var k = 1
                 var eob = false
                 while (!eob && k <= 63) {
-                  val rs = acH(compAc(c)).decode(br)
+                  val rs = ac.decode(br)
                   if (rs == 0) eob = true
                   else if (rs == 0xF0) k += 16
                   else {
                     k += (rs >> 4)
-                    if (k > 63) throw JpegBad
+                    if (k > 63) throw BadData
                     coef(JpegZigzag(k)) =
                       jpegExtend(br.bits(rs & 15), rs & 15) * q(k)
                     k += 1
@@ -4335,11 +4202,10 @@ object Multimodal {
         Some(rSum), Some(gSum), Some(bSum), Some(pxMin), Some(pxMax),
         Some(row0))
     } catch {
-      case JpegTrunc => fail("truncated",
-        if (pDims(p)._1 > 0) Some(pDims(p)._1) else None,
-        if (pDims(p)._2 > 0) Some(pDims(p)._2) else None)
-      case JpegBad => fail("bad_data")
-      case _: ArrayIndexOutOfBoundsException => fail("bad_data")
+      case Truncated => // a truncated file's header dims are usually intact
+        val (w, h) = pDims(p)
+        fail("truncated", Some(w).filter(_ > 0), Some(h).filter(_ > 0))
+      case _: Malformed | _: ArrayIndexOutOfBoundsException => fail("bad_data")
     }
   }
 
@@ -4352,14 +4218,11 @@ object Multimodal {
       if ((p(pos) & 0xff) == 0xff) {
         val m = p(pos + 1) & 0xff
         if (m == 0xc0 || m == 0xc2) {
-          val h = ((p(pos + 5) & 0xff) << 8) | (p(pos + 6) & 0xff)
-          val w = ((p(pos + 7) & 0xff) << 8) | (p(pos + 8) & 0xff)
-          return (w, h)
+          return (Bytes.u16be(p, pos + 7), Bytes.u16be(p, pos + 5))
         }
         if (m >= 0xc0 && m != 0xff && m != 0xd8 && m != 0x01 &&
             !(m >= 0xd0 && m <= 0xd9)) {
-          val len = ((p(pos + 2) & 0xff) << 8) | (p(pos + 3) & 0xff)
-          pos += 2 + len
+          pos += 2 + Bytes.u16be(p, pos + 2)
         } else pos += 2
       } else pos += 1
     }
@@ -4504,7 +4367,7 @@ object Multimodal {
     val badMagic = b(8) % 16 == 5
     val badCrc = b(9) % 16 == 7
     val fixedHuff = b(10) % 2 == 1
-    val out = new java.io.ByteArrayOutputStream(inner.length + 32)
+    val out = new Bytes.Writer(inner.length + 32)
     out.write(if (badMagic) 0x2f else 0x1f); out.write(0x8b)
     out.write(8) // CM = deflate
     out.write(0) // FLG = 0: tarball producers rarely set name fields
@@ -4513,12 +4376,7 @@ object Multimodal {
     val defl = if (fixedHuff) deflateFixed(inner) else deflateStored(inner)
     out.write(defl, 0, defl.length)
     val crc = crc32Png(inner)
-    def le32(v: Int): Unit = {
-      out.write(v & 255); out.write((v >>> 8) & 255)
-      out.write((v >>> 16) & 255); out.write((v >>> 24) & 255)
-    }
-    le32(if (badCrc) crc ^ 0x330000 else crc)
-    le32(inner.length)
+    out.u32le(if (badCrc) crc ^ 0x330000 else crc).u32le(inner.length)
     out.toByteArray
   }
 

@@ -1,5 +1,8 @@
 package graft.llm
 
+import graft.codec.{Bytes, Malformed}
+import graft.codec.Malformed.{BadData, Truncated}
+
 /** From-scratch zstd (RFC 8878) single-frame codec — the THIRTEENTH
   * decoder and the last transport format public corpora ship that the
   * crawl front door couldn't read (`.jsonl.zst` in RedPajama / Dolma /
@@ -31,16 +34,6 @@ package graft.llm
   */
 private[llm] object Zstd {
 
-  private object Trunc extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  private object Bad extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  private object Unsup extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-
   // ------------------------------------------------------------------
   // xxhash64 (Collet's public spec) — the frame-checksum hash; the
   // frame stores the LOW 32 bits of the seed-0 digest.
@@ -53,16 +46,6 @@ private[llm] object Zstd {
 
   private[llm] def xxh64(data: Array[Byte], seed: Long = 0L): Long = {
     val n = data.length
-    def le64(i: Int): Long = {
-      var v = 0L; var j = 7
-      while (j >= 0) { v = (v << 8) | (data(i + j) & 0xffL); j -= 1 }
-      v
-    }
-    def le32(i: Int): Long = {
-      var v = 0L; var j = 3
-      while (j >= 0) { v = (v << 8) | (data(i + j) & 0xffL); j -= 1 }
-      v
-    }
     def rotl(x: Long, r: Int): Long = (x << r) | (x >>> (64 - r))
     var i = 0
     var h =
@@ -70,10 +53,10 @@ private[llm] object Zstd {
         var v1 = seed + P1 + P2; var v2 = seed + P2
         var v3 = seed; var v4 = seed - P1
         while (i + 32 <= n) {
-          v1 = rotl(v1 + le64(i) * P2, 31) * P1
-          v2 = rotl(v2 + le64(i + 8) * P2, 31) * P1
-          v3 = rotl(v3 + le64(i + 16) * P2, 31) * P1
-          v4 = rotl(v4 + le64(i + 24) * P2, 31) * P1
+          v1 = rotl(v1 + Bytes.u64le(data, i) * P2, 31) * P1
+          v2 = rotl(v2 + Bytes.u64le(data, i + 8) * P2, 31) * P1
+          v3 = rotl(v3 + Bytes.u64le(data, i + 16) * P2, 31) * P1
+          v4 = rotl(v4 + Bytes.u64le(data, i + 24) * P2, 31) * P1
           i += 32
         }
         var acc = rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)
@@ -85,11 +68,11 @@ private[llm] object Zstd {
       } else seed + P5
     h += n
     while (i + 8 <= n) {
-      h = rotl(h ^ (rotl(le64(i) * P2, 31) * P1), 27) * P1 + P4
+      h = rotl(h ^ (rotl(Bytes.u64le(data, i) * P2, 31) * P1), 27) * P1 + P4
       i += 8
     }
     if (i + 4 <= n) {
-      h = rotl(h ^ (le32(i) * P1), 23) * P2 + P3
+      h = rotl(h ^ (Bytes.u32le(data, i) * P1), 23) * P2 + P3
       i += 4
     }
     while (i < n) {
@@ -106,10 +89,10 @@ private[llm] object Zstd {
   // bit of the last byte is the padding sentinel.
   // ------------------------------------------------------------------
   private final class BitsBack(p: Array[Byte], from: Int, to: Int) {
-    if (to <= from) throw Trunc
+    if (to <= from) throw Truncated
     private var pos: Long = {
       val last = p(to - 1) & 0xff
-      if (last == 0) throw Bad // no sentinel
+      if (last == 0) throw BadData // no sentinel
       8L * (to - 1 - from) + (31 - Integer.numberOfLeadingZeros(last))
     }
     def remaining: Long = pos
@@ -119,7 +102,7 @@ private[llm] object Zstd {
       * bitstreams must end exactly, Huffman streams may drain. */
     def read(n: Int): Int = {
       if (n == 0) return 0
-      if (pos < n) throw Bad
+      if (pos < n) throw BadData
       pos -= n
       bitsAt(pos, n)
     }
@@ -131,7 +114,7 @@ private[llm] object Zstd {
       bitsAtPadded(start, n)
     }
     def skip(n: Int): Unit = {
-      if (pos < n) throw Bad
+      if (pos < n) throw BadData
       pos -= n
     }
     private def bitsAt(start: Long, n: Int): Int = {
@@ -166,7 +149,7 @@ private[llm] object Zstd {
     private var bit = 0L
     private val limit = 8L * (to - from)
     def read(n: Int): Int = {
-      if (bit + n > limit) throw Trunc
+      if (bit + n > limit) throw Truncated
       var v = 0
       var k = 0
       while (k < n) {
@@ -229,7 +212,7 @@ private[llm] object Zstd {
       }
       s += 1
     }
-    if (posn != 0) throw Bad // counts don't fill the table
+    if (posn != 0) throw BadData // counts don't fill the table
     val next = java.util.Arrays.copyOf(freq, freq.length)
     val nb = new Array[Int](size)
     val base = new Array[Int](size)
@@ -252,7 +235,7 @@ private[llm] object Zstd {
   private def fseReadNCount(br: BitsFwd, maxSymbol: Int,
       maxLog: Int): (Array[Int], Int) = {
     val accLog = br.read(4) + 5
-    if (accLog > maxLog) throw Bad
+    if (accLog > maxLog) throw BadData
     var remaining = (1 << accLog) + 1
     var threshold = 1 << accLog
     var nbBits = accLog + 1
@@ -260,11 +243,13 @@ private[llm] object Zstd {
     var s = 0
     var prev0 = false
     while (remaining > 1) {
-      if (s > maxSymbol) throw Bad
+      if (s > maxSymbol) throw BadData
       if (prev0) {
-        while (br.peek(2) == 3) { br.skip(2); s += 3; if (s > maxSymbol + 1) throw Bad }
+        while (br.peek(2) == 3) {
+          br.skip(2); s += 3; if (s > maxSymbol + 1) throw BadData
+        }
         s += br.read(2)
-        if (s > maxSymbol) throw Bad
+        if (s > maxSymbol) throw BadData
         prev0 = false
       } else {
         val max = 2 * threshold - 1 - remaining
@@ -286,7 +271,7 @@ private[llm] object Zstd {
         }
       }
     }
-    if (remaining != 1) throw Bad
+    if (remaining != 1) throw BadData
     (norm, accLog)
   }
 
@@ -345,9 +330,9 @@ private[llm] object Zstd {
       }
       s += 1
     }
-    if (total == 0 || java.lang.Long.bitCount(total) != 1) throw Bad
+    if (total == 0 || java.lang.Long.bitCount(total) != 1) throw BadData
     val maxBits = java.lang.Long.numberOfTrailingZeros(total) // log2
-    if (maxBits < maxW || maxBits > 11) throw Bad
+    if (maxBits < maxW || maxBits > 11) throw BadData
     val lens = new Array[Int](weights.length)
     s = 0
     while (s < weights.length) {
@@ -388,13 +373,13 @@ private[llm] object Zstd {
     * states over a ≤6-bit table); the LAST weight is implied so the
     * leaf sum completes a power of two. Returns (table, bytes read). */
   private def hufReadTree(p: Array[Byte], from: Int, to: Int): (HufTable, Int) = {
-    if (from >= to) throw Trunc
+    if (from >= to) throw Truncated
     val hb = p(from) & 0xff
     val (ws, used) =
       if (hb >= 128) {
         val n = hb - 127 // transmitted weights; symbol n gets implied
         val bytes = (n + 1) / 2
-        if (from + 1 + bytes > to) throw Trunc
+        if (from + 1 + bytes > to) throw Truncated
         val w = new Array[Int](n + 1)
         var k = 0
         while (k < n) {
@@ -405,7 +390,7 @@ private[llm] object Zstd {
         (w, 1 + bytes)
       } else {
         val csize = hb
-        if (from + 1 + csize > to) throw Trunc
+        if (from + 1 + csize > to) throw Truncated
         val br = new BitsFwd(p, from + 1, from + 1 + csize)
         val (norm, accLog) = fseReadNCount(br, 15, 6)
         val tbl = fseBuild(norm, accLog)
@@ -420,13 +405,13 @@ private[llm] object Zstd {
         while (!done) {
           buf += tbl.symbol(st1)
           if (bb.remaining < tbl.nbBits(st1)) {
-            if (bb.remaining != 0) throw Bad
+            if (bb.remaining != 0) throw BadData
             buf += tbl.symbol(st2); done = true
           } else {
             st1 = tbl.baseline(st1) + bb.read(tbl.nbBits(st1))
             val t = st1; st1 = st2; st2 = t
           }
-          if (buf.length > 255) throw Bad
+          if (buf.length > 255) throw BadData
         }
         (buf.toArray :+ 0, 1 + csize) // slot for the implied weight
       }
@@ -434,14 +419,14 @@ private[llm] object Zstd {
     var total = 0L
     var k = 0
     while (k < ws.length - 1) {
-      if (ws(k) > 11) throw Bad
+      if (ws(k) > 11) throw BadData
       if (ws(k) > 0) total += (1L << (ws(k) - 1))
       k += 1
     }
-    if (total == 0) throw Bad
+    if (total == 0) throw BadData
     val next = java.lang.Long.highestOneBit(total) * 2
     val rest = next - total
-    if (java.lang.Long.bitCount(rest) != 1) throw Bad
+    if (java.lang.Long.bitCount(rest) != 1) throw BadData
     ws(ws.length - 1) =
       (63 - java.lang.Long.numberOfLeadingZeros(rest) + 1).toInt
     (hufBuild(ws), used)
@@ -455,15 +440,15 @@ private[llm] object Zstd {
     while (k < outLen) {
       val idx = bb.peek(tbl.maxBits)
       val nb = tbl.lutBits(idx)
-      if (nb == 0 || bb.remaining <= 0) throw Bad
+      if (nb == 0 || bb.remaining <= 0) throw BadData
       // the final symbols may peek past the start (zero padding); a
       // consume is still bounded by the remaining count going negative
-      if (bb.remaining < nb) throw Bad
+      if (bb.remaining < nb) throw BadData
       bb.skip(nb)
       out(outOff + k) = tbl.lutSym(idx).toByte
       k += 1
     }
-    if (bb.remaining != 0) throw Bad // stream must end exactly
+    if (bb.remaining != 0) throw BadData // stream must end exactly
   }
 
   // ------------------------------------------------------------------
@@ -494,12 +479,8 @@ private[llm] object Zstd {
     * the content. Returns None on any malformation — a bad dictionary
     * must fail at REGISTRATION, not as bad_data on every frame. */
   private[llm] def parseDict(p: Array[Byte]): Option[ZDict] = try {
-    if (p == null || p.length < 8) return None
-    val magic = (p(0) & 0xffL) | ((p(1) & 0xffL) << 8) |
-      ((p(2) & 0xffL) << 16) | ((p(3) & 0xffL) << 24)
-    if (magic != 0xEC30A437L) return None
-    val id = (p(4) & 0xffL) | ((p(5) & 0xffL) << 8) |
-      ((p(6) & 0xffL) << 16) | ((p(7) & 0xffL) << 24)
+    if (p == null || Bytes.u32le(p, 0) != 0xEC30A437L) return None
+    val id = Bytes.u32le(p, 4)
     var i = 8
     val (huf, hufUsed) = hufReadTree(p, i, p.length)
     i += hufUsed
@@ -512,10 +493,8 @@ private[llm] object Zstd {
     val ofT = fse(31, 8)
     val mlT = fse(52, 9)
     val llT = fse(35, 9)
-    if (i + 12 > p.length) return None
-    def le32(o: Int): Int = (p(o) & 0xff) | ((p(o + 1) & 0xff) << 8) |
-      ((p(o + 2) & 0xff) << 16) | ((p(o + 3) & 0xff) << 24)
-    val r1 = le32(i); val r2 = le32(i + 4); val r3 = le32(i + 8)
+    val r1 = Bytes.i32le(p, i); val r2 = Bytes.i32le(p, i + 4)
+    val r3 = Bytes.i32le(p, i + 8)
     i += 12
     val content = java.util.Arrays.copyOfRange(p, i, p.length)
     // reference check: every initial repeat offset must point inside
@@ -524,8 +503,9 @@ private[llm] object Zstd {
     if (r1 <= 0 || r2 <= 0 || r3 <= 0 || r1 > content.length ||
         r2 > content.length || r3 > content.length) return None
     Some(ZDict(id, huf, ofT, mlT, llT, (r1, r2, r3), content))
-  } catch { case Trunc | Bad | Unsup => None
-    case _: IndexOutOfBoundsException => None }
+  } catch {
+    case _: Malformed | _: IndexOutOfBoundsException => None
+  }
 
   /** Whole-file walk — what a `.zst` on disk actually is: one or more
     * data frames CONCATENATED, with skippable frames (pzstd seek
@@ -538,27 +518,26 @@ private[llm] object Zstd {
     var off = 0
     var n = 0
     val out = new java.io.ByteArrayOutputStream(1024)
-    while (off < p.length) {
-      if (off + 4 > p.length) return ("truncated", null, n)
-      val magic = (p(off) & 0xffL) | ((p(off + 1) & 0xffL) << 8) |
-        ((p(off + 2) & 0xffL) << 16) | ((p(off + 3) & 0xffL) << 24)
-      if (magic >= 0x184D2A50L && magic <= 0x184D2A5FL) {
-        if (off + 8 > p.length) return ("truncated", null, n)
-        val sz = (p(off + 4) & 0xffL) | ((p(off + 5) & 0xffL) << 8) |
-          ((p(off + 6) & 0xffL) << 16) | ((p(off + 7) & 0xffL) << 24)
-        if (sz > p.length - off - 8) return ("truncated", null, n)
-        off += 8 + sz.toInt
-        n += 1
-      } else {
-        val (st, c, _, _, end) = decodeFrame(p, off, maxOut, dicts)
-        if (st != "ok") return (st, null, n)
-        if (out.size() + c.length > maxOut) return ("bad_data", null, n)
-        out.write(c, 0, c.length)
-        off = end
-        n += 1
+    try {
+      while (off < p.length) {
+        val magic = Bytes.u32le(p, off)
+        if (magic >= 0x184D2A50L && magic <= 0x184D2A5FL) {
+          val sz = Bytes.u32le(p, off + 4)
+          // a size of 2^31 or more wraps negative and fails too
+          Bytes.need(p, off + 8, sz.toInt)
+          off += 8 + sz.toInt
+          n += 1
+        } else {
+          val (st, c, _, _, end) = decodeFrame(p, off, maxOut, dicts)
+          if (st != "ok") return (st, null, n)
+          if (out.size() + c.length > maxOut) return ("bad_data", null, n)
+          out.write(c, 0, c.length)
+          off = end
+          n += 1
+        }
       }
-    }
-    ("ok", out.toByteArray, n)
+      ("ok", out.toByteArray, n)
+    } catch { case f: Malformed => (f.status, null, n) }
   }
 
   /** One frame starting at `start`; last element = end offset. */
@@ -571,19 +550,16 @@ private[llm] object Zstd {
     try {
       if (p == null || p.length - start < 4)
         return ("bad_magic", null, 0, false, start)
-      val magic = (p(start) & 0xffL) | ((p(start + 1) & 0xffL) << 8) |
-        ((p(start + 2) & 0xffL) << 16) | ((p(start + 3) & 0xffL) << 24)
+      val magic = Bytes.u32le(p, start)
       if (magic >= 0x184D2A50L && magic <= 0x184D2A5FL)
         return ("unsupported", null, 0, false, start) // skippable frame
       if (magic != 0xFD2FB528L) return ("bad_magic", null, 0, false, start)
-      var i = start + 4
-      def need(n: Int): Unit = if (i + n > p.length) throw Trunc
-      need(1)
-      val fhd = p(i) & 0xff; i += 1
+      val c = new Bytes.Cursor(p, start + 4)
+      val fhd = c.u8()
       val fcsFlag = fhd >> 6
       val singleSeg = (fhd & 0x20) != 0
       hasSum = (fhd & 0x04) != 0
-      if ((fhd & 0x08) != 0) throw Bad // reserved bit
+      if ((fhd & 0x08) != 0) throw BadData // reserved bit
       // Dictionary_ID field (§3.1.1.1.3): 1/2/4 bytes by flag value.
       // A frame naming a dictionary we don't hold stays the honest
       // `unsupported` arm — decoding it as dict-less would produce
@@ -594,15 +570,10 @@ private[llm] object Zstd {
           case 1 => 1; case 2 => 2; case _ => 4
         }
         // window descriptor precedes the DID field in the header
-        if (!singleSeg) { need(1); i += 1 }
-        need(didBytes)
-        var did = 0L
-        var k = didBytes - 1
-        while (k >= 0) { did = (did << 8) | (p(i + k) & 0xffL); k -= 1 }
-        i += didBytes
-        dict = dicts.getOrElse(did, null)
-        if (dict == null) return ("unsupported", null, 0, hasSum, i)
-      } else if (!singleSeg) { need(1); i += 1 } // window descriptor
+        if (!singleSeg) c.skip(1)
+        dict = dicts.getOrElse(c.uleN(didBytes), null)
+        if (dict == null) return ("unsupported", null, 0, hasSum, c.pos)
+      } else if (!singleSeg) c.skip(1) // window descriptor
       val fcsBytes = fcsFlag match {
         case 0 => if (singleSeg) 1 else 0
         case 1 => 2
@@ -611,20 +582,16 @@ private[llm] object Zstd {
       }
       var fcs = -1L
       if (fcsBytes > 0) {
-        need(fcsBytes)
-        fcs = 0L
-        var k = fcsBytes - 1
-        while (k >= 0) { fcs = (fcs << 8) | (p(i + k) & 0xffL); k -= 1 }
+        fcs = c.uleN(fcsBytes)
         if (fcsBytes == 2) fcs += 256
-        i += fcsBytes
       }
-      if (fcs > maxOut) return ("unsupported", null, 0, hasSum, i)
+      if (fcs > maxOut) return ("unsupported", null, 0, hasSum, c.pos)
       // flat output array: match copies address the FULL decoded
       // history (cross-block offsets) by plain index
       var out = new Array[Byte](math.max(1024, fcs.toInt + 1))
       var outLen = 0
       def ensure(extra: Int): Unit = {
-        if (outLen + extra > maxOut) throw Bad
+        if (outLen + extra > maxOut) throw BadData
         if (outLen + extra > out.length)
           out = java.util.Arrays.copyOf(out,
             math.max(out.length * 2, outLen + extra))
@@ -648,10 +615,7 @@ private[llm] object Zstd {
       }
       var lastBlock = false
       while (!lastBlock) {
-        need(3)
-        val bh = (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8) |
-          ((p(i + 2) & 0xff) << 16)
-        i += 3
+        val bh = c.u24le()
         lastBlock = (bh & 1) != 0
         val btype = (bh >> 1) & 3
         val bsize = bh >> 3
@@ -663,86 +627,62 @@ private[llm] object Zstd {
         // expanding-block rule pinned in r18)
         val blockOut0 = outLen
         def blockCap(): Unit =
-          if (outLen - blockOut0 > (1 << 17)) throw Bad
+          if (outLen - blockOut0 > (1 << 17)) throw BadData
         btype match {
           case 0 => // raw
-            if (bsize > (1 << 17)) throw Bad
-            need(bsize); ensure(bsize)
-            System.arraycopy(p, i, out, outLen, bsize)
-            outLen += bsize; i += bsize
+            if (bsize > (1 << 17)) throw BadData
+            c.need(bsize); ensure(bsize)
+            System.arraycopy(p, c.pos, out, outLen, bsize)
+            outLen += bsize; c.pos += bsize
           case 1 => // RLE: one byte repeated bsize times
-            if (bsize > (1 << 17)) throw Bad
-            need(1); ensure(bsize)
-            java.util.Arrays.fill(out, outLen, outLen + bsize, p(i))
-            outLen += bsize; i += 1
+            if (bsize > (1 << 17)) throw BadData
+            val v = c.u8().toByte
+            ensure(bsize)
+            java.util.Arrays.fill(out, outLen, outLen + bsize, v)
+            outLen += bsize
           case 2 => // compressed
-            need(bsize)
+            c.need(bsize)
             // reference rule (ZSTD_decompressBlock: srcSize >
             // dstCapacity → srcSize_wrong): a compressed block never
             // occupies more bytes than the content it has left to
             // produce — pinned empirically against zstd v1.5.7
-            if (fcs >= 0 && bsize > fcs - outLen) throw Bad
-            val blockEnd = i + bsize
+            if (fcs >= 0 && bsize > fcs - outLen) throw BadData
+            val blk = new Bytes.Cursor(p, c.pos, c.pos + bsize)
+            c.pos += bsize
             // ---- literals section ----
-            if (i >= blockEnd) throw Trunc
-            val lh0 = p(i) & 0xff
+            // the header's size fields sit above its 4 type/format
+            // bits: one LE field of 1..5 bytes, shifted down by 4
+            blk.need(1)
+            val lh0 = p(blk.pos) & 0xff
             val ltype = lh0 & 3
             val sf = (lh0 >> 2) & 3
             var regen = 0
             var cmp = 0
             var nStreams = 1
-            def needB(n: Int): Unit = if (i + n > blockEnd) throw Trunc
-            if (ltype <= 1) { // raw / RLE literals
-              sf match {
-                case 0 | 2 => regen = lh0 >> 3; i += 1
-                case 1 =>
-                  needB(2)
-                  regen = (lh0 >> 4) | ((p(i + 1) & 0xff) << 4); i += 2
-                case _ =>
-                  needB(3)
-                  regen = (lh0 >> 4) | ((p(i + 1) & 0xff) << 4) |
-                    ((p(i + 2) & 0xff) << 12)
-                  i += 3
+            if (ltype <= 1) // raw / RLE literals
+              regen = sf match {
+                case 0 | 2 => blk.u8() >> 3
+                case 1 => blk.u16le() >> 4
+                case _ => blk.u24le() >> 4
               }
-            } else { // Huffman-compressed / treeless
-              sf match {
-                case 0 | 1 =>
-                  needB(3)
-                  nStreams = if (sf == 0) 1 else 4
-                  val v = (lh0 >> 4) | ((p(i + 1) & 0xff) << 4) |
-                    ((p(i + 2) & 0xff) << 12)
-                  regen = v & 0x3ff; cmp = v >> 10
-                  i += 3
-                case 2 =>
-                  needB(4)
-                  nStreams = 4
-                  val v = (lh0 >>> 4).toLong | ((p(i + 1) & 0xffL) << 4) |
-                    ((p(i + 2) & 0xffL) << 12) | ((p(i + 3) & 0xffL) << 20)
-                  regen = (v & 0x3fff).toInt; cmp = (v >> 14).toInt
-                  i += 4
-                case _ =>
-                  needB(5)
-                  nStreams = 4
-                  val v = (lh0 >>> 4).toLong | ((p(i + 1) & 0xffL) << 4) |
-                    ((p(i + 2) & 0xffL) << 12) | ((p(i + 3) & 0xffL) << 20) |
-                    ((p(i + 4) & 0xffL) << 28)
-                  regen = (v & 0x3ffff).toInt; cmp = (v >> 18).toInt
-                  i += 5
-              }
+            else { // Huffman-compressed / treeless
+              nStreams = if (sf == 0) 1 else 4
+              val bits = if (sf <= 1) 10 else if (sf == 2) 14 else 18
+              val v = blk.uleN(if (sf <= 1) 3 else sf + 2) >> 4
+              regen = (v & ((1 << bits) - 1)).toInt; cmp = (v >> bits).toInt
             }
-            if (regen > maxOut) throw Bad
+            if (regen > maxOut) throw BadData
             val lits = new Array[Byte](regen)
             ltype match {
               case 0 =>
-                needB(regen)
-                System.arraycopy(p, i, lits, 0, regen); i += regen
+                blk.need(regen)
+                System.arraycopy(p, blk.pos, lits, 0, regen); blk.pos += regen
               case 1 =>
-                needB(1)
-                java.util.Arrays.fill(lits, p(i)); i += 1
+                java.util.Arrays.fill(lits, blk.u8().toByte)
               case _ =>
-                needB(cmp)
-                var litFrom = i
-                val litEnd = i + cmp
+                blk.need(cmp)
+                var litFrom = blk.pos
+                val litEnd = blk.pos + cmp
                 val tbl =
                   if (ltype == 2) {
                     val (t, used) = hufReadTree(p, litFrom, litEnd)
@@ -750,74 +690,63 @@ private[llm] object Zstd {
                     lastHuf = t
                     t
                   } else {
-                    if (lastHuf == null) throw Bad
+                    if (lastHuf == null) throw BadData
                     lastHuf
                   }
                 if (nStreams == 1)
                   hufDecodeStream(tbl, p, litFrom, litEnd, lits, 0, regen)
                 else {
-                  if (litFrom + 6 > litEnd) throw Trunc
-                  def le16(o: Int) = (p(o) & 0xff) | ((p(o + 1) & 0xff) << 8)
-                  val s1 = le16(litFrom); val s2 = le16(litFrom + 2)
-                  val s3 = le16(litFrom + 4)
-                  val o1 = litFrom + 6
+                  val jt = new Bytes.Cursor(p, litFrom, litEnd) // jump table
+                  val s1 = jt.u16le(); val s2 = jt.u16le(); val s3 = jt.u16le()
+                  val o1 = jt.pos
                   val o2 = o1 + s1; val o3 = o2 + s2; val o4 = o3 + s3
-                  if (o4 > litEnd) throw Bad
+                  if (o4 > litEnd) throw BadData
                   val rs = (regen + 3) / 4
                   val r4 = regen - 3 * rs
-                  if (r4 < 0) throw Bad
+                  if (r4 < 0) throw BadData
                   hufDecodeStream(tbl, p, o1, o2, lits, 0, rs)
                   hufDecodeStream(tbl, p, o2, o3, lits, rs, rs)
                   hufDecodeStream(tbl, p, o3, o4, lits, 2 * rs, rs)
                   hufDecodeStream(tbl, p, o4, litEnd, lits, 3 * rs, r4)
                 }
-                i = litEnd
+                blk.pos = litEnd
             }
             // ---- sequences section ----
-            if (i >= blockEnd) throw Trunc
-            val nb0 = p(i) & 0xff; i += 1
-            var nbSeq = 0
-            if (nb0 < 128) nbSeq = nb0
-            else if (nb0 < 255) {
-              needB(1)
-              nbSeq = ((nb0 - 128) << 8) | (p(i) & 0xff); i += 1
-            } else {
-              needB(2)
-              nbSeq = ((p(i) & 0xff) | ((p(i + 1) & 0xff) << 8)) + 0x7f00
-              i += 2
-            }
+            val nb0 = blk.u8()
+            val nbSeq =
+              if (nb0 < 128) nb0
+              else if (nb0 < 255) ((nb0 - 128) << 8) | blk.u8()
+              else blk.u16le() + 0x7f00
             if (nbSeq == 0) {
-              if (i != blockEnd) throw Bad
+              if (blk.remaining != 0) throw BadData
               ensure(lits.length)
               System.arraycopy(lits, 0, out, outLen, lits.length)
               outLen += lits.length
               blockCap()
             } else {
-              needB(1)
-              val modes = p(i) & 0xff; i += 1
-              if ((modes & 3) != 0) throw Bad // reserved bits
+              val modes = blk.u8()
+              if ((modes & 3) != 0) throw BadData // reserved bits
               def loadTable(mode: Int, default: FseTable, maxSym: Int,
                   maxLog: Int, prev: FseTable): FseTable = mode match {
                 case 0 => default
                 case 1 => // RLE: a 0-bit single-state table
-                  needB(1)
-                  val s0 = p(i) & 0xff; i += 1
-                  if (s0 > maxSym) throw Bad
+                  val s0 = blk.u8()
+                  if (s0 > maxSym) throw BadData
                   new FseTable(0, Array(s0), Array(0), Array(0))
                 case 2 =>
-                  val br = new BitsFwd(p, i, blockEnd)
+                  val br = new BitsFwd(p, blk.pos, blk.end)
                   val (norm, accLog) = fseReadNCount(br, maxSym, maxLog)
-                  i += br.bytesConsumed
+                  blk.pos += br.bytesConsumed
                   fseBuild(norm, accLog)
                 case _ =>
-                  if (prev == null) throw Bad
+                  if (prev == null) throw BadData
                   prev
               }
               val llT = loadTable((modes >> 6) & 3, LlTable, 35, 9, llPrev)
               val ofT = loadTable((modes >> 4) & 3, OfTable, 31, 8, ofPrev)
               val mlT = loadTable((modes >> 2) & 3, MlTable, 52, 9, mlPrev)
               llPrev = llT; ofPrev = ofT; mlPrev = mlT
-              val bb = new BitsBack(p, i, blockEnd)
+              val bb = new BitsBack(p, blk.pos, blk.end)
               var llSt = bb.read(llT.tableLog)
               var ofSt = bb.read(ofT.tableLog)
               var mlSt = bb.read(mlT.tableLog)
@@ -827,7 +756,7 @@ private[llm] object Zstd {
                 val llCode = llT.symbol(llSt)
                 val ofCode = ofT.symbol(ofSt)
                 val mlCode = mlT.symbol(mlSt)
-                if (llCode > 35 || mlCode > 52 || ofCode > 30) throw Bad
+                if (llCode > 35 || mlCode > 52 || ofCode > 30) throw BadData
                 val ofVal =
                   (1L << ofCode) + (if (ofCode > 0) bb.read(ofCode) else 0)
                 val ml = MlBase(mlCode) +
@@ -850,16 +779,16 @@ private[llm] object Zstd {
                       rep1 = offset
                     case _ =>
                       offset = rep1 - 1
-                      if (offset <= 0) throw Bad
+                      if (offset <= 0) throw BadData
                       rep3 = rep2; rep2 = rep1; rep1 = offset
                   }
                 }
-                if (litPos + ll > lits.length) throw Bad
+                if (litPos + ll > lits.length) throw BadData
                 ensure(ll + ml)
                 System.arraycopy(lits, litPos, out, outLen, ll)
                 litPos += ll; outLen += ll
                 val src = outLen - offset
-                if (ml < 0 || src + hist.length < 0) throw Bad
+                if (ml < 0 || src + hist.length < 0) throw BadData
                 var k = 0
                 while (k < ml) { // byte-wise: overlap is the LZ idiom
                   val s = src + k
@@ -867,6 +796,7 @@ private[llm] object Zstd {
                     if (s < 0) hist(hist.length + s) else out(s)
                   outLen += 1; k += 1
                 }
+                blockCap()
                 if (seq < nbSeq - 1) {
                   llSt = llT.baseline(llSt) + bb.read(llT.nbBits(llSt))
                   mlSt = mlT.baseline(mlSt) + bb.read(mlT.nbBits(mlSt))
@@ -874,36 +804,25 @@ private[llm] object Zstd {
                 }
                 seq += 1
               }
-              if (bb.remaining != 0) throw Bad
+              if (bb.remaining != 0) throw BadData
               val rest = lits.length - litPos
               ensure(rest)
               System.arraycopy(lits, litPos, out, outLen, rest)
               outLen += rest
               blockCap()
-              i = blockEnd
             }
-          case _ => throw Bad // reserved block type
+          case _ => throw BadData // reserved block type
         }
       }
       val content = java.util.Arrays.copyOf(out, outLen)
-      if (hasSum) {
-        need(4)
-        val want = (p(i) & 0xffL) | ((p(i + 1) & 0xffL) << 8) |
-          ((p(i + 2) & 0xffL) << 16) | ((p(i + 3) & 0xffL) << 24)
-        i += 4
-        if ((xxh64(content) & 0xffffffffL) != want)
-          return ("bad_data", null, nBlocks, hasSum, i)
-      }
+      if (hasSum && (xxh64(content) & 0xffffffffL) != c.u32le())
+        return ("bad_data", null, nBlocks, hasSum, c.pos)
       if (fcs >= 0 && content.length != fcs)
-        return ("bad_data", null, nBlocks, hasSum, i)
-      ("ok", content, nBlocks, hasSum, i)
+        return ("bad_data", null, nBlocks, hasSum, c.pos)
+      ("ok", content, nBlocks, hasSum, c.pos)
     } catch {
-      case Trunc => ("truncated", null, nBlocks, hasSum, start)
-      case Bad => ("bad_data", null, nBlocks, hasSum, start)
-      case Unsup => ("unsupported", null, nBlocks, hasSum, start)
-      case _: IndexOutOfBoundsException =>
-        ("bad_data", null, nBlocks, hasSum, start)
-      case _: NegativeArraySizeException =>
+      case f: Malformed => (f.status, null, nBlocks, hasSum, start)
+      case _: IndexOutOfBoundsException | _: NegativeArraySizeException =>
         ("bad_data", null, nBlocks, hasSum, start)
     }
   }
@@ -1080,15 +999,14 @@ private[llm] object Zstd {
     * section would overflow its size-format caps (regen/cmp ≤ 1023
     * single-stream, ≤ 16383 four-stream) — an executor must degrade,
     * never throw, when the corpus outgrows the fixture assumptions. */
-  private def literalsSection(lits: Array[Byte], huf: Boolean,
+  private[llm] def literalsSection(lits: Array[Byte], huf: Boolean,
       fourStream: Boolean): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(lits.length + 16)
-    if (!huf) {
-      require(lits.length < 4096)
-      out.write(0 | (1 << 2) | ((lits.length & 0xf) << 4))
-      out.write(lits.length >> 4)
-      out.write(lits, 0, lits.length)
-      return out.toByteArray
+    val out = new Bytes.Writer(lits.length + 16)
+    if (!huf) { // Size_Format 01 (12-bit size), or 11 (20-bit) from 4096
+      val n = lits.length
+      require(n < (1 << 20), "a literals section holds under 1 MiB")
+      if (n < 4096) out.u16le(n << 4 | 1 << 2) else out.u24le(n << 4 | 3 << 2)
+      return out.bytes(lits).toByteArray
     }
     if (lits.exists(b => (b & 0xff) > 128))
       return literalsSection(lits, huf = false, fourStream = false)
@@ -1107,7 +1025,7 @@ private[llm] object Zstd {
       }
       bw.bytes
     }
-    val body = new java.io.ByteArrayOutputStream(lits.length)
+    val body = new Bytes.Writer(lits.length)
     if (!fourStream) body.write(stream(lits))
     else {
       val rs = (lits.length + 3) / 4
@@ -1115,10 +1033,7 @@ private[llm] object Zstd {
         lits.slice(0, rs), lits.slice(rs, 2 * rs),
         lits.slice(2 * rs, 3 * rs), lits.slice(3 * rs, lits.length))
       val enc = parts.map(stream)
-      for (j <- 0 until 3) {
-        body.write(enc(j).length & 0xff)
-        body.write((enc(j).length >> 8) & 0xff)
-      }
+      for (j <- 0 until 3) body.u16le(enc(j).length)
       enc.foreach(e => body.write(e, 0, e.length))
     }
     val cmp = tree.length + body.size()
@@ -1126,18 +1041,8 @@ private[llm] object Zstd {
     if ((!fourStream && (regen > 1023 || cmp > 1023)) ||
         (fourStream && (regen > 16383 || cmp > 16383)))
       return literalsSection(lits, huf = false, fourStream = false)
-    if (!fourStream) {
-      val v = regen | (cmp << 10)
-      out.write(2 | (0 << 2) | ((v & 0xf) << 4))
-      out.write((v >> 4) & 0xff)
-      out.write((v >> 12) & 0xff)
-    } else {
-      val v = regen.toLong | (cmp.toLong << 14)
-      out.write(2 | (2 << 2) | ((v & 0xf) << 4).toInt)
-      out.write(((v >> 4) & 0xff).toInt)
-      out.write(((v >> 12) & 0xff).toInt)
-      out.write(((v >> 20) & 0xff).toInt)
-    }
+    if (!fourStream) out.u24le((regen | cmp << 10) << 4 | 2)
+    else out.u32le((regen | cmp << 14) << 4 | 2 << 2 | 2)
     out.write(tree, 0, tree.length)
     body.writeTo(out)
     out.toByteArray
@@ -1158,7 +1063,7 @@ private[llm] object Zstd {
     * predefined, 1 RLE (requires a constant code), 2 FSE_Compressed
     * (a custom table equi-distributed over the used codes, its
     * description written with [[fseWriteNCount]]). */
-  private def sequencesSection(seqs: Array[Sq], llMode: Int, ofMode: Int,
+  private[llm] def sequencesSection(seqs: Array[Sq], llMode: Int, ofMode: Int,
       mlMode: Int): Array[Byte] = {
     require(seqs.nonEmpty && seqs.length < 128)
     val out = new java.io.ByteArrayOutputStream(64)
@@ -1234,13 +1139,12 @@ private[llm] object Zstd {
   /** Frame assembly. `blocks` = (blockType, rleSizeOrIgnored, payload);
     * for RLE the payload is the single byte and the size field is the
     * run length; for raw/compressed the size is payload.length. */
-  private def frameOf(blocks: Seq[(Int, Int, Array[Byte])],
+  private[llm] def frameOf(blocks: Seq[(Int, Int, Array[Byte])],
       content: Array[Byte], withSum: Boolean,
       dictId: Option[Long] = None, flipSum: Boolean = false)
       : Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(
-      content.length + 64)
-    out.write(0x28); out.write(0xb5); out.write(0x2f); out.write(0xfd)
+    val out = new Bytes.Writer(content.length + 64)
+    out.u32le(0xFD2FB528)
     // FCS field size by magnitude (RFC 8878 §3.1.1.1.1): 1 byte to
     // 255, 2 bytes (value − 256) to 65791, 4 bytes beyond — so the
     // synthesizer stays total on multi-MB docs instead of silently
@@ -1255,34 +1159,17 @@ private[llm] object Zstd {
       case _ => 3
     }
     out.write((fcsFlag << 6) | 0x20 | (if (withSum) 4 else 0) | didFlag)
-    dictId.foreach { d =>
-      val n = if (didFlag == 1) 1 else if (didFlag == 2) 2 else 4
-      (0 until n).foreach(k => out.write(((d >> (8 * k)) & 0xff).toInt))
-    }
-    if (fcsFlag == 0) out.write(content.length)
-    else if (fcsFlag == 1) {
-      val v = content.length - 256
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-    } else {
-      val v = content.length
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-    }
+    dictId.foreach(out.uleN(_, if (didFlag == 3) 4 else didFlag))
+    if (fcsFlag == 0) out.u8(content.length)
+    else if (fcsFlag == 1) out.u16le(content.length - 256)
+    else out.u32le(content.length)
     blocks.zipWithIndex.foreach { case ((btype, size, payload), k) =>
       val bsize = if (btype == 1) size else payload.length
       val last = if (k == blocks.length - 1) 1 else 0
-      val bh = (bsize << 3) | (btype << 1) | last
-      out.write(bh & 0xff); out.write((bh >> 8) & 0xff)
-      out.write((bh >> 16) & 0xff)
-      out.write(payload, 0, payload.length)
+      out.u24le((bsize << 3) | (btype << 1) | last).bytes(payload)
     }
-    if (withSum) {
-      val sum = (xxh64(content) & 0xffffffffL) ^
-        (if (flipSum) 0x55L else 0L)
-      out.write((sum & 0xff).toInt); out.write(((sum >> 8) & 0xff).toInt)
-      out.write(((sum >> 16) & 0xff).toInt)
-      out.write(((sum >> 24) & 0xff).toInt)
-    }
+    if (withSum)
+      out.u32le(xxh64(content).toInt ^ (if (flipSum) 0x55 else 0))
     out.toByteArray
   }
 
@@ -1296,9 +1183,8 @@ private[llm] object Zstd {
   private[llm] def buildDict(id: Long,
       content: Array[Byte]): Array[Byte] = {
     require(content.length >= 8, "dict content seeds rep offsets")
-    val out = new java.io.ByteArrayOutputStream(content.length + 64)
-    out.write(0x37); out.write(0xA4); out.write(0x30); out.write(0xEC)
-    (0 until 4).foreach(k => out.write(((id >> (8 * k)) & 0xff).toInt))
+    val out = new Bytes.Writer(content.length + 64)
+    out.u32le(0xEC30A437).u32le(id.toInt)
     // Huffman over {' ','a','e','t'} with distinct weights
     val hw = hufWriteTreeDesc(
       hufWeights(Map(32 -> 8L, 97 -> 4L, 101 -> 2L, 116 -> 1L)))
@@ -1313,8 +1199,7 @@ private[llm] object Zstd {
     writeFse(8, 5) // OF
     writeFse(8, 6) // ML
     writeFse(8, 6) // LL
-    for (r <- Seq(1, 4, 8); k <- 0 until 4)
-      out.write((r >> (8 * k)) & 0xff)
+    Seq(1, 4, 8).foreach(out.u32le)
     out.write(content, 0, content.length)
     out.toByteArray
   }
@@ -1346,9 +1231,6 @@ private[llm] object Zstd {
     val MaxLits = 3500  // under the 4096 raw-literals cap with margin
     val MaxBlock = 1 << 17 // Block_Maximum_Size (§3.1.1.2.3): 128 KiB
     val head = new java.util.HashMap[Int, Int](1 << 12)
-    def key(p: Int): Int =
-      (data(p) & 0xff) | ((data(p + 1) & 0xff) << 8) |
-        ((data(p + 2) & 0xff) << 16) | ((data(p + 3) & 0xff) << 24)
     val lits = new java.io.ByteArrayOutputStream(1024)
     val seqs = scala.collection.mutable.ArrayBuffer.empty[Sq]
     var blockFrom = 0 // content offset where the open block starts
@@ -1390,10 +1272,10 @@ private[llm] object Zstd {
     }
     var i = 0
     while (i < n - 3) {
-      val k = key(i)
+      val k = Bytes.i32le(data, i)
       val cand = head.getOrDefault(k, -1)
       head.put(k, i)
-      if (cand >= 0 && key(cand) == k) {
+      if (cand >= 0 && Bytes.i32le(data, cand) == k) {
         // the pending literal run must fit the raw-literals section
         // TOGETHER with what the block already buffered (the two caps
         // compose — checking either alone can overflow the 4096
@@ -1623,13 +1505,8 @@ private[llm] object Zstd {
     val regen = lits.length
     val cmp = body.length
     require(regen <= 1023 && cmp <= 1023)
-    val out = new java.io.ByteArrayOutputStream(cmp + 3)
-    val v = regen | (cmp << 10)
-    out.write(3 | (0 << 2) | ((v & 0xf) << 4))
-    out.write((v >> 4) & 0xff)
-    out.write((v >> 12) & 0xff)
-    out.write(body, 0, body.length)
-    out.toByteArray
+    new Bytes.Writer(cmp + 3).u24le((regen | cmp << 10) << 4 | 3).bytes(body)
+      .toByteArray
   }
 
   /** Two-block frame exercising the FRAME-SCOPED reuse paths the
@@ -1716,12 +1593,8 @@ private[llm] object Zstd {
       }
     val skip =
       if (b(7) % 2 != 0) Array.emptyByteArray
-      else {
-        val magic = 0x184D2A50L + b(6) % 16
-        Array[Byte]((magic & 0xff).toByte, ((magic >> 8) & 0xff).toByte,
-          ((magic >> 16) & 0xff).toByte, ((magic >> 24) & 0xff).toByte,
-          4, 0, 0, 0, b(2).toByte, b(3).toByte, b(4).toByte, b(5).toByte)
-      }
+      else new Bytes.Writer(12).u32le(0x184D2A50 + b(6) % 16).u32le(4)
+        .u8(b(2)).u8(b(3)).u8(b(4)).u8(b(5)).toByteArray
     val full = skip ++ data
     if (b(10) % 8 == 1) full.take(full.length * 3 / 5) else full
   }

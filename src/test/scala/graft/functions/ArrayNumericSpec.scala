@@ -52,4 +52,34 @@ class ArrayNumericSpec extends SparkSuite {
     assert(PqDists(lit(Seq.empty[Long]), lit(Seq(1L, 2L))).eval() == null)
     assert(PqDists(lit(Seq(1L, 2L)), lit(Seq(1L, 2L, 3L))).eval() == null)
   }
+
+  test("a second register replaces no function and logs no warning") {
+    GraftFunctions.register(spark)
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("register-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, Level.ALL, null)
+    ctx.updateLoggers()
+    try GraftFunctions.register(spark)
+    finally {
+      root.removeAppender(capture.getName)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    val replaced = seen.toArray.map(_.toString)
+      .filter(_.contains("replaced a previously registered function"))
+    assert(replaced.isEmpty, replaced.mkString("; "))
+    assert(spark.sql("SELECT dot_long(array(1L,2L), array(3L,4L))")
+      .head.getLong(0) === 11L)
+  }
 }

@@ -21,6 +21,9 @@ object DecoderFuzzProps extends Properties("Multimodal.decoders") {
     Array[Byte]('B', 'M'),
     "qoif".getBytes("US-ASCII"),
     "GIF87a".getBytes("US-ASCII"),
+    "GIF89a".getBytes("US-ASCII"),
+    "%PDF-1.4\n".getBytes("US-ASCII"),
+    Array(0x28, 0xb5, 0x2f, 0xfd).map(_.toByte), // zstd frame magic
     Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte),
     Array(0x1f, 0x8b, 8).map(_.toByte),
     Array[Byte]('I', 'I', 42, 0),
@@ -139,6 +142,48 @@ class DecoderTruncationSpec extends org.scalatest.funsuite.AnyFunSuite {
           s"mode $m prefix $n: $st")
       }
     }
+  }
+
+  test("an undefined scan table, a wrapping BMP width and an Exif orientation past 8 are rows") {
+    def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("US-ASCII")).map("%02x".format(_)).mkString
+    def sos(p: Array[Byte]) = p.indices.find(i =>
+      (p(i) & 0xff) == 0xff && (p(i + 1) & 0xff) == 0xda).get
+    // baseline JPEG whose first scan component names DC/AC table 1,
+    // which no DHT segment defines
+    val jpeg = (0 until 500).iterator.map(i => Multimodal.jpegBytes(md5(s"tbl$i")))
+      .find(p => Multimodal.parseJpeg(1L, p).status == "ok" &&
+        p.sliding(2).exists(w => (w(0) & 0xff) == 0xff && (w(1) & 0xff) == 0xc0))
+      .get.clone()
+    jpeg(sos(jpeg) + 6) = 0x11
+    assert(Multimodal.parseJpeg(1L, jpeg).status == "bad_data")
+    // a width whose 3-byte stride wraps an Int
+    val bmp = Array[Byte]('B', 'M', 0, 0, 0, 0, 0, 0, 0, 0,
+      54, 0, 0, 0, 40, 0, 0, 0, // pixel offset, header size
+      0, 0, 0, 0x40, 1, 0, 0, 0, // width 2^30, height 1
+      1, 0, 24, 0, 0, 0, 0, 0) ++ new Array[Byte](40)
+    assert(Multimodal.parseBmp(1L, bmp).status == "truncated")
+    // ... and one whose stride × height wraps a Long: width 0x5d000001,
+    // height -0x7bffffff (top-down)
+    val bmp2 = bmp.clone()
+    bmp2(18) = 1; bmp2(21) = 0x5d; bmp2(25) = 0x84.toByte
+    assert(Multimodal.parseBmp(1L, bmp2).status == "truncated")
+    // a 16x8 image tagged with orientation 9 samples like orientation 1
+    val exif = (0 until 2000).iterator.map(i => Multimodal.jpegExifBytes(md5(s"or$i")))
+      .find { p =>
+        val m = Multimodal.parseJpeg(1L, p)
+        m.status == "ok" && m.width.contains(16) && m.height.contains(8) &&
+          Multimodal.parseJpegExif(1L, p).orientation.nonEmpty
+      }.get
+    def withOrientation(o: Int) = {
+      val q = exif.clone() // the IFD0 Orientation SHORT sits at byte 42
+      val big = q(12) == 'M'
+      q(42) = (if (big) 0 else o).toByte; q(43) = (if (big) o else 0).toByte
+      q
+    }
+    assert(Multimodal.parseJpegExif(1L, withOrientation(9)).orientation.contains(9))
+    assert(Multimodal.jpegOrientedDhash(1L, withOrientation(9)) ==
+      Multimodal.jpegOrientedDhash(1L, withOrientation(1)))
   }
 
   test("tgz layering: healthy wrapper is transparent, arms attribute the layer") {

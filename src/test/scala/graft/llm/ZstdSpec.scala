@@ -538,4 +538,35 @@ class ZstdSpec extends AnyFunSuite {
         assert(Zstd.decode(frame.take(n))._1 != "ok")
     }
   }
+
+  test("raw literals of 4096 bytes and more take the 20-bit size format") {
+    // a byte >= 129 sends the Huffman request to the raw arm, whose
+    // 12-bit size format stops at 4095; the section rides in a block
+    // with one sequence copying it again, so the block stays under
+    // its content (the expanding-block rule)
+    val lits = Array.tabulate(5000)(i => (i * 7 % 251 + 1).toByte)
+    assert(lits.exists(b => (b & 0xff) >= 129))
+    val payload = Zstd.literalsSection(lits, huf = true, fourStream = true) ++
+      Zstd.sequencesSection(Array(Zstd.Sq(5000, 5000, 5003L)), 0, 0, 0)
+    val content = lits ++ lits
+    val (st, c, _, _) = Zstd.decode(
+      Zstd.frameOf(Seq((2, 0, payload)), content, withSum = true))
+    assert(st == "ok", st)
+    assert(java.util.Arrays.equals(c, content))
+  }
+
+  test("a compressed block regenerating more than 128 KiB is bad_data") {
+    // Block_Maximum_Size binds the sequences too: one literal, then a
+    // match of ml bytes at offset 1 (ofVal = offset + 3)
+    def frame(ml: Int) = {
+      val payload = Zstd.literalsSection(Array('a'.toByte), huf = false,
+        fourStream = false) ++
+        Zstd.sequencesSection(Array(Zstd.Sq(1, ml, 4L)), 0, 0, 0)
+      Zstd.frameOf(Seq((2, 0, payload)), Array.fill(1 + ml)('a'.toByte),
+        withSum = false)
+    }
+    assert(Zstd.decode(frame((1 << 17) - 1))._1 == "ok")
+    assert(Zstd.decode(frame(1 << 17))._1 == "bad_data")
+    assert(Zstd.decode(frame(131074))._1 == "bad_data")
+  }
 }
