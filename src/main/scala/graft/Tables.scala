@@ -12,20 +12,42 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
 
-  /** The input version of everything under `dir`: each file's
-    * (relative path, length, mtime), recursively, in path order. Equal
-    * versions mean no file was added, removed or rewritten in between —
-    * state derived from `dir` is valid exactly as long as its version
-    * is unchanged. An absent dir has the empty version. */
-  def version(dir: String): Seq[(String, Long, Long)] = {
+  /** The session confs whose values change the schema Spark infers for
+    * one and the same parquet input. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** The one parquet reader: a fresh relation over `path` (a file or a
+    * dir) on every call, so two calls self-join with distinct exprIds.
+    * Only the inferred schema is shared. Inference is a Spark job of
+    * its own, so it runs once per (session, path, input version,
+    * inference confs) as a standing entry, and a rewritten input or a
+    * flipped conf infers afresh. */
+  def parquet(s: SparkSession, path: String): DataFrame = {
+    val tag = inferenceConfs.map(k => s.conf.getOption(k).getOrElse(""))
+      .mkString("parquet_schema:", ",", "")
+    val schema = graft.llm.Similarity.standing(s, path, tag)(
+      s.read.parquet(path).schema)
+    s.read.schema(schema).parquet(path)
+  }
+
+  /** The input version of `path`: each file's (relative path, length,
+    * mtime), recursively, in path order; a plain file is its own one
+    * entry. Equal versions mean no file was added, removed or rewritten
+    * in between — state derived from `path` is valid exactly as long as
+    * its version is unchanged. An absent path has the empty version. */
+  def version(path: String): Seq[(String, Long, Long)] = {
     def walk(f: java.io.File, rel: String): Seq[(String, Long, Long)] =
-      Option(f.listFiles()).toSeq.flatten.flatMap { c =>
-        val r = rel + "/" + c.getName
-        if (c.isDirectory) walk(c, r) else Seq((r, c.length, c.lastModified))
-      }
-    walk(new java.io.File(dir), "").sortBy(_._1)
+      if (f.isFile) Seq((rel, f.length, f.lastModified))
+      else Option(f.listFiles()).toSeq.flatten
+        .flatMap(c => walk(c, rel + "/" + c.getName))
+    walk(new java.io.File(path), "").sortBy(_._1)
   }
 
   /** Spread a scan-side-heavy pipeline's input across the session's

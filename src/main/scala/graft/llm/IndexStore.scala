@@ -136,6 +136,6 @@ object IndexStore {
       build.write.mode("overwrite").parquet(tmp.getPath)
       if (!tmp.renameTo(dest)) deleteRec(tmp)
     }
-    s.read.parquet(dest.getPath)
+    graft.Tables.parquet(s, dest.getPath)
   }
 }

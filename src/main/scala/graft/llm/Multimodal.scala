@@ -658,7 +658,9 @@ object Multimodal {
     val planes = Bytes.u16le(p, 26)
     val bpp = Bytes.u16le(p, 28)
     val comp = Bytes.i32le(p, 30)
-    if (hdrSize < 40 || w <= 0 || hRaw == 0 || planes != 1 || dataOff < 54)
+    // Int.MinValue has no positive height: math.abs leaves it negative
+    if (hdrSize < 40 || w <= 0 || hRaw == 0 || hRaw == Int.MinValue ||
+        planes != 1 || dataOff < 54)
       return none.copy(status = "bad_header")
     val topDown = hRaw < 0
     val ht = math.abs(hRaw)
@@ -3600,6 +3602,14 @@ object Multimodal {
     } catch { case f: Malformed => fail(f.status) }
   }
 
+  /** The Exif orientation to apply to the raster: the tag when it is
+    * one of the 8 defined values, else 1. A tag outside 1..8 means no
+    * rotation; read as 5..8 it would swap the dims without remapping
+    * the pixels. */
+  private def appliedOrientation(id: Long, p: Array[Byte]): Int =
+    parseJpegExif(id, p).orientation.filter(o => o >= 1 && o <= 8)
+      .getOrElse(1)
+
   /** Decode → APPLY Exif orientation — the rotate/flip stage between
     * metadata read and pixel work (q_jpeg_exif only EXTRACTS the tag;
     * real pipelines must act on it before dHash/resize or mirrored
@@ -3611,12 +3621,12 @@ object Multimodal {
     * The transform is fused into the decode's pixel stream via
     * [[JpegPixelSink]] — one pass, no raster buffer, the oriented
     * position-weighted sums folding as pixels arrive. Orientation
-    * defaults to 1 when the tag is absent or the TIFF block is
-    * unreadable (every viewer's behavior). Total on arbitrary bytes:
-    * both underlying walks are. */
+    * defaults to 1 when the tag is absent, outside 1..8 or the TIFF
+    * block is unreadable (every viewer's behavior). Total on arbitrary
+    * bytes: both underlying walks are. */
   private[graft] def parseJpegOriented(id: Long,
       p: Array[Byte]): JpegOriented = {
-    val orient = parseJpegExif(id, p).orientation.getOrElse(1)
+    val orient = appliedOrientation(id, p)
     var w0 = 0; var h0 = 0
     var chk = 0L; var row0w = 0L
     val sink = new JpegPixelSink {
@@ -3661,10 +3671,7 @@ object Multimodal {
     * any dHash implementation keeps anyway. */
   private[graft] def jpegOrientedDhash(id: Long,
       p: Array[Byte]): PhashMeta = {
-    // a tag outside 1..8 means no rotation: read as 5..8 it would swap
-    // the sampled dims without remapping them, off the raster
-    val orient = parseJpegExif(id, p).orientation
-      .filter(o => o >= 1 && o <= 8).getOrElse(1)
+    val orient = appliedOrientation(id, p)
     var w0 = 0; var h0 = 0
     var gray: Array[Int] = null
     val sink = new JpegPixelSink {

@@ -834,7 +834,9 @@ object Similarity {
     }
 
   /** The in-session STANDING-STATE registry: every memoized artifact
-    * derived from a corpus dir lives here under its own tag. On a
+    * derived from a corpus dir lives here under its own tag, and so
+    * does each parquet input's inferred schema ([[graft.Tables.parquet]],
+    * keyed on the file or artifact dir itself). On a
     * cluster these are persisted tables built ONCE and read by every
     * query; contents are deterministic exact-integer artifacts, so
     * every consumer stays hash-identical to its build-it-itself form

@@ -184,6 +184,18 @@ class DecoderTruncationSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(Multimodal.parseJpegExif(1L, withOrientation(9)).orientation.contains(9))
     assert(Multimodal.jpegOrientedDhash(1L, withOrientation(9)) ==
       Multimodal.jpegOrientedDhash(1L, withOrientation(1)))
+    // ... and decodes, dims and sums included, like orientation 1
+    assert(Multimodal.parseJpegOriented(1L, withOrientation(9)) ==
+      Multimodal.parseJpegOriented(1L, withOrientation(1)))
+  }
+
+  test("a BMP height field of Int.MinValue is a bad header, not an ok row") {
+    // math.abs(Int.MinValue) stays negative: no positive height exists
+    val bmp = Array[Byte]('B', 'M', 0, 0, 0, 0, 0, 0, 0, 0,
+      54, 0, 0, 0, 40, 0, 0, 0, // pixel offset, header size
+      1, 0, 0, 0, 0, 0, 0, 0x80.toByte, // width 1, height Int.MinValue
+      1, 0, 24, 0, 0, 0, 0, 0) ++ new Array[Byte](40)
+    assert(Multimodal.parseBmp(1L, bmp).status == "bad_header")
   }
 
   test("tgz layering: healthy wrapper is transparent, arms attribute the layer") {

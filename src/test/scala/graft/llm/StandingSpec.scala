@@ -37,8 +37,10 @@ class StandingSpec extends SparkSuite {
       .sorted.toSeq
 
   test("each consumer builds its own standing entries") {
-    val dir = fixtureCopy()
+    // a fresh copy per consumer: an earlier consumer's IndexStore build
+    // may already have made a later one's entries on a shared dir
     for ((q, tags) <- consumers) {
+      val dir = fixtureCopy()
       val before = Similarity.standingTags(spark, dir.toString)
       run(q, dir)
       val built = Similarity.standingTags(spark, dir.toString) -- before
