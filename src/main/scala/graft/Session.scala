@@ -25,6 +25,9 @@ object Session {
       // not data). Sized to hold every plan in the suite once.
       .config("spark.sql.codegen.cache.maxEntries", "4000")
       .config("spark.ui.enabled", "false")
+      // TIMESTAMP(NANOS) parquet reads as a long (Tables.events normalizes
+      // it) from the first query on, not only after the first events call
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
 
   /** Run a main's body on a [[local]] session; every standing entry is

@@ -85,6 +85,7 @@ object Tables {
     * timezone every entrypoint pins). Either way downstream event-time
     * queries see one `ts` type and hash-match the oracle. */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
+    // already set by Session.local; this covers sessions built elsewhere
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = apply(spark, sfDir, "events")
     raw.schema("ts").dataType match {

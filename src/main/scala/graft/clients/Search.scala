@@ -23,22 +23,27 @@ import org.apache.spark.sql.functions._
 object Search {
 
   /** The reference pipeline expressed on the generic MapReduce runner:
-    * k1=dir, v1=all entries; k2=dir, v2=entry; k3=matching name.
+    * k1=dir, v1=entry; k2=dir, v2=entry; k3=matching name. Map passes
+    * each listed (dir, entry) pair through — the listing already is the
+    * reference Map's `readdir` output (SearchMRC.cpp:55-73) — and Reduce
+    * keeps the reference's substring filter (SearchMRC.cpp:87).
     * Exercises the full map → shuffle → reduce → sort path. */
   case class Job(needle: String)
-      extends MapReduce[String, Seq[String], String, String, String, Int] {
-    def map(dir: String, entries: Seq[String]): Iterator[(String, String)] =
-      entries.iterator.map(e => (dir, e)) // directory-scan generator
+      extends MapReduce[String, String, String, String, String, Int] {
+    def map(dir: String, entry: String): Iterator[(String, String)] =
+      Iterator.single((dir, entry))
     def reduce(dir: String, names: Iterator[String]): Iterator[(String, Int)] =
       names.filter(_.contains(needle)).map(n => (n, 0)) // re-key, drop dir
   }
 
-  /** MapReduce-path search over a (dir, name) listing. */
+  /** MapReduce-path search over a (dir, name) listing: the listing goes
+    * straight to [[MapReduce.run]], whose one group-by-dir shuffle is
+    * the reference's shuffle (MRFCore.cpp:252-446), then the global
+    * name sort. */
   def viaMapReduce(listing: Dataset[(String, String)], needle: String): Dataset[String] = {
     val spark = listing.sparkSession
     import spark.implicits._
-    val grouped = listing.groupByKey(_._1).mapGroups((d, it) => (d, it.map(_._2).toSeq))
-    MapReduce.run(grouped, Job(needle)).map(_._1)
+    MapReduce.run(listing, Job(needle)).map(_._1)
   }
 
   /** Idiomatic form — what the engine actually plans at scale: a pushed

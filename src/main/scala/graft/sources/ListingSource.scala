@@ -3,6 +3,11 @@ package graft.sources
 import java.io.File
 import java.util.{Map => JMap}
 
+import scala.util.Try
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import graft.Tables
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
@@ -27,14 +32,19 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `select(name)` reads no dir column;
   *  - **aggregate pushdown** (`SupportsPushDownAggregates`):
   *    COUNT/MIN/MAX absorb into the walk, one partial row per
-  *    directory;
+  *    partition;
   *  - **limit pushdown** (`SupportsPushDownLimit`): `limit k` bounds
-  *    each directory partition's walk at k matching entries;
-  *  - **one input partition per directory**: listing parallelism scales
-  *    with the path list, and each task touches only its own dirs.
+  *    each partition's walk at k matching entries;
+  *  - **one input partition per core**: `min(#paths, defaultParallelism)`
+  *    partitions, the directories dealt round-robin in path order, each
+  *    reader walking its own in order — the reference's map threads
+  *    likewise take the input list in chunks from a shared cursor
+  *    (MRFCore.cpp:46-53) instead of dispatching once per directory.
   *
-  * Usage: `spark.read.format("graft.sources.ListingSource")
-  *   .option("paths", "/a,/b").load()` → rows of (dir, name).
+  * Usage: `spark.read.format("graft.sources.ListingSource").load("/a", "/b")`,
+  * or `.option("paths", "/a,/b").load()` → rows of (dir, name). Spark's
+  * own `path` option and its JSON-array `paths` are read as such; any
+  * other `paths` value is split on commas.
   * Reference semantics preserved: non-directories silently dropped,
   * dot entries skipped, duplicates across dirs kept.
   */
@@ -43,13 +53,73 @@ class ListingSource extends TableProvider {
     ListingSource.Schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: JMap[String, String]): Table =
-    new ListingTable(Option(properties.get("paths")).getOrElse(""))
+    new ListingTable(ListingSource.paths(new CaseInsensitiveStringMap(properties)))
 }
 
 object ListingSource {
   val Schema: StructType = StructType(Seq(
     StructField("dir", StringType, nullable = false),
     StructField("name", StringType, nullable = false)))
+
+  /** The listed paths: Spark's `path` option (one `load` argument), then
+    * `paths`, a JSON array when `load` got several arguments and
+    * otherwise a comma-separated list. */
+  private[sources] def paths(options: CaseInsensitiveStringMap): Array[String] = {
+    val listed = Option(options.get("paths")).getOrElse("")
+    // the JSON literal `null` parses to a null array: a plain path too
+    val many = Try(new ObjectMapper().readValue(listed, classOf[Array[String]])).toOption
+      .filter(_ != null).getOrElse(listed.split(",").map(_.trim))
+    (Option(options.get("path")).toArray ++ many).filter(p => p != null && p.nonEmpty)
+  }
+
+  /** Deal `paths` round-robin, in path order, over
+    * `min(#paths, defaultParallelism)` partitions — the session's width,
+    * as [[Tables.fanWidth]] reads it. */
+  private[sources] def partitions(paths: Array[String]): Array[InputPartition] = {
+    val n = math.min(paths.length, Tables.fanWidth(SparkSession.active))
+    Array.tabulate(n)(i => ListingPartition(paths.indices.drop(i).by(n).map(paths(_)).toArray))
+  }
+
+  /** The entries of one partition's directories, in order, passing
+    * every filter, as (dir, name); the dir is encoded once per
+    * directory. Not a listable dir → no entries. */
+  private[sources] def walk(dirs: Array[String], filters: Array[Filter])
+      : Iterator[(UTF8String, String)] = {
+    val preds = filters.flatMap(compile)
+    dirs.iterator.flatMap { d =>
+      val u = UTF8String.fromString(d)
+      Option(new File(d).list()).getOrElse(Array.empty[String]).iterator
+        .filter(n => preds.forall(_(d, n))).map(n => (u, n))
+    }
+  }
+
+  /** One partial row for `aggSpec` over `entries`, in a single pass.
+    * min/max compare as `UTF8String`, Spark's own string order (UTF-8
+    * bytes), which differs from Java's UTF-16 `String` order beyond
+    * the BMP. */
+  private[sources] def partial(aggSpec: Array[(String, String)],
+      entries: Iterator[(UTF8String, String)]): InternalRow = {
+    var n = 0L
+    var minD: UTF8String = null; var maxD: UTF8String = null
+    var minN: UTF8String = null; var maxN: UTF8String = null
+    while (entries.hasNext) {
+      val (d, nm) = entries.next()
+      n += 1
+      if (minD == null || d.compareTo(minD) < 0) minD = d
+      if (maxD == null || d.compareTo(maxD) > 0) maxD = d
+      val u = UTF8String.fromString(nm)
+      if (minN == null || u.compareTo(minN) < 0) minN = u
+      if (maxN == null || u.compareTo(maxN) > 0) maxN = u
+    }
+    InternalRow.fromSeq(aggSpec.toSeq.map {
+      case ("count_star", _) | ("count", _) => n
+      case ("min", "dir") => minD
+      case ("max", "dir") => maxD
+      case ("min", "name") => minN
+      case ("max", "name") => maxN
+      case other => sys.error(s"unreachable agg spec $other")
+    })
+  }
 
   /** Compile the pushable subset of Spark filters to a row predicate. */
   private[sources] def compile(f: Filter): Option[(String, String) => Boolean] = {
@@ -73,15 +143,13 @@ object ListingSource {
   }
 }
 
-private class ListingTable(paths: String) extends Table with SupportsRead {
-  override def name(): String = s"listing($paths)"
+private class ListingTable(paths: Array[String]) extends Table with SupportsRead {
+  override def name(): String = paths.mkString("listing(", ",", ")")
   override def schema(): StructType = ListingSource.Schema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val p = Option(options.get("paths")).filter(_.nonEmpty).getOrElse(paths)
-    new ListingScanBuilder(p.split(",").map(_.trim).filter(_.nonEmpty))
-  }
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new ListingScanBuilder(paths)
 }
 
 private class ListingScanBuilder(paths: Array[String])
@@ -97,17 +165,17 @@ private class ListingScanBuilder(paths: Array[String])
   private var aggSpec: Array[(String, String)] = Array.empty
   private var limit: Int = -1
 
-  /** LIMIT stops the listing walk itself: each directory partition
-    * emits at most `limit` entries and stops calling list-iteration
-    * past that point — a `limit 10` over a 10⁹-file listing reads 10
-    * names per directory, not the directory. PARTIAL pushdown
-    * (isPartiallyPushed stays true): every partition honors the bound
-    * locally and Spark's own GlobalLimit still merges across
-    * partitions — correct at any partition count. */
+  /** LIMIT stops the listing walk itself: each partition emits at
+    * most `limit` entries and lists no further directory past that
+    * point — a `limit 10` over a 10⁹-file listing reads 10 names per
+    * partition, not the listing. PARTIAL pushdown (isPartiallyPushed
+    * stays true): every partition honors the bound locally and Spark's
+    * own GlobalLimit still merges across partitions — correct at any
+    * partition count. */
   override def pushLimit(l: Int): Boolean = { limit = l; true }
   // explicit, though it is the interface default: each partition only
   // bounds its OWN walk, so Spark must keep its GlobalLimit — claiming
-  // complete pushdown with >1 directory would return up to paths×k rows
+  // complete pushdown with >1 partition would return up to partitions×k rows
   override def isPartiallyPushed(): Boolean = true
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
@@ -124,7 +192,7 @@ private class ListingScanBuilder(paths: Array[String])
   /** COUNT/MIN/MAX absorb into the listing walk itself — the directory
     * census never materializes one row per entry (the engine-native
     * depth step past filter pushdown + column pruning: a `count(*)`
-    * over a 10⁹-file listing returns one partial row PER DIRECTORY).
+    * over a 10⁹-file listing returns one partial row PER PARTITION).
     * Partial pushdown contract (`supportCompletePushDown` stays
     * false): each input partition emits its own partial count /
     * min / max and Spark's final merge sums / folds them — correct at
@@ -162,7 +230,7 @@ private class ListingScanBuilder(paths: Array[String])
     else new ListingScan(paths, pushed, required, limit)
 }
 
-private case class ListingPartition(dir: String) extends InputPartition
+private case class ListingPartition(dirs: Array[String]) extends InputPartition
 
 private class ListingScan(paths: Array[String], filters: Array[Filter],
     required: StructType, limit: Int) extends Scan with Batch {
@@ -173,13 +241,13 @@ private class ListingScan(paths: Array[String], filters: Array[Filter],
       (if (limit >= 0) s", PushedLimit=$limit" else "") + ")"
 
   override def planInputPartitions(): Array[InputPartition] =
-    paths.map(ListingPartition(_): InputPartition)
+    ListingSource.partitions(paths)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new ListingReaderFactory(filters, required.fieldNames, limit)
 }
 
-/** Aggregate-pushdown scan: one PARTIAL row per directory partition,
+/** Aggregate-pushdown scan: one PARTIAL row per partition,
   * schema = one field per pushed function (count → long, min/max →
   * string, matching V2ScanRelationPushDown's partial-agg contract). */
 private class ListingAggScan(paths: Array[String], filters: Array[Filter],
@@ -196,7 +264,7 @@ private class ListingAggScan(paths: Array[String], filters: Array[Filter],
       s"PushedAggregates=[${aggSpec.map { case (o, c) => s"$o($c)" }.mkString(",")}])"
 
   override def planInputPartitions(): Array[InputPartition] =
-    paths.map(ListingPartition(_): InputPartition)
+    ListingSource.partitions(paths)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new ListingAggReaderFactory(filters, aggSpec)
@@ -205,36 +273,13 @@ private class ListingAggScan(paths: Array[String], filters: Array[Filter],
 private class ListingAggReaderFactory(filters: Array[Filter],
     aggSpec: Array[(String, String)]) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val dir = p.asInstanceOf[ListingPartition].dir
-    val preds = filters.flatMap(ListingSource.compile)
+    val dirs = p.asInstanceOf[ListingPartition].dirs
     new PartitionReader[InternalRow] {
       private var done = false
       override def next(): Boolean = !done
       override def get(): InternalRow = {
         done = true
-        // ONE pass over the filtered listing computes every partial
-        var n = 0L
-        var minD: String = null; var maxD: String = null
-        var minN: String = null; var maxN: String = null
-        val it = Option(new File(dir).list()).getOrElse(Array.empty[String])
-          .iterator.filter(nm => preds.forall(_(dir, nm)))
-        while (it.hasNext) {
-          val nm = it.next()
-          n += 1
-          if (minN == null || nm < minN) minN = nm
-          if (maxN == null || nm > maxN) maxN = nm
-          if (minD == null || dir < minD) minD = dir
-          if (maxD == null || dir > maxD) maxD = dir
-        }
-        def s(v: String) = if (v == null) null else UTF8String.fromString(v)
-        InternalRow.fromSeq(aggSpec.toSeq.map {
-          case ("count_star", _) | ("count", _) => n
-          case ("min", "dir") => s(minD)
-          case ("max", "dir") => s(maxD)
-          case ("min", "name") => s(minN)
-          case ("max", "name") => s(maxN)
-          case other => sys.error(s"unreachable agg spec $other")
-        })
+        ListingSource.partial(aggSpec, ListingSource.walk(dirs, filters))
       }
       override def close(): Unit = ()
     }
@@ -244,23 +289,20 @@ private class ListingAggReaderFactory(filters: Array[Filter],
 private class ListingReaderFactory(filters: Array[Filter],
     columns: Array[String], limit: Int) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val dir = p.asInstanceOf[ListingPartition].dir
-    val preds = filters.flatMap(ListingSource.compile)
-    val base = Option(new File(dir).list()).getOrElse(Array.empty[String])
-      .iterator.filter(n => preds.forall(_(dir, n)))
+    val base = ListingSource.walk(p.asInstanceOf[ListingPartition].dirs, filters)
     // partial limit: stop the walk after `limit` matching entries —
     // the filter runs BEFORE the take, so a pushed predicate + limit
     // returns the first `limit` MATCHES, not matches within the
     // first `limit` entries
     val entries = if (limit >= 0) base.take(limit) else base
     new PartitionReader[InternalRow] {
-      private var cur: String = _
+      private var cur: (UTF8String, String) = _
       override def next(): Boolean =
         if (entries.hasNext) { cur = entries.next(); true } else false
       override def get(): InternalRow =
         InternalRow.fromSeq(columns.toSeq.map {
-          case "dir" => UTF8String.fromString(dir)
-          case "name" => UTF8String.fromString(cur)
+          case "dir" => cur._1
+          case "name" => UTF8String.fromString(cur._2)
         })
       override def close(): Unit = ()
     }

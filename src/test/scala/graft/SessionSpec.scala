@@ -11,6 +11,10 @@ class SessionSpec extends SparkSuite {
     assert(conf.get("spark.sql.session.timeZone") === "UTC")
     assert(conf.get("spark.sql.codegen.cache.maxEntries") === "4000")
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") === "false")
+    // in the context's conf, so a session reads parquet the same way from
+    // its first query, before any Tables.events call sets it at runtime
+    assert(spark.sparkContext.getConf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(spark.newSession().conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
   }
 
   private val all = SparkEntry.queries.keys.toSeq.sorted

@@ -3,11 +3,19 @@ package graft.sources
 import java.nio.file.Files
 
 import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
 /** DSv2 listing source: correctness vs DirListing, filter pushdown
   * (predicate evaluated inside the scan, visible as PushedFilters in
-  * the physical plan), and column pruning. */
+  * the physical plan), column pruning, one partition per core over more
+  * paths than cores, Spark's own path options and the pushed min/max
+  * string order. */
 class ListingSourceSpec extends SparkSuite {
 
   private lazy val dirs = {
@@ -166,5 +174,116 @@ class ListingSourceSpec extends SparkSuite {
     val qd = read().agg(countDistinct(col("name")).as("n"))
     assert(qd.collect().head.getLong(0) === 4L)
     assert(!qd.queryExecution.executedPlan.toString.contains("ListingAggScan"))
+  }
+
+  // The wide fixture: more paths than the suite's four cores, so the
+  // scan plans min(#paths, defaultParallelism) = 4 partitions, each
+  // walking its dealt directories in order. Ten paths in a deliberate
+  // order: seven populated dirs (a name shared by all of them), an empty
+  // dir, a missing path and a plain file.
+  private lazy val (wideRoot, wide) = {
+    val root = Files.createTempDirectory("graft_dsv2_wide")
+    val full = (0 until 7).map { i =>
+      val d = Files.createDirectory(root.resolve(s"d$i"))
+      (Seq("shared_needle") ++ (0 to i).map(k => s"only_${i}_$k") ++
+        (if (i % 2 == 0) Seq(s"needle_$i") else Nil))
+        .foreach(f => Files.createFile(d.resolve(f)))
+      d.toString
+    }
+    val empty = Files.createDirectory(root.resolve("empty")).toString
+    val file = Files.createFile(root.resolve("plain.txt")).toString
+    val missing = root.resolve("missing").toString
+    (root, Seq(full(0), empty, full(1), missing, full(2), file) ++ full.drop(3))
+  }
+
+  private def readWide(): DataFrame = spark.read
+    .format(classOf[ListingSource].getName)
+    .option("paths", wide.mkString(","))
+    .load()
+
+  private def rows(df: DataFrame): Seq[(String, String)] =
+    df.collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+
+  /** The executed BatchScanExec, through AQE's wrappers. */
+  private def scanOf(df: DataFrame): BatchScanExec = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case qs: QueryStageExec => qs +: nodes(qs.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    nodes(df.queryExecution.executedPlan).collectFirst { case b: BatchScanExec => b }
+      .getOrElse(fail("no BatchScan leaf"))
+  }
+
+  test("ten paths on four cores: four partitions, DirListing's rows") {
+    val q = readWide()
+    val got = rows(q)
+    assert(scanOf(q).inputPartitions.length === 4)
+    assert(got === rows(DirListing(spark, wide)))
+    assert(got.size === 7 + (1 to 7).sum + 4)
+  }
+
+  test("pushed count, min, max and limit equal the unpushed results") {
+    val aggs = Seq(count(lit(1)), count(col("name")), min(col("name")),
+      max(col("name")), min(col("dir")), max(col("dir")))
+    def agg(df: DataFrame) = df.agg(aggs.head, aggs.tail: _*)
+    for (needle <- Seq("needle", "only_6", "no_such_entry")) {
+      val pushed = agg(readWide().filter(col("name").contains(needle)))
+      val unpushed = agg(DirListing(spark, wide).filter(col("name").contains(needle)))
+      assert(pushed.collect().toSeq === unpushed.collect().toSeq, needle)
+      assert(pushed.queryExecution.executedPlan.toString.contains("ListingAggScan"))
+    }
+    val all = rows(readWide())
+    for (k <- Seq(1, 3, 50)) {
+      val limited = readWide().limit(k)
+      val got = rows(limited)
+      assert(got.size === rows(DirListing(spark, wide).limit(k)).size, s"limit $k")
+      assert(got.diff(all).isEmpty, s"limit $k returned rows the listing lacks")
+      assert(scanOf(limited).metrics("numOutputRows").value <= 4L * k)
+      val matches = rows(readWide().filter(col("name").contains("needle")).limit(k))
+      assert(matches.size === math.min(k, 11) && matches.forall(_._2.contains("needle")))
+    }
+  }
+
+  test("count(*)'s scan emits one partial row per partition") {
+    val q = readWide().agg(count(lit(1)))
+    assert(q.collect().head.getLong(0) === rows(readWide()).size.toLong)
+    val scan = scanOf(q)
+    assert(scan.toString.contains("ListingAggScan"))
+    assert(scan.metrics("numOutputRows").value === 4)
+  }
+
+  test("load reads Spark's path option and its JSON-array paths option") {
+    val Seq(d0, _, d1) = wide.take(3)
+    val comma = Files.createDirectory(wideRoot.resolve("a,b"))
+    Files.createFile(comma.resolve("in_comma_dir"))
+    val fmt = spark.read.format(classOf[ListingSource].getName)
+    assert(rows(fmt.load(d0)) === rows(DirListing(spark, Seq(d0))))
+    assert(rows(fmt.load(d0, d1)) === rows(DirListing(spark, Seq(d0, d1))))
+    assert(rows(fmt.load(comma.toString, d1)) ===
+      rows(DirListing(spark, Seq(comma.toString, d1))))
+    assert(rows(fmt.load(comma.toString)) === Seq((comma.toString, "in_comma_dir")))
+    // option values that parse as JSON but name no array list as plain paths
+    def paths(v: String) = ListingSource.paths(
+      new CaseInsensitiveStringMap(java.util.Map.of("paths", v))).toSeq
+    assert(paths("null") === Seq("null"))
+    assert(paths("[null, \"/a\"]") === Seq("/a"))
+    assert(paths(" /a , /b ") === Seq("/a", "/b"))
+  }
+
+  test("pushed min/max fold in Spark's UTF-8 byte order") {
+    // U+FF61 is EF BD A1 in UTF-8 and U+1F600 is F0 9F 98 80, so Spark
+    // orders U+FF61 first; Java's UTF-16 order puts U+1F600's high
+    // surrogate (D83D) first
+    import spark.implicits._
+    val (ff61, smile) = ("\uFF61", "\uD83D\uDE00")
+    val listing = Seq(("d", ff61), ("d", smile))
+    val spec = Array(("min", "name"), ("max", "name"), ("count_star", ""))
+    val row = ListingSource.partial(spec,
+      listing.iterator.map { case (d, n) => (UTF8String.fromString(d), n) })
+    val want = listing.toDF("dir", "name").agg(min("name"), max("name")).collect().head
+    assert((row.getUTF8String(0).toString, row.getUTF8String(1).toString, row.getLong(2)) ===
+      ((want.getString(0), want.getString(1), 2L)))
+    assert(want.getString(0) === ff61)
   }
 }
