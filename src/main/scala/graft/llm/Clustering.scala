@@ -1,9 +1,14 @@
 package graft.llm
 
+import scala.jdk.CollectionConverters._
+
 import graft.ops.Q
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DecimalType, IntegerType, LongType,
+  StructField, StructType}
 
 /** K-means (Lloyd) building blocks over the quantized embedding space —
   * the "train the coarse quantizer" step a production IVF index needs
@@ -261,27 +266,25 @@ object Clustering {
         .orderBy("label", "rn")
     }),
 
-    // Top PRINCIPAL COMPONENT by power iteration, fully in-plan — the
+    // Top PRINCIPAL COMPONENT by power iteration — the
     // embedding-analytics op (whitening, drift monitoring, MRL-style
     // dimension triage) that normally leaves SQL for a linalg library.
     // Three iterations of v ← C·v over the CENTERED covariance without
-    // ever materializing C or centering the data: with integer
-    // m = Σx, t = Σ(x·v), s = Σ x(x·v), the identity
-    // Σ(x−μ)((x−μ)·v) = s − μt means N·s − m·t is an exact-integer
-    // vector parallel to C·v (direction is all an eigenvector needs).
-    // One corpus scan per iteration: dot = codegen dot_long against
-    // the broadcast 1-row v, then ONE posexplode aggregate produces
-    // s_j, m_j, t, N per dimension (t and N ride the same 64-row
-    // aggregate — identical per j). Normalization is the LR-sigmoid
-    // discipline: the only doubles are c/g (g = max|c_j|) in one IEEE
-    // expression rounded once to ×10⁶ micro-units for the next round's
-    // literal-like 1-row frame. Sums in DECIMAL(38,0): per-term
-    // x·dot ≤ 1e15 is long-safe, the corpus sum is not (5e19 at sf0.1,
-    // 1e33 at 10⁹ rows — inside 38 digits). Each 64-row c frame
-    // localCheckpoints (the ULM discipline) so the three rounds cost
-    // exactly three corpus scans, and the report reads only
-    // materialized frames. Output: (iter, j, loading) — the unit-free
-    // loadings per round; iteration 3's column is the component.
+    // ever centering the data: with integer m = Σx, t = Σ(x·v),
+    // s = Σ x(x·v), the identity Σ(x−μ)((x−μ)·v) = s − μt means
+    // N·s − m·t is an exact-integer vector parallel to C·v (direction
+    // is all an eigenvector needs). s = G·v and t = m·v, so ONE corpus
+    // pass ([[gram]]: N, m and the 64×64 Gram matrix G = Σ x·xᵀ as
+    // overflow-checked longs) feeds every round, and the rounds run on
+    // the driver in exact BigInt arithmetic ([[powerRound]]) — only
+    // 64×64 integers cross the wire, never a per-round corpus
+    // aggregate. Normalization is the LR-sigmoid discipline: the only
+    // doubles are c/g (g = max|c_j|) in one IEEE expression rounded
+    // once to ×10⁶ micro-units for the next round ([[micro]]). Each
+    // round's 64-row (j, c, trj) frame is materialized (ExistingRDD),
+    // so the report reads only those frames. Output: (iter, j, loading)
+    // — the unit-free loadings per round; iteration 3's column is the
+    // component.
     "q_embed_pca" -> ((s, dir) => pcaLoadingsOn(s, Dedup.quantized(s, dir))),
 
     // EXPLAINED-VARIANCE ratio of the converged component — the
@@ -289,12 +292,12 @@ object Clustering {
     // (a collapsed encoder shows λ1/trace → 1). Rayleigh quotient on
     // the power-iterated v: one extra application C·v gives
     // λ1·N² = (v·c₄)/(v·v), and N²·trace(C) = Σ_j (N·Σx_j² − m_j²)
-    // falls out of the SAME per-dimension aggregate (the trj column)
-    // — so the ratio is three exact integers entering ONE double
-    // division chain rounded once. Four corpus scans total (three
-    // iterations + the Rayleigh application). top_dim is the argmax
-    // loading dimension (|v_j| saturates at exactly 10⁶ there).
-    // Overflow boundary — TIGHTER than the pcaIter family's: the
+    // falls out of the SAME round (the trj column) — so the ratio is
+    // three exact integers entering ONE double division chain rounded
+    // once. The fourth application reuses the `pca_v1` entry's Gram:
+    // no corpus scan beyond the standing build's one. top_dim is the
+    // argmax loading dimension (|v_j| saturates at exactly 10⁶ there).
+    // Overflow boundary — TIGHTER than the power rounds': the
     // numerator multiplies the micro-unit v_j (≤10⁶) into c, so the
     // DECIMAL(38,0)/HUGEINT headroom binds at |c| ≈ 10³² here, not
     // 10³⁸ — with c ∝ N², that is ~3×10⁸ rows instead of ~10⁹. Past
@@ -302,10 +305,9 @@ object Clustering {
     // multiply the printed ratio back (a is linear in c; b, tr are
     // untouched) — the ratio itself is exact either way.
     "q_pca_explained" -> ((s, dir) => {
-      val qe = Dedup.quantized(s, dir)
-      val v3 = pcaV1(s, dir)
-      val c4 = pcaIter(qe, v3)
-      val vj = v3.select(posexplode(col("varr")).as(Seq("j0", "vj")))
+      val pc1 = pcaV1(s, dir)
+      val c4 = roundFrame(s, powerRound(pc1.gram, pc1.v))
+      val vj = pc1.varr.select(posexplode(col("varr")).as(Seq("j0", "vj")))
         .select((col("j0") + 1).as("j"), col("vj"))
       c4.join(vj, "j")
         .agg(sum(col("vj").cast("decimal(38,0)") * col("c")).as("a"),
@@ -321,37 +323,32 @@ object Clustering {
 
     // SECOND principal component by DEFLATION — orthogonalized power
     // iteration, completing the top-2 whitening/visualization basis:
-    // each round applies C (one corpus scan, the shared pcaIter),
-    // micro-normalizes, then Gram–Schmidt-deflates against the
+    // each round applies C (the shared [[powerRound]] on the `pca_v1`
+    // Gram), micro-normalizes, then Gram–Schmidt-deflates against the
     // CONVERGED first component with the division-free form
     // w′ = (v·v)·w − v·(v·w) — exact integers, so orthogonality is
     // arithmetic, not approximation (the loadings are re-normalized
     // from the DEFLATED vector, guaranteeing ⊥v₁ up to the final
     // 6-dp print). Start vector alternates ±10⁶ so it is never
-    // parallel to v₁. Six corpus scans total (3 per component) —
-    // the honest two-eigenvector power-iteration cost.
-    "q_embed_pca2" -> ((s, dir) => {
-      val rounds = pcaDefl2(s, dir).zipWithIndex.map { case (defl, k0) =>
-        defl.crossJoin(broadcast(defl.agg(max(abs(col("c"))).as("g"))))
-          .select(lit(k0 + 1).as("iter"), col("j"),
-            when(col("g") === 0, lit(0.0)).otherwise(
-              round(col("c").cast("double") / col("g").cast("double"), 6))
-              .cast("double").as("loading"))
-      }
-      rounds.reduce(_.unionByName(_)).orderBy("iter", "j")
-    }),
+    // parallel to v₁. One corpus scan total (the Gram both components
+    // share); the six rounds run on the driver.
+    "q_embed_pca2" -> ((s, dir) =>
+      pcaDefl2(s, dir).rounds.zipWithIndex
+        .map { case (defl, k0) => pcaLoadings(k0 + 1, defl) }
+        .reduce(_.unionByName(_)).orderBy("iter", "j")),
 
     // The 2-D EXPORT — both trained components applied per vector,
     // the scatter/atlas artifact embedding dashboards chart (and the
     // 2-D input cluster-labeling UIs consume): train v₁ (3 rounds),
-    // deflate to v₂ (3 more), then ONE corpus pass scores both axes
+    // deflate to v₂ (3 more, all on the driver from one Gram scan),
+    // then ONE corpus pass scores both axes
     // (two codegen dot_longs against the broadcast directions; the
     // 1-row stats aggregate is the second scan). Per-axis arithmetic
     // is exactly q_embed_pca_project's centered chain.
     "q_embed_pca_scatter" -> ((s, dir) => {
       val qe = Dedup.quantized(s, dir)
-      val v1 = pcaV1(s, dir)
-      val v2 = pcaPack(pcaMicro(pcaDefl2(s, dir).last)).localCheckpoint()
+      val v1 = pcaV1(s, dir).varr
+      val v2 = pcaDefl2(s, dir).v2
       val dotted = qe
         .crossJoin(broadcast(v1.select(col("varr").as("w1"))))
         .crossJoin(broadcast(v2.select(col("varr").as("w2"))))
@@ -386,7 +383,7 @@ object Clustering {
     // two corpus scans (score + the 1-row stats aggregate).
     "q_embed_pca_project" -> ((s, dir) => {
       val qe = Dedup.quantized(s, dir)
-      val v3 = pcaV1(s, dir)
+      val v3 = pcaV1(s, dir).varr
       val dotted = qe.crossJoin(broadcast(v3))
         .withColumn("dot", expr("dot_long(q, varr)"))
         .withColumn("b", expr("dot_long(varr, varr)"))
@@ -468,81 +465,189 @@ object Clustering {
       ORDER BY f1.cell"""
   }
 
-  /** One power-iteration round: corpus × broadcast 1-row v → codegen
-    * dot → ONE posexplode aggregate (s_j, m_j, t, N — t/N identical
-    * per j, riding the same 64-row exchange) → c = N·s − m·t, the
-    * exact-integer vector parallel to (centered C)·v. Checkpointed:
-    * the 64-row frame feeds 2–3 consumers per round. */
-  private def pcaIter(qe: DataFrame, vrow: DataFrame): DataFrame =
-    qe.crossJoin(broadcast(vrow))
-      .withColumn("dot", expr("dot_long(q, varr)"))
-      .select(posexplode(col("q")).as(Seq("j0", "x")), col("dot"))
-      .groupBy((col("j0") + 1).as("j"))
-      .agg(sum(expr("cast(x * dot as decimal(38,0))")).as("s"),
-        sum(col("x").cast("decimal(38,0)")).as("m"),
-        sum(expr("cast(x * x as decimal(38,0))")).as("x2s"),
-        sum(col("dot").cast("decimal(38,0)")).as("t"),
-        count(lit(1)).cast("decimal(38,0)").as("n"))
-      .select(col("j"), (col("n") * col("s") - col("m") * col("t")).as("c"),
-        // per-dimension N²-scaled variance — Σ_j trj = N²·trace(C),
-        // the explained-ratio denominator (free: same aggregate)
-        (col("n") * col("x2s") - col("m") * col("m")).as("trj"))
-      .localCheckpoint()
+  /** The embedding dimension every PCA vector must have. */
+  private val PcaDim = 64
 
-  /** Renormalize a round's 64-row c frame into the next round's 1-row
-    * micro-unit v array — the only doubles in the loop, one IEEE
-    * expression rounded once (the LR-sigmoid discipline). */
-  private def pcaVrow(cf: DataFrame): DataFrame =
-    cf.agg(max(abs(col("c"))).as("g"),
-        expr("transform(array_sort(collect_list(struct(j, c))), p -> p.c)")
-          .as("cs"))
-      .select(expr("transform(cs, c -> if(g = 0, cast(0 as bigint), " +
-        "cast(round(" +
-        "cast(c as double) / cast(g as double) * 1000000) as bigint)))")
-        .as("varr"))
+  /** Sufficient statistics of the centered power round, from ONE
+    * corpus pass: N, m = Σx and the upper triangle of the Gram matrix
+    * G = Σ x·xᵀ, row-major, all exact longs. Every product and sum is
+    * overflow-checked — `Math.multiplyExact`/`addExact` throw rather
+    * than wrap, so an out-of-range corpus fails instead of returning a
+    * wrong direction — and a vector whose length is not [[PcaDim]]
+    * throws instead of mis-indexing G. At |x_j| ≲ 4·10³ the sums stay
+    * long-safe past 5·10¹¹ rows. */
+  private[llm] final class Gram extends Serializable {
+    var n = 0L
+    val m = new Array[Long](PcaDim)
+    val g = new Array[Long](PcaDim * PcaDim)
 
-  /** Deterministic all-ones micro-unit start vector. */
-  private def pcaV0(s: SparkSession): DataFrame =
-    s.range(1).select(
-      expr("transform(sequence(1, 64), i -> cast(1000000 as bigint))").as("varr"))
-
-  /** The CONVERGED first principal direction per (session, dir) — the
-    * identical 3-iteration power chain that q_pca_explained,
-    * q_embed_pca2, q_embed_pca_project and q_embed_pca_scatter each
-    * re-derived (3 corpus scans apiece). Same standing-index
-    * discipline as the graph-walk family (Similarity.standing): on a
-    * cluster the trained direction is a persisted 64-int artifact
-    * built once; here the memoized CHECKPOINTED 1-row frame makes the
-    * family pay training once per process. Contents are deterministic
-    * exact-integer arithmetic, so every consumer stays hash-identical
-    * to its train-it-itself form at any dop. A standing entry
-    * (tag `pca_v1`), rebuilt when the corpus changes. */
-  private def pcaV1(s: SparkSession, dir: String): DataFrame =
-    Similarity.standing(s, dir, "pca_v1") {
-      val qe = Dedup.quantized(s, dir)
-      val c1 = pcaIter(qe, pcaV0(s))
-      val c2 = pcaIter(qe, pcaVrow(c1))
-      pcaVrow(pcaIter(qe, pcaVrow(c2))).localCheckpoint()
+    def add(q: ArrayData): Gram = {
+      require(q.numElements() == PcaDim,
+        s"PCA needs $PcaDim-dim vectors, got ${q.numElements()}")
+      n += 1
+      var i = 0
+      while (i < PcaDim) {
+        val xi = q.getLong(i)
+        m(i) = Math.addExact(m(i), xi)
+        var j = i
+        while (j < PcaDim) {
+          val k = i * PcaDim + j
+          g(k) = Math.addExact(g(k), Math.multiplyExact(xi, q.getLong(j)))
+          j += 1
+        }
+        i += 1
+      }
+      this
     }
 
-  /** The SECOND component's deflation chain (the three checkpointed
-    * deflated-c frames), cached per (session, dir) exactly like
-    * [[pcaV1]] — q_embed_pca2 and q_embed_pca_scatter each re-derived
-    * the identical three orthogonalized power rounds (3 corpus scans
-    * apiece). pca2 reads every round's frame (its output is the
-    * per-round loadings), scatter packs the last into v₂. A standing
-    * entry (tag `pca_defl2`) that nests the `pca_v1` build. */
-  private def pcaDefl2(s: SparkSession, dir: String): Seq[DataFrame] =
-    Similarity.standing(s, dir, "pca_defl2") {
-      val qe = Dedup.quantized(s, dir)
-      val v1j = pcaUnpack(pcaV1(s, dir))
-      var urow = s.range(1).select(expr("transform(sequence(1, 64), " +
-        "i -> cast(if(i % 2 = 0, -1000000, 1000000) as bigint))").as("varr"))
-      (1 to 3).map { _ =>
-        val defl = pcaDeflate(pcaMicro(pcaIter(qe, urow)), v1j).localCheckpoint()
-        urow = pcaPack(pcaMicro(defl))
-        defl
+    def merge(o: Gram): Gram = {
+      n += o.n
+      m.indices.foreach(i => m(i) = Math.addExact(m(i), o.m(i)))
+      g.indices.foreach(k => g(k) = Math.addExact(g(k), o.g(k)))
+      this
+    }
+
+    /** G_ij from the stored upper triangle. */
+    def at(i: Int, j: Int): Long =
+      if (i <= j) g(i * PcaDim + j) else g(j * PcaDim + i)
+  }
+
+  /** The one corpus pass behind every power round: a tree aggregate of
+    * [[Gram]] over `qe.q`. Each partition sends one N + 64 + 64² longs
+    * to the driver. */
+  private[llm] def gram(qe: DataFrame): Gram =
+    qe.select(col("q")).queryExecution.toRdd
+      .treeAggregate(new Gram)((acc, row) => acc.add(row.getArray(0)), _.merge(_))
+
+  /** One centered power round, applied on the driver in exact
+    * integers: per dimension j, c_j = N·(G·v)_j − m_j·(m·v), the vector
+    * parallel to (centered C)·v, and trj = N·G_jj − m_j², whose sum is
+    * N²·trace(C). These are the integers N·Σx_j(x·v) − Σx_j·Σ(x·v)
+    * sums to at any partitioning. An empty corpus yields no rows: no
+    * dimension occurs, which is what the oracle's per-dimension
+    * GROUP BY returns. */
+  private[llm] def powerRound(gm: Gram, v: Seq[Long]): Seq[(BigInt, BigInt)] =
+    if (gm.n == 0) Nil
+    else {
+      val n = BigInt(gm.n)
+      val t = (0 until PcaDim).map(i => BigInt(gm.m(i)) * v(i)).sum
+      (0 until PcaDim).map { j =>
+        val gv = (0 until PcaDim).map(i => BigInt(gm.at(j, i)) * v(i)).sum
+        val mj = BigInt(gm.m(j))
+        (n * gv - mj * t, n * gm.at(j, j) - mj * mj)
       }
+    }
+
+  /** `k` power rounds from `v0`: each round's (c, trj) per dimension
+    * and the micro-unit direction the last round leaves. */
+  private def powerRounds(s: SparkSession, gm: Gram, v0: Seq[Long],
+      k: Int): (Seq[Seq[(BigInt, BigInt)]], Seq[Long]) = {
+    var v = v0
+    val rounds = (1 to k).map { _ =>
+      val r = powerRound(gm, v)
+      v = micro(s, r.map(_._1))
+      r
+    }
+    (rounds, v)
+  }
+
+  /** Micro-normalize: w_j = round(c_j / max|c| · 10⁶) — the only doubles
+    * in the loop, one IEEE expression rounded once (the LR-sigmoid
+    * discipline). Evaluated by Spark over a LocalRelation: the
+    * optimizer folds the projection, so no job runs and the rounding
+    * stays Spark's own. */
+  private[llm] def micro(s: SparkSession, c: Seq[BigInt]): Seq[Long] =
+    if (c.isEmpty) Nil
+    else {
+      val g = dec(c.map(_.abs).max)
+      s.createDataFrame(c.map(x => Row(dec(x), g)).asJava, StructType(Seq(
+          StructField("c", DecimalType(38, 0)), StructField("g", DecimalType(38, 0)))))
+        .select(expr("if(g = 0, cast(0 as bigint), cast(round(" +
+          "cast(c as double) / cast(g as double) * 1000000) as bigint))"))
+        .collect().map(_.getLong(0)).toSeq
+    }
+
+  private val DecimalBound = BigInt(10).pow(38)
+
+  /** `x` as a DECIMAL(38,0) value; past 38 digits it throws, since the
+    * round frames' DECIMAL(38,0) columns cannot carry it. */
+  private def dec(x: BigInt): java.math.BigDecimal =
+    if (x.abs >= DecimalBound)
+      throw new ArithmeticException(s"PCA value $x overflows DECIMAL(38,0)")
+    else new java.math.BigDecimal(x.bigInteger)
+
+  /** Driver rows as a lazily checkpointed one-partition frame: it plans
+    * as `Scan ExistingRDD` with LocalRelation-sized statistics and a
+    * single-partition output, so its consumers aggregate, union and
+    * sort it without an exchange, and building it runs no job. */
+  private def frame(s: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
+    s.createDataFrame(rows.asJava, schema).coalesce(1).localCheckpoint(eager = false)
+
+  private val JCol = StructField("j", IntegerType, nullable = false)
+  private val CCol = StructField("c", DecimalType(38, 0))
+
+  /** A round's 64-row (j, c, trj) frame. */
+  private def roundFrame(s: SparkSession, r: Seq[(BigInt, BigInt)]): DataFrame =
+    frame(s, StructType(Seq(JCol, CCol, StructField("trj", DecimalType(38, 0)))),
+      r.zipWithIndex.map { case ((c, trj), j0) => Row(j0 + 1, dec(c), dec(trj)) })
+
+  /** A 1-row `varr` frame holding a micro-unit direction. */
+  private def directionFrame(s: SparkSession, v: Seq[Long]): DataFrame =
+    frame(s, StructType(Seq(StructField("varr",
+      ArrayType(LongType, containsNull = true), nullable = false))), Seq(Row(v)))
+
+  /** All-ones micro-unit start vector. */
+  private val V0: Seq[Long] = Seq.fill(PcaDim)(1000000L)
+
+  /** The first component as the standing `pca_v1` entry holds it: the
+    * corpus Gram, the converged micro-unit direction and its 1-row
+    * `varr` frame. */
+  private final case class Pc1(gram: Gram, v: Seq[Long], varr: DataFrame)
+
+  /** The CONVERGED first principal direction per (session, dir) — the
+    * identical 3-round power chain that q_pca_explained, q_embed_pca2,
+    * q_embed_pca_project and q_embed_pca_scatter each need. Same
+    * standing-index discipline as the graph-walk family
+    * (Similarity.standing): on a cluster the trained direction is a
+    * persisted 64-int artifact built once; here the memoized Gram and
+    * direction make the family pay the one corpus scan once per
+    * process. Contents are deterministic exact-integer arithmetic, so
+    * every consumer stays hash-identical to its train-it-itself form
+    * at any dop. A standing entry (tag `pca_v1`), rebuilt when the
+    * corpus changes. */
+  private def pcaV1(s: SparkSession, dir: String): Pc1 =
+    Similarity.standing(s, dir, "pca_v1") {
+      val gm = gram(Dedup.quantized(s, dir))
+      val (_, v) = powerRounds(s, gm, V0, 3)
+      Pc1(gm, v, directionFrame(s, v))
+    }
+
+  /** The second component as the standing `pca_defl2` entry holds it:
+    * the three deflated (j, c) round frames and the final direction's
+    * 1-row `varr` frame. */
+  private final case class Pc2(rounds: Seq[DataFrame], v2: DataFrame)
+
+  /** The SECOND component's deflation chain, cached per (session, dir)
+    * exactly like [[pcaV1]] and run on its Gram — no corpus scan of its
+    * own. pca2 reads every round's frame (its output is the per-round
+    * loadings), scatter reads the final direction. A standing entry
+    * (tag `pca_defl2`) that nests the `pca_v1` build. Deflation is the
+    * division-free Gram–Schmidt w′ = (v·v)·w − v·(v·w) — exact integers
+    * (≤ 1.3·10²⁰), direction preserved. */
+  private def pcaDefl2(s: SparkSession, dir: String): Pc2 =
+    Similarity.standing(s, dir, "pca_defl2") {
+      val pc1 = pcaV1(s, dir)
+      val b = pc1.v.map(x => BigInt(x) * x).sum
+      var u: Seq[Long] = Seq.tabulate(PcaDim)(i => if (i % 2 == 1) -1000000L else 1000000L)
+      val rounds = (1 to 3).map { _ =>
+        val w = micro(s, powerRound(pc1.gram, u).map(_._1))
+        val d1 = pc1.v.zip(w).map { case (x, y) => BigInt(x) * y }.sum
+        val c = pc1.v.zip(w).map { case (x, y) => b * y - d1 * x }
+        u = micro(s, c)
+        frame(s, StructType(Seq(JCol, CCol)),
+          c.zipWithIndex.map { case (x, j0) => Row(j0 + 1, dec(x)) })
+      }
+      Pc2(rounds, directionFrame(s, u))
     }
 
   private def pcaLoadings(k: Int, cf: DataFrame): DataFrame =
@@ -557,45 +662,13 @@ object Clustering {
   /** Frame-taking q_embed_pca body (ScaleProbe's pca section runs it
     * on a replicated corpus: loadings must be IDENTICAL — replication
     * scales every c exactly ×r², so the normalized direction is
-    * invariant — while wall tracks scan volume). */
-  private[graft] def pcaLoadingsOn(s: SparkSession, qe: DataFrame): DataFrame = {
-    val c1 = pcaIter(qe, pcaV0(s))
-    val c2 = pcaIter(qe, pcaVrow(c1))
-    val c3 = pcaIter(qe, pcaVrow(c2))
-    pcaLoadings(1, c1).unionByName(pcaLoadings(2, c2))
-      .unionByName(pcaLoadings(3, c3))
+    * invariant — while wall tracks scan volume). One Gram scan; the
+    * three rounds run on the driver. */
+  private[graft] def pcaLoadingsOn(s: SparkSession, qe: DataFrame): DataFrame =
+    powerRounds(s, gram(qe), V0, 3)._1.zipWithIndex
+      .map { case (r, k0) => pcaLoadings(k0 + 1, roundFrame(s, r)) }
+      .reduce(_.unionByName(_))
       .orderBy("iter", "j")
-  }
-
-  /** Micro-normalize a 64-row (j, c) frame: w_j = round(c/max|c|·10⁶)
-    * — one IEEE chain rounded once, the micro-unit direction. */
-  private def pcaMicro(cf: DataFrame): DataFrame =
-    cf.crossJoin(broadcast(cf.agg(max(abs(col("c"))).as("g"))))
-      .select(col("j"), expr("if(g = 0, cast(0 as bigint), cast(round(" +
-        "cast(c as double) / cast(g as double) * 1000000) as bigint))").as("wj"))
-
-  /** Deflate w against the fixed component v (64-row (j, vj)): the
-    * division-free Gram–Schmidt w′ = (v·v)·w − v·(v·w) — exact
-    * integers (≤ 1.3·10²⁰, DECIMAL-carried), direction preserved. */
-  private def pcaDeflate(w: DataFrame, v1j: DataFrame): DataFrame = {
-    val dots = w.join(v1j, "j")
-      .agg(sum(col("vj").cast("decimal(38,0)") * col("wj")).as("d1"),
-        sum(col("vj").cast("decimal(38,0)") * col("vj")).as("b"))
-    w.join(v1j, "j").crossJoin(broadcast(dots))
-      .select(col("j"),
-        (col("b") * col("wj") - col("vj").cast("decimal(38,0)") * col("d1"))
-          .as("c"))
-  }
-
-  /** Pack a 64-row (j, wj) micro-unit frame into the 1-row v array. */
-  private def pcaPack(w: DataFrame): DataFrame =
-    w.agg(expr("transform(array_sort(collect_list(struct(j, wj))), p -> p.wj)")
-      .as("varr"))
-
-  /** Explode a 1-row v array to 64 (j, vj) rows. */
-  private def pcaUnpack(vrow: DataFrame): DataFrame =
-    vrow.select(posexplode(col("varr")).as(Seq("j0", "vj")))
-      .select((col("j0") + 1).as("j"), col("vj"))
 
   /** One DuckDB power-iteration round: v-array CTE `va$k` in, centered
     * Gram application `c$k` + next-round array `va${k+1}` out — the

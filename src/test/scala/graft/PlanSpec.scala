@@ -918,12 +918,12 @@ class PlanSpec extends SparkSuite {
   }
 
   test("q_embed_pca report reads only the materialized 64-row rounds") {
-    // three power iterations = exactly three corpus scans AT
-    // CONSTRUCTION (each round's 64-row c frame localCheckpoints);
-    // the loadings report joins those materialized frames to their
-    // own 1-row max|c| aggregates — a parquet scan here means a round
-    // lost its checkpoint and the nested lineage re-scans the corpus
-    // per consumer
+    // one Gram-matrix corpus scan AT CONSTRUCTION feeds all three
+    // power rounds, which run on the driver; each round's 64-row c
+    // frame is materialized, and the loadings report joins those
+    // frames to their own 1-row max|c| aggregates — a parquet scan
+    // here means a round lost its materialization and the report
+    // re-scans the corpus per consumer
     val p = plan("q_embed_pca")
     assert(!p.contains("Scan parquet"),
       s"report must not re-scan the corpus:\n$p")

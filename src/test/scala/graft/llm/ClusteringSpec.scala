@@ -1,13 +1,60 @@
 package graft.llm
 
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSuite
+import graft.core.MapReduce
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+
+/** Per-row sequential model of one centered power round: each vector x
+  * emits, per dimension j, (x_j·(x·v), x_j, x·v, x_j², 1) in BigInt; the
+  * reduce sums them into s_j, m_j, t, Σx_j², N and returns
+  * (N·s_j − m_j·t, N·Σx_j² − m_j²). */
+final case class PowerRoundModel(v: Seq[Long])
+    extends MapReduce[Long, Seq[Long], Int, Seq[BigInt], Int, (BigInt, BigInt)] {
+  def map(id: Long, q: Seq[Long]): Iterator[(Int, Seq[BigInt])] = {
+    val dot = q.zip(v).map { case (x, w) => BigInt(x) * w }.sum
+    q.iterator.zipWithIndex.map { case (x, j0) =>
+      (j0 + 1, Seq(dot * x, BigInt(x), dot, BigInt(x) * x, BigInt(1)))
+    }
+  }
+  def reduce(j: Int, sums: Iterator[Seq[BigInt]]): Iterator[(Int, (BigInt, BigInt))] = {
+    val Seq(s, m, t, x2, n) = sums.reduce(_.zip(_).map { case (a, b) => a + b })
+    Iterator(j -> ((n * s - m * t, n * x2 - m * m)))
+  }
+}
 
 /** Pins [[Clustering.lloyd]]: the iterated k-means loop must descend
   * (Lloyd's monotonicity, modulo integer centroid rounding) and stay
-  * deterministic — the driver only ever moves K×64 centroid ints. */
+  * deterministic — the driver only ever moves K×64 centroid ints. Also
+  * pins the PCA power round: the driver round on one Gram scan equals
+  * the per-row model, the Gram pass fails loudly, and q_embed_pca reads
+  * its corpus once. */
 class ClusteringSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
+
+  /** An embeddings corpus of the given vectors in a fresh dir. */
+  private def corpus(vecs: Seq[Array[Float]]): String = {
+    import spark.implicits._
+    val d = java.nio.file.Files.createTempDirectory("pca").toString
+    vecs.zipWithIndex.map { case (v, i) => (i.toLong, v, 0) }
+      .toDF("vec_id", "embedding", "label")
+      .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+    d
+  }
+
+  /** The corpus the planted-direction test below writes. */
+  private def planted: Seq[Array[Float]] = {
+    def v(a: Float, b: Float) = Array.tabulate(64)(i =>
+      if (i == 0) a else if (i == 1) b else 0f)
+    Seq(v(10f, 0f), v(-10f, 0f), v(0.1f, 1f), v(-0.1f, -1f))
+  }
+
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
 
   test("lloyd inertia is non-increasing across iterations") {
     val (_, history) = Clustering.lloyd(spark, sf, iters = 3)
@@ -107,5 +154,89 @@ class ClusteringSpec extends SparkSuite {
       .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
     val rows = Clustering.queries("q_kmeans_kcenter")(spark, d).collect()
     assert(rows.length == 2, s"expected 2 seeds from a 2-vector corpus")
+  }
+
+  test("the driver power round equals the per-row BigInt model") {
+    // planted, plus a seeded random corpus with negative components;
+    // v0 and the two directions the rounds themselves produce
+    val r = new scala.util.Random(17)
+    val random = Seq.fill(300)(Array.fill(64)((r.nextDouble() * 0.74 - 0.37).toFloat))
+    for (vecs <- Seq(planted, random)) {
+      import spark.implicits._
+      val qe = Dedup.quantized(spark, corpus(vecs))
+      val rows = qe.select("vec_id", "q").as[(Long, Seq[Long])].collect().toSeq
+      val gm = Clustering.gram(qe)
+      assert(gm.n == vecs.size)
+      var v: Seq[Long] = Seq.fill(64)(1000000L)
+      for (round <- 1 to 3) {
+        val got = Clustering.powerRound(gm, v)
+        val want = MapReduce.sequential(rows, PowerRoundModel(v)).map(_._2)
+        assert(got == want, s"round $round differs from the model")
+        v = Clustering.micro(spark, got.map(_._1))
+        assert(v.exists(_ != 0L), s"round $round left a zero direction")
+      }
+    }
+  }
+
+  test("q_embed_pca construction reads the corpus once") {
+    // the three rounds share one Gram pass: exactly one stage reads
+    // parquet records (three per-round aggregates read it in six)
+    val d = corpus(planted)
+    Clustering.queries("q_embed_pca")(spark, d) // resolves the table
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val constructStages = ConcurrentHashMap.newKeySet[Int]()
+    val scans = ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val g = Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+        if (g == "pca-construct") j.stageIds.foreach(constructStages.add(_))
+        jobs.add(g)
+      }
+      override def onStageCompleted(st: SparkListenerStageCompleted): Unit =
+        if (st.stageInfo.taskMetrics.inputMetrics.recordsRead > 0)
+          scans.add(st.stageInfo.stageId)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("pca-construct", "construct")
+      Clustering.queries("q_embed_pca")(spark, d)
+      sc.setJobGroup("pca-marker", "marker")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains("pca-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(jobs.contains("pca-marker"), "the listener never saw the marker")
+      val read = scans.asScala.count(constructStages.contains)
+      assert(read == 1, s"$read stages read the corpus")
+      val n = jobs.asScala.count(_ == "pca-construct")
+      assert(n <= 2, s"construction ran $n jobs")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("the Gram pass throws on long overflow instead of wrapping") {
+    // one component at 5·10⁹ quantized: x·x overflows a long (the
+    // per-round SQL form threw here too, on ANSI `x * x`)
+    val big = Array.tabulate(64)(i => if (i == 0) 5e5f else 0f)
+    val e1 = intercept[Exception](
+      Clustering.queries("q_embed_pca")(spark, corpus(planted :+ big)).collect())
+    assert(causes(e1).exists(_.isInstanceOf[ArithmeticException]), e1)
+    // 3·10⁹ squared fits; two of them summed do not
+    val fits = Array.tabulate(64)(i => if (i == 0) 3e5f else 0f)
+    val e2 = intercept[Exception](
+      Clustering.gram(Dedup.quantized(spark, corpus(Seq(fits, fits)))))
+    assert(causes(e2).exists(_.isInstanceOf[ArithmeticException]), e2)
+  }
+
+  test("the Gram pass rejects vectors that are not 64-dim") {
+    val short = Array.fill(63)(0.1f)
+    val e = intercept[Exception](
+      Clustering.queries("q_embed_pca")(spark, corpus(planted :+ short)).collect())
+    assert(causes(e).exists(c => Option(c.getMessage).exists(
+      _.contains("PCA needs 64-dim vectors, got 63"))), e)
   }
 }
