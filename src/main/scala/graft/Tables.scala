@@ -1,8 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StructType,
+  TimestampNTZType, TimestampType}
 
 /** Parquet table loader for the driver-generated fixture schema
   * (TESTDATA.md / FIXTURES.md). */
@@ -74,6 +77,13 @@ object Tables {
   /** The fan-out width: the session's default parallelism. A width of
     * 1 disables fan/salting. */
   def fanWidth(s: SparkSession): Int = s.sparkContext.defaultParallelism
+
+  /** Driver rows as a lazily checkpointed one-partition frame: it plans
+    * as `Scan ExistingRDD` with LocalRelation-sized statistics and a
+    * single-partition output, so its consumers aggregate, union and
+    * sort it without an exchange, and building it runs no job. */
+  def driverRows(s: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
+    s.createDataFrame(rows.asJava, schema).coalesce(1).localCheckpoint(eager = false)
 
   /** Normalize `events.ts` to a session-zoned microsecond TIMESTAMP
     * regardless of how the fixture generation wrote it. Two layouts

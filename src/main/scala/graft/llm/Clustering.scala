@@ -2,6 +2,7 @@ package graft.llm
 
 import scala.jdk.CollectionConverters._
 
+import graft.Tables
 import graft.ops.Q
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -576,24 +577,17 @@ object Clustering {
       throw new ArithmeticException(s"PCA value $x overflows DECIMAL(38,0)")
     else new java.math.BigDecimal(x.bigInteger)
 
-  /** Driver rows as a lazily checkpointed one-partition frame: it plans
-    * as `Scan ExistingRDD` with LocalRelation-sized statistics and a
-    * single-partition output, so its consumers aggregate, union and
-    * sort it without an exchange, and building it runs no job. */
-  private def frame(s: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
-    s.createDataFrame(rows.asJava, schema).coalesce(1).localCheckpoint(eager = false)
-
   private val JCol = StructField("j", IntegerType, nullable = false)
   private val CCol = StructField("c", DecimalType(38, 0))
 
   /** A round's 64-row (j, c, trj) frame. */
   private def roundFrame(s: SparkSession, r: Seq[(BigInt, BigInt)]): DataFrame =
-    frame(s, StructType(Seq(JCol, CCol, StructField("trj", DecimalType(38, 0)))),
+    Tables.driverRows(s, StructType(Seq(JCol, CCol, StructField("trj", DecimalType(38, 0)))),
       r.zipWithIndex.map { case ((c, trj), j0) => Row(j0 + 1, dec(c), dec(trj)) })
 
   /** A 1-row `varr` frame holding a micro-unit direction. */
   private def directionFrame(s: SparkSession, v: Seq[Long]): DataFrame =
-    frame(s, StructType(Seq(StructField("varr",
+    Tables.driverRows(s, StructType(Seq(StructField("varr",
       ArrayType(LongType, containsNull = true), nullable = false))), Seq(Row(v)))
 
   /** All-ones micro-unit start vector. */
@@ -644,7 +638,7 @@ object Clustering {
         val d1 = pc1.v.zip(w).map { case (x, y) => BigInt(x) * y }.sum
         val c = pc1.v.zip(w).map { case (x, y) => b * y - d1 * x }
         u = micro(s, c)
-        frame(s, StructType(Seq(JCol, CCol)),
+        Tables.driverRows(s, StructType(Seq(JCol, CCol)),
           c.zipWithIndex.map { case (x, j0) => Row(j0 + 1, dec(x)) })
       }
       Pc2(rounds, directionFrame(s, u))

@@ -2,9 +2,11 @@ package graft.llm
 
 import graft.{Num, Tables}
 import graft.ops.Q
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType,
+  StructField, StructType}
 
 /** Text-analysis operators over `documents` — language ID, quality
   * scoring, token counting, and winnowing fingerprints (north-star
@@ -537,23 +539,13 @@ object TextAnalysis {
     // word frequency) → (argmax pair, ties broken lexicographically)
     // → (apply the merge to every word in one greedy leftmost
     // non-overlapping pass — subword-nmt's regex-replace semantics).
-    // State between rounds is the exploded symbol table
-    // (word, freq, pos, symbol) over the DISTINCT-WORD dictionary:
+    // The state is the DISTINCT-WORD dictionary (word, freq, symbols):
     // BPE never touches the corpus after the one scan that builds the
     // dict, which is what makes it train on a 100 TB corpus — the
-    // dict is vocab-bounded, pair counting is a map-side-combinable
-    // aggregate, the argmax is a global top-1 (TakeOrdered on a
-    // vocab²-bounded frame), and the merge pass is per-word windows,
-    // ONE exchange per round (every window — lead, the run-origin
-    // max, lag, renumber — shares the (word, pos) key and order).
-    // The greedy pass is set-based, not sequential: a candidate
-    // position merges iff its offset from the last NON-candidate
-    // position before it is odd — within a run of consecutive
-    // candidates (only possible when left = right, e.g. 'aaaa') that
-    // selects the 1st, 3rd, … exactly as the leftmost-greedy scan
-    // does, and isolated candidates always merge. Output per round:
-    // the learned merge, its weighted pair count, and the surviving
-    // symbol-instance count — the curve a tokenizer build monitors.
+    // dict is vocab-bounded. One dictionary collect, rounds on the
+    // driver ([[mergeTrain]]). Output per round: the learned merge,
+    // its weighted pair count, and the surviving symbol-instance
+    // count — the curve a tokenizer build monitors.
     "q_bpe_train" -> ((s, dir) =>
       bpeTrainOn(Tables(s, dir, "documents"))),
 
@@ -583,98 +575,33 @@ object TextAnalysis {
     // WORDPIECE merge training (Schuster & Nakajima 2012; the BERT
     // tokenizer family) — the THIRD production tokenizer beside BPE
     // and the unigram LM, and the purest contrast with BPE: identical
-    // dictionary, identical greedy merge pass (shared mergeApply),
-    // but the argmax maximizes LIKELIHOOD — ln c(ab) − ln c(a) −
-    // ln c(b), the PMI-shaped score — instead of raw frequency. On
-    // the spec corpus the two genuinely diverge: BPE's first merge is
-    // the frequent (a,a), WordPiece's is (a,b) (rare parts, high
-    // cohesion). Same scale shape as q_bpe_train: dict-bounded after
-    // one corpus scan, one exchange per round plus a vocab-bounded
-    // symbol-count aggregate. Unlike BPE, each round consumes its
-    // symbol table THREE ways (pairs, unigram counts, merge), so the
-    // ULM discipline applies: localCheckpoint the dict-bounded table
-    // per round — the corpus is scanned exactly once, and every
-    // round's argmax reads the materialized frame.
-    "q_wordpiece_train" -> ((s, dir) => {
-      var cur = bpeSymbolsOf(Tables(s, dir, "documents")).localCheckpoint()
-      val rows = (1 to 3).map { k =>
-        val (best, next0) = wordpieceStep(cur)
-        val next = next0.localCheckpoint()
-        cur = next
-        best.select(lit(k).as("step"), col("lft"), col("rgt"),
-            col("pair_cnt"), col("score"))
-          .crossJoin(broadcast(next.agg(count(lit(1)).as("n_syms_after"))))
-      }
-      rows.reduce(_.unionByName(_)).orderBy("step")
-    }),
+    // dictionary, identical greedy merge pass, but the argmax
+    // maximizes LIKELIHOOD — ln c(ab) − ln c(a) − ln c(b), the
+    // PMI-shaped score — instead of raw frequency. On the spec corpus
+    // the two genuinely diverge: BPE's first merge is the frequent
+    // (a,a), WordPiece's is (a,b) (rare parts, high cohesion). Same
+    // scale shape as q_bpe_train: one dictionary collect, rounds on
+    // the driver, each round's scores evaluated by Spark's own
+    // expression ([[wpScores]]).
+    "q_wordpiece_train" -> ((s, dir) =>
+      wpReport(s, charWords(wordDict(Tables(s, dir, "documents"))))),
 
     // DISTRIBUTED WordPiece train — the THIRD tokenizer family's
     // sharded-train proof (q_bpe_merge_train's discipline with the
-    // likelihood argmax): WordPiece's round statistics are the
-    // adjacent-pair counts AND the unigram symbol counts, BOTH
-    // additive across content shards — f sums across shards, and
-    // every shard segments a word identically because the merge
-    // sequence is global and mergeApply deterministic per word — so
-    // the score log(pair) − log(cl) − log(cr) computed from the
-    // key-merged sums is bit-identical to the full-corpus round's
-    // (same longs in, same double ops). Each round: per-shard pair +
-    // unigram counts (each shard scans only its own symbol table) →
-    // key-merged sums → ONE global argmax → the winning merge applied
-    // shard-locally. Gated through q_wordpiece_train's own oracle so
-    // sharded == full is re-proven every round; the spec additionally
-    // pins Spark-vs-Spark bit equality. At 100 TB: each shard trains
-    // where its data lives; the merge moves two dict-bounded count
-    // frames per round, never corpus text.
+    // likelihood argmax): each content shard builds its own (w, f)
+    // dictionary where its data lives, and f sums per word across the
+    // shards — the additivity holds once, at the dictionary, so the
+    // merged dictionary IS the full-corpus one and every round (pair
+    // counts, unigram counts, score, argmax) runs on it exactly as in
+    // q_wordpiece_train. Gated through q_wordpiece_train's own oracle
+    // so sharded == full is re-proven every round; the spec
+    // additionally pins Spark-vs-Spark bit equality. At 100 TB: each
+    // shard scans only its own docs; the merge moves two dict-bounded
+    // frames, never corpus text.
     "q_wordpiece_merge_train" -> ((s, dir) => {
       val docs = Tables(s, dir, "documents")
-      // shard builds and per-round shard merges are independent of
-      // each other — concurrent driver threads (guide §2.6)
-      var shards = inParallel[DataFrame](Seq(
-        () => bpeSymbolsOf(docs.filter(col("doc_id") % 2 === 0),
-          spread = false).localCheckpoint(),
-        () => bpeSymbolsOf(docs.filter(col("doc_id") % 2 =!= 0),
-          spread = false).localCheckpoint()))
-      val rows = (1 to 3).map { k =>
-        val byPos = Window.partitionBy(col("w")).orderBy(col("i"))
-        val pairParts = shards.map { sy =>
-          sy.withColumn("r", lead(col("s"), 1).over(byPos))
-            .filter(col("r").isNotNull)
-            .groupBy(col("s").as("lft"), col("r").as("rgt"))
-            .agg(sum(col("f")).as("pc"))
-        }
-        val symCnt = shards
-          .map(_.groupBy(col("s")).agg(sum(col("f")).as("c0")))
-          .reduce(_.unionByName(_))
-          .groupBy(col("s")).agg(sum(col("c0")).as("cnt"))
-        val best = pairParts.reduce(_.unionByName(_))
-          .groupBy(col("lft"), col("rgt"))
-          .agg(sum(col("pc")).as("pair_cnt"))
-          .join(symCnt.select(col("s").as("lft"), col("cnt").as("cl")),
-            "lft")
-          .join(symCnt.select(col("s").as("rgt"), col("cnt").as("cr")),
-            "rgt")
-          .withColumn("score",
-            round(log(col("pair_cnt").cast("double")) -
-              log(col("cl").cast("double")) -
-              log(col("cr").cast("double")), 6).cast("double"))
-          .orderBy(col("score").desc, col("lft"), col("rgt"))
-          .limit(1)
-          .select(col("lft"), col("rgt"), col("pair_cnt"), col("score"))
-        shards = inParallel(shards.map { sy => () =>
-          // per-round materialization is load-bearing exactly as in
-          // q_bpe_merge_train: each round reads its shard table three
-          // ways (pairs, unigram counts, merge apply)
-          mergeApply(sy.withColumn("r", lead(col("s"), 1).over(byPos)),
-            best).localCheckpoint()
-        })
-        val nAfter = shards.map(_.select(col("w"), col("i")))
-          .reduce(_.unionByName(_)).distinct()
-          .agg(count(lit(1)).as("n_syms_after"))
-        best.select(lit(k).as("step"), col("lft"), col("rgt"),
-            col("pair_cnt"), col("score"))
-          .crossJoin(broadcast(nAfter))
-      }
-      rows.reduce(_.unionByName(_)).orderBy("step")
+      wpReport(s, charWords(wordDict(docs.filter(col("doc_id") % 2 === 0)),
+        wordDict(docs.filter(col("doc_id") % 2 =!= 0))))
     }),
 
     // The trained WordPiece tokenizer APPLIED per document — closing
@@ -718,44 +645,31 @@ object TextAnalysis {
     // budget (3/6/9 merges) for BPE and WordPiece, each family folded
     // from ONE trained chain (the q_hll_tuning / q_dedup_lsh_tuning
     // fold-from-one discipline): train 9 rounds once, snapshot the
-    // symbol table at each budget. Fertility is read DICT-SIDE —
+    // dictionary at each budget. Fertility is read DICT-SIDE —
     // Σ_w f(w)·|units(w)| / Σ_w f(w) is exactly the corpus-occurrence
     // fertility the apply-side queries compute (f IS the corpus
     // frequency), without a second corpus scan. The published
     // tokenizer-design artifact: fertility descends monotonically in
     // the merge budget, at family-specific rates (frequency- vs
-    // likelihood-argmax pick different merges). Scale shape: ONE
-    // corpus scan total (both chains start from the same checkpointed
-    // round-0 symbols); every round's dict-bounded table is
-    // localCheckpoint-materialized (the q_wordpiece_train discipline —
-    // 18 chained window rounds would otherwise compound lineage).
+    // likelihood-argmax pick different merges). Scale shape: one
+    // dictionary collect shared by both chains, rounds on the driver.
     "q_tokenizer_curve" -> ((s, dir) => {
-      val s0 = bpeSymbolsOf(Tables(s, dir, "documents")).localCheckpoint()
-      def curveOf(fam: String,
-          step: DataFrame => (DataFrame, DataFrame)): Seq[DataFrame] = {
-        var cur = s0
-        (1 to 9).flatMap { k =>
-          cur = step(cur)._2.localCheckpoint()
-          if (k % 3 == 0) Some(
-            cur.agg(sum(col("f")).as("units"),
-                sum(when(col("i") === 1, col("f"))).as("words"))
-              .select(lit(fam).as("family"), lit(k).as("merges"),
-                col("units").as("n_units"),
-                round(col("units").cast("double") / col("words"), 4)
-                  .cast("double").as("fertility")))
-          else None
+      val words = charWords(wordDict(Tables(s, dir, "documents")))
+      val rows = Seq("bpe" -> false, "wordpiece" -> true).flatMap { case (fam, wp) =>
+        mergeTrain(s, words, 9, wp).zipWithIndex.collect {
+          case ((_, ws), k0) if (k0 + 1) % 3 == 0 =>
+            // an empty dictionary sums to NULL, as SQL's sum does
+            if (ws.isEmpty) Row(fam, k0 + 1, null, null)
+            else Row(fam, k0 + 1, ws.map(x => x.f * x.syms.size).sum, ws.map(_.f).sum)
         }
       }
-      // The two family chains are INDEPENDENT (both fold from the one
-      // checkpointed round-0 table): run them on concurrent driver
-      // threads (guide §2.6) so one chain's per-round driver latency
-      // back-fills the other's — 18 dependent rounds become two
-      // 9-round chains in parallel. Contents are unchanged; only the
-      // order the (deterministic) checkpoints materialize in differs.
-      inParallel[Seq[DataFrame]](Seq(
-        () => curveOf("bpe", bpeStep),
-        () => curveOf("wordpiece", wordpieceStep)))
-        .flatten.reduce(_.unionByName(_)).orderBy("family", "merges")
+      Tables.driverRows(s, StructType(Seq(StructField("family", StringType, nullable = false),
+          StructField("merges", IntegerType, nullable = false),
+          StructField("units", LongType), StructField("words", LongType))), rows)
+        .select(col("family"), col("merges"), col("units").as("n_units"),
+          round(col("units").cast("double") / col("words"), 4)
+            .cast("double").as("fertility"))
+        .orderBy("family", "merges")
     }),
 
     // Tokenizer FERTILITY by source — the tokenizer-qualification
@@ -785,82 +699,31 @@ object TextAnalysis {
     // BYTES, so every token of every language participates and there
     // is no OOV by construction — the property char-BPE's [a-z]+ gate
     // gives up on day one of non-English data. The merge ALGEBRA is
-    // the shared bpeStep/mergeApply chain (symbol-type-agnostic);
+    // the shared driver trainer ([[mergeTrain]], symbol-type-agnostic);
     // what changes is the round-0 alphabet (≤256 hex-rendered byte
-    // symbols, [[bpeBytesSymbolsOf]]) and the domain (ALL words).
+    // symbols, [[byteWords]]) and the domain (ALL pre-tokens,
+    // [[bytesDict]]). One dictionary collect, rounds on the driver.
     // Output per round: the learned merge as hex byte strings, its
     // weighted pair count, surviving symbol instances.
-    "q_bpe_bytes_train" -> ((s, dir) => {
-      // round-0 + per-round checkpoints (see bpeTrainOn): the lazy
-      // chain re-ran the GPT-2-pretokenize + hex-explode corpus scan
-      // for every round's best broadcast and n_syms_after aggregate
-      var cur = bpeBytesSymbolsOf(Tables(s, dir, "documents"))
-        .localCheckpoint()
-      val rows = (1 to 3).map { k =>
-        val (best, next0) = bpeStep(cur)
-        val next = next0.localCheckpoint()
-        cur = next
-        best.select(lit(k).as("step"), col("lft"), col("rgt"),
-            col("pair_cnt"))
-          .crossJoin(broadcast(next.agg(count(lit(1)).as("n_syms_after"))))
-      }
-      rows.reduce(_.unionByName(_)).orderBy("step")
-    }),
+    "q_bpe_bytes_train" -> ((s, dir) =>
+      bpeReport(s, byteWords(bytesDict(Tables(s, dir, "documents"))))),
 
     // DISTRIBUTED tokenizer train — per-shard sufficient statistics
-    // MERGED equal the full-corpus round, bit for bit (the
-    // q_knn_ivf_merge discipline extended to the text leg): BPE's
-    // per-round statistic is the adjacent-pair count Σ_w f_w ·
-    // cnt_pair(w), which is ADDITIVE across content shards because
-    // (a) f_w sums across shards and (b) every shard segments a word
-    // identically — the merge sequence is global and mergeApply is
-    // deterministic per word. So each round trains as: per-shard pair
-    // counts (each shard scans only its own docs) → key-merged sum →
-    // ONE global argmax → the winning merge applied to each shard's
-    // own symbol table. This row shares q_bpe_bytes_train's oracle,
-    // so the gate proves sharded-train == full-train at the learned-
-    // merge level every round. n_syms_after dedups (w, i) across
-    // shards — identical segmentation makes the distinct set exactly
-    // the full-train symbol table. At 100 TB: each shard trains where
-    // its data lives; the merge moves one dict-bounded pair-count
-    // frame per round, never corpus text.
+    // MERGED equal the full-corpus train, bit for bit (the
+    // q_knn_ivf_merge discipline extended to the text leg): each
+    // content shard builds its own (w, f) byte dictionary, and f sums
+    // per word across shards, so the merged dictionary IS the full
+    // corpus's. BPE's per-round statistic Σ_w f_w · cnt_pair(w) is
+    // therefore additive once, at the dictionary, and every round runs
+    // on it as in q_bpe_bytes_train. This row shares
+    // q_bpe_bytes_train's oracle, so the gate proves sharded-train ==
+    // full-train at the learned-merge level every round. At 100 TB:
+    // each shard scans only its own docs; the merge moves two
+    // dict-bounded frames, never corpus text.
     "q_bpe_merge_train" -> ((s, dir) => {
       val docs = Tables(s, dir, "documents")
-      var shards = Seq(
-        bpeBytesSymbolsOf(docs.filter(col("doc_id") % 2 === 0), spread = false),
-        bpeBytesSymbolsOf(docs.filter(col("doc_id") % 2 =!= 0), spread = false))
-      val rows = (1 to 3).map { k =>
-        val parts = shards.map { sy =>
-          val byPos = Window.partitionBy(col("w")).orderBy(col("i"))
-          sy.withColumn("r", lead(col("s"), 1).over(byPos))
-            .filter(col("r").isNotNull)
-            .groupBy(col("s").as("lft"), col("r").as("rgt"))
-            .agg(sum(col("f")).as("pc"))
-        }
-        val best = parts.reduce(_.unionByName(_))
-          .groupBy(col("lft"), col("rgt"))
-          .agg(sum(col("pc")).as("pair_cnt"))
-          .orderBy(col("pair_cnt").desc, col("lft"), col("rgt"))
-          .limit(1)
-        shards = inParallel(shards.map { sy => () =>
-          val byPos = Window.partitionBy(col("w")).orderBy(col("i"))
-          mergeApply(sy.withColumn("r", lead(col("s"), 1).over(byPos)), best)
-            // per-round materialization is LOAD-BEARING here, unlike
-            // the full trainer: each round reads its shard table
-            // three times (pair counts, merge apply, the nAfter
-            // dedup), so a lazy chain recomputes earlier rounds
-            // multiplicatively — measured 2.26 s checkpointed vs
-            // 23.3 s lazy at sf0.1 (the CC-loop discipline)
-            .localCheckpoint()
-        })
-        val nAfter = shards.map(_.select(col("w"), col("i")))
-          .reduce(_.unionByName(_)).distinct()
-          .agg(count(lit(1)).as("n_syms_after"))
-        best.select(lit(k).as("step"), col("lft"), col("rgt"),
-            col("pair_cnt"))
-          .crossJoin(broadcast(nAfter))
-      }
-      rows.reduce(_.unionByName(_)).orderBy("step")
+      bpeReport(s, byteWords(bytesDict(docs.filter(col("doc_id") % 2 === 0)),
+        bytesDict(docs.filter(col("doc_id") % 2 =!= 0))))
     }),
 
     // The trained BYTE tokenizer APPLIED + the ROUND-TRIP PROOF: each
@@ -1607,21 +1470,6 @@ object TextAnalysis {
     .orderBy("shard")
   }
 
-  /** `spread = false` for the merge-train shard builders: their
-    * per-round plans RE-EVALUATE this subtree several times from the
-    * raw scan (pairs / merge-apply / nAfter), so the §2.5 fan exchange
-    * would be re-paid per round — measured net-negative there, while
-    * every single-pass trainer gains. */
-  private def bpeSymbolsOf(docs: DataFrame,
-      spread: Boolean = true): DataFrame =
-    (if (spread) Tables.fan(docs) else docs) // guide §2.5
-      .select(explode(split(col("text"), " ")).as("word"))
-      .filter(col("word").rlike("^[a-z]+$"))
-      .groupBy(col("word").as("w")).agg(count(lit(1)).as("f"))
-      .select(col("w"), col("f"),
-        explode(expr("sequence(1, length(w))")).as("i"))
-      .withColumn("s", expr("substring(w, i, 1)"))
-
   /** The GPT-2 pre-tokenization pattern (Radford et al. 2019 §2.2 —
     * the r50k/tiktoken production input segmentation): contraction
     * suffixes, then letter / digit / punctuation RUNS each optionally
@@ -1649,29 +1497,156 @@ object TextAnalysis {
       : org.apache.spark.sql.Column =
     regexp_extract_all(c, lit(Gpt2PreTokenRe), lit(0))
 
-  /** Round-0 BYTE-level symbol table (the GPT-2/tiktoken production
+  /** The BYTE-level (w, f) dictionary (the GPT-2/tiktoken production
     * shape, Radford et al. 2019): the domain is the GPT-2 PRE-TOKENS
     * ([[Gpt2PreTokenRe]] — contraction/letter-run/digit-run/punct-run
     * with leading-space attachment), and every pre-token participates
     * — no lowercase-alpha gate, because the byte alphabet has no OOV;
     * any UTF-8 string (any language, emoji, binary-ish junk) is a
-    * byte sequence. The word key and the symbols live in HEX (2
-    * chars/byte, upper-cased on both engines), so the char-BPE merge
-    * machinery applies unchanged — merges concatenate hex pairs, and
-    * any trained symbol decodes back to bytes with unhex, which is
-    * what makes decode(encode(x)) == x provable by md5
-    * (q_bpe_bytes_tokenize's rebuilt_md5 column). */
-  private def bpeBytesSymbolsOf(docs: DataFrame,
-      spread: Boolean = true): DataFrame =
-    (if (spread) Tables.fan(docs) else docs) // guide §2.5; see bpeSymbolsOf
+    * byte sequence. The word key lives in HEX (2 chars/byte,
+    * upper-cased on both engines) and each byte is one 2-char symbol
+    * ([[byteWords]]), so the char-BPE merge machinery applies
+    * unchanged — merges concatenate hex pairs, and any trained symbol
+    * decodes back to bytes with unhex, which is what makes
+    * decode(encode(x)) == x provable by md5 (q_bpe_bytes_tokenize's
+    * rebuilt_md5 column). */
+  private def bytesDict(docs: DataFrame): DataFrame =
+    Tables.fan(docs) // guide §2.5: spread the pre-tokenize scan
       .select(explode(gpt2PreTokens(col("text"))).as("word"))
       .filter(col("word") =!= "")
       .groupBy(expr("upper(hex(encode(word, 'UTF-8')))").as("w"))
       .agg(count(lit(1)).as("f"))
-      .select(col("w"), col("f"),
-        explode(expr("sequence(1, length(w) div 2)")).as("i"))
-      .withColumn("s", expr("substring(w, 2 * i - 1, 2)"))
 
+  // ---- Merge tokenizers (BPE, WordPiece), trained on the driver ----
+  //
+  // Every merge trainer collects one (w, f) dictionary and runs
+  // Sennrich et al.'s sequential merge loop over it in plain Scala:
+  // the corpus is scanned once, and every round reads only the
+  // dictionary (GraphX's rule: materialize only what the next round
+  // reads). The bound: the driver holds the word dictionary, which
+  // grows with the vocabulary, not with the corpus. Every symbol is
+  // ASCII ([a-z] chars, or [0-9A-F] hex byte pairs), so String order
+  // equals Spark's UTF-8 byte order and the (lft, rgt) tie-break is
+  // the one the SQL twins sort by.
+
+  /** A dictionary word under training: its corpus frequency and its
+    * current symbols, in order. */
+  private final case class Word(w: String, f: Long, syms: Vector[String])
+
+  /** One round's learned merge: the pair, its weighted count Σ f, and
+    * the WordPiece score (None for BPE). */
+  private final case class Merge(lft: String, rgt: String, pairCnt: Long,
+      score: Option[Double])
+
+  /** Collect (w, f) dictionaries, one per frame, and sum f per word —
+    * in w order, each word split into its round-0 symbols. */
+  private def collectWords(dicts: DataFrame*)(split: String => Vector[String])
+      : Seq[Word] =
+    dicts.flatMap(_.collect().map(r => (r.getString(0), r.getLong(1))))
+      .groupMapReduce(_._1)(_._2)(_ + _).toSeq.sortBy(_._1)
+      .map { case (w, f) => Word(w, f, split(w)) }
+
+  /** The char dictionary's words: one symbol per character. */
+  private def charWords(dicts: DataFrame*): Seq[Word] =
+    collectWords(dicts: _*)(_.map(_.toString).toVector)
+
+  /** The byte dictionary's words: one 2-hex-char symbol per byte. */
+  private def byteWords(dicts: DataFrame*): Seq[Word] =
+    collectWords(dicts: _*)(_.grouped(2).toVector)
+
+  /** `rounds` merge rounds over `words`, on the driver: each round's
+    * merge and the words after it. A round with no adjacent pair
+    * learns no merge and leaves the words unchanged. */
+  private def mergeTrain(s: SparkSession, words: Seq[Word], rounds: Int,
+      wordpiece: Boolean): Seq[(Option[Merge], Seq[Word])] =
+    (1 to rounds).scanLeft((Option.empty[Merge], words)) { case ((_, ws), _) =>
+      val best = bestMerge(s, ws, wordpiece)
+      (best, best.fold(ws)(m => ws.map(x => x.copy(syms = merge(x.syms, m)))))
+    }.tail
+
+  /** The round's argmax over adjacent pairs, each counted Σ f: BPE takes
+    * (pair_cnt desc, lft, rgt), WordPiece (score desc, lft, rgt). */
+  private def bestMerge(s: SparkSession, ws: Seq[Word],
+      wordpiece: Boolean): Option[Merge] = {
+    val pc = ws.flatMap(x => x.syms.zip(x.syms.tail).map(_ -> x.f))
+      .groupMapReduce(_._1)(_._2)(_ + _).toSeq
+    if (pc.isEmpty) None
+    else if (!wordpiece) Some(pc.map { case ((l, r), c) => Merge(l, r, c, None) }
+      .minBy(m => (-m.pairCnt, m.lft, m.rgt)))
+    else {
+      val cnt = ws.flatMap(x => x.syms.map(_ -> x.f)).groupMapReduce(_._1)(_._2)(_ + _)
+      val scores = wpScores(s, pc.map { case ((l, r), c) => (c, cnt(l), cnt(r)) })
+      Some(pc.zip(scores).map { case (((l, r), c), sc) => Merge(l, r, c, Some(sc)) }
+        .minBy(m => (-m.score.get, m.lft, m.rgt))(Ordering.Tuple3(
+          Ordering.Double.TotalOrdering, Ordering.String, Ordering.String)))
+    }
+  }
+
+  /** WordPiece's likelihood score (Schuster & Nakajima 2012; the
+    * PMI-shaped objective — merge the pair whose co-occurrence beats
+    * its parts' unigram mass, not the most frequent pair) per
+    * (c(ab), c(a), c(b)): round(ln c(ab) − ln c(a) − ln c(b), 6), each
+    * ln over the same exact integer in both engines. Evaluated by Spark
+    * over a LocalRelation, as [[Clustering.micro]] is: the projection
+    * folds, so no job runs, and the logs and the rounding stay Spark's
+    * own. */
+  private def wpScores(s: SparkSession, cands: Seq[(Long, Long, Long)]): Seq[Double] =
+    s.createDataFrame(cands).toDF("pair_cnt", "cl", "cr")
+      .select(round(log(col("pair_cnt").cast("double")) -
+        log(col("cl").cast("double")) - log(col("cr").cast("double")), 6)
+        .cast("double"))
+      .collect().map(_.getDouble(0)).toSeq
+
+  /** The greedy leftmost non-overlapping pass (subword-nmt's
+    * regex-replace semantics): scanning left to right, each (lft, rgt)
+    * occurrence merges unless the previous merge consumed its left
+    * symbol — under (a, a) the run 'aaaaa' becomes [aa, aa, a]. */
+  private def merge(syms: Vector[String], m: Merge): Vector[String] = {
+    val out = Vector.newBuilder[String]
+    var i = 0
+    while (i < syms.size) {
+      if (i + 1 < syms.size && syms(i) == m.lft && syms(i + 1) == m.rgt) {
+        out += m.lft + m.rgt
+        i += 2
+      } else {
+        out += syms(i)
+        i += 1
+      }
+    }
+    out.result()
+  }
+
+  /** Symbol instances across the dictionary (each word counted once). */
+  private def nSyms(ws: Seq[Word]): Long = ws.map(_.syms.size.toLong).sum
+
+  private val StepField = StructField("step", IntegerType, nullable = false)
+  private val NSymsField = StructField("n_syms_after", LongType, nullable = false)
+
+  /** Three BPE rounds over `words`: one (step, lft, rgt, pair_cnt,
+    * n_syms_after) row per learned merge. */
+  private def bpeReport(s: SparkSession, words: Seq[Word]): DataFrame =
+    Tables.driverRows(s, StructType(Seq(StepField, StructField("lft", StringType),
+        StructField("rgt", StringType), StructField("pair_cnt", LongType),
+        NSymsField)),
+      mergeTrain(s, words, 3, wordpiece = false).zipWithIndex.collect {
+        case ((Some(m), ws), k0) => Row(k0 + 1, m.lft, m.rgt, m.pairCnt, nSyms(ws))
+      }).orderBy("step")
+
+  /** Three WordPiece rounds over `words`: one (step, lft, rgt,
+    * pair_cnt, score) row per learned merge, each crossed with its
+    * round's 1-row n_syms_after frame as a broadcast. */
+  private def wpReport(s: SparkSession, words: Seq[Word]): DataFrame = {
+    def cross(best: Seq[Row], n: Seq[Row]): DataFrame =
+      Tables.driverRows(s, StructType(Seq(StepField, StructField("lft", StringType),
+          StructField("rgt", StringType), StructField("pair_cnt", LongType),
+          StructField("score", DoubleType))), best)
+        .crossJoin(broadcast(Tables.driverRows(s, StructType(Seq(NSymsField)), n)))
+    mergeTrain(s, words, 3, wordpiece = true).zipWithIndex.collect {
+      case ((Some(m), ws), k0) =>
+        cross(Seq(Row(k0 + 1, m.lft, m.rgt, m.pairCnt, m.score.get)),
+          Seq(Row(nSyms(ws))))
+    }.reduceOption(_.unionByName(_)).getOrElse(cross(Nil, Nil)).orderBy("step")
+  }
 
   // ---- PERSISTED tokenizer artifacts (IndexStore; the r16 lifecycle
   // extended to the trained-tokenizer family): the apply-side queries
@@ -1681,145 +1656,44 @@ object TextAnalysis {
   // SQL, so load == train is re-gated each round exactly like the ANN
   // artifacts. ----
 
-  /** The stored char-BPE segmentation (3 merges): w → unit count. */
-  private def bpeSegDurable(s: SparkSession, dir: String): DataFrame =
-    IndexStore.durableFrame(s, dir, "bpe_seg3") {
-      var cur = bpeSymbolsOf(Tables(s, dir, "documents"))
-      (1 to 3).foreach { _ => cur = bpeStep(cur)._2 }
-      cur.groupBy(col("w")).agg(count(lit(1)).as("n_units"))
+  /** The stored char segmentation after 3 merges, BPE's or
+    * WordPiece's: w → unit count. */
+  private def charSegDurable(s: SparkSession, dir: String, tag: String,
+      wordpiece: Boolean): DataFrame =
+    IndexStore.durableFrame(s, dir, tag) {
+      val ws = mergeTrain(s, charWords(wordDict(Tables(s, dir, "documents"))), 3,
+        wordpiece).last._2
+      Tables.driverRows(s, StructType(Seq(StructField("w", StringType, nullable = false),
+          StructField("n_units", LongType, nullable = false))),
+        ws.map(x => Row(x.w, x.syms.size.toLong)))
     }
+
+  /** The stored char-BPE segmentation (3 merges). */
+  private def bpeSegDurable(s: SparkSession, dir: String): DataFrame =
+    charSegDurable(s, dir, "bpe_seg3", wordpiece = false)
 
   /** The stored WordPiece segmentation (3 likelihood merges). */
   private def wpSegDurable(s: SparkSession, dir: String): DataFrame =
-    IndexStore.durableFrame(s, dir, "wp_seg3") {
-      var cur = bpeSymbolsOf(Tables(s, dir, "documents"))
-      (1 to 3).foreach { _ => cur = wordpieceStep(cur)._2 }
-      cur.groupBy(col("w")).agg(count(lit(1)).as("n_units"))
-    }
+    charSegDurable(s, dir, "wp_seg3", wordpiece = true)
 
   /** The stored byte-BPE segmentation, with the symbol-rebuilt hex
     * (the round-trip witness) persisted beside the unit count. */
   private def bpeBytesSegDurable(s: SparkSession, dir: String): DataFrame =
     IndexStore.durableFrame(s, dir, "bpe_bytes_seg3") {
-      var cur = bpeBytesSymbolsOf(Tables(s, dir, "documents"))
-      (1 to 3).foreach { _ => cur = bpeStep(cur)._2 }
-      cur.groupBy(col("w")).agg(count(lit(1)).as("n_units"),
-        expr("array_join(transform(array_sort(collect_list(struct(i, s)))," +
-          " x -> x.s), '')").as("rebuilt"))
+      val ws = mergeTrain(s, byteWords(bytesDict(Tables(s, dir, "documents"))), 3,
+        wordpiece = false).last._2
+      Tables.driverRows(s, StructType(Seq(StructField("w", StringType),
+          StructField("n_units", LongType, nullable = false),
+          StructField("rebuilt", StringType, nullable = false))),
+        ws.map(x => Row(x.w, x.syms.size.toLong, x.syms.mkString)))
     }
 
-  /** Frame-taking trainer: 3 merge rounds over `docs`, one output row
-    * per learned merge — ScaleProbe drives this on replicated corpora
+  /** Frame-taking trainer: one dictionary collect, then 3 merge rounds
+    * on the driver, one output row per learned merge — ScaleProbe drives this on replicated corpora
     * (same text, more docs → identical dict, so train wall must stay
     * FLAT past the dict-building scan). */
-  private[graft] def bpeTrainOn(docs: DataFrame): DataFrame = {
-    // round-0 symbols checkpointed: each round's best-pair broadcast
-    // AND its n_syms_after aggregate re-evaluated the full corpus
-    // tokenize scan through the lazy chain (6+ scans for 3 rounds)
-    var cur = bpeSymbolsOf(docs).localCheckpoint()
-    val rows = (1 to 3).map { k =>
-      val (best, next0) = bpeStep(cur)
-      val next = next0.localCheckpoint()
-      cur = next
-      best.select(lit(k).as("step"), col("lft"), col("rgt"),
-          col("pair_cnt"))
-        .crossJoin(broadcast(next.agg(count(lit(1)).as("n_syms_after"))))
-    }
-    rows.reduce(_.unionByName(_)).orderBy("step")
-  }
-
-  /** One BPE round over the symbol table (w, f, i, s): returns the
-    * 1-row best-pair frame and the post-merge symbol table. The best
-    * pair re-enters the plan as a broadcast 1-row cross join (the
-    * aggregate-row pattern), never through the driver. */
-  /** Evaluate INDEPENDENT eager steps (localCheckpoint chains) on
-    * concurrent driver threads — guide §2.6: actions are sequential
-    * only because the driver calls them sequentially, and the trainer
-    * loops spend roughly half their wall in per-job driver latency
-    * (~30 ms × ~5 jobs × rounds, measured via DevProfile). Each
-    * thunk's own jobs stay ordered inside its thread; the frames every
-    * thunk produces are deterministic (checkpoint of a deterministic
-    * plan), so concurrency changes WALL, never content. A fresh
-    * bounded pool per call — threads inherit the caller's thread-local
-    * job properties and nothing leaks past the join. */
-  private def inParallel[A](thunks: Seq[() => A]): Seq[A] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
-    try {
-      val futs = thunks.map { t =>
-        pool.submit(new java.util.concurrent.Callable[A] {
-          override def call(): A = t()
-        })
-      }
-      futs.map(_.get())
-    } finally pool.shutdown()
-  }
-
-  private def bpeStep(syms: DataFrame): (DataFrame, DataFrame) = {
-    val byPos = Window.partitionBy(col("w")).orderBy(col("i"))
-    val paired = syms.withColumn("r", lead(col("s"), 1).over(byPos))
-    val best = paired.filter(col("r").isNotNull)
-      .groupBy(col("s").as("lft"), col("r").as("rgt"))
-      .agg(sum(col("f")).as("pair_cnt"))
-      .orderBy(col("pair_cnt").desc, col("lft"), col("rgt"))
-      .limit(1)
-    (best, mergeApply(paired, best))
-  }
-
-  /** One WORDPIECE round: same pair counting and the SAME greedy
-    * merge pass as BPE, but the argmax maximizes the LIKELIHOOD score
-    * score(a,b) = ln count(ab) − ln count(a) − ln count(b) (Schuster
-    * & Nakajima 2012; the PMI-shaped objective — merge the pair whose
-    * co-occurrence beats its parts' unigram mass, not the most
-    * frequent pair). Each ln runs over the same exact integer in both
-    * engines and rounds to 6 dp before the comparison (the PMI/BM25
-    * discipline), ties break lexicographically. */
-  private def wordpieceStep(syms: DataFrame): (DataFrame, DataFrame) = {
-    val byPos = Window.partitionBy(col("w")).orderBy(col("i"))
-    val paired = syms.withColumn("r", lead(col("s"), 1).over(byPos))
-    val symCnt = syms.groupBy(col("s")).agg(sum(col("f")).as("cnt"))
-    val best = paired.filter(col("r").isNotNull)
-      .groupBy(col("s").as("lft"), col("r").as("rgt"))
-      .agg(sum(col("f")).as("pair_cnt"))
-      .join(symCnt.select(col("s").as("lft"), col("cnt").as("cl")), "lft")
-      .join(symCnt.select(col("s").as("rgt"), col("cnt").as("cr")), "rgt")
-      .withColumn("score",
-        round(log(col("pair_cnt").cast("double")) -
-          log(col("cl").cast("double")) - log(col("cr").cast("double")), 6)
-          .cast("double"))
-      .orderBy(col("score").desc, col("lft"), col("rgt"))
-      .limit(1)
-      .select(col("lft"), col("rgt"), col("pair_cnt"), col("score"))
-    (best, mergeApply(paired, best))
-  }
-
-  /** The shared greedy-leftmost merge pass: apply the 1-row `best`
-    * (lft, rgt, …) to the paired symbol table. LEFT join on true, not
-    * a crossJoin: if a round finds no adjacent pairs (every word
-    * already one symbol, or a degenerate corpus), `best` is empty and
-    * a crossJoin would silently EMPTY the symbol table — dropping the
-    * remaining rounds' rows and every document from the tokenize
-    * join. With the left join the rows survive with NULL lft/rgt,
-    * cand coalesces to false, and the table passes through unchanged
-    * while the round emits no merge row. */
-  private def mergeApply(paired: DataFrame, best: DataFrame): DataFrame = {
-    val byPos = Window.partitionBy(col("w")).orderBy(col("i"))
-    val run = byPos.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val flagged = paired
-      .join(broadcast(best.select(col("lft"), col("rgt"))), lit(true), "left")
-      .withColumn("cand", coalesce(col("r").isNotNull &&
-        col("s") === col("lft") && col("r") === col("rgt"), lit(false)))
-      // Last non-candidate position at-or-before this row: the origin
-      // of the current candidate run. Greedy-leftmost = merge at odd
-      // offsets from it (runs longer than 1 only arise when lft = rgt).
-      .withColumn("last_nc", max(when(!col("cand"), col("i"))).over(run))
-      .withColumn("m", col("cand") &&
-        (col("i") - coalesce(col("last_nc"), lit(0))) % 2 === 1)
-      .withColumn("consumed", coalesce(lag(col("m"), 1).over(byPos), lit(false)))
-    flagged.filter(!col("consumed"))
-      .withColumn("i2", row_number().over(byPos))
-      .select(col("w"), col("f"), col("i2").as("i"),
-        when(col("m"), concat(col("s"), col("r"))).otherwise(col("s")).as("s"))
-  }
+  private[graft] def bpeTrainOn(docs: DataFrame): DataFrame =
+    bpeReport(docs.sparkSession, charWords(wordDict(docs)))
 
   // ---- Unigram-LM tokenizer (Kudo 2018, the SentencePiece family) ----
   //
@@ -2115,8 +1989,8 @@ object TextAnalysis {
 
   /** Frame-taking trainer report — ScaleProbe drives this on
     * replicated corpora (identical text ⇒ identical dict ⇒ train wall
-    * must stay FLAT past the dict-building scan, the bpeTrainOn
-    * contract). */
+    * must stay FLAT past the dict-building scan, as [[bpeTrainOn]]'s
+    * does). */
   private[graft] def ulmTrainOn(docs: DataFrame): DataFrame = {
     val (v0, seg1, v1, seg2) = ulmChain(docs)
     ulmStats(seg1, v0, 1).unionByName(ulmStats(seg2, v1, 2))
@@ -2720,10 +2594,12 @@ object TextAnalysis {
       .toDF("doc_id", "n_bytes", "n_compressed", "ratio")
   }
 
-  /** DuckDB twin of one BPE round: CTE suffix `k` in, `s{k+1}` out —
-    * the same lead/argmax/run-origin/lag/renumber chain, windows
-    * keyed identically. */
-  /** The shared greedy-leftmost merge chain (the mergeApply twin):
+  /** The shared greedy-leftmost merge chain (the set-based twin of
+    * [[merge]]'s left-to-right scan): a candidate position merges iff
+    * its offset from the last non-candidate position before it is odd
+    * — within a run of consecutive candidates (only possible when
+    * lft = rgt, e.g. 'aaaa') that selects the 1st, 3rd, … exactly as
+    * the scan does, and isolated candidates always merge. It
     * applies the 1-row `b` best-pair CTE to the paired table `p`,
     * emitting the post-merge symbol table `sNext`. Scratch CTE names
     * derive from `p` so BPE and WordPiece chains can't collide. */
@@ -2750,6 +2626,9 @@ object TextAnalysis {
                 CASE WHEN m THEN s || r ELSE s END AS s
               FROM ${p}j WHERE NOT consumed)"""
 
+  /** DuckDB twin of one BPE round: CTE suffix `k` in, `s{k+1}` out —
+    * lead pairs, the (pair_cnt desc, lft, rgt) argmax, then the
+    * run-origin/lag/renumber merge chain, windows keyed by word. */
   private def bpeStepCtes(k: Int): String = s"""
       p$k AS (SELECT w, f, i, s,
                 lead(s) OVER (PARTITION BY w ORDER BY i) AS r
@@ -2761,7 +2640,7 @@ object TextAnalysis {
 
   /** One WordPiece round: same pair table, likelihood-score argmax
     * (each ln over the same exact integer, one 6-dp round on the
-    * combined expression — the wordpieceStep mirror), shared merge. */
+    * combined expression — the [[wpScores]] mirror), shared merge. */
   private def wpStepCtes(k: Int): String = s"""
       vp$k AS (SELECT w, f, i, s,
                 lead(s) OVER (PARTITION BY w ORDER BY i) AS r
@@ -2836,8 +2715,8 @@ object TextAnalysis {
 
   /** The 9-round operating-curve twin: both families' merge chains
     * unrolled to depth 9 off the SAME wd/s1 prefix (vs1 aliases s1 —
-    * one dictionary, as the Spark side shares the checkpointed
-    * round-0 symbols), fertility read dict-side at each budget. */
+    * one dictionary, as the Spark side runs both chains off one
+    * collected dictionary), fertility read dict-side at each budget. */
   private lazy val curveSql = {
     def rowAt(fam: String, k: Int, tbl: String) =
       s"""SELECT '$fam' AS family, $k AS merges,
@@ -3253,7 +3132,7 @@ object TextAnalysis {
 
   /** Byte-level dictionary + round-0 symbols: every GPT-2 pre-token,
     * keyed by its upper-hex UTF-8 byte rendering, one 2-hex-char
-    * symbol per byte — the [[bpeBytesSymbolsOf]] mirror. */
+    * symbol per byte — the [[bytesDict]] + [[byteWords]] mirror. */
   private lazy val bwdCte =
     s"""bwd AS (SELECT upper(hex(encode(word))) AS w, count(*) AS f FROM
                     (SELECT unnest(${gpt2PreTokensSql("text")}) AS word

@@ -1069,11 +1069,10 @@ class PlanSpec extends SparkSuite {
   }
 
   test("q_wordpiece_train reads only the materialized dict-bounded rounds") {
-    // each round consumes its symbol table three ways (pairs, unigram
-    // counts, merge), so the table localCheckpoints per round — the
-    // corpus is scanned once AT CONSTRUCTION and the report plan reads
-    // only the materialized frames; a parquet scan here means a round
-    // lost its checkpoint and the lineage re-expands combinatorially
+    // the rounds run on the driver off one dictionary collect AT
+    // CONSTRUCTION, so the report plan reads only the driver-built
+    // round frames; a parquet scan here means the report re-runs the
+    // corpus scan
     val p = plan("q_wordpiece_train")
     assert(!p.contains("Scan parquet"),
       s"report must not re-scan the corpus:\n$p")

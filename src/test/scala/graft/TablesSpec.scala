@@ -1,19 +1,15 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{BinaryType, StringType}
-
-import scala.jdk.CollectionConverters._
 
 /** The parquet resolver ([[Tables.parquet]]): a table's schema is
   * inferred once per session and input version, and every call still
@@ -32,40 +28,12 @@ class TablesSpec extends SparkSuite {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** The job group of each job started while `body` runs. Events reach
-    * listeners asynchronously, so a marker job closes the window: once
-    * the listener sees it, it has seen every job started before it. */
-  private def jobGroups(body: => Unit): Seq[String] = {
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        seen.add(Option(j.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("tables-spec", "resolve")
-      body
-      sc.setJobGroup("tables-spec-marker", "marker")
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains("tables-spec-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains("tables-spec-marker"), "the listener never saw the marker")
-      seen.asScala.toSeq.filter(_ == "tables-spec")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("a second resolve of the same table in one session starts no Spark job") {
     val dir = Files.createTempDirectory("graft_tables_jobs")
     writeTable(spark.range(100).toDF("id"), dir, "t")
-    val first = jobGroups(Tables(spark, dir.toString, "t"))
+    val (first, _) = jobsOf(Tables(spark, dir.toString, "t"))
     assert(first.nonEmpty, "the first resolve infers the schema")
-    val second = jobGroups(Tables(spark, dir.toString, "t"))
+    val (second, _) = jobsOf(Tables(spark, dir.toString, "t"))
     assert(second.isEmpty, s"the second resolve started ${second.size} job(s)")
   }
 

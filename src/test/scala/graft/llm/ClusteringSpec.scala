@@ -1,12 +1,7 @@
 package graft.llm
 
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
-
-import scala.jdk.CollectionConverters._
-
 import graft.SparkSuite
 import graft.core.MapReduce
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Per-row sequential model of one centered power round: each vector x
   * emits, per dimension j, (x_j·(x·v), x_j, x·v, x_j², 1) in BigInt; the
@@ -183,39 +178,10 @@ class ClusteringSpec extends SparkSuite {
     // parquet records (three per-round aggregates read it in six)
     val d = corpus(planted)
     Clustering.queries("q_embed_pca")(spark, d) // resolves the table
-    val jobs = new ConcurrentLinkedQueue[String]()
-    val constructStages = ConcurrentHashMap.newKeySet[Int]()
-    val scans = ConcurrentHashMap.newKeySet[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val g = Option(j.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-        if (g == "pca-construct") j.stageIds.foreach(constructStages.add(_))
-        jobs.add(g)
-      }
-      override def onStageCompleted(st: SparkListenerStageCompleted): Unit =
-        if (st.stageInfo.taskMetrics.inputMetrics.recordsRead > 0)
-          scans.add(st.stageInfo.stageId)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("pca-construct", "construct")
-      Clustering.queries("q_embed_pca")(spark, d)
-      sc.setJobGroup("pca-marker", "marker")
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!jobs.contains("pca-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(jobs.contains("pca-marker"), "the listener never saw the marker")
-      val read = scans.asScala.count(constructStages.contains)
-      assert(read == 1, s"$read stages read the corpus")
-      val n = jobs.asScala.count(_ == "pca-construct")
-      assert(n <= 2, s"construction ran $n jobs")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val (jobs, stages) = jobsOf(Clustering.queries("q_embed_pca")(spark, d))
+    val read = stages.count(_.taskMetrics.inputMetrics.recordsRead > 0)
+    assert(read == 1, s"$read stages read the corpus")
+    assert(jobs.size <= 2, s"construction ran ${jobs.size} jobs")
   }
 
   test("the Gram pass throws on long overflow instead of wrapping") {

@@ -108,6 +108,70 @@ class TextAnalysisSpec extends SparkSuite {
     assert(got == Seq((1L, 2L, 2L, 1.0)))
   }
 
+  /** A one-column documents table holding `docs` in a fresh dir. */
+  private def corpusOf(prefix: String, docs: String*): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    docs.zipWithIndex.map { case (t, i) => (i + 1L, t, "en", "src", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  test("WordPiece survives a pairless round: no merges learned, docs still tokenize") {
+    // "a b": both dict words are one character, so no round finds an
+    // adjacent pair — 0 train rows, and each word stays 1 unit: doc 1
+    // has 2 words, 2 units, 2 / 2 = 1.0 units per word.
+    val dir = corpusOf("wp0", "a b")
+    assert(TextAnalysis.queries("q_wordpiece_train")(spark, dir).count() == 0L)
+    val got = TextAnalysis.queries("q_wordpiece_tokenize")(spark, dir)
+      .as[(Long, Long, Long, Double)].collect().toSeq
+    assert(got == Seq((1L, 2L, 2L, 1.0)))
+  }
+
+  test("BPE merges an odd run greedily from the left") {
+    // Dict: aaaaa (f=1), 5 symbols.
+    //  round 1: (a,a) = 4 adjacent pairs · 1 → merge (a,a); the greedy
+    //    pass takes positions 1-2 and 3-4 and leaves the 5th:
+    //    [aa, aa, a], 3 symbols.
+    //  round 2: (aa,aa) = 1 and (aa,a) = 1 tie on pair_cnt; lft ties
+    //    too, and rgt "a" < "aa" → merge (aa,a) → [aa, aaa], 2 left.
+    //  round 3: only (aa,aaa) = 1 → [aaaaa], 1 left.
+    val dir = corpusOf("bpeodd", "aaaaa")
+    val got = TextAnalysis.queries("q_bpe_train")(spark, dir)
+      .as[(Int, String, String, Long, Long)].collect().toSeq
+    assert(got == Seq(
+      (1, "a", "a", 4L, 3L),
+      (2, "aa", "a", 1L, 2L),
+      (3, "aa", "aaa", 1L, 1L)))
+  }
+
+  test("BPE breaks a pair_cnt tie by (lft, rgt)") {
+    // Dict: ab (f=1), cd (f=1), 4 symbols.
+    //  round 1: (a,b) = 1 and (c,d) = 1 tie; lft "a" < "c" → merge
+    //    (a,b) → [ab], [c, d]; 3 symbols.
+    //  round 2: only (c,d) = 1 → [cd]; 2 symbols.
+    //  round 3: every word is one symbol — no pair, no row.
+    val dir = corpusOf("bpetie", "ab cd")
+    val got = TextAnalysis.queries("q_bpe_train")(spark, dir)
+      .as[(Int, String, String, Long, Long)].collect().toSeq
+    assert(got == Seq(
+      (1, "a", "b", 1L, 3L),
+      (2, "c", "d", 1L, 2L)))
+  }
+
+  test("each merge trainer runs at most 10 jobs over construct + collect") {
+    // one dictionary collect per shard (its exchanges run as jobs of
+    // their own) and one report collect; the WordPiece reports add a
+    // broadcast per round
+    val sf = "/root/testdata/sf0.001"
+    for (q <- Seq("q_bpe_train", "q_wordpiece_train", "q_bpe_bytes_train",
+        "q_tokenizer_curve", "q_bpe_merge_train", "q_wordpiece_merge_train")) {
+      TextAnalysis.queries(q)(spark, sf).collect() // warm: resolves the table
+      val (jobs, _) = jobsOf(TextAnalysis.queries(q)(spark, sf).collect())
+      assert(jobs.size <= 10, s"$q ran ${jobs.size} jobs")
+    }
+  }
+
   test("q_bpe_tokenize applies the trained merges: hand corpus collapses to 1 unit/word") {
     // After the three merges of the q_bpe_train test both dict words
     // segment to a single unit, so every doc word costs exactly 1.
