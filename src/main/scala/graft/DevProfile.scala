@@ -42,22 +42,32 @@ object DevProfile {
       }
     }
     spark.sparkContext.addSparkListener(listener)
+    // Listener events arrive asynchronously: let the bus drain before
+    // the counters are reset or read, so no rep's late events land in
+    // another rep's figures.
+    def drain(): Unit = Thread.sleep(300)
 
     for (name <- args.drop(1)) {
       // warm rep first so codegen compile does not drown the signal
       SparkEntry.queries(name)(spark, sfDir).count()
       spark.catalog.clearCache()
+      drain()
       stages.clear(); jobs = 0
       val t0 = System.nanoTime()
       val n = SparkEntry.queries(name)(spark, sfDir).count()
       val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let the listener bus drain
+      drain()
       val sts = stages.values.toSeq
-      val wall = sts.map(s => (s.completed - s.submitted).max(0)).sum
+      // a stage's wall counts only when both its submit and its
+      // completion were seen in this rep
+      def wallOf(s: St): Long =
+        if (s.submitted > 0 && s.completed > 0) (s.completed - s.submitted).max(0)
+        else 0
+      val wall = sts.map(wallOf).sum
       println(f"[devprofile] $name rows=$n sec=$dt%.2f jobs=$jobs " +
         f"stages=${sts.size} stageWallSum=${wall}ms")
-      sts.sortBy(s => -(s.completed - s.submitted)).take(12).foreach { s =>
-        println(f"  stage ${s.completed - s.submitted}%5dms tasks=${s.nTasks}%3d " +
+      sts.sortBy(s => -wallOf(s)).take(12).foreach { s =>
+        println(f"  stage ${wallOf(s)}%5dms tasks=${s.nTasks}%3d " +
           f"taskSum=${s.taskMs}%5dms cpu=${s.cpuMs}%5dms gc=${s.gcMs}%4dms " +
           f"deser=${s.deserMs}%4dms  ${s.name.take(60)}")
       }

@@ -812,84 +812,6 @@ object ScaleProbe {
       docs.unpersist(false)
     }
 
-    // PageRank probe: N× the clickstream with SHIFTED user ids — every
-    // per-user transition sequence replicates, so each edge weight
-    // scales exactly ×N while the graph (nodes, edges) stays fixed.
-    // floor(r·Nw / (N·ow)) = floor(r·w / ow), so all three iterations
-    // must return BIT-IDENTICAL ranks at every multiplier (the PCA
-    // determinism echo) — any drift means the integer chain leaked a
-    // scale dependence. Wall must track the one event-scale window
-    // pass; the iterations run on V-sized frames whatever N is.
-    if (want("pagerank"))
-    locally {
-      val ev = Tables.events(spark, sfDir)
-        .select(col("user_id"), col("ts"), col("event_id"), col("props"))
-        .persist()
-      val nEv = ev.count()
-      val stride = ev.agg(max(col("user_id"))).head().getLong(0) + 1L
-      def timedPr(mult: Int): Unit = {
-        val scaled = ev
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("user_id"), col("ts"), col("event_id"), col("props"))
-          .select((col("user_id") + col("i") * lit(stride)).as("user_id"),
-            col("ts"), col("event_id"), col("props"))
-        val t0 = System.nanoTime()
-        val (_, _, _, ranks) =
-          graft.ops.Analytics.pagerankFramesOn(scaled)
-        val r = ranks.last
-          .agg(count(lit(1)).as("n"), sum(col("rank")).as("mass"),
-            expr("bit_xor(xxhash64(node, rank))").as("h"))
-          .head()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"pagerank_${mult}x","events":${nEv * mult},"nodes":${r.getLong(0)},"mass":${r.getLong(1)},"ranks_hash":${r.getLong(2)},"sec":$dt%.2f}""")
-      }
-      timedPr(1)
-      timedPr(10)
-      timedPr(100)
-      ev.unpersist(false)
-    }
-
-    // HITS probe: same replicated clickstream. At ×100 the sf0.1
-    // stream carries ~60M transitions — ~7× past the OLD int64
-    // Σw·score cliff (~9M) that the DECIMAL(38,0) product routing
-    // removed. A silent 64-bit wrap would surface as negative
-    // normalized scores; the probe prints min(score) and the 1-norm
-    // sums (each ≈ SCALE = 1e12 by the two-step floor normalization)
-    // so the overflow-free claim is a printed number, not a comment.
-    // Unlike PageRank's flow = (r·Nw) div (N·ow) — where N cancels
-    // BEFORE the floor — HITS normalizes by (N·tot) div SCALE, so
-    // exact rank invariance across multipliers is not algebraic;
-    // the gate here is sign/norm sanity + wall tracking the one
-    // event-scale window pass.
-    if (want("hits"))
-    locally {
-      val ev = Tables.events(spark, sfDir)
-        .select(col("user_id"), col("ts"), col("event_id"), col("props"))
-        .persist()
-      val nEv = ev.count()
-      val stride = ev.agg(max(col("user_id"))).head().getLong(0) + 1L
-      def timedHits(mult: Int): Unit = {
-        val scaled = ev
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("user_id"), col("ts"), col("event_id"), col("props"))
-          .select((col("user_id") + col("i") * lit(stride)).as("user_id"),
-            col("ts"), col("event_id"), col("props"))
-        val t0 = System.nanoTime()
-        val r = graft.ops.Analytics.hitsOn(scaled)
-          .agg(count(lit(1)).as("n"),
-            least(min(col("hub")), min(col("authority"))).as("mn"),
-            sum(col("hub")).as("hsum"),
-            sum(col("authority")).as("asum"))
-          .head()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"hits_${mult}x","events":${nEv * mult},"nodes":${r.getLong(0)},"min_score":${r.getLong(1)},"hub_norm":${r.getLong(2)},"auth_norm":${r.getLong(3)},"sec":$dt%.2f}""")
-      }
-      timedHits(1)
-      timedHits(10)
-      timedHits(100)
-      ev.unpersist(false)
-    }
-
     // WARC funnel probe: N× the crawl (same text, shifted ids) through
     // synthesize→gunzip→URI-extract→canonicalize→funnel. Replicas share
     // their md5, so fetched/decoded/min_length must scale EXACTLY ×N

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.Tables
+import graft.core.Fixpoint
 import graft.functions.GraftFunctions
 import graft.ops.Q
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -463,40 +464,22 @@ object Dedup {
     * keeper survives per cluster. Only docs appearing in `pairs`
     * participate (singletons need no election).
     *
-    * Algorithm: min-label propagation to fixpoint — each iteration
-    * joins labels across edges and takes the min; labels only decrease,
-    * so `changed == 0` is convergence. Iterations are bounded by the
-    * component diameter, and near-dup components are dense (clique-ish
-    * around a template), so 3-5 rounds is typical at any SF. The
-    * per-iteration cost is one shuffle join on the edge list; when
-    * components CHAIN (diameter ≫ rounds budget) use
+    * Algorithm: min-label propagation to fixpoint ([[Fixpoint]]) —
+    * each round joins labels across edges and takes the min; labels
+    * only decrease, so `changed == 0` is convergence. Rounds are
+    * bounded by the component diameter, and near-dup components are
+    * dense (clique-ish around a template), so 3-5 rounds is typical at
+    * any SF. The per-round cost is one shuffle join on the edge list;
+    * when components CHAIN (diameter ≫ rounds budget) use
     * [[keepersBigStar]] — O(log²) rounds on any topology, equivalence
-    * property-tested. The convergence check is a scalar `count` —
-    * control flow, not data collection.
-    *
-    * NOTE: tunes `spark.sql.shuffle.partitions` for the loop's graph-
-    * sized exchanges and restores it on exit — session-global state, so
-    * don't run concurrent queries on the same SparkSession while a
-    * keepers loop is in flight (the driver harnesses are sequential). */
+    * property-tested. */
   def keepers(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    val spark = pairs.sparkSession
     // Materialize the (possibly expensive) upstream pair pipeline ONCE:
-    // the edge build, the partition sizing, and every loop iteration all
-    // read this cache instead of re-evaluating the verify-join tree.
+    // the edge build and every round read this cache instead of
+    // re-evaluating the verify-join tree.
     val p = pairs.select(col("d1"), col("d2"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nPairs = p.count() // runs the pair pipeline at full parallelism
-    // Size the loop's exchanges to the GRAPH, not the corpus: near-dup
-    // edge lists are orders of magnitude smaller than their corpus, and
-    // each iteration is several scheduled stages — at ~500k edges per
-    // partition a small graph converges in single-task stages while a
-    // billion-edge graph still spreads. Set BEFORE any edge
-    // materialization so the symmetrize/distinct shuffle is graph-sized
-    // too. Restored after the loop.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val parts = math.min(400L, 2 * nPairs / 500000L + 1).toInt
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    val finalLabels = try {
+    p.count() // runs the pair pipeline at full parallelism
     // Symmetrize in ONE pass over the cached pairs — explode of a
     // 2-struct array, not a union of two scans. NO distinct: the pair
     // set is already unique per (d1,d2), and the loop's min-aggregate
@@ -507,46 +490,36 @@ object Dedup {
         struct(col("d2").as("src"), col("d1").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // localCheckpoint CUTS LINEAGE each round — every iteration
-    // references the previous labels several times, so without the cut
-    // the logical plan doubles per round (exponential analyze/optimize
-    // cost, then OOM around diameter ~8). On a cluster use
-    // `checkpoint` to reliable storage for fault tolerance instead.
-    var labels = edges.select(col("src").as("doc")).distinct()
+    val labels0 = edges.select(col("src").as("doc")).distinct()
       .withColumn("label", col("doc"))
       .localCheckpoint(true) // eager — also materializes the edge cache
     p.unpersist(false) // edges are cached; the raw pair set is dead now
-    var iters = 0
-    var done = false
-    while (!done && iters < maxIters) {
-      // min over self-label and every neighbor's label; carry the old
-      // label through the aggregate so convergence is read from the
-      // ALREADY-CHECKPOINTED result — one materializing action per
-      // round, not a second recompute-and-count pass.
-      val viaEdges = edges.join(labels, col("dst") === col("doc"))
-        .select(col("src").as("doc"), col("label"), lit(null).cast("long").as("old"))
-      val next = labels
-        .select(col("doc"), col("label"), col("label").as("old"))
-        .union(viaEdges)
-        .groupBy("doc")
-        .agg(min(col("label")).as("label"), min(col("old")).as("old"))
-        .localCheckpoint(true)
-      val changed = next.filter(col("label") < col("old")).count() // cached scan
-      labels = next.select(col("doc"), col("label"))
-      done = changed == 0
-      iters += 1
-    }
+    // min over self-label and every neighbor's label; carry the old
+    // label through the aggregate so convergence is read from the
+    // ALREADY-CHECKPOINTED result — one materializing action per
+    // round, not a second recompute-and-count pass.
+    val fp = Fixpoint.iterate(labels0, start = -1L, cap = maxIters)(
+      step = state => {
+        val labels = state.select(col("doc"), col("label"))
+        val viaEdges = edges.join(labels, col("dst") === col("doc"))
+          .select(col("src").as("doc"), col("label"),
+            lit(null).cast("long").as("old"))
+        labels.select(col("doc"), col("label"), col("label").as("old"))
+          .union(viaEdges)
+          .groupBy("doc")
+          .agg(min(col("label")).as("label"), min(col("old")).as("old"))
+      },
+      measure = (_, next) => next.filter(col("label") < col("old")).count(),
+      done = (_, changed) => changed == 0)
+    edges.unpersist(false) // labels live in checkpoint blocks, not this cache
     // Unconverged labels are silently WRONG (pairs beyond maxIters hops
     // keep distinct keepers) — refuse to return them. High-diameter
     // graphs need a larger budget or the large-star/small-star variant.
-    if (!done) { edges.unpersist(false); throw new IllegalStateException(
+    if (!fp.converged) throw new IllegalStateException(
       s"keepers: not converged after $maxIters iterations — component " +
         "diameter exceeds the budget; raise maxIters (propagation covers " +
-        "one hop per round) or switch to large-star/small-star") }
-    edges.unpersist(false) // labels live in checkpoint blocks, not this cache
-    labels // each round was eagerly checkpointed — safe past the conf reset
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    finalLabels.select(col("doc").as("doc_id"), col("label").as("keeper"))
+        "one hop per round) or switch to large-star/small-star")
+    fp.state.select(col("doc").as("doc_id"), col("label").as("keeper"))
   }
 
   /** All-pairs intersection counts via the distinct-shingle self-join —
@@ -614,7 +587,7 @@ object Dedup {
     val selfNodes = pairs.filter(col("d1") === col("d2"))
       .select(col("d1").as("doc_id")).distinct()
       .localCheckpoint(true)
-    var edges = pairs
+    val edges0 = pairs
       .select(greatest(col("d1"), col("d2")).as("u"),
         least(col("d1"), col("d2")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
@@ -624,41 +597,37 @@ object Dedup {
       val r = e.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    var sig = signature(edges)
-    var done = false
-    var iters = 0
-    while (!done && iters < maxIters) {
-      // large-star over undirected neighborhoods; emitted (bigger
-      // neighbor, closed-neighborhood min) pairs are normalized by
-      // construction (v > u ≥ m).
-      val nbrs = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-      val lsMin = nbrs.groupBy("u")
-        .agg(min(col("v")).as("mv"))
-        .select(col("u"), least(col("mv"), col("u")).as("m"))
-      val ls = nbrs.filter(col("v") > col("u"))
-        .join(lsMin, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-        .localCheckpoint(true)
-      // small-star over the downward edges: everything in u's closed
-      // in-neighborhood re-points at its min.
-      val ssMin = ls.groupBy("u").agg(min(col("v")).as("m"))
-      val withMin = ls.join(ssMin, "u")
-      val ss = withMin.select(col("v").as("n"), col("m"))
-        .union(withMin.select(col("u").as("n"), col("m")))
-        .filter(col("n") =!= col("m"))
-        .select(greatest(col("n"), col("m")).as("u"),
-          least(col("n"), col("m")).as("v"))
-        .distinct()
-        .localCheckpoint(true)
-      val nextSig = signature(ss)
-      done = nextSig == sig
-      sig = nextSig
-      edges = ss
-      iters += 1
-    }
-    if (!done) throw new IllegalStateException(
+    val fp = Fixpoint.iterate(edges0, start = signature(edges0),
+        cap = maxIters)(
+      step = edges => {
+        // large-star over undirected neighborhoods; emitted (bigger
+        // neighbor, closed-neighborhood min) pairs are normalized by
+        // construction (v > u ≥ m).
+        val nbrs = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
+        val lsMin = nbrs.groupBy("u")
+          .agg(min(col("v")).as("mv"))
+          .select(col("u"), least(col("mv"), col("u")).as("m"))
+        val ls = nbrs.filter(col("v") > col("u"))
+          .join(lsMin, "u")
+          .select(col("v").as("u"), col("m").as("v"))
+          .filter(col("u") =!= col("v")).distinct()
+          .localCheckpoint(true)
+        // small-star over the downward edges: everything in u's closed
+        // in-neighborhood re-points at its min.
+        val ssMin = ls.groupBy("u").agg(min(col("v")).as("m"))
+        val withMin = ls.join(ssMin, "u")
+        withMin.select(col("v").as("n"), col("m"))
+          .union(withMin.select(col("u").as("n"), col("m")))
+          .filter(col("n") =!= col("m"))
+          .select(greatest(col("n"), col("m")).as("u"),
+            least(col("n"), col("m")).as("v"))
+          .distinct()
+      },
+      measure = (_, next) => signature(next),
+      done = _ == _)
+    if (!fp.converged) throw new IllegalStateException(
       s"keepersBigStar: not converged after $maxIters rounds")
+    val edges = fp.state
     val core = edges.select(col("u").as("doc_id"), col("v").as("keeper"))
       .union(edges.select(col("v"), col("v")).distinct())
       .distinct()
@@ -1357,32 +1326,23 @@ object Dedup {
     // invalidation: the post-delete corpus has a NEW IndexStore
     // content fingerprint, so every dependent artifact is
     // structurally missing and rebuilds (IndexStoreSpec pins this).
-    // Scale shape: the pair pipeline runs ONCE (persisted), both
-    // keeper elections are the CC loop over pair-sized frames, and
+    // Scale shape: the pair list loads from the persisted artifact,
+    // both keeper elections are the CC loop over pair-sized frames, and
     // the census is two keeper-keyed aggregates.
     "q_forget_docs" -> ((s, dir) => {
       val pairs = jaccardPairsDurable(s, dir)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      pairs.count()
       val before = keepers(pairs).withColumnRenamed("keeper", "kb")
       val after = keepers(pairs
           .filter(col("d1") % 17 =!= 0 && col("d2") % 17 =!= 0))
         .withColumnRenamed("keeper", "ka")
-      pairs.unpersist(false)
       forgetCensus(before, after)
     }),
 
     // Same clusters via large-star/small-star contraction — the
     // diameter-proof path, oracle-gated against the SAME recursive-CTE
     // transitive closure as q_dedup_cluster (both must agree exactly).
-    "q_dedup_cluster_bigstar" -> ((s, dir) => {
-      val pairs = jaccardPairsDurable(s, dir)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      pairs.count()
-      val result = keepersBigStar(pairs)
-      pairs.unpersist(false)
-      result.orderBy("doc_id")
-    }),
+    "q_dedup_cluster_bigstar" -> ((s, dir) =>
+      keepersBigStar(jaccardPairsDurable(s, dir)).orderBy("doc_id")),
 
     // MinHash + LSH banding (Broder, "On the resemblance and
     // containment of documents", 1997; banding per Leskovec/Rajaraman/

@@ -1,7 +1,8 @@
 package graft.ops
 
 import graft.{Num, Tables}
-import org.apache.spark.sql.DataFrame
+import graft.core.Fixpoint
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -361,8 +362,7 @@ object Analytics {
     // sum wrapped silently while DuckDB errored — the engines now
     // agree far past any realistic graph). Normalized scores are
     // ≤ SCALE by construction, so they cast back to BIGINT losslessly.
-    "q_hits" -> ((s, dir) =>
-      hitsOn(Tables.events(s, dir), Some((s, dir)))),
+    "q_hits" -> ((s, dir) => hits(s, dir)),
 
     // PERSONALIZED PageRank (TrustRank shape): the teleport vector
     // concentrates on a trusted seed set (node % 10 == 0) instead of
@@ -371,42 +371,10 @@ object Analytics {
     // dangling mass teleports back to the seeds too. Same exact
     // integer chain and the same checkpointed graph census; only the
     // teleport terms change, so the twin mirrors it CASE for CASE.
-    "q_pagerank_seeded" -> ((s, dir) => {
-      val (nodes0, edges, outw) =
-        clickGraph(Tables.events(s, dir), Some((s, dir)))
-      val nodes = nodes0.withColumn("seed", col("node") % 10 === 0)
-      val nsDf = nodes
-        .agg(sum(when(col("seed"), lit(1L)).otherwise(lit(0L))).as("ns"))
-        .withColumn("sbase",
-          expr("case when ns = 0 then cast(0 as bigint) " +
-            "else 1000000000000 div ns end"))
-        .localCheckpoint(true)
-      val r0 = nodes.crossJoin(nsDf).select(col("node"), col("seed"),
-        expr("case when seed then sbase else cast(0 as bigint) end")
-          .as("rank"))
-      val r3 = (1 to 3).foldLeft(r0) { case (r, _) =>
-        val contrib = edges
-          .join(r.select(col("node").as("src"), col("rank")), Seq("src"))
-          .join(outw, Seq("src"))
-          .select(col("dst").as("node"),
-            expr("(rank * w) div ow").as("flow"))
-          .groupBy(col("node")).agg(sum(col("flow")).as("inflow"))
-        val dang = r.join(outw, r("node") === outw("src"), "left_anti")
-          .agg(coalesce(sum(col("rank")), lit(0L)).as("dm"))
-          .crossJoin(nsDf)
-          .select(expr("case when ns = 0 then cast(0 as bigint) " +
-            "else dm div ns end").as("dshare"))
-        nodes.join(contrib, Seq("node"), "left")
-          .crossJoin(dang).crossJoin(nsDf)
-          .select(col("node"), col("seed"), expr(
-            "(15 * (case when seed then sbase else cast(0 as bigint) " +
-              "end) + 85 * (coalesce(inflow, 0) + (case when seed " +
-              "then dshare else cast(0 as bigint) end))) div 100")
-            .as("rank"))
-      }
-      r3.select(col("node"), col("seed").as("is_seed"), col("rank"))
-        .orderBy(col("rank").desc, col("node"))
-    }),
+    "q_pagerank_seeded" -> ((s, dir) =>
+      seededRanks(s, dir, col("node") % 10 === 0)
+        .select(col("node"), col("seed").as("is_seed"), col("rank"))
+        .orderBy(col("rank").desc, col("node"))),
 
     // PageRank mass ledger — per iteration the total rank mass and
     // the share parked on dangling nodes. Mass is conserved up to
@@ -427,8 +395,7 @@ object Analytics {
     }),
 
     // PageRank to CONVERGENCE — see [[pagerankConverged]].
-    "q_pagerank_converged" -> ((s, dir) =>
-      pagerankConverged(Tables.events(s, dir), Some((s, dir)))),
+    "q_pagerank_converged" -> ((s, dir) => pagerankConverged(s, dir)),
 
     // Snapshot DIFF census — the change-data-feed audit beside
     // q_merge_upsert's MERGE: given two table versions, report per
@@ -570,38 +537,23 @@ object Analytics {
         (col("off") + col("rn") - 1L).as("gid"))
   }
 
-  /** The PageRank stage shared by the rank row and the mass ledger:
-    * clickstream → edge census → three exact-integer damped
-    * iterations. Returns (nodes, edges, out-weights, ranks r0..r3).
-    * The edge census is localCheckpoint-ed (eager): it is V²-bounded
-    * — the transition ALPHABET, not the event stream — and every
-    * iteration re-reads it, so the one event-scale window pass must
-    * run exactly once (the q_dedup_cluster lineage-cut pattern). */
-  private def pagerankFrames(s: org.apache.spark.sql.SparkSession,
-      dir: String): (DataFrame, DataFrame, DataFrame, Seq[DataFrame]) =
-    pagerankFramesOn(Tables.events(s, dir), Some((s, dir)))
-
   /** The clickstream transition graph shared by the PageRank family:
     * ONE event-scale window pass (lag over the per-user session
     * order) collapsed into the checkpointed V²-bounded edge census,
-    * its node set, and per-source out-weights. */
-  private def clickGraph(events: DataFrame,
-      memoKey: Option[(org.apache.spark.sql.SparkSession, String)] = None)
+    * its node set, and per-source out-weights. The census is the
+    * transition ALPHABET, not the event stream, and every round of the
+    * five link-analysis queries re-reads it, so the event-scale pass
+    * runs once per session: the three frames live in the
+    * standing-index memo (`click_edges`, `click_nodes`, `click_outw`),
+    * the same in-session lifecycle as the ANN graph family — on a
+    * cluster the transition census IS the persisted table every rank
+    * query walks. */
+  private def clickGraph(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    // r20: the five registered link-analysis queries (q_pagerank,
-    // _seeded, _mass, _converged, q_hits) each rebuilt this census —
-    // the one event-scale window pass plus three checkpoints, ~5× per
-    // bench pass. With memoKey set (the registered (session, dir)
-    // paths) the three frames live in the standing-index memo, the
-    // same in-session lifecycle as the ANN graph family: on a cluster
-    // the transition census IS the persisted table every rank query
-    // walks. Frame-taking callers (ScaleProbe's replicated streams)
-    // pass None and build fresh.
-    def memo(tag: String)(b: => DataFrame): DataFrame = memoKey match {
-      case Some((s, dir)) => graft.llm.Similarity.standing(s, dir, tag)(b)
-      case None => b
-    }
-    lazy val edges0 = {
+    def memo(tag: String)(b: => DataFrame): DataFrame =
+      graft.llm.Similarity.standing(s, dir, tag)(b)
+    val edges = memo("click_edges") {
+      val events = Tables.events(s, dir)
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       // Explicit user_id repartition at fan width (§2.5): the fixture's
@@ -610,7 +562,7 @@ object Analytics {
       // a user-specified width is AQE-exempt and satisfies the window's
       // clustering, so the whole pass runs wide with no extra exchange.
       val wide = {
-        val n = graft.Tables.fanWidth(events.sparkSession)
+        val n = Tables.fanWidth(s)
         if (n <= 1) events else events.repartition(n, col("user_id"))
       }
       wide
@@ -623,7 +575,6 @@ object Analytics {
         .agg(count(lit(1)).as("w"))
         .localCheckpoint(true)
     }
-    val edges = memo("click_edges")(edges0)
     val nodes = memo("click_nodes") {
       edges.select(col("src").as("node"))
         .unionAll(edges.select(col("dst").as("node"))).distinct()
@@ -636,55 +587,83 @@ object Analytics {
     (nodes, edges, outw)
   }
 
-  /** Frame-taking form — ScaleProbe drives this on replicated event
-    * streams (replication multiplies every edge weight by N and
-    * floor(r·Nw / N·ow) = floor(r·w / ow), so the ranks must come
-    * back BIT-IDENTICAL at any multiplier — the PCA-probe
-    * determinism-echo pattern). */
-  private[graft] def pagerankFramesOn(events: DataFrame,
-      memoKey: Option[(org.apache.spark.sql.SparkSession, String)] = None)
-      : (DataFrame, DataFrame, DataFrame, Seq[DataFrame]) = {
-    val scale = 1000000000000L // 1e12 rank units
-    val (nodes, edges, outw) = clickGraph(events, memoKey)
-    // 1-row frames: node count and the uniform base share — joined in
-    // by a broadcast cross join, never collected
-    val nnDf = nodes.agg(count(lit(1)).as("nn"))
-      // CASE-guarded: a degenerate corpus with no transitions has
-      // nn = 0 and ANSI integral divide would raise at build time
-      .withColumn("base",
-        expr(s"case when nn = 0 then cast(0 as bigint) " +
-          s"else $scale div nn end"))
-      .localCheckpoint(true)
-    val r0 = nodes.crossJoin(nnDf).select(col("node"),
-      col("base").as("rank"))
-    val ranks = (1 to 3).scanLeft(r0) { case (r, _) =>
-      prRound(nodes, edges, outw, nnDf, r)
-    }
-    (nodes, edges, outw, ranks)
-  }
+  /** Rank units: every PageRank/HITS score vector sums to ~1e12. */
+  private val RankScale = 1000000000000L
 
-  /** ONE damped exact-integer PageRank round (shared by the fixed
-    * 3-iteration family and the iterate-until-ε loop): per-edge flow
-    * (rank·w) div ow, dangling mass redistributed uniformly, damping
-    * (15·base + 85·(inflow + dshare)) div 100 — all BIGINT floors. */
-  private def prRound(nodes: DataFrame, edges: DataFrame,
-      outw: DataFrame, nnDf: DataFrame, r: DataFrame): DataFrame = {
+  /** The 1-row (n, base) frame of the rank family: `n`, an aggregate
+    * over `nodes` (the teleport set's size), and the teleport base
+    * RankScale div n — joined in by a broadcast cross join, never
+    * collected. CASE-guarded: a degenerate corpus with no transitions
+    * has n = 0, and ANSI integral divide would raise at build time. */
+  private def rankBase(nodes: DataFrame, n: Column): DataFrame =
+    nodes.agg(n.as("n"))
+      .withColumn("base", expr("case when n = 0 then cast(0 as bigint) " +
+        s"else $RankScale div n end"))
+      .localCheckpoint(true)
+
+  /** Round-0 ranks: `nodes` plus each node's teleport `share`. */
+  private def rank0(nodes: DataFrame, base: DataFrame,
+      share: String): DataFrame =
+    nodes.crossJoin(base)
+      .select(nodes.columns.map(col) :+ expr(share).as("rank"): _*)
+
+  /** ONE damped exact-integer PageRank round, shared by every rank
+    * query: per-edge flow (rank·w) div ow, the dangling mass split
+    * dm div n, damping (15·share + 85·(inflow + dshare)) div 100 — all
+    * BIGINT floors. `share` (each node's teleport term) and `receives`
+    * (whether it takes a dangling share) are SQL over `nodes` ⋈ `base`:
+    * uniform PageRank passes ("base", "true") with n = every node, the
+    * seeded variant (seed ? base : 0, "seed") with n = the seeds. The
+    * result keeps the columns of `nodes` and adds `rank`. */
+  private def prRound(nodes: DataFrame, edges: DataFrame, outw: DataFrame,
+      base: DataFrame, share: String, receives: String)(
+      r: DataFrame): DataFrame = {
     val contrib = edges
-      .join(r.withColumnRenamed("node", "src"), Seq("src"))
+      .join(r.select(col("node").as("src"), col("rank")), Seq("src"))
       .join(outw, Seq("src"))
       .select(col("dst").as("node"),
         expr("(rank * w) div ow").as("flow"))
       .groupBy(col("node")).agg(sum(col("flow")).as("inflow"))
     val dang = r.join(outw, r("node") === outw("src"), "left_anti")
       .agg(coalesce(sum(col("rank")), lit(0L)).as("dm"))
-      .crossJoin(nnDf)
-      .select(expr("case when nn = 0 then cast(0 as bigint) " +
-        "else dm div nn end").as("dshare"))
+      .crossJoin(base)
+      .select(expr("case when n = 0 then cast(0 as bigint) " +
+        "else dm div n end").as("dshare"))
     nodes.join(contrib, Seq("node"), "left")
-      .crossJoin(dang).crossJoin(nnDf)
-      .select(col("node"), expr(
-        "(15 * base + 85 * (coalesce(inflow, 0L) + dshare)) div 100")
-        .as("rank"))
+      .crossJoin(dang).crossJoin(base)
+      .select(nodes.columns.map(col) :+ expr(
+        s"(15 * ($share) + 85 * (coalesce(inflow, 0L) + (case when " +
+          s"$receives then dshare else cast(0 as bigint) end))) div 100")
+        .as("rank"): _*)
+  }
+
+  /** The PageRank stage shared by the rank row and the mass ledger:
+    * the click graph → three exact-integer damped uniform rounds.
+    * Returns (nodes, edges, out-weights, ranks r0..r3). */
+  private def pagerankFrames(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame, Seq[DataFrame]) = {
+    val (nodes, edges, outw) = clickGraph(s, dir)
+    val base = rankBase(nodes, count(lit(1)))
+    val ranks = (1 to 3).scanLeft(rank0(nodes, base, "base")) {
+      case (r, _) => prRound(nodes, edges, outw, base, "base", "true")(r)
+    }
+    (nodes, edges, outw, ranks)
+  }
+
+  /** Personalized PageRank (body of q_pagerank_seeded): three damped
+    * rounds whose teleport share and dangling mass go to the nodes
+    * where `seed` holds, split n = #seeds ways. Returns (node, seed,
+    * rank); with every node a seed it is q_pagerank's rank vector. */
+  private[graft] def seededRanks(s: SparkSession, dir: String,
+      seed: Column): DataFrame = {
+    val (nodes0, edges, outw) = clickGraph(s, dir)
+    val nodes = nodes0.withColumn("seed", seed)
+    val base = rankBase(nodes,
+      sum(when(col("seed"), lit(1L)).otherwise(lit(0L))))
+    val share = "case when seed then base else cast(0 as bigint) end"
+    (1 to 3).foldLeft(rank0(nodes, base, share)) { case (r, _) =>
+      prRound(nodes, edges, outw, base, share, "seed")(r)
+    }
   }
 
   /** Iteration cap and ε of the CONVERGED PageRank row — shared by the
@@ -696,71 +675,47 @@ object Analytics {
   private[graft] val PrCap = 40
 
   /** PageRank to CONVERGENCE — the production form of the fixed-round
-    * family: iterate [[prRound]] until the L1 residual Σ|rᵢ − rᵢ₋₁|
-    * drops to ε (or the cap), then report every node's converged rank
-    * WITH the executed round count and the final residual. Loop
-    * discipline = the CC keeper election (Dedup.keepers): each round
-    * localCheckpoints (lineage cut — plan stays linear in rounds) and
-    * the convergence check reads ONE driver scalar per round (control
-    * flow, not data collection). The twin unrolls the cap and selects
-    * the first ε-round, so the gate pins rank vector AND round count.
-    * At 100 TB: the event-scale window pass runs once (checkpointed
-    * census); every round after is keyed joins over V-sized frames. */
-  private[graft] def pagerankConverged(events: DataFrame,
-      memoKey: Option[(org.apache.spark.sql.SparkSession, String)] = None)
-      : DataFrame = {
-    val scale = 1000000000000L
-    val (nodes, edges, outw) = clickGraph(events, memoKey)
-    val nnDf = nodes.agg(count(lit(1)).as("nn"))
-      .withColumn("base",
-        expr(s"case when nn = 0 then cast(0 as bigint) " +
-          s"else $scale div nn end"))
-      .localCheckpoint(true)
-    var r = nodes.crossJoin(nnDf)
-      .select(col("node"), col("base").as("rank"))
-      .localCheckpoint(true)
-    var iter = 0
-    var residual = Long.MaxValue
-    while (iter < PrCap && residual > PrEps) {
-      val next = prRound(nodes, edges, outw, nnDf, r).localCheckpoint(true)
-      residual = next
-        .join(r.withColumnRenamed("rank", "prev"), Seq("node"))
+    * family: iterate [[prRound]] under [[Fixpoint]] until the L1
+    * residual Σ|rᵢ − rᵢ₋₁| drops to ε (or the cap), then report every
+    * node's converged rank WITH the executed round count and the final
+    * residual. The twin unrolls the cap and selects the first ε-round,
+    * so the gate pins rank vector AND round count. At 100 TB: the
+    * event-scale window pass runs once (checkpointed census); every
+    * round after is keyed joins over V-sized frames. */
+  private def pagerankConverged(s: SparkSession, dir: String): DataFrame = {
+    val (nodes, edges, outw) = clickGraph(s, dir)
+    val base = rankBase(nodes, count(lit(1)))
+    val fp = Fixpoint.iterate(rank0(nodes, base, "base").localCheckpoint(true),
+        start = Long.MaxValue, cap = PrCap)(
+      step = prRound(nodes, edges, outw, base, "base", "true"),
+      measure = (prev, next) => next
+        .join(prev.withColumnRenamed("rank", "prev"), Seq("node"))
         .agg(coalesce(sum(abs(col("rank") - col("prev"))), lit(0L)))
-        .head().getLong(0)
-      r = next
-      iter += 1
-    }
-    r.select(col("node"), col("rank"),
-        lit(iter).cast("int").as("n_iter"),
-        lit(residual).as("residual"))
+        .head().getLong(0),
+      done = (_, residual) => residual <= PrEps)
+    fp.state.select(col("node"), col("rank"),
+        lit(fp.rounds).cast("int").as("n_iter"),
+        lit(fp.last).as("residual"))
       .orderBy(col("rank").desc, col("node"))
   }
 
-  /** Frame-taking HITS (body of q_hits) — ScaleProbe drives this on
-    * replicated event streams past the OLD int64 Σw·score cliff (~9M
-    * transitions) to prove the DECIMAL(38,0) product routing: scores
-    * must stay non-negative and 1-norm ≈ SCALE at every multiplier
-    * (a silent int64 wrap would surface as negative sums). */
-  private[graft] def hitsOn(events: DataFrame,
-      memoKey: Option[(org.apache.spark.sql.SparkSession, String)] = None)
-      : DataFrame = {
-    val scale = 1000000000000L
-    val (nodes, edges, _) = clickGraph(events, memoKey)
-    val nnDf = nodes.agg(count(lit(1)).as("nn"))
-      .withColumn("base", expr("case when nn = 0 then " +
-        s"cast(0 as bigint) else $scale div nn end"))
-      .localCheckpoint(true)
+  /** HITS hubs and authorities (body of q_hits): two fixed
+    * mutual-reinforcement rounds over the click graph, each score
+    * 1-norm normalized by the two-step floor a ÷ (Σa div RankScale). */
+  private def hits(s: SparkSession, dir: String): DataFrame = {
+    val (nodes, edges, _) = clickGraph(s, dir)
+    val base = rankBase(nodes, count(lit(1)))
     def norm(scored: DataFrame, cname: String, out: String) = {
       val tot = scored.agg(coalesce(sum(col(cname)), lit(0L))
         .cast("decimal(38,0)").as("tot"))
       nodes.join(scored, Seq("node"), "left").crossJoin(tot)
         .select(col("node"), expr(
-          s"cast(case when tot < $scale then coalesce($cname, 0) " +
-            s"else coalesce($cname, 0) div (tot div $scale) end " +
+          s"cast(case when tot < $RankScale then coalesce($cname, 0) " +
+            s"else coalesce($cname, 0) div (tot div $RankScale) end " +
             "as bigint)")
           .as(out))
     }
-    val init = nodes.crossJoin(nnDf).select(col("node"),
+    val init = nodes.crossJoin(base).select(col("node"),
       col("base").as("hub"), col("base").as("auth"))
     val fin = (1 to 2).foldLeft(init) { case (r, _) =>
       val aN = norm(edges

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSuite
+import org.apache.spark.sql.functions.lit
 
 /** Structural contract of the exact-integer PageRank over the
   * clickstream transition graph: the mass ledger must conserve rank
@@ -44,6 +45,17 @@ class PageRankSpec extends SparkSuite {
       s"seed avg ${avg(seeds)} <= rest avg ${avg(rest)}")
     assert(rest.count(_.getAs[Long]("rank") > 0L) > rest.length / 2,
       "propagation never reached most non-seeds")
+  }
+
+  test("seeded PageRank with every node a seed is q_pagerank") {
+    // n = every node, share = base and every node takes a dangling
+    // share: the uniform round term for term
+    val all = Analytics.seededRanks(spark, dir, lit(true))
+      .collect().map(r => r.getAs[Int]("node") -> r.getAs[Long]("rank")).toMap
+    val pr = Analytics.queries("q_pagerank")(spark, dir).collect()
+      .map(r => r.getAs[Int]("node") -> r.getAs[Long]("rank")).toMap
+    assert(pr.size > 1 && pr.values.toSet.size > 1)
+    assert(all === pr)
   }
 
   test("HITS: terminal pages are zero-hub but ranked authorities") {
