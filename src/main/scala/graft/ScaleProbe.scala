@@ -1,279 +1,289 @@
 package graft
 
 import graft.llm.Dedup
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Dev-only scale probes (BASELINE.md): each takes a hot path against
-  * inputs replicated far past the test SF to expose behavior the small
-  * SFs hide. Replication is always ONE explode pass over real data —
-  * an N-way union over a cache yields 32·N near-empty tasks and
-  * measures the scheduler instead of the operator.
+/** Dev-only scale probes: each section takes a hot path against inputs
+  * replicated far past the test SF to expose behavior the small SFs
+  * hide, and matches one `graft.ScaleProbe` heading in BASELINE.md,
+  * whose tables are read from the probe lines (label, field names and
+  * field order). The sections, in run order: cc, range, bigstar, cms,
+  * quantile, outlier, ivf, pq, graph, bpe, incr, substr, fuzzy, png,
+  * warc, shardloss, crawlpipe, ulm, c4, gid, pca, hotkey and ivfincr.
   *
-  *  - cc_{1,10,100,1000}x: min-label propagation
-  *    ([[graft.llm.Dedup.keepers]]) on the real sf0.1 Jaccard pair set
-  *    with shifted doc ids — rounds stay constant, wall flat to ~10⁶
-  *    edges then linear;
-  *  - range_{1,10,100}x: the bucketed range join
-  *    ([[graft.ops.Joins.rangePairs]]) on shifted-user copies of the
-  *    real events — caught the below-fan-out broadcast bug (272 s →
-  *    18.6 s at 100×);
-  *  - bigstar_path_N: [[graft.llm.Dedup.keepersBigStar]] on a single
-  *    N-node path — propagation's worst case (diameter N−1), star
-  *    contraction converges in ~log rounds.
+  * Every section but bigstar (a synthetic path) reads its input through
+  * [[probing]]: persisted once, with its row count and per-replica id
+  * strides read in one aggregate, then replicated per multiplier by
+  * [[Replicas.times]]. `SPARK_GRAFT_PROBES` (comma list) runs a subset;
+  * unset runs every section, as BASELINE.md's tables expect.
   */
 object ScaleProbe {
-  def main(args: Array[String]): Unit = Session.run { spark =>
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Dev-only section filter (comma list: cc,range,bigstar,cms,quantile,
-    // outlier, fuzzy, …); unset = run everything, as BASELINE.md's tables expect.
-    val sections = sys.env.get("SPARK_GRAFT_PROBES").map(_.split(",").toSet)
-    def want(s: String): Boolean = sections.forall(_.contains(s))
 
-    if (want("cc")) {
-    // Real near-dup pairs once; the probe times ONLY the CC loop.
-    val pairs = SparkEntry.queries("q_dedup_jaccard")(spark, sfDir)
-      .select(col("d1"), col("d2"))
-      .persist()
-    val nPairs = pairs.count()
-    // Replica id-shift stride from the DATA (max id + 1), not a constant:
-    // SPARK_GRAFT_SF_DIR is caller-chosen, and a fixed stride smaller
-    // than the real id range would collide replicas — silently merging
-    // components and corrupting the probe numbers BASELINE.md cites.
-    val docStride = pairs
-      .agg(greatest(max(col("d1")), max(col("d2"))).as("m"))
-      .head().getLong(0) + 1L
+  /** A persisted probe input, its row count, and the stride (max id + 1)
+    * each id column shifts by per replica. Strides come from the DATA,
+    * not a constant: `SPARK_GRAFT_SF_DIR` is caller-chosen, and a fixed
+    * stride smaller than the real id range would collide replicas —
+    * silently merging components and corrupting the probe numbers. */
+  private[graft] final case class Replicas(input: DataFrame, rows: Long,
+      strides: Map[String, Long]) {
 
-    def timed(label: String, mult: Int): Unit = {
-      // Replicate via ONE explode pass, not an N-way union — a union of
-      // N branches over the 32-partition cache yields 32·N near-empty
-      // tasks and the probe measures the scheduler instead of the loop.
-      val scaled = pairs
-        .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-          col("d1"), col("d2"))
-        .select((col("d1") + col("i") * lit(docStride)).as("d1"),
-          (col("d2") + col("i") * lit(docStride)).as("d2"))
-      val t0 = System.nanoTime()
-      val n = Dedup.keepers(scaled).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      // keepers() unpersists its own internals; `pairs` must stay cached
-      // for the next multiplier, so no blanket clearCache here.
-      println(f"""{"probe":"cc_$label","edges":${nPairs * 2 * mult},"labeled_docs":$n,"sec":$dt%.2f}""")
+    /** `df` (the input or a frame derived from it) N× in ONE explode
+      * pass, each id column shifted by `i` strides in replica `i`; the
+      * replica index stays as column `i` when `withIndex`. Not an N-way
+      * union: a union of N branches over a cache yields partitions·N
+      * near-empty tasks, and the probe measures the scheduler instead
+      * of the operator. */
+    def times(mult: Int, df: DataFrame = input,
+        withIndex: Boolean = false): DataFrame = {
+      val cols = df.columns.toSeq
+      df.select(explode(expr(s"sequence(0, ${mult - 1})")).as("i") +: cols.map(col): _*)
+        .select(cols.map(c => strides.get(c)
+          .fold(col(c))(s => (col(c) + col("i") * lit(s)).as(c))) ++
+          (if (withIndex) Seq(col("i")) else Nil): _*)
+    }
+  }
+
+  /** Reads `input`'s row count and one stride per id space (columns that
+    * share one, like a pair's two endpoints) in a single aggregate.
+    * Fails naming `name` when `input` has no rows. */
+  private[graft] def replicas(input: DataFrame, name: String,
+      idSpaces: Seq[String]*): Replicas = {
+    val maxes = idSpaces.map { space =>
+      val ms = space.map(c => max(col(c)))
+      (if (ms.size == 1) ms.head else greatest(ms: _*)).cast("long")
+    }
+    val r = input.agg(count(lit(1)), maxes: _*).head()
+    require(r.getLong(0) > 0, s"empty probe input: $name has no rows")
+    Replicas(input, r.getLong(0), idSpaces.zipWithIndex.flatMap {
+      case (space, k) => space.map(_ -> (r.getLong(k + 1) + 1L))
+    }.toMap)
+  }
+
+  /** Persists `input`, runs `body` on its [[replicas]], then unpersists. */
+  private def probing(input: DataFrame, name: String, idSpaces: Seq[String]*)(
+      body: Replicas => Unit): Unit = {
+    val persisted = input.persist()
+    try body(replicas(persisted, name, idSpaces: _*))
+    finally persisted.unpersist(false)
+  }
+
+  /** [[probing]] over the documents table's `cols`, doc_id shifted. */
+  private def documents(spark: SparkSession, sfDir: String, cols: String*)(
+      body: Replicas => Unit): Unit =
+    probing(Tables(spark, sfDir, "documents").select(cols.map(col): _*),
+      s"$sfDir/documents.parquet", Seq("doc_id"))(body)
+
+  /** [[probing]] over the quantized embeddings' `cols`, vec_id shifted. */
+  private def embeddings(spark: SparkSession, sfDir: String, cols: String*)(
+      body: Replicas => Unit): Unit =
+    probing(Dedup.quantized(spark, sfDir).select(cols.map(col): _*),
+      s"$sfDir/embeddings.parquet", Seq("vec_id"))(body)
+
+  /** `body`'s value and its wall time in seconds. */
+  private def timed[A](body: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val a = body
+    (a, (System.nanoTime() - t0) / 1e9)
+  }
+
+  private val sections: Seq[(String, (SparkSession, String) => Unit)] = Seq(
+    "cc" -> cc _, "range" -> range _, "bigstar" -> bigstar _,
+    "cms" -> cms _, "quantile" -> quantile _, "outlier" -> outlier _,
+    "ivf" -> ivf _, "pq" -> pq _, "graph" -> graph _, "bpe" -> bpe _,
+    "incr" -> incr _, "substr" -> substr _, "fuzzy" -> fuzzy _,
+    "png" -> png _, "warc" -> warc _, "shardloss" -> shardloss _,
+    "crawlpipe" -> crawlpipe _, "ulm" -> ulm _, "c4" -> c4 _,
+    "gid" -> gid _, "pca" -> pca _, "hotkey" -> hotkey _,
+    "ivfincr" -> ivfincr _)
+
+  /** The section names a `SPARK_GRAFT_PROBES` value selects, in run
+    * order: every section when unset, or Left naming the unknown names
+    * and listing the known ones. */
+  private[graft] def selected(probes: Option[String]): Either[String, Seq[String]] = {
+    val known = sections.map(_._1)
+    probes.map(_.split(",", -1).map(_.trim).toSet) match {
+      case None => Right(known)
+      case Some(asked) =>
+        val unknown = asked.filterNot(known.contains)
+        if (unknown.isEmpty) Right(known.filter(asked))
+        else Left(s"unknown SPARK_GRAFT_PROBES section(s): " +
+          s"${unknown.toSeq.sorted.map(n => s"'$n'").mkString(", ")}; " +
+          s"known: ${known.mkString(",")}")
+    }
+  }
+
+  def main(args: Array[String]): Unit =
+    selected(sys.env.get("SPARK_GRAFT_PROBES")) match {
+      case Left(err) =>
+        System.err.println(err)
+        sys.exit(2)
+      case Right(names) =>
+        val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+        val run = sections.toMap
+        Session.run(spark => names.foreach(run(_)(spark, sfDir)))
     }
 
-    timed("1x", 1)
-    timed("10x", 10)
-    timed("100x", 100)
-    timed("1000x", 1000)
-    pairs.unpersist(false)
+  /** Min-label propagation ([[graft.llm.Dedup.keepers]]) on the real
+    * near-dup pairs with shifted doc ids; the probe times ONLY the CC
+    * loop. Rounds stay constant, wall flat to ~10⁶ edges then linear. */
+  private def cc(spark: SparkSession, sfDir: String): Unit =
+    probing(SparkEntry.queries("q_dedup_jaccard")(spark, sfDir)
+        .select(col("d1"), col("d2")),
+      s"q_dedup_jaccard over $sfDir", Seq("d1", "d2")) { reps =>
+      for (mult <- Seq(1, 10, 100, 1000)) {
+        val scaled = reps.times(mult)
+        // keepers() unpersists its own internals; the input stays
+        // cached for the next multiplier
+        val (n, dt) = timed(Dedup.keepers(scaled).count())
+        println(f"""{"probe":"cc_${mult}x","edges":${reps.rows * 2 * mult},"labeled_docs":$n,"sec":$dt%.2f}""")
+      }
     }
 
-    if (want("range")) {
-    // Range-join probe: same per-user event density, N× the users —
-    // output and work should both scale linearly with N.
-    val ev = graft.Tables.events(spark, sfDir)
-      .select(col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("us"))
-      .persist()
-    ev.count()
-    // Same rule as the CC probe: strides from max(id) + 1, so replicas
-    // can never collide with real ids whatever SF directory is probed.
-    val (userStride, eventStride) = {
-      val r = ev.agg(max(col("user_id")), max(col("event_id"))).head()
-      // max() over zero rows is NULL — fail with a diagnostic instead
-      // of an opaque NPE when the probed directory is empty.
-      require(!r.isNullAt(0) && !r.isNullAt(1),
-        s"empty probe input: $sfDir/events.parquet has no rows")
-      (r.getLong(0) + 1L, r.getLong(1) + 1L)
-    }
-    def timedRange(label: String, mult: Int): Unit = {
-      val scaled = ev
-        .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-          col("user_id"), col("event_id"), col("us"))
-        .select((col("user_id") + col("i") * lit(userStride)).as("user_id"),
-          (col("event_id") + col("i") * lit(eventStride)).as("event_id"),
-          col("us"))
-      val rp = graft.ops.Joins.rangePairs(scaled)
-      val t0 = System.nanoTime()
-      val n = rp.count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"""{"probe":"range_$label","rows":${n},"sec":$dt%.2f}""")
-    }
-    timedRange("1x", 1)
-    timedRange("10x", 10)
-    timedRange("100x", 100)
-    ev.unpersist(false)
+  /** The bucketed range join ([[graft.ops.Joins.rangePairs]]): same
+    * per-user event density, N× the users — output and work should
+    * both scale linearly with N. Caught the below-fan-out broadcast bug
+    * (272 s → 18.6 s at 100×). */
+  private def range(spark: SparkSession, sfDir: String): Unit =
+    probing(Tables.events(spark, sfDir).select(col("user_id"),
+        col("event_id"), unix_micros(col("ts")).as("us")),
+      s"$sfDir/events.parquet", Seq("user_id"), Seq("event_id")) { reps =>
+      for (mult <- Seq(1, 10, 100)) {
+        val rp = graft.ops.Joins.rangePairs(reps.times(mult))
+        val (n, dt) = timed(rp.count())
+        println(f"""{"probe":"range_${mult}x","rows":${n},"sec":$dt%.2f}""")
+      }
     }
 
-    if (want("bigstar")) {
-    // Adversarial-topology CC probe: a single path of N nodes (diameter
-    // N-1) — min-label propagation would need N-1 rounds; big-star
-    // needs O(log²). Built with spark.range: no driver-side data.
-    def timedPath(n: Long): Unit = {
-      import spark.implicits._
+  /** Adversarial-topology CC: [[graft.llm.Dedup.keepersBigStar]] on a
+    * single path of N nodes (diameter N-1) — min-label propagation
+    * would need N-1 rounds; big-star needs O(log²). Built with
+    * spark.range: no driver-side data and nothing to replicate. */
+  private def bigstar(spark: SparkSession, sfDir: String): Unit =
+    for (n <- Seq(10000L, 1000000L)) {
       val path = spark.range(1, n)
         .select(col("id").as("d1"), (col("id") + 1).as("d2"))
-      val t0 = System.nanoTime()
-      val labeled = Dedup.keepersBigStar(path, maxIters = 60).count()
-      val dt = (System.nanoTime() - t0) / 1e9
+      val (labeled, dt) = timed(Dedup.keepersBigStar(path, maxIters = 60).count())
       println(f"""{"probe":"bigstar_path_$n","labeled_docs":$labeled,"sec":$dt%.2f}""")
     }
-    timedPath(10000L)
-    timedPath(1000000L)
-    }
 
-    if (want("cms"))
-    // CMS sketch-build probe: N× the token stream through the
-    // mergeable aggregate (functions/CountMin.scala). Build cost must
-    // scale linearly in tokens while the shuffle payload stays ONE
-    // 8 KB buffer per task at every multiplier — that invariance is
-    // the sketch's 100 TB claim. (The 4×md5-per-token hash is the
-    // price of an oracle-recomputable cell function; a production
-    // sketch would swap in xxhash64 for ~10× cheaper updates at the
-    // cost of DuckDB checkability.)
-    locally {
-      graft.functions.GraftFunctions.register(spark)
-      val toks = graft.Tables(spark, sfDir, "documents")
+  /** CMS sketch build: N× the token stream through the mergeable
+    * aggregate (functions/CountMin.scala). Build cost must scale
+    * linearly in tokens while the shuffle payload stays ONE 8 KB buffer
+    * per task at every multiplier — that invariance is the sketch's
+    * 100 TB claim. (The 4×md5-per-token hash is the price of an
+    * oracle-recomputable cell function; a production sketch would swap
+    * in xxhash64 for ~10× cheaper updates at the cost of DuckDB
+    * checkability.) */
+  private def cms(spark: SparkSession, sfDir: String): Unit = {
+    graft.functions.GraftFunctions.register(spark)
+    probing(Tables(spark, sfDir, "documents")
         .select(explode(split(col("text"), " ")).as("w"))
-        .filter(col("w") =!= "").persist()
-      val nTok = toks.count()
-      def timedCms(mult: Int): Unit = {
-        val scaled = toks.select(
-          explode(expr(s"sequence(0, ${mult - 1})")).as("i"), col("w"))
-        val t0 = System.nanoTime()
-        val cells = scaled.agg(expr("cms_sketch(w, 4, 256)").as("sk"))
-          .select(explode(col("sk")).as("c")).filter(col("c") > 0).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"cms_${mult}x","tokens":${nTok * mult},"cells":$cells,"sec":$dt%.2f}""")
+        .filter(col("w") =!= ""),
+      s"the tokens of $sfDir/documents.parquet") { reps =>
+      for (mult <- Seq(1, 10, 100)) {
+        val scaled = reps.times(mult)
+        val (cells, dt) = timed(scaled.agg(expr("cms_sketch(w, 4, 256)").as("sk"))
+          .select(explode(col("sk")).as("c")).filter(col("c") > 0).count())
+        println(f"""{"probe":"cms_${mult}x","tokens":${reps.rows * mult},"cells":$cells,"sec":$dt%.2f}""")
       }
-      timedCms(1)
-      timedCms(10)
-      timedCms(100)
-      toks.unpersist(false)
     }
+  }
 
-    if (want("quantile"))
-    // Histogram-quantile probe: N× the value stream. The sketch's
-    // 100 TB claim is the constant exchange — ≤ 32 bin rows at every
-    // multiplier — with wall linear in values; and because replication
-    // scales every bin count uniformly, the p99 estimate must stay
-    // (within one integer-rounding step of) the 1× estimate: a probe
-    // that also catches any accidental order-dependence in the bins.
-    locally {
-      val v = graft.Tables(spark, sfDir, "lineitem")
-        .select(expr("cast(l_extendedprice * 100 as bigint)").as("v")).persist()
-      val nVal = v.count()
-      def timedQuantile(mult: Int): Unit = {
-        val scaled = v.select(
-          explode(expr(s"sequence(0, ${mult - 1})")).as("i"), col("v"))
-          .select(col("v"))
-        val t0 = System.nanoTime()
-        val wd = scaled.agg(min(col("v")).as("lo"), count(lit(1)).as("n"),
+  /** Histogram quantile: N× the value stream. The sketch's 100 TB claim
+    * is the constant exchange — ≤ 32 bin rows at every multiplier —
+    * with wall linear in values; and because replication scales every
+    * bin count uniformly, the p99 estimate must stay (within one
+    * integer-rounding step of) the 1× estimate: a probe that also
+    * catches any accidental order-dependence in the bins. */
+  private def quantile(spark: SparkSession, sfDir: String): Unit =
+    probing(Tables(spark, sfDir, "lineitem")
+        .select(expr("cast(l_extendedprice * 100 as bigint)").as("v")),
+      s"$sfDir/lineitem.parquet") { reps =>
+      for (mult <- Seq(1, 10, 100)) {
+        val scaled = reps.times(mult)
+        val ((bins, est), dt) = timed {
+          val wd = scaled.agg(min(col("v")).as("lo"), count(lit(1)).as("n"),
             expr("(max(v) - min(v)) div 32 + 1").as("width")).head()
-        val (lo, n, width) = (wd.getLong(0), wd.getLong(1), wd.getLong(2))
-        val bins = scaled
-          .groupBy(expr(s"(v - $lo) div $width").as("bin"))
-          .agg(count(lit(1)).as("cnt"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-        val r99 = (99 * n + 99) / 100
-        var cum = 0L
-        val (bin, cnt, before) = bins.iterator
-          .map { case (b, c) => cum += c; (b, c, cum - c) }
-          .find { case (_, c, bf) => bf + c >= r99 && bf < r99 }.get
-        val est = lo + bin * width + ((r99 - before) * width) / cnt
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"quantile_${mult}x","values":${nVal * mult},"bins":${bins.length},"p99_cents":$est,"sec":$dt%.2f}""")
+          val (lo, n, width) = (wd.getLong(0), wd.getLong(1), wd.getLong(2))
+          val bins = scaled
+            .groupBy(expr(s"(v - $lo) div $width").as("bin"))
+            .agg(count(lit(1)).as("cnt"))
+            .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+          val r99 = (99 * n + 99) / 100
+          var cum = 0L
+          val (bin, cnt, before) = bins.iterator
+            .map { case (b, c) => cum += c; (b, c, cum - c) }
+            .find { case (_, c, bf) => bf + c >= r99 && bf < r99 }.get
+          (bins, lo + bin * width + ((r99 - before) * width) / cnt)
+        }
+        println(f"""{"probe":"quantile_${mult}x","values":${reps.rows * mult},"bins":${bins.length},"p99_cents":$est,"sec":$dt%.2f}""")
       }
-      timedQuantile(1)
-      timedQuantile(10)
-      timedQuantile(100)
-      v.unpersist(false)
     }
 
-    if (want("outlier"))
-    // Embedding-outlier probe: N× the vectors (vec_id shifted per
-    // replica, labels preserved so per-label n grows ×N). The 64-sum
-    // aggregate, broadcast, and WindowGroupLimit top-3 must all stay
-    // linear; the broadcast payload is labels × 65 longs at every N.
-    locally {
-      val qe = Dedup.quantized(spark, sfDir)
-        .select(col("vec_id"), col("label"), col("q"), col("norm")).persist()
-      val nVec = qe.count()
-      val vecStride = qe.agg(max(col("vec_id"))).head().getLong(0) + 1L
-      def timedOutlier(mult: Int): Unit = {
-        val scaled = qe.select(
-            explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("vec_id"), col("label"), col("q"), col("norm"))
-          .select((col("vec_id") + col("i") * lit(vecStride)).as("vec_id"),
-            col("label"), col("q"), col("norm"))
+  /** Embedding outliers: N× the vectors (vec_id shifted per replica,
+    * labels preserved so per-label n grows ×N). The 64-sum aggregate,
+    * broadcast, and WindowGroupLimit top-3 must all stay linear; the
+    * broadcast payload is labels × 65 longs at every N. */
+  private def outlier(spark: SparkSession, sfDir: String): Unit =
+    embeddings(spark, sfDir, "vec_id", "label", "q", "norm") { reps =>
+      for (mult <- Seq(1, 10, 100)) {
+        val scaled = reps.times(mult)
         val sums = scaled.groupBy(col("label"))
           .agg(count(lit(1)).as("n"), expr("vec_sum(q, 64)").as("sv"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("label"))
+        val w = Window.partitionBy(col("label"))
           .orderBy(col("score").desc, col("vec_id").asc)
-        val t0 = System.nanoTime()
-        val top = scaled.join(broadcast(sums), "label")
+        val (top, dt) = timed(scaled.join(broadcast(sums), "label")
           .select(col("label"), col("vec_id"),
             (col("n") * col("n") * col("norm")
               - lit(2L) * col("n") * expr("dot_long(q, sv)")
               + expr("dot_long(sv, sv)")).as("score"))
           .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"outlier_${mult}x","vectors":${nVec * mult},"rows":$top,"sec":$dt%.2f}""")
+          .filter(col("rn") <= 3).count())
+        println(f"""{"probe":"outlier_${mult}x","vectors":${reps.rows * mult},"rows":$top,"sec":$dt%.2f}""")
       }
-      timedOutlier(1)
-      timedOutlier(10)
-      timedOutlier(100)
-      qe.unpersist(false)
     }
-    // IVF probe: N× the corpus (shifted vec_ids — replicas land in the
-    // same data region, so cells must stay balanced as the corpus
-    // grows). Times the WHOLE pipeline a deployment runs per batch:
-    // train (assign→K-row collect→literalize), assign corpus, search
-    // 50 broadcast queries at nprobe=2 with per-partition top-3. All
-    // of it is scan-shaped (no corpus shuffle), so wall must stay
-    // linear; the per-cell histogram is the balance evidence.
-    if (want("ivf"))
-    locally {
-      val qe = Dedup.quantized(spark, sfDir)
-        .select(col("vec_id"), col("q"), col("norm")).persist()
-      val nVec = qe.count()
-      val stride = qe.agg(max(col("vec_id"))).head().getLong(0) + 1L
-      def timedIvf(mult: Int): Unit = {
-        val scaled = qe
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("vec_id"), col("q"), col("norm"))
-          .select((col("vec_id") + col("i") * lit(stride)).as("vec_id"),
-            col("q"), col("norm"))
-        val t0 = System.nanoTime()
-        val cells = graft.llm.Similarity.ivfCellsFrom(scaled)
-        val queriesDf = cells.filter(col("vec_id") < 50)
-          .select(col("vec_id").as("query_id"),
-            explode(array(col("cell"), col("cell2"))).as("probe"),
-            col("q").as("qa"), col("norm").as("na"))
-        val corpus = cells.select(col("vec_id").as("neighbor_id"),
-          col("cell").as("ncell"), col("q").as("qb"), col("norm").as("nb"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id").asc)
-        val topk = broadcast(queriesDf)
-          .join(corpus, col("probe") === col("ncell") &&
-            col("query_id") =!= col("neighbor_id"))
-          .withColumn("dot", expr("dot_long(qa, qb)"))
-          .withColumn("cosine", round(col("dot").cast("double")
-            / sqrt(col("na").cast("double"))
-            / sqrt(col("nb").cast("double")), 4))
-          .withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 3).count()
-        val dt = (System.nanoTime() - t0) / 1e9
+
+  /** IVF: N× the corpus (shifted vec_ids — replicas land in the same
+    * data region, so cells must stay balanced as the corpus grows).
+    * Times the WHOLE pipeline a deployment runs per batch: train
+    * (assign→K-row collect→literalize), assign corpus, search 50
+    * broadcast queries at nprobe=2 with per-partition top-3. All of it
+    * is scan-shaped (no corpus shuffle), so wall must stay linear; the
+    * per-cell histogram is the balance evidence. */
+  private def ivf(spark: SparkSession, sfDir: String): Unit =
+    embeddings(spark, sfDir, "vec_id", "q", "norm") { reps =>
+      def candidates(cells: DataFrame, probes: Column) = (
+        cells.filter(col("vec_id") < 50)
+          .select(col("vec_id").as("query_id"), probes,
+            col("q").as("qa"), col("norm").as("na")),
+        cells.select(col("vec_id").as("neighbor_id"),
+          col("cell").as("ncell"), col("q").as("qb"), col("norm").as("nb")))
+      val w = Window.partitionBy(col("query_id"))
+        .orderBy(col("cosine").desc, col("neighbor_id").asc)
+      def top3(pairs: DataFrame) = pairs
+        .withColumn("dot", expr("dot_long(qa, qb)"))
+        .withColumn("cosine", round(col("dot").cast("double")
+          / sqrt(col("na").cast("double"))
+          / sqrt(col("nb").cast("double")), 4))
+        .withColumn("rnk", row_number().over(w))
+        .filter(col("rnk") <= 3)
+      for (mult <- Seq(1, 10, 100)) {
+        val scaled = reps.times(mult)
+        val ((cells, topk), dt) = timed {
+          val cells = graft.llm.Similarity.ivfCellsFrom(scaled)
+          val (queriesDf, corpus) = candidates(cells,
+            explode(array(col("cell"), col("cell2"))).as("probe"))
+          (cells, top3(broadcast(queriesDf)
+            .join(corpus, col("probe") === col("ncell") &&
+              col("query_id") =!= col("neighbor_id"))).count())
+        }
         val hist = cells.groupBy(col("cell")).count()
           .orderBy("cell").collect()
           .map(r => r.getLong(1)).mkString("[", ",", "]")
-        println(f"""{"probe":"ivf_${mult}x","vectors":${nVec * mult},"topk_rows":$topk,"cells":$hist,"sec":$dt%.2f}""")
+        println(f"""{"probe":"ivf_${mult}x","vectors":${reps.rows * mult},"topk_rows":$topk,"cells":$hist,"sec":$dt%.2f}""")
       }
-      timedIvf(1)
-      timedIvf(10)
-      timedIvf(100)
       // Recall at scale: the wall-clock rows above prove the candidate
       // cut stays CHEAP as the corpus grows; this proves it stays
       // GOOD — recall@3 (nprobe = 2) against the exact top-3 over the
@@ -282,825 +292,233 @@ object ScaleProbe {
       // set genuinely changes with N; recall holding ≈ the fixture
       // value is the evidence the tuning curve transfers off the
       // fixture point (BASELINE.md cites 1x vs 10x).
-      def recallIvf(mult: Int): Unit = {
-        val scaled = qe
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("vec_id"), col("q"), col("norm"))
-          .select((col("vec_id") + col("i") * lit(stride)).as("vec_id"),
-            col("q"), col("norm"))
-        val t0 = System.nanoTime()
-        val cells = graft.llm.Similarity.ivfCellsFrom(scaled).persist()
-        val queriesDf = cells.filter(col("vec_id") < 50)
-          .select(col("vec_id").as("query_id"),
-            array_distinct(array(col("cell"), col("cell2"))).as("probes"),
-            col("q").as("qa"), col("norm").as("na"))
-        val corpus = cells.select(col("vec_id").as("neighbor_id"),
-          col("cell").as("ncell"), col("q").as("qb"), col("norm").as("nb"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id").asc)
-        def top3(pairs: org.apache.spark.sql.DataFrame) = pairs
-          .withColumn("dot", expr("dot_long(qa, qb)"))
-          .withColumn("cosine", round(col("dot").cast("double")
-            / sqrt(col("na").cast("double"))
-            / sqrt(col("nb").cast("double")), 4))
-          .withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 3)
-          .select(col("query_id"), col("neighbor_id"))
-        val approx = top3(
-          broadcast(queriesDf.withColumn("probe", explode(col("probes"))))
-            .join(corpus, col("probe") === col("ncell") &&
-              col("query_id") =!= col("neighbor_id")))
-          .select(col("query_id").as("aq"), col("neighbor_id").as("an"))
-        val exact = top3(broadcast(queriesDf)
-          .join(corpus, col("query_id") =!= col("neighbor_id")))
-        val r = exact.join(approx,
-            col("query_id") === col("aq") && col("neighbor_id") === col("an"),
-            "left")
-          .agg(count(lit(1)).as("n_true"), count(col("an")).as("n_found"))
-          .head()
-        val dt = (System.nanoTime() - t0) / 1e9
+      for (mult <- Seq(1, 10)) {
+        val scaled = reps.times(mult)
+        val ((cells, r), dt) = timed {
+          val cells = graft.llm.Similarity.ivfCellsFrom(scaled).persist()
+          val (queriesDf, corpus) = candidates(cells,
+            array_distinct(array(col("cell"), col("cell2"))).as("probes"))
+          val approx = top3(
+            broadcast(queriesDf.withColumn("probe", explode(col("probes"))))
+              .join(corpus, col("probe") === col("ncell") &&
+                col("query_id") =!= col("neighbor_id")))
+            .select(col("query_id").as("aq"), col("neighbor_id").as("an"))
+          val exact = top3(broadcast(queriesDf)
+            .join(corpus, col("query_id") =!= col("neighbor_id")))
+            .select(col("query_id"), col("neighbor_id"))
+          (cells, exact.join(approx,
+              col("query_id") === col("aq") && col("neighbor_id") === col("an"),
+              "left")
+            .agg(count(lit(1)).as("n_true"), count(col("an")).as("n_found"))
+            .head())
+        }
         cells.unpersist(false)
         val (nt, nf) = (r.getLong(0), r.getLong(1))
-        println(f"""{"probe":"ivf_recall_${mult}x","vectors":${nVec * mult},"n_true":$nt,"n_found":$nf,"recall":${nf.toDouble / nt}%.4f,"sec":$dt%.2f}""")
+        println(f"""{"probe":"ivf_recall_${mult}x","vectors":${reps.rows * mult},"n_true":$nt,"n_found":$nf,"recall":${nf.toDouble / nt}%.4f,"sec":$dt%.2f}""")
       }
-      recallIvf(1)
-      recallIvf(10)
-      qe.unpersist(false)
     }
 
-    // PQ pipeline probe: N× the corpus through the WHOLE IndexPQ path
-    // ([[graft.llm.Similarity.pqAdcTopFrom]]) — codebook train (seed
-    // assignment + the ≤256-row (g, cl) aggregate; the collect stays
-    // 256 rows × 6 ints at EVERY N), scan-side encode (pq_dists
-    // argmin, no shuffle), the one code-table exchange (16 ints/row —
-    // the stored index), LUT build, and the broadcast-query ADC scan
-    // with per-partition top-k. Everything except the code-table
-    // exchange is scan-shaped, so wall must stay ~linear in corpus
-    // size — the same claim the ivf/cms/outlier probes pin.
-    if (want("pq"))
-    locally {
-      val qe = Dedup.quantized(spark, sfDir)
-        .select(col("vec_id"), col("q"), col("norm")).persist()
-      val nVec = qe.count()
-      val stride = qe.agg(max(col("vec_id"))).head().getLong(0) + 1L
-      def timedPq(mult: Int): Unit = {
-        val scaled = qe
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("vec_id"), col("q"), col("norm"))
-          .select((col("vec_id") + col("i") * lit(stride)).as("vec_id"),
-            col("q"), col("norm"))
-        val t0 = System.nanoTime()
-        val topk = graft.llm.Similarity.pqAdcTopFrom(scaled, qmax = 50, k = 3)
-          .count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"pq_${mult}x","vectors":${nVec * mult},"topk_rows":$topk,"sec":$dt%.2f}""")
+  /** PQ: N× the corpus through the WHOLE IndexPQ path
+    * ([[graft.llm.Similarity.pqAdcTopFrom]]) — codebook train (seed
+    * assignment + the ≤256-row (g, cl) aggregate; the collect stays
+    * 256 rows × 6 ints at EVERY N), scan-side encode (pq_dists argmin,
+    * no shuffle), the one code-table exchange (16 ints/row — the stored
+    * index), LUT build, and the broadcast-query ADC scan with
+    * per-partition top-k. Everything except the code-table exchange is
+    * scan-shaped, so wall must stay ~linear in corpus size — the same
+    * claim the ivf/cms/outlier probes pin. */
+  private def pq(spark: SparkSession, sfDir: String): Unit =
+    embeddings(spark, sfDir, "vec_id", "q", "norm") { reps =>
+      for (mult <- Seq(1, 10, 100)) {
+        val scaled = reps.times(mult)
+        val (topk, dt) = timed(graft.llm.Similarity
+          .pqAdcTopFrom(scaled, qmax = 50, k = 3).count())
+        println(f"""{"probe":"pq_${mult}x","vectors":${reps.rows * mult},"topk_rows":$topk,"sec":$dt%.2f}""")
       }
-      timedPq(1)
-      timedPq(10)
-      timedPq(100)
-      qe.unpersist(false)
     }
 
-    // k-NN graph probe: N× the corpus through the cell-blocked
-    // all-nodes graph ([[graft.llm.Similarity.knnGraphFrom]]). With
-    // the cell count FIXED at K = 4 the candidate set is Σ|cell|² —
-    // quadratic in N — so this probe pins the documented LIMIT, not
-    // linearity: wall and candidate volume must grow ~mult² (probe
-    // side mult·N nodes × corpus side |cell| ∝ mult), which is
-    // exactly why a real deployment trains K ∝ √N cells (then
-    // per-cell blocks stay √N-sized and the graph build stays ~N^1.5
-    // total work spread over K-way parallelism). A flat-looking
-    // number here would mean the join stopped being cell-keyed.
-    if (want("graph"))
-    locally {
-      val qe = Dedup.quantized(spark, sfDir)
-        .select(col("vec_id"), col("q"), col("norm")).persist()
-      val nVec = qe.count()
-      val stride = qe.agg(max(col("vec_id"))).head().getLong(0) + 1L
-      def timedGraph(mult: Int): Unit = {
-        val scaled = qe
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("vec_id"), col("q"), col("norm"))
-          .select((col("vec_id") + col("i") * lit(stride)).as("vec_id"),
-            col("q"), col("norm"))
-        val t0 = System.nanoTime()
-        val cells = graft.llm.Similarity.ivfCellsFrom(scaled)
-        val edges = graft.llm.Similarity.knnGraphFrom(cells, k = 3).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"graph_${mult}x","vectors":${nVec * mult},"edges":$edges,"sec":$dt%.2f}""")
+  /** k-NN graph: N× the corpus through the cell-blocked all-nodes graph
+    * ([[graft.llm.Similarity.knnGraphFrom]]). With the cell count FIXED
+    * at K = 4 the candidate set is Σ|cell|² — quadratic in N — so this
+    * probe pins the documented LIMIT, not linearity: wall and candidate
+    * volume must grow ~mult² (probe side mult·N nodes × corpus side
+    * |cell| ∝ mult), which is exactly why a real deployment trains
+    * K ∝ √N cells (then per-cell blocks stay √N-sized and the graph
+    * build stays ~N^1.5 total work spread over K-way parallelism). A
+    * flat-looking number here would mean the join stopped being
+    * cell-keyed. */
+  private def graph(spark: SparkSession, sfDir: String): Unit =
+    embeddings(spark, sfDir, "vec_id", "q", "norm") { reps =>
+      for (mult <- Seq(1, 2, 4)) {
+        val scaled = reps.times(mult)
+        val (edges, dt) = timed {
+          val cells = graft.llm.Similarity.ivfCellsFrom(scaled)
+          graft.llm.Similarity.knnGraphFrom(cells, k = 3).count()
+        }
+        println(f"""{"probe":"graph_${mult}x","vectors":${reps.rows * mult},"edges":$edges,"sec":$dt%.2f}""")
       }
-      timedGraph(1)
-      timedGraph(2)
-      timedGraph(4)
-      qe.unpersist(false)
     }
 
-    // BPE probe: N× the documents (same text, shifted doc_ids), so the
-    // corpus grows but the distinct-word DICTIONARY does not. BPE's
-    // 100 TB claim is precisely that everything after the dict-building
-    // scan is vocab-bounded — so train wall must stay near-FLAT while
-    // the learned merges stay identical and their weighted pair counts
-    // scale exactly ×N (the evidence the corpus really grew).
-    if (want("bpe"))
-    locally {
-      val docs = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text")).persist()
-      val nDocs = docs.count()
-      val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def timedBpe(mult: Int): Unit = {
-        val scaled = docs
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("doc_id"), col("text"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-            col("text"))
-        val t0 = System.nanoTime()
-        val merges = graft.llm.TextAnalysis.bpeTrainOn(scaled)
+  /** BPE: N× the documents (same text, shifted doc_ids), so the corpus
+    * grows but the distinct-word DICTIONARY does not. BPE's 100 TB
+    * claim is precisely that everything after the dict-building scan is
+    * vocab-bounded — so train wall must stay near-FLAT while the
+    * learned merges stay identical and their weighted pair counts scale
+    * exactly ×N (the evidence the corpus really grew). */
+  private def bpe(spark: SparkSession, sfDir: String): Unit =
+    documents(spark, sfDir, "doc_id", "text") { reps =>
+      for (mult <- Seq(1, 10, 100)) {
+        val scaled = reps.times(mult)
+        val (merges, dt) = timed(graft.llm.TextAnalysis.bpeTrainOn(scaled)
           .collect().map(r => s"${r.getString(1)}+${r.getString(2)}:${r.getLong(3)}")
-          .mkString("[\"", "\",\"", "\"]")
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"bpe_${mult}x","docs":${nDocs * mult},"merges":$merges,"sec":$dt%.2f}""")
+          .mkString("[\"", "\",\"", "\"]"))
+        println(f"""{"probe":"bpe_${mult}x","docs":${reps.rows * mult},"merges":$merges,"sec":$dt%.2f}""")
       }
-      timedBpe(1)
-      timedBpe(10)
-      timedBpe(100)
-      docs.unpersist(false)
     }
 
-    // Incremental-screen probe: a FIXED delta (the src1 shard) against
-    // an N×-replicated standing corpus. Two timings per N: building
-    // the corpus indexes (exact hash set + banding table — linear in
-    // the corpus, amortized in production where the index is a
-    // materialized artifact) and the SCREEN itself against the
-    // prebuilt, persisted indexes — which must stay ~flat in corpus
-    // size, because the delta only probes; that flatness is the entire
-    // claim of the incremental shape vs the corpus-wide batch queries.
-    if (want("incr"))
-    locally {
-      import graft.streaming.Streams
-      val docs = graft.Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text"), col("source")).persist()
-      val delta = docs.filter(col("source") === "src1")
+  /** Incremental screen: a FIXED delta (the src1 shard) against an
+    * N×-replicated standing corpus. Two timings per N: building the
+    * corpus indexes (exact hash set + banding table — linear in the
+    * corpus, amortized in production where the index is a materialized
+    * artifact) and the SCREEN itself against the prebuilt, persisted
+    * indexes — which must stay ~flat in corpus size, because the delta
+    * only probes; that flatness is the entire claim of the incremental
+    * shape vs the corpus-wide batch queries. */
+  private def incr(spark: SparkSession, sfDir: String): Unit =
+    documents(spark, sfDir, "doc_id", "text", "source") { reps =>
+      val delta = reps.input.filter(col("source") === "src1")
         .select(col("doc_id"), col("text")).persist()
       val nDelta = delta.count()
-      val corpus0 = docs.filter(col("source") =!= "src1")
+      val corpus0 = reps.input.filter(col("source") =!= "src1")
+        .select(col("doc_id"), col("text"))
       val nCorp = corpus0.count()
-      val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def timedIncr(mult: Int): Unit = {
-        val corpus = corpus0
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("doc_id"), col("text"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-            col("text"))
-        val t0 = System.nanoTime()
-        val exactIdx = corpus.groupBy(md5(col("text")).as("chash"))
-          .agg(min(col("doc_id")).as("exact_match")).persist()
-        val bandIdx = graft.llm.Dedup
-          .bandsAt(graft.llm.Dedup.shinglesOf(corpus), 4)
-          .groupBy(col("band"), col("bkey"))
-          .agg(min(col("doc_id")).as("cdoc")).persist()
-        val idxRows = exactIdx.count() + bandIdx.count() // materialize
-        val tIdx = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val decisions = Streams.incrementalScreen(delta, exactIdx, bandIdx)
+      for (mult <- Seq(1, 10, 100)) {
+        val corpus = reps.times(mult, corpus0)
+        val ((exactIdx, bandIdx, idxRows), tIdx) = timed {
+          val exactIdx = corpus.groupBy(md5(col("text")).as("chash"))
+            .agg(min(col("doc_id")).as("exact_match")).persist()
+          val bandIdx = Dedup.bandsAt(Dedup.shinglesOf(corpus), 4)
+            .groupBy(col("band"), col("bkey"))
+            .agg(min(col("doc_id")).as("cdoc")).persist()
+          (exactIdx, bandIdx, exactIdx.count() + bandIdx.count()) // materialize
+        }
+        val (decisions, tScreen) = timed(graft.streaming.Streams
+          .incrementalScreen(delta, exactIdx, bandIdx)
           .groupBy(col("status")).count().orderBy("status").collect()
-          .map(r => s""""${r.getString(0)}":${r.getLong(1)}""").mkString(",")
-        val tScreen = (System.nanoTime() - t1) / 1e9
+          .map(r => s""""${r.getString(0)}":${r.getLong(1)}""").mkString(","))
         exactIdx.unpersist(false); bandIdx.unpersist(false)
         println(f"""{"probe":"incr_${mult}x","corpus":${nCorp * mult},"delta":$nDelta,"index_rows":$idxRows,"index_sec":$tIdx%.2f,"screen_sec":$tScreen%.2f,"decisions":{$decisions}}""")
       }
-      timedIncr(1)
-      timedIncr(10)
-      timedIncr(100)
-      delta.unpersist(false); docs.unpersist(false)
+      delta.unpersist(false)
     }
 
-    // Substring-dedup probe: N× the documents (shifted doc_ids,
-    // identical text) through spans + excision. Replication makes
-    // EVERY window cross-doc duplicated — the worst case for the
-    // chain: span volume = corpus volume, the islands window and the
-    // anti join both carry every position. Both stages are one
-    // generator pass + key-partitioned shuffles (whash, doc_id), so
-    // wall must stay ~linear even at full-duplication load; the
-    // kept-token count collapsing to 0 at N≥2 is the correctness
-    // echo (every doc is a copy, so everything is removable).
-    if (want("substr"))
-    locally {
-      val docs = graft.Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text")).persist()
-      val nDoc = docs.count()
-      val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def scaledDocs(mult: Int) = docs
-        .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-          col("doc_id"), col("text"))
-        .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-          col("text"))
-      def timedSubstr(mult: Int): Unit = {
-        val t0 = System.nanoTime()
-        val spans = graft.llm.Dedup.substringSpansFrom(scaledDocs(mult)).count()
-        val kept = graft.llm.Dedup.substringCleanFrom(scaledDocs(mult))
-          .agg(sum(col("n_kept"))).head().getLong(0)
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"substr_${mult}x","docs":${nDoc * mult},"spans":$spans,"kept_tokens":$kept,"sec":$dt%.2f}""")
+  /** Substring dedup: N× the documents (shifted doc_ids, identical
+    * text) through spans + excision. Replication makes EVERY window
+    * cross-doc duplicated — the worst case for the chain: span volume =
+    * corpus volume, the islands window and the anti join both carry
+    * every position. Both stages are one generator pass +
+    * key-partitioned shuffles (whash, doc_id), so wall must stay
+    * ~linear even at full-duplication load; the kept-token count
+    * collapsing to 0 at N≥2 is the correctness echo (every doc is a
+    * copy, so everything is removable). */
+  private def substr(spark: SparkSession, sfDir: String): Unit =
+    documents(spark, sfDir, "doc_id", "text") { reps =>
+      for (mult <- Seq(1, 10)) {
+        val ((spans, kept), dt) = timed((
+          Dedup.substringSpansFrom(reps.times(mult)).count(),
+          Dedup.substringCleanFrom(reps.times(mult))
+            .agg(sum(col("n_kept"))).head().getLong(0)))
+        println(f"""{"probe":"substr_${mult}x","docs":${reps.rows * mult},"spans":$spans,"kept_tokens":$kept,"sec":$dt%.2f}""")
       }
-      timedSubstr(1)
-      timedSubstr(10)
-      docs.unpersist(false)
     }
 
-    if (want("fuzzy"))
-    // Fuzzy-join probe: plain |block|² blocking vs the PassJoin
-    // segment level (Joins.fuzzyPairs / fuzzyPairsSegmented) under two
-    // growth regimes. fuzzy_*_Nx: N× the parts with per-replica BRANDS
-    // (block count ×N, block size constant) — both plans must scale
-    // ~linearly, pinning the Σ|block|² claim. fuzzy_*_hotNx: N× with
-    // brands KEPT (every block grows ×N) — the plain join goes
-    // quadratic by design; the segmented level must grow far slower
-    // (per-key segment buckets cap candidates), which is the whole
-    // reason the second level exists.
-    locally {
-      val part = graft.Tables(spark, sfDir, "part")
-        .select(col("p_brand"), col("p_partkey"), col("p_name")).persist()
-      val nPart = part.count()
-      val keyStride = part.agg(max(col("p_partkey"))).head().getLong(0) + 1L
-      def scaledPart(mult: Int, hot: Boolean) = part
-        .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-          col("p_brand"), col("p_partkey"), col("p_name"))
-        .select(
+  /** Fuzzy join: plain |block|² blocking vs the PassJoin segment level
+    * (Joins.fuzzyPairs / fuzzyPairsSegmented) under two growth regimes.
+    * fuzzy_*_Nx: N× the parts with per-replica BRANDS (block count ×N,
+    * block size constant) — both plans must scale ~linearly, pinning
+    * the Σ|block|² claim. fuzzy_*_hotNx: N× with brands KEPT (every
+    * block grows ×N) — the plain join goes quadratic by design; the
+    * segmented level must grow far slower (per-key segment buckets cap
+    * candidates), which is the whole reason the second level exists. */
+  private def fuzzy(spark: SparkSession, sfDir: String): Unit =
+    probing(Tables(spark, sfDir, "part")
+        .select(col("p_brand"), col("p_partkey"), col("p_name")),
+      s"$sfDir/part.parquet", Seq("p_partkey")) { reps =>
+      def run(label: String, mult: Int, hot: Boolean,
+          fn: DataFrame => DataFrame): Unit = {
+        val (n, dt) = timed(fn(reps.times(mult, withIndex = true).select(
           (if (hot) col("p_brand")
            else concat(col("p_brand"), lit("~"), col("i"))).as("p_brand"),
-          (col("p_partkey") + col("i") * lit(keyStride)).as("p_partkey"),
-          col("p_name"))
-      def timedFuzzy(label: String, mult: Int, hot: Boolean,
-          fn: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
-        val t0 = System.nanoTime()
-        val n = fn(scaledPart(mult, hot)).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"$label","parts":${nPart * mult},"pairs":$n,"sec":$dt%.2f}""")
+          col("p_partkey"), col("p_name"))).count())
+        println(f"""{"probe":"$label","parts":${reps.rows * mult},"pairs":$n,"sec":$dt%.2f}""")
       }
-      timedFuzzy("fuzzy_plain_1x", 1, hot = false, graft.ops.Joins.fuzzyPairs)
-      timedFuzzy("fuzzy_plain_10x", 10, hot = false, graft.ops.Joins.fuzzyPairs)
-      timedFuzzy("fuzzy_seg_1x", 1, hot = false, graft.ops.Joins.fuzzyPairsSegmented)
-      timedFuzzy("fuzzy_seg_10x", 10, hot = false, graft.ops.Joins.fuzzyPairsSegmented)
-      timedFuzzy("fuzzy_plain_hot10x", 10, hot = true, graft.ops.Joins.fuzzyPairs)
-      timedFuzzy("fuzzy_seg_hot10x", 10, hot = true, graft.ops.Joins.fuzzyPairsSegmented)
-      part.unpersist(false)
+      run("fuzzy_plain_1x", 1, hot = false, graft.ops.Joins.fuzzyPairs)
+      run("fuzzy_plain_10x", 10, hot = false, graft.ops.Joins.fuzzyPairs)
+      run("fuzzy_seg_1x", 1, hot = false, graft.ops.Joins.fuzzyPairsSegmented)
+      run("fuzzy_seg_10x", 10, hot = false, graft.ops.Joins.fuzzyPairsSegmented)
+      run("fuzzy_plain_hot10x", 10, hot = true, graft.ops.Joins.fuzzyPairs)
+      run("fuzzy_seg_hot10x", 10, hot = true, graft.ops.Joins.fuzzyPairsSegmented)
     }
 
-    // PNG decode probe: N× the documents (same text, shifted ids)
-    // through the full synthesize→chunk-walk→inflate→unfilter chain.
-    // Decode is a map-only stage, so wall must scale ~linearly with
-    // rows, and because replicas share their md5 the status mix and
-    // r_sum must scale EXACTLY ×N — visible proof the stage never
-    // looks across rows (the property that lets a 100 TB decode run
-    // embarrassingly parallel).
-    if (want("png"))
-    locally {
-      val docs = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text")).persist()
-      val nDocs = docs.count()
-      val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def timedPng(mult: Int): Unit = {
-        val scaled = docs
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("doc_id"), col("text"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-            col("text"))
-        val t0 = System.nanoTime()
-        val r = graft.llm.Multimodal.pngDecodeStats(scaled)
+  /** PNG decode: N× the documents (same text, shifted ids) through the
+    * full synthesize→chunk-walk→inflate→unfilter chain. Decode is a
+    * map-only stage, so wall must scale ~linearly with rows, and
+    * because replicas share their md5 the status mix and r_sum must
+    * scale EXACTLY ×N — visible proof the stage never looks across rows
+    * (the property that lets a 100 TB decode run embarrassingly
+    * parallel). */
+  private def png(spark: SparkSession, sfDir: String): Unit =
+    documents(spark, sfDir, "doc_id", "text") { reps =>
+      for (mult <- Seq(1, 10, 100)) {
+        val scaled = reps.times(mult)
+        val (r, dt) = timed(graft.llm.Multimodal.pngDecodeStats(scaled)
           .agg(count(lit(1)).as("n"),
             sum(expr("CASE WHEN status = 'ok' THEN 1L ELSE 0L END")).as("ok"),
             sum(coalesce(col("r_sum"), lit(0L))).as("rsum"))
-          .head()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"png_${mult}x","docs":${nDocs * mult},"ok":${r.getLong(1)},"r_sum":${r.getLong(2)},"sec":$dt%.2f}""")
+          .head())
+        println(f"""{"probe":"png_${mult}x","docs":${reps.rows * mult},"ok":${r.getLong(1)},"r_sum":${r.getLong(2)},"sec":$dt%.2f}""")
       }
-      timedPng(1)
-      timedPng(10)
-      timedPng(100)
-      docs.unpersist(false)
     }
 
-    // JPEG decode probe — same contract as the PNG probe (map-only,
-    // stats ×N exact, ~linear wall) over the full marker-walk →
-    // entropy-decode → IDCT → YCbCr chain, the heaviest per-row
-    // decode in the family (64-term fixed-point IDCT per block).
-    if (want("jpeg"))
-    locally {
-      val docs = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text")).persist()
-      val nDocs = docs.count()
-      val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def timedJpeg(mult: Int): Unit = {
-        val scaled = docs
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("doc_id"), col("text"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-            col("text"))
-        val t0 = System.nanoTime()
-        val r = graft.llm.Multimodal.jpegDecodeStats(scaled)
-          .agg(count(lit(1)).as("n"),
-            sum(expr("CASE WHEN status = 'ok' THEN 1L ELSE 0L END")).as("ok"),
-            sum(coalesce(col("r_sum"), lit(0L))).as("rsum"))
-          .head()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"jpeg_${mult}x","docs":${nDocs * mult},"ok":${r.getLong(1)},"r_sum":${r.getLong(2)},"sec":$dt%.2f}""")
+  /** WARC funnel: N× the crawl (same text, shifted ids) through
+    * synthesize→gunzip→URI-extract→canonicalize→funnel. Replicas share
+    * their md5, so fetched/decoded/min_length must scale EXACTLY ×N
+    * (map-only stages never look across rows) while unique_url stays
+    * FLAT — the replicas are url-duplicates of each other, and the
+    * funnel's last gate is precisely the dedup that catches them. Wall
+    * must stay ~linear: the only exchange is the count-distinct. */
+  private def warc(spark: SparkSession, sfDir: String): Unit =
+    documents(spark, sfDir, "doc_id", "text") { reps =>
+      for (mult <- Seq(1, 10, 100)) {
+        val scaled = reps.times(mult)
+        val (rows, dt) = timed(graft.llm.Multimodal.warcFunnel(scaled)
+          .collect().map(r => r.getString(1) -> r.getLong(2)).toMap)
+        println(f"""{"probe":"warc_${mult}x","docs":${reps.rows * mult},"decoded":${rows("decoded")},"min_length":${rows("min_length")},"unique_url":${rows("unique_url")},"sec":$dt%.2f}""")
       }
-      timedJpeg(1)
-      timedJpeg(10)
-      timedJpeg(100)
-      docs.unpersist(false)
     }
 
-    // PDF probe: N× the documents with shifted ids — a map-only
-    // synthesize→xref-walk→inflate→tokenize codec, so extraction
-    // censuses must scale ×N EXACTLY (ok count, total chars) while
-    // wall tracks the one scan; any superlinearity means the decode
-    // stage grew cross-row state it must not have.
-    if (want("pdf"))
-    locally {
-      val docs = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text")).persist()
-      val nDocs = docs.count()
-      val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def timedPdf(mult: Int): Unit = {
-        val scaled = docs
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("doc_id"), col("text"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-            col("text"))
-        val t0 = System.nanoTime()
-        val r = graft.llm.Multimodal.pdfExtractStats(scaled)
-          .agg(count(lit(1)).as("n"),
-            sum(expr("CASE WHEN status = 'ok' THEN 1L ELSE 0L END")).as("ok"),
-            sum(coalesce(col("n_chars").cast("long"), lit(0L))).as("chars"))
-          .head()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"pdf_${mult}x","docs":${nDocs * mult},"ok":${r.getLong(1)},"chars":${r.getLong(2)},"sec":$dt%.2f}""")
-      }
-      timedPdf(1)
-      timedPdf(10)
-      timedPdf(100)
-      docs.unpersist(false)
-    }
-
-    // zstd probe: same replication scheme over the transport decoder —
-    // a map-only synthesize→frame-walk codec (FSE/Huffman/sequences/
-    // xxh64), so ok count and total decoded bytes must scale ×N
-    // EXACTLY while wall tracks the one scan.
-    if (want("zstd"))
-    locally {
-      val docs = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text")).persist()
-      val nDocs = docs.count()
-      val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def timedZstd(mult: Int): Unit = {
-        val scaled = docs
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("doc_id"), col("text"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-            col("text"))
-        val t0 = System.nanoTime()
-        val r = graft.llm.Multimodal.zstdIngestStats(scaled)
-          .agg(count(lit(1)).as("n"),
-            sum(expr("CASE WHEN status = 'ok' THEN 1L ELSE 0L END")).as("ok"),
-            sum(coalesce(col("n_bytes").cast("long"), lit(0L))).as("bytes"))
-          .head()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"zstd_${mult}x","docs":${nDocs * mult},"ok":${r.getLong(1)},"bytes":${r.getLong(2)},"sec":$dt%.2f}""")
-      }
-      timedZstd(1)
-      timedZstd(10)
-      timedZstd(100)
-      // dictionary-train leg: the trained dictionary is
-      // REPLICATION-INVARIANT (same text → same top grams → same
-      // content md5) while gram occurrences scale ×N exactly — the
-      // content-addressed-training claim measured; wall tracks the
-      // one gram scan + bounded aggregate.
-      def timedDict(mult: Int): Unit = {
-        val scaled = docs
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("text"))
-          .select(col("text"))
-        val t0 = System.nanoTime()
-        val g = graft.llm.Multimodal.zstdDictGrams(
-            scaled.withColumn("doc_id", lit(0L)))
-          .agg(count(lit(1)).as("n"), sum(col("cnt")).as("occ"),
-            md5(expr("array_join(transform(array_sort(" +
-              "collect_list(struct(cnt, gram))), x -> x.gram), '')"))
-              .as("md"))
-          .head()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"zstddict_${mult}x","docs":${nDocs * mult},"n_grams":${g.getLong(0)},"occurrences":${g.getLong(1)},"content_md5":"${g.getString(2)}","sec":$dt%.2f}""")
-      }
-      timedDict(1)
-      timedDict(10)
-      // compressor leg: per-doc ratio is replication-invariant (same
-      // texts → same frames), total compressed bytes scale ×N exactly,
-      // and wall tracks the map-only compress+decode scan.
-      def timedComp(mult: Int): Unit = {
-        import spark.implicits._
-        val scaled = docs
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("doc_id"), col("text"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-            col("text"))
-        val t0 = System.nanoTime()
-        val r = scaled.select(col("text")).as[String]
-          .mapPartitions(_.map { t =>
-            val raw = t.getBytes("ISO-8859-1")
-            val f = graft.llm.Multimodal.zstdCompressBytes(raw)
-            (raw.length.toLong, f.length.toLong)
-          })
-          .toDF("orig", "comp")
-          .agg(sum(col("orig")).as("orig"), sum(col("comp")).as("comp"))
-          .head()
-        val dt = (System.nanoTime() - t0) / 1e9
-        val ratio = r.getLong(1).toDouble / r.getLong(0)
-        println(f"""{"probe":"zstdc_${mult}x","docs":${nDocs * mult},"orig":${r.getLong(0)},"comp":${r.getLong(1)},"ratio":$ratio%.4f,"sec":$dt%.2f}""")
-      }
-      timedComp(1)
-      timedComp(10)
-      docs.unpersist(false)
-    }
-
-    // train-shards probe: N× the documents (ids shifted, sources kept,
-    // so per-source packing windows genuinely deepen ×N). Fixed-size
-    // shards mean the SHARD COUNT grows ×N while total tokens scale
-    // ×N EXACTLY; wall must track the two passes (manifest scan +
-    // bucket-ranked aggregate) — a superlinearity here would mean the
-    // global rank degenerated into a single-partition sort.
-    if (want("shards"))
-    locally {
-      val docs = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), col("source"), col("text")).persist()
-      val nDocs = docs.count()
-      val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def timedShards(mult: Int): Unit = {
-        val scaled = docs
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("doc_id"), col("source"), col("text"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-            col("source"), col("text"))
-        val t0 = System.nanoTime()
-        val r = graft.llm.TextAnalysis.trainShardsOn(scaled)
-          .agg(count(lit(1)).as("n_shards"),
-            sum(col("n_seqs")).as("n_seqs"),
-            sum(col("n_tokens")).as("tokens"))
-          .head()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"shards_${mult}x","docs":${nDocs * mult},"n_shards":${r.getLong(0)},"n_seqs":${r.getLong(1)},"tokens":${r.getLong(2)},"sec":$dt%.2f}""")
-      }
-      timedShards(1)
-      timedShards(10)
-      timedShards(100)
-      // skew leg: collapse 90% of docs onto ONE source at 10×. With
-      // the int-only manifest window (r19 fix), the skewed source's
-      // window task sorts 3 scalars/doc — its wall must stay in the
-      // same band as the balanced 10× run, not scale with that
-      // source's share of the corpus TEXT (which now moves only
-      // through the fully parallel doc-keyed rejoin).
-      locally {
-        val skewed = docs
-          .select(explode(expr("sequence(0, 9)")).as("i"),
-            col("doc_id"), col("source"), col("text"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-            when(col("doc_id") % 10 < 9, lit("s_heavy"))
-              .otherwise(col("source")).as("source"),
-            col("text"))
-        val t0 = System.nanoTime()
-        val r = graft.llm.TextAnalysis.trainShardsOn(skewed)
-          .agg(count(lit(1)).as("n_shards"), sum(col("n_tokens")).as("tokens"))
-          .head()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"shards_skew90_10x","docs":${nDocs * 10},"n_shards":${r.getLong(0)},"tokens":${r.getLong(1)},"sec":$dt%.2f}""")
-      }
-      docs.unpersist(false)
-    }
-
-    // CDC probe: N× the documents with SHIFTED ids and IDENTICAL text
-    // — the chunk DICTIONARY is replication-invariant, so stored
-    // (unique) bytes must stay FLAT while logical bytes scale exactly
-    // ×N: the content-addressed-store claim measured. Wall must track
-    // the map-only chunking scan (the census exchange carries the
-    // bounded dictionary).
-    if (want("cdc"))
-    locally {
-      val docs = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text")).persist()
-      val nDocs = docs.count()
-      val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def timedCdc(mult: Int): Unit = {
-        val scaled = docs
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("doc_id"), col("text"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-            col("text"))
-        val t0 = System.nanoTime()
-        val r = Dedup.cdcChunks(scaled)
-          .groupBy(col("chunk")).agg(count(lit(1)).as("copies"))
-          .agg(count(lit(1)).as("n_chunks"),
-            sum(length(col("chunk"))).as("stored"),
-            sum(length(col("chunk")) * col("copies")).as("logical"))
-          .head()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"cdc_${mult}x","docs":${nDocs * mult},"chunks":${r.getLong(0)},"stored":${r.getLong(1)},"logical":${r.getLong(2)},"sec":$dt%.2f}""")
-      }
-      timedCdc(1)
-      timedCdc(10)
-      timedCdc(100)
-      docs.unpersist(false)
-    }
-
-    // WARC funnel probe: N× the crawl (same text, shifted ids) through
-    // synthesize→gunzip→URI-extract→canonicalize→funnel. Replicas share
-    // their md5, so fetched/decoded/min_length must scale EXACTLY ×N
-    // (map-only stages never look across rows) while unique_url stays
-    // FLAT — the replicas are url-duplicates of each other, and the
-    // funnel's last gate is precisely the dedup that catches them. Wall
-    // must stay ~linear: the only exchange is the count-distinct.
-    if (want("warc"))
-    locally {
-      val docs = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text")).persist()
-      val nDocs = docs.count()
-      val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def timedWarc(mult: Int): Unit = {
-        val scaled = docs
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("doc_id"), col("text"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-            col("text"))
-        val t0 = System.nanoTime()
-        val rows = graft.llm.Multimodal.warcFunnel(scaled)
-          .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"warc_${mult}x","docs":${nDocs * mult},"decoded":${rows("decoded")},"min_length":${rows("min_length")},"unique_url":${rows("unique_url")},"sec":$dt%.2f}""")
-      }
-      timedWarc(1)
-      timedWarc(10)
-      timedWarc(100)
-      docs.unpersist(false)
-    }
-
-    // ZIP container probe: N× the blobs (same md5 per replica) through
-    // synthesize→EOCD backward scan→CD walk→per-member inflate+CRC.
-    // The whole walk is a flatMap fused into the scan (map-only, zero
-    // joins), so every census number must scale EXACTLY ×N and wall
-    // stays ~linear; the only exchange is the status census aggregate.
-    // The fan-out is the probe's extra claim: member rows out ≈ 2×
-    // blobs in, independent of N.
-    if (want("zip"))
-    locally {
-      import spark.implicits._
-      val docs = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), md5(col("text")).as("h")).persist()
-      val nDocs = docs.count()
-      val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def timedZip(mult: Int): Unit = {
-        val scaled = docs
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("doc_id"), col("h"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-            col("h"))
-        val t0 = System.nanoTime()
-        val census = graft.llm.Multimodal.decodeZip(
-            scaled.as[(Long, String)].mapPartitions(_.map { case (id, h) =>
-              graft.llm.BinaryDoc(id, graft.llm.Multimodal.zipBytes(h)) }))
-          .groupBy(col("status")).agg(count(lit(1)).as("c"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val dt = (System.nanoTime() - t0) / 1e9
-        val ok = census.getOrElse("ok", 0L)
-        val badData = census.getOrElse("bad_data", 0L)
-        val contFail = Seq("truncated", "bad_eocd", "bad_cd")
-          .map(census.getOrElse(_, 0L)).sum
-        println(f"""{"probe":"zip_${mult}x","blobs":${nDocs * mult},"ok_members":$ok,"bad_data":$badData,"container_fail":$contFail,"member_rows":${census.values.sum},"sec":$dt%.2f}""")
-      }
-      timedZip(1)
-      timedZip(10)
-      timedZip(100)
-      docs.unpersist(false)
-    }
-
-    // TAR container probe: the zip probe's claim for the second 1→N
-    // container — synthesize→512-byte header walk→checksum→stats is
-    // map-only, so censuses scale EXACTLY ×N and wall stays ~linear.
-    if (want("tar"))
-    locally {
-      import spark.implicits._
-      val docs = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), md5(col("text")).as("h")).persist()
-      val nDocs = docs.count()
-      val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def timedTar(mult: Int): Unit = {
-        val scaled = docs
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("doc_id"), col("h"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-            col("h"))
-        val t0 = System.nanoTime()
-        val census = graft.llm.Multimodal.decodeTar(
-            scaled.as[(Long, String)].mapPartitions(_.map { case (id, h) =>
-              graft.llm.BinaryDoc(id, graft.llm.Multimodal.tarBytes(h)) }))
-          .groupBy(col("status")).agg(count(lit(1)).as("c"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val dt = (System.nanoTime() - t0) / 1e9
-        val ok = census.getOrElse("ok", 0L)
-        val stopRows = Seq("bad_checksum", "short_data", "bad_header")
-          .map(census.getOrElse(_, 0L)).sum
-        val contFail = Seq("truncated", "empty", "bad_magic")
-          .map(census.getOrElse(_, 0L)).sum
-        println(f"""{"probe":"tar_${mult}x","blobs":${nDocs * mult},"ok_members":$ok,"stop_rows":$stopRows,"container_fail":$contFail,"member_rows":${census.values.sum},"sec":$dt%.2f}""")
-      }
-      timedTar(1)
-      timedTar(10)
-      timedTar(100)
-      docs.unpersist(false)
-    }
-
-    // TGZ layered-container probe: gzip inflate + ustar walk in ONE
-    // task — map-only like tar, so every census class scales EXACTLY
-    // ×N and wall stays ~linear; a superlinear wall here would mean
-    // the inflated bytes started crossing a shuffle.
-    if (want("tgz"))
-    locally {
-      import spark.implicits._
-      val docs = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), md5(col("text")).as("h")).persist()
-      val nDocs = docs.count()
-      val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def timedTgz(mult: Int): Unit = {
-        val scaled = docs
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("doc_id"), col("h"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-            col("h"))
-        val t0 = System.nanoTime()
-        val census = graft.llm.Multimodal.decodeTgz(
-            scaled.as[(Long, String)].mapPartitions(_.map { case (id, h) =>
-              graft.llm.BinaryDoc(id, graft.llm.Multimodal.tgzBytes(h)) }))
-          .groupBy(col("status")).agg(count(lit(1)).as("c"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val dt = (System.nanoTime() - t0) / 1e9
-        val ok = census.getOrElse("ok", 0L)
-        val gzipFail = census.view.filterKeys(_.startsWith("gzip_")).values.sum
-        val tarFail = census.view
-          .filterKeys(k => k != "ok" && !k.startsWith("gzip_")).values.sum
-        println(f"""{"probe":"tgz_${mult}x","blobs":${nDocs * mult},"ok_members":$ok,"gzip_fail":$gzipFail,"tar_fail":$tarFail,"member_rows":${census.values.sum},"sec":$dt%.2f}""")
-      }
-      timedTgz(1)
-      timedTgz(10)
-      timedTgz(100)
-      docs.unpersist(false)
-    }
-
-    // HTML extraction probe: synth page + tag walk + boilerplate
-    // filter are one stateless map — census classes scale EXACTLY ×N
-    // and wall stays ~linear; a superlinear wall would mean the page
-    // text started crossing a shuffle.
-    if (want("html"))
-    locally {
-      import spark.implicits._
-      val docs = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text"), md5(col("text")).as("h"))
-        .persist()
-      val nDocs = docs.count()
-      val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def timedHtml(mult: Int): Unit = {
-        val scaled = docs
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("doc_id"), col("text"), col("h"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-            col("text"), col("h"))
-        val t0 = System.nanoTime()
-        val census = scaled.as[(Long, String, String)]
-          .mapPartitions(_.map { case (id, t, h) =>
-            graft.llm.Multimodal.parseHtml(id,
-              graft.llm.Multimodal.htmlOf(t, h)) })
-          .toDF()
-          .groupBy(col("status")).agg(count(lit(1)).as("c"),
-            sum(col("n_kept").cast("long")).as("kept"))
-          .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-          .toMap
-        val dt = (System.nanoTime() - t0) / 1e9
-        val ok = census.getOrElse("ok", (0L, 0L))
-        val tr = census.getOrElse("truncated", (0L, 0L))
-        val nm = census.getOrElse("no_markup", (0L, 0L))
-        println(f"""{"probe":"html_${mult}x","docs":${nDocs * mult},"ok":${ok._1},"truncated":${tr._1},"no_markup":${nm._1},"kept_blocks":${ok._2 + tr._2 + nm._2},"sec":$dt%.2f}""")
-      }
-      timedHtml(1)
-      timedHtml(10)
-      timedHtml(100)
-      docs.unpersist(false)
-    }
-
-    // Suffix-automaton census probe: the O(n)-per-doc claim — the
-    // automaton is scan-fused and in-row bounded, so totals scale
-    // EXACTLY ×N and wall stays ~linear in corpus size.
-    if (want("sam"))
-    locally {
-      import spark.implicits._
-      val docs = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text")).persist()
-      val nDocs = docs.count()
-      val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def timedSam(mult: Int): Unit = {
-        val scaled = docs
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("doc_id"), col("text"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-            // probe runs the automaton UNCAPPED (full text) — the cap
-            // in the registered query exists only for its O(n²) oracle
-            col("text"))
-        val t0 = System.nanoTime()
-        val r = scaled.as[(Long, String)]
-          .mapPartitions(_.map { case (id, t) =>
-            graft.llm.Dedup.samCensus(id, t) })
-          .toDF()
-          .agg(count(lit(1)).as("docs"), sum(col("n_distinct")).as("nd"),
-            sum(col("n_rep_distinct")).as("nr"), max(col("lrs_len")).as("lrs"))
-          .head()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"sam_${mult}x","docs":${r.getLong(0)},"n_distinct":${r.getLong(1)},"n_rep":${r.getLong(2)},"max_lrs":${r.getInt(3)},"sec":$dt%.2f}""")
-      }
-      timedSam(1)
-      timedSam(10)
-      timedSam(100)
-      docs.unpersist(false)
-    }
-
-    // MaxSim probe: N× the corpus against the FIXED ≤50-query panel
-    // (replica ids shift past the 3050 panel bound, so no replica can
-    // join the panel). The scored pair grid is panel × docs — rows
-    // out scale ×N and wall must stay ~LINEAR in N. This pins the r14
-    // fix: the original %-of-corpus panel made the grid quadratic
-    // (368 s at sf0.1), and a regression back to it reads here as a
-    // superlinear wall long before the bench total moves.
-    if (want("maxsim"))
-    locally {
-      val docs = Tables(spark, sfDir, "documents").persist()
-      val nDocs = docs.count()
-      val stride = math.max(
-        docs.agg(max(col("doc_id"))).head().getLong(0) + 1L, 3050L)
-      def timedMaxsim(mult: Int): Unit = {
-        val scaled = docs
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("doc_id"), col("text"), col("lang"), col("source"),
-            col("n_chars"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-            col("text"), col("lang"), col("source"), col("n_chars"))
-        val dirPath = java.nio.file.Files.createTempDirectory("mxs")
-        val dir = dirPath.toString
-        try {
-          scaled.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-          val t0 = System.nanoTime()
-          val rows = SparkEntry.queries("q_maxsim")(spark, dir).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          println(f"""{"probe":"maxsim_${mult}x","docs":${nDocs * mult},"topk_rows":$rows,"sec":$dt%.2f}""")
-        } finally {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(dirPath).iterator().asScala.toSeq
-            .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
-        }
-      }
-      timedMaxsim(1)
-      timedMaxsim(4)
-      timedMaxsim(16)
-      docs.unpersist(false)
-    }
-
-    // Shard-loss probe: replicate the corpus (ids shift, text — and so
-    // canonical URL — repeats), re-run the 4-shard loss query. Each
-    // replica deepens every URL-duplicate group ×N, and the measured
-    // missed_frac FALLS (0.78 → 0.57 → 0.19 at 1×/4×/16×): a group of
-    // size m touching s of the 4 shards loses only s−1 ≤ 3 removals to
-    // locality while its global removable grows as m−1. The probe's
-    // honest lesson INVERTS the naive intuition: deep boilerplate
-    // groups are caught by shard-local dedup anyway — what the global
-    // shuffle buys is the LONG TAIL of size-2 groups (the dominant
-    // shape in a real crawl), exactly the regime of the 1× row.
-    if (want("shardloss"))
-    locally {
-      val docs = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text")).persist()
-      val nDocs = docs.count()
-      val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def timedLoss(mult: Int): Unit = {
-        val scaled = docs
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("doc_id"), col("text"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-            col("text"))
+  /** Shard loss: replicate the corpus (ids shift, text — and so
+    * canonical URL — repeats), re-run the 4-shard loss query. Each
+    * replica deepens every URL-duplicate group ×N, and the measured
+    * missed_frac FALLS (0.78 → 0.57 → 0.19 at 1×/4×/16×): a group of
+    * size m touching s of the 4 shards loses only s−1 ≤ 3 removals to
+    * locality while its global removable grows as m−1. The probe's
+    * honest lesson INVERTS the naive intuition: deep boilerplate groups
+    * are caught by shard-local dedup anyway — what the global shuffle
+    * buys is the LONG TAIL of size-2 groups (the dominant shape in a
+    * real crawl), exactly the regime of the 1× row. */
+  private def shardloss(spark: SparkSession, sfDir: String): Unit =
+    documents(spark, sfDir, "doc_id", "text") { reps =>
+      for (mult <- Seq(1, 4, 16)) {
         val dirPath = java.nio.file.Files.createTempDirectory("sl")
         val dir = dirPath.toString
         try {
-          scaled.withColumn("lang", lit("en")).withColumn("source", lit("s"))
+          reps.times(mult)
+            .withColumn("lang", lit("en")).withColumn("source", lit("s"))
             .withColumn("n_chars", expr("cast(length(text) as long)"))
             .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-          val t0 = System.nanoTime()
-          val r = SparkEntry.queries("q_dedup_shard_loss")(spark, dir).head()
-          val dt = (System.nanoTime() - t0) / 1e9
-          println(f"""{"probe":"shardloss_${mult}x","docs":${nDocs * mult},"global_removable":${r.getAs[Long]("global_removable")},"missed":${r.getAs[Long]("missed")},"missed_frac":${r.getAs[Double]("missed_frac")},"sec":$dt%.2f}""")
+          val (r, dt) = timed(SparkEntry.queries("q_dedup_shard_loss")(spark, dir).head())
+          println(f"""{"probe":"shardloss_${mult}x","docs":${reps.rows * mult},"global_removable":${r.getAs[Long]("global_removable")},"missed":${r.getAs[Long]("missed")},"missed_frac":${r.getAs[Double]("missed_frac")},"sec":$dt%.2f}""")
         } finally {
           // The replicated corpus is up to 16x the input — reclaim it
           // before the next multiplier rather than leaking per run.
@@ -1109,35 +527,21 @@ object ScaleProbe {
             .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
         }
       }
-      timedLoss(1)
-      timedLoss(4)
-      timedLoss(16)
-      docs.unpersist(false)
     }
 
-    // Crawl-pipeline probe: N× the documents (ids shifted, text — and
-    // so md5, PII arms, URL, content hash — identical). Map stages
-    // (fetched/decoded/pii/gopher) must scale ×N; the keeper stages
-    // (url_unique, exact_unique) and chunks must stay FLAT — every
-    // replica loses its keeper election to the base copy. A keeper
-    // count that grew with N would mean the windows elect per-replica
-    // (a correctness bug the funnel numbers would hide at 1×).
-    if (want("crawlpipe"))
-    locally {
-      val docs = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text")).persist()
-      val nDocs = docs.count()
-      val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def timedCrawl(mult: Int): Unit = {
-        val scaled = docs
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("doc_id"), col("text"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-            col("text"))
-        val t0 = System.nanoTime()
-        val rows = graft.llm.Multimodal.crawlFunnel(scaled)
-          .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
-        val dt = (System.nanoTime() - t0) / 1e9
+  /** Crawl pipeline: N× the documents (ids shifted, text — and so md5,
+    * PII arms, URL, content hash — identical). Map stages
+    * (fetched/decoded/pii/gopher) must scale ×N; the keeper stages
+    * (url_unique, exact_unique) and chunks must stay FLAT — every
+    * replica loses its keeper election to the base copy. A keeper count
+    * that grew with N would mean the windows elect per-replica (a
+    * correctness bug the funnel numbers would hide at 1×). */
+  private def crawlpipe(spark: SparkSession, sfDir: String): Unit =
+    documents(spark, sfDir, "doc_id", "text") { reps =>
+      for (mult <- Seq(1, 10, 100)) {
+        val scaled = reps.times(mult)
+        val (rows, dt) = timed(graft.llm.Multimodal.crawlFunnel(scaled)
+          .collect().map(r => r.getString(1) -> r.getLong(2)).toMap)
         // NULL-key census (hot-key pin for the salted keeper windows):
         // ~25% of docs fail decode, leaving canon/chash NULL — raw,
         // they'd all land in ONE window partition (max_raw grows ×N);
@@ -1147,241 +551,155 @@ object ScaleProbe {
         val Array(maxRaw, maxSalted) = Seq("canon", "k_url").map { k =>
           staged.groupBy(col(k)).count().agg(max("count")).head().getLong(0)
         }.toArray
-        println(f"""{"probe":"crawlpipe_${mult}x","docs":${nDocs * mult},"decoded":${rows("decoded")},"gopher_keep":${rows("gopher_keep")},"url_unique":${rows("url_unique")},"exact_unique":${rows("exact_unique")},"chunks":${rows("chunks")},"max_nullkey_raw":$maxRaw,"max_key_salted":$maxSalted,"sec":$dt%.2f}""")
+        println(f"""{"probe":"crawlpipe_${mult}x","docs":${reps.rows * mult},"decoded":${rows("decoded")},"gopher_keep":${rows("gopher_keep")},"url_unique":${rows("url_unique")},"exact_unique":${rows("exact_unique")},"chunks":${rows("chunks")},"max_nullkey_raw":$maxRaw,"max_key_salted":$maxSalted,"sec":$dt%.2f}""")
       }
-      timedCrawl(1)
-      timedCrawl(10)
-      timedCrawl(100)
-      docs.unpersist(false)
     }
 
-    // ULM-trainer probe: N× the documents with IDENTICAL text — the
-    // corpus grows, the distinct-word dictionary does not, and the
-    // unigram-LM claim is the same as BPE's: everything after the
-    // dict-building scan is vocab-bounded, so train wall must stay
-    // FLAT (report rows identical up to ×N counts: same vocab, same
-    // segmentations, ×N log-likelihood mass).
-    if (want("ulm"))
-    locally {
-      val docs = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text")).persist()
-      val nDocs = docs.count()
-      val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def timedUlm(mult: Int): Unit = {
-        val scaled = docs
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("doc_id"), col("text"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-            col("text"))
-        val t0 = System.nanoTime()
-        val rows = graft.llm.TextAnalysis.ulmTrainOn(scaled).collect()
-        val dt = (System.nanoTime() - t0) / 1e9
+  /** ULM trainer: N× the documents with IDENTICAL text — the corpus
+    * grows, the distinct-word dictionary does not, and the unigram-LM
+    * claim is the same as BPE's: everything after the dict-building
+    * scan is vocab-bounded, so train wall must stay FLAT (report rows
+    * identical up to ×N counts: same vocab, same segmentations, ×N
+    * log-likelihood mass). */
+  private def ulm(spark: SparkSession, sfDir: String): Unit =
+    documents(spark, sfDir, "doc_id", "text") { reps =>
+      for (mult <- Seq(1, 10, 100)) {
+        val scaled = reps.times(mult)
+        val (rows, dt) = timed(graft.llm.TextAnalysis.ulmTrainOn(scaled).collect())
         val r2 = rows.last
-        println(f"""{"probe":"ulm_${mult}x","docs":${nDocs * mult},"vocab2":${r2.getAs[Long]("vocab_size")},"ll2":${r2.getAs[Double]("ll")},"pieces_per_word":${r2.getAs[Double]("pieces_per_word")},"sec":$dt%.2f}""")
+        println(f"""{"probe":"ulm_${mult}x","docs":${reps.rows * mult},"vocab2":${r2.getAs[Long]("vocab_size")},"ll2":${r2.getAs[Double]("ll")},"pieces_per_word":${r2.getAs[Double]("pieces_per_word")},"sec":$dt%.2f}""")
       }
-      timedUlm(1)
-      timedUlm(10)
-      timedUlm(100)
-      docs.unpersist(false)
     }
 
-    // PCA probe: power iteration on a replicated corpus. Replication
-    // scales every per-dimension aggregate by r (so c = N·s − m·t by
-    // r²) — the normalized loadings must be BIT-IDENTICAL at every
-    // multiplier, while wall tracks scan volume (3 scans, linear).
-    // A loading drift here means an overflow or a rounding-order
-    // dependence crept into the chain.
-    // C4-recipe probe: the cleaning funnel on an N×-replicated corpus.
-    // Every replica's 3-line spans duplicate the original's, so the
-    // GLOBAL span dedup must remove (almost) all replica lines —
-    // n_drop_span exploding with N is the DESIGNED behavior (C4's
-    // dedup exists for mirror-heavy crawls), while rule drops scale
-    // exactly ×N (they are per-doc) and wall tracks the one global
-    // span-hash exchange.
-    if (want("c4"))
-    locally {
-      val docs = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text")).persist()
-      val nDocs = docs.count()
-      val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def timedC4(mult: Int): Unit = {
-        val scaled = docs
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("doc_id"), col("text"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"),
-            col("text"))
-        val t0 = System.nanoTime()
-        val r = graft.ops.TextOps.c4CleanOn(scaled)
+  /** C4 recipe: the cleaning funnel on an N×-replicated corpus. Every
+    * replica's 3-line spans duplicate the original's, so the GLOBAL
+    * span dedup must remove (almost) all replica lines — n_drop_span
+    * exploding with N is the DESIGNED behavior (C4's dedup exists for
+    * mirror-heavy crawls), while rule drops scale exactly ×N (they are
+    * per-doc) and wall tracks the one global span-hash exchange. */
+  private def c4(spark: SparkSession, sfDir: String): Unit =
+    documents(spark, sfDir, "doc_id", "text") { reps =>
+      for (mult <- Seq(1, 4, 16)) {
+        val scaled = reps.times(mult)
+        val (r, dt) = timed(graft.ops.TextOps.c4CleanOn(scaled)
           .agg(sum(col("n_lines")).as("lines"),
             sum(col("n_drop_rule")).as("rule"),
             sum(col("n_drop_span")).as("span"),
             sum(col("n_kept")).as("kept"))
-          .head()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"c4_${mult}x","docs":${nDocs * mult},"lines":${r.getAs[Long]("lines")},"rule_drop":${r.getAs[Long]("rule")},"span_drop":${r.getAs[Long]("span")},"kept":${r.getAs[Long]("kept")},"sec":$dt%.2f}""")
+          .head())
+        println(f"""{"probe":"c4_${mult}x","docs":${reps.rows * mult},"lines":${r.getAs[Long]("lines")},"rule_drop":${r.getAs[Long]("rule")},"span_drop":${r.getAs[Long]("span")},"kept":${r.getAs[Long]("kept")},"sec":$dt%.2f}""")
       }
-      timedC4(1)
-      timedC4(4)
-      timedC4(16)
-      docs.unpersist(false)
     }
 
-    // Global-ID probe: the scalable zipWithIndex on an N×-replicated
-    // corpus. The offsets frame stays S rows at any multiplier (the
-    // claim the SinglePartition pin guards), ids stay a dense
-    // permutation of 0..N·docs−1, and wall tracks the two pruned
-    // scans — the per-shard window sorts are the only O(N) work.
-    if (want("gid"))
-    locally {
-      val docs = Tables(spark, sfDir, "documents")
-        .select(col("doc_id")).persist()
-      val nDocs = docs.count()
-      val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      def timedGid(mult: Int): Unit = {
-        val scaled = docs
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("doc_id"))
-          .select((col("doc_id") + col("i") * lit(stride)).as("doc_id"))
-        val t0 = System.nanoTime()
-        val ids = scaled
-          .withColumn("shard", pmod(col("doc_id"), lit(32L)))
-          .withColumn("rn", org.apache.spark.sql.functions.row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("shard")).orderBy(col("doc_id"))))
-        val offs = scaled.groupBy(pmod(col("doc_id"), lit(32L)).as("shard"))
-          .agg(count(lit(1)).as("c"))
-          .withColumn("off", coalesce(sum(col("c")).over(
-            org.apache.spark.sql.expressions.Window.orderBy(col("shard"))
-              .rowsBetween(Long.MinValue, -1)), lit(0L)))
-        val res = ids.join(broadcast(offs.select(col("shard"), col("off"))), Seq("shard"))
-          .select((col("off") + col("rn") - 1L).as("gid"))
-          .agg(count(lit(1)).as("n"), min(col("gid")).as("mn"),
-            max(col("gid")).as("mx"),
-            countDistinct(col("gid")).as("nd"))
-          .head()
-        val dt = (System.nanoTime() - t0) / 1e9
+  /** Global ID: the scalable zipWithIndex on an N×-replicated corpus.
+    * The offsets frame stays S rows at any multiplier (the claim the
+    * SinglePartition pin guards), ids stay a dense permutation of
+    * 0..N·docs−1, and wall tracks the two pruned scans — the per-shard
+    * window sorts are the only O(N) work. */
+  private def gid(spark: SparkSession, sfDir: String): Unit =
+    documents(spark, sfDir, "doc_id") { reps =>
+      for (mult <- Seq(1, 10, 100)) {
+        val scaled = reps.times(mult)
+        val (res, dt) = timed {
+          val ids = scaled
+            .withColumn("shard", pmod(col("doc_id"), lit(32L)))
+            .withColumn("rn", row_number().over(
+              Window.partitionBy(col("shard")).orderBy(col("doc_id"))))
+          val offs = scaled.groupBy(pmod(col("doc_id"), lit(32L)).as("shard"))
+            .agg(count(lit(1)).as("c"))
+            .withColumn("off", coalesce(sum(col("c")).over(
+              Window.orderBy(col("shard")).rowsBetween(Long.MinValue, -1)), lit(0L)))
+          ids.join(broadcast(offs.select(col("shard"), col("off"))), Seq("shard"))
+            .select((col("off") + col("rn") - 1L).as("gid"))
+            .agg(count(lit(1)).as("n"), min(col("gid")).as("mn"),
+              max(col("gid")).as("mx"),
+              countDistinct(col("gid")).as("nd"))
+            .head()
+        }
         val n = res.getAs[Long]("n")
         val dense = res.getAs[Long]("mn") == 0L &&
           res.getAs[Long]("mx") == n - 1 && res.getAs[Long]("nd") == n
         println(f"""{"probe":"gid_${mult}x","docs":$n,"dense_permutation":$dense,"sec":$dt%.2f}""")
       }
-      timedGid(1)
-      timedGid(10)
-      timedGid(100)
-      docs.unpersist(false)
     }
 
-    if (want("pca"))
-    locally {
-      val qe = graft.llm.Dedup.quantized(spark, sfDir).persist()
-      val nVec = qe.count()
-      val stride = qe.agg(max(col("vec_id"))).head().getLong(0) + 1L
-      def timedPca(mult: Int): Unit = {
-        val scaled = qe
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("vec_id"), col("label"), col("q"), col("norm"))
-          .select((col("vec_id") + col("i") * lit(stride)).as("vec_id"),
-            col("label"), col("q"), col("norm"))
-        val t0 = System.nanoTime()
-        val rows = graft.llm.Clustering.pcaLoadingsOn(spark, scaled)
-          .filter(col("iter") === 3).collect()
-        val dt = (System.nanoTime() - t0) / 1e9
+  /** PCA: power iteration on a replicated corpus. Replication scales
+    * every per-dimension aggregate by r (so c = N·s − m·t by r²) — the
+    * normalized loadings must be BIT-IDENTICAL at every multiplier,
+    * while wall tracks scan volume. A loading drift here means an
+    * overflow or a rounding-order dependence crept into the chain. */
+  private def pca(spark: SparkSession, sfDir: String): Unit =
+    embeddings(spark, sfDir, "vec_id", "label", "q", "norm") { reps =>
+      for (mult <- Seq(1, 4, 16)) {
+        val scaled = reps.times(mult)
+        val (rows, dt) = timed(graft.llm.Clustering.pcaLoadingsOn(spark, scaled)
+          .filter(col("iter") === 3).collect())
         val top = rows.maxBy(r => math.abs(r.getAs[Double]("loading")))
         val hash = rows.sortBy(_.getAs[Int]("j"))
           .map(_.getAs[Double]("loading")).mkString(",").hashCode
-        println(f"""{"probe":"pca_${mult}x","vecs":${nVec * mult},"top_dim":${top.getAs[Int]("j")},"top_loading":${top.getAs[Double]("loading")},"loadings_hash":$hash,"sec":$dt%.2f}""")
+        println(f"""{"probe":"pca_${mult}x","vecs":${reps.rows * mult},"top_dim":${top.getAs[Int]("j")},"top_loading":${top.getAs[Double]("loading")},"loadings_hash":$hash,"sec":$dt%.2f}""")
       }
-      timedPca(1)
-      timedPca(4)
-      timedPca(16)
-      qe.unpersist(false)
     }
 
-    // Hot-key dedup probe: ONE content hash (the crawl boilerplate
-    // page) duplicated 10⁴–10⁶×, unioned with the real corpus. The
-    // keeper election as a min-keyed HASH AGGREGATE partial-aggregates
-    // map-side — each of the 32 partitions reduces its slice of the
-    // hot group to one row, so the exchange carries ≤ 32 rows for the
-    // hot key and wall scales with SCAN volume, not group depth. The
-    // same election as a row_number WINDOW must funnel every hot-key
-    // row through one partition — the skew collapse the aggregate
-    // form exists to avoid; both are timed to price the difference.
-    if (want("hotkey"))
-    locally {
-      val docs = Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text")).persist()
-      val nDocs = docs.count()
-      val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
+  /** Hot-key dedup: ONE content hash (the crawl boilerplate page)
+    * duplicated 10⁵–8·10⁶×, unioned with the real corpus. The keeper
+    * election as a min-keyed HASH AGGREGATE partial-aggregates map-side
+    * — each partition reduces its slice of the hot group to one row, so
+    * the exchange carries one row per partition for the hot key and
+    * wall scales with SCAN volume, not group depth. The same election
+    * as a row_number WINDOW must funnel every hot-key row through one
+    * partition — the skew collapse the aggregate form exists to avoid;
+    * both are timed to price the difference. The hot rows are appended
+    * past the corpus ids, not replicated. */
+  private def hotkey(spark: SparkSession, sfDir: String): Unit =
+    documents(spark, sfDir, "doc_id", "text") { reps =>
+      val docs = reps.input
       val hotText = docs.orderBy("doc_id").select(col("text"))
         .head().getString(0)
-      def timedHot(copies: Int): Unit = {
+      for (copies <- Seq(100000, 1000000, 8000000)) {
         // substring(id, 1, 0) = '' but NON-foldable: keeps Catalyst from
         // constant-folding md5(text) for the hot rows — the probe must
         // price per-row hashing of a deep group, not a folded literal
         val hot = spark.range(copies.toLong)
-          .select((col("id") + stride).as("doc_id"),
+          .select((col("id") + reps.strides("doc_id")).as("doc_id"),
             concat(lit(hotText),
               expr("substring(cast(id as string), 1, 0)")).as("text"))
         val corpus = docs.unionByName(hot)
-        val t0 = System.nanoTime()
-        val agg = corpus.groupBy(md5(col("text")).as("chash"))
-          .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("n_copies"))
-        val (groups, deepest) = {
-          val r = agg.agg(count(lit(1)), max(col("n_copies"))).head()
+        val ((groups, deepest), tAgg) = timed {
+          val r = corpus.groupBy(md5(col("text")).as("chash"))
+            .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("n_copies"))
+            .agg(count(lit(1)), max(col("n_copies"))).head()
           (r.getLong(0), r.getLong(1))
         }
-        val tAgg = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(md5(col("text"))).orderBy(col("doc_id"))
-        val winKeepers = corpus
-          .withColumn("rn", org.apache.spark.sql.functions.row_number().over(w))
-          .filter(col("rn") === 1).count()
-        val tWin = (System.nanoTime() - t1) / 1e9
-        println(f"""{"probe":"hotkey_$copies","docs":${nDocs + copies},"groups":$groups,"deepest":$deepest,"win_keepers":$winKeepers,"agg_sec":$tAgg%.2f,"window_sec":$tWin%.2f}""")
+        val (winKeepers, tWin) = timed(corpus
+          .withColumn("rn", row_number().over(
+            Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))))
+          .filter(col("rn") === 1).count())
+        println(f"""{"probe":"hotkey_$copies","docs":${reps.rows + copies},"groups":$groups,"deepest":$deepest,"win_keepers":$winKeepers,"agg_sec":$tAgg%.2f,"window_sec":$tWin%.2f}""")
       }
-      timedHot(100000)
-      timedHot(1000000)
-      timedHot(8000000)
-      docs.unpersist(false)
     }
 
-    // Incremental-IVF probe: the standing index trains on an N×
-    // corpus (one assignment pass + a K-row aggregate — that cost may
-    // grow with N), but the DELTA ingest is a projection against the
-    // K×65 literal stats, so ingest wall must stay FLAT in N — the
-    // q_dedup_incremental scaling argument applied to index
-    // maintenance. Delta is FIXED (the base corpus's vec_id % 10 = 7
-    // slice) while the training corpus replicates ×1/×4/×16.
-    if (want("ivfincr"))
-    locally {
-      val qe = Dedup.quantized(spark, sfDir)
-        .select(col("vec_id"), col("q"), col("norm")).persist()
-      val delta = qe.filter(col("vec_id") % 10 === 7).persist()
+  /** Incremental IVF: the standing index trains on an N× corpus (one
+    * assignment pass + a K-row aggregate — that cost may grow with N),
+    * but the DELTA ingest is a projection against the K×65 literal
+    * stats, so ingest wall must stay FLAT in N — the
+    * q_dedup_incremental scaling argument applied to index maintenance.
+    * Delta is FIXED (the base corpus's vec_id % 10 = 7 slice) while the
+    * training corpus replicates ×1/×4/×16. */
+  private def ivfincr(spark: SparkSession, sfDir: String): Unit =
+    embeddings(spark, sfDir, "vec_id", "q", "norm") { reps =>
+      val delta = reps.input.filter(col("vec_id") % 10 === 7).persist()
       val nDelta = delta.count()
-      val corpus0 = qe.filter(col("vec_id") % 10 =!= 7)
+      val corpus0 = reps.input.filter(col("vec_id") % 10 =!= 7)
       val nCorp = corpus0.count()
-      val stride = qe.agg(max(col("vec_id"))).head().getLong(0) + 1L
-      def timedIngest(mult: Int): Unit = {
-        val scaled = corpus0
-          .select(explode(expr(s"sequence(0, ${mult - 1})")).as("i"),
-            col("vec_id"), col("q"), col("norm"))
-          .select((col("vec_id") + col("i") * lit(stride)).as("vec_id"),
-            col("q"), col("norm"))
-        val t0 = System.nanoTime()
-        val parts = graft.llm.Similarity.ivfTrainStats(scaled)
-        val tTrain = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val hist = graft.llm.Similarity.ivfAssignWith(parts, delta)
+      for (mult <- Seq(1, 4, 16)) {
+        val scaled = reps.times(mult, corpus0)
+        val (parts, tTrain) = timed(graft.llm.Similarity.ivfTrainStats(scaled))
+        val (hist, tIngest) = timed(graft.llm.Similarity.ivfAssignWith(parts, delta)
           .groupBy(col("cell")).count().orderBy("cell").collect()
-          .map(r => r.getLong(1)).mkString("[", ",", "]")
-        val tIngest = (System.nanoTime() - t1) / 1e9
+          .map(r => r.getLong(1)).mkString("[", ",", "]"))
         println(f"""{"probe":"ivfincr_${mult}x","corpus":${nCorp * mult},"delta":$nDelta,"train_sec":$tTrain%.2f,"ingest_sec":$tIngest%.2f,"delta_cells":$hist}""")
       }
-      timedIngest(1)
-      timedIngest(4)
-      timedIngest(16)
-      delta.unpersist(false); qe.unpersist(false)
+      delta.unpersist(false)
     }
-  }
 }

@@ -4243,8 +4243,8 @@ object Multimodal {
   }
 
   /** Frame-taking synthesize→extract chain for the PDF row — the
-    * [[jpegDecodeStats]] shape, shared by the registered query and
-    * ScaleProbe's pdf_{1,10,100}x replication harness. */
+    * [[jpegDecodeStats]] shape, shared by the registered query and the
+    * streamed parity spec. */
   def pdfExtractStats(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     docs
@@ -4254,22 +4254,12 @@ object Multimodal {
       .toDF()
   }
 
-  /** Frame-taking synthesize→decode chain for the zstd transport —
-    * the [[pdfExtractStats]] shape, shared by the registered query,
-    * the streamed parity spec, and ScaleProbe. Unlike the md5-only
-    * fixtures this one carries the TEXT into the synthesizer (the
-    * frame content is the doc itself), still one scan-fused map. */
   /** Fixture `.jsonl.zst` blob for a (text, md5) pair — the
     * [[graft.llm.Zstd.zstdJsonlBytes]] synthesizer exposed at graft
     * scope so the streaming spec can feed the streamed front door
     * the exact transport bytes the batch query reads. */
   private[graft] def zstdJsonlBlob(text: String, h: String): Array[Byte] =
     Zstd.zstdJsonlBytes(text, h)
-
-  /** The general-purpose compressor exposed at graft scope (the
-    * ScaleProbe ratio leg). */
-  private[graft] def zstdCompressBytes(b: Array[Byte]): Array[Byte] =
-    Zstd.compress(b)
 
   // ---------------------------------------------------------------------
   // DICTIONARY TRAINING — the build side of the RFC 8878 §5 support:
@@ -4288,7 +4278,7 @@ object Multimodal {
     * explode fused into it, ONE gram-keyed partial+final aggregate,
     * TakeOrdered(16) — the wordcount shape, safe at any corpus size;
     * the result is an absolutely bounded 16-row frame. */
-  private[graft] def zstdDictGrams(docs: DataFrame): DataFrame =
+  private def zstdDictGrams(docs: DataFrame): DataFrame =
     docs
       .select(explode(expr(
         "case when length(text) >= 8 then transform(" +
@@ -4336,6 +4326,11 @@ object Multimodal {
           "dict_hex")
     }
 
+  /** Frame-taking synthesize→decode chain for the zstd transport —
+    * the [[pdfExtractStats]] shape, shared by the registered query and
+    * the streamed parity spec. Unlike the md5-only fixtures this one
+    * carries the TEXT into the synthesizer (the frame content is the
+    * doc itself), still one scan-fused map. */
   def zstdIngestStats(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     docs
@@ -4347,9 +4342,9 @@ object Multimodal {
       .toDF()
   }
 
-  /** Frame-taking synthesize→decode chain — the [[pngDecodeStats]]
-    * shape, shared by the registered query and ScaleProbe. */
-  def jpegDecodeStats(docs: DataFrame): DataFrame = {
+  /** Frame-taking synthesize→decode chain behind the registered query
+    * — the [[pngDecodeStats]] shape. */
+  private def jpegDecodeStats(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val payloads = docs
       .select(col("doc_id"), md5(col("text")).as("h"))

@@ -1398,8 +1398,7 @@ object TextAnalysis {
     * parallel doc-keyed hash exchange with no skew exposure (doc_id
     * is unique), after which the bin explode and slice run map-side.
     * A 90%-one-source corpus therefore costs the window task
-    * 3 ints/doc, not that source's share of the corpus text
-    * (ScaleProbe `shards` skew leg measures this). */
+    * 3 ints/doc, not that source's share of the corpus text. */
   private[graft] def trainShardsSeqFrame(docs: DataFrame, B: Int): DataFrame = {
     val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1431,10 +1430,8 @@ object TextAnalysis {
       .withColumn("bkt", expr("cast(conv(substring(h, 1, 1), 16, 10) as int)"))
   }
 
-  /** Frame-taking shard emitter — shared by the registered query and
-    * ScaleProbe (which replicates the corpus ×N to prove the two-pass
-    * global rank stays scan-shaped). */
-  private[graft] def trainShardsOn(docs: DataFrame): DataFrame = {
+  /** Frame-taking shard emitter behind the registered query. */
+  private def trainShardsOn(docs: DataFrame): DataFrame = {
     val S = 32 // sequences per shard
     val seqs = trainShardsSeqFrame(docs, B = 256)
       // Materialize the sequence MANIFEST (hash + three ints per
